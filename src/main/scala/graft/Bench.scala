@@ -7,12 +7,19 @@ import org.apache.spark.sql.SparkSession
   * A warm-up pass runs every query once against the SMALL scale factor
   * first: Spark compiles each distinct plan's generated code (Janino)
   * and the JVM JITs it on first execution, which costs seconds per
-  * plan shape and would otherwise dominate single-shot timings. Warming
-  * on a different directory means no data, shuffle, or cache reuse can
-  * leak into the measured run (the cache manager keys on the
-  * canonicalized plan, which embeds the path) — the measured pass still
-  * reads and computes the target data cold, the way a long-running
-  * cluster executes steady-state.
+  * plan shape and would otherwise dominate single-shot timings. The
+  * measured pass reuses those classes only because GraftSession sizes
+  * Spark's codegen cache above the surface's class count: the warm-up
+  * compiles about 2,000 classes, and with Spark's 100-entry
+  * default they would evict one another before the measured pass
+  * reached them. Warming on a different directory means no data,
+  * shuffle, or cache reuse can leak into the measured run (the cache
+  * manager keys on the canonicalized plan, which embeds the path) — the
+  * measured pass still reads and computes the target data cold, the way
+  * a long-running cluster executes steady-state.
+  *
+  * A query that throws is reported under `"failed"` and left out of
+  * `"queries"` and the total.
   */
 object Bench {
   /** Pruning-proof evaluation sink. The round-8 harness forced
@@ -57,11 +64,12 @@ object Bench {
     // random queries; the min of two independent runs (cache cleared
     // between, so no result reuse) is the steady-state number. 
     def timeOnce(name: String,
-                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       // a throwing query must be VISIBLE, not a suspiciously fast timing
-      try { materialize(fn(spark, sfDir)) } catch { case e: Throwable =>
+      val ok = try { materialize(fn(spark, sfDir)); true } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
       }
       val dt = (System.nanoTime() - t0) / 1e9
       // drop persisted intermediates so the next measurement is cold and
@@ -80,16 +88,20 @@ object Bench {
       // blocking: async unpersist only enqueues removal, so eviction
       // could overlap (and be charged to) the next timed query
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      dt
+      if (ok) Some(dt) else None
     }
     // SPARK_GRAFT_RUNS overrides the per-query run count (default 2,
     // min reported): large-SF single-pass sweeps set 1 — at sf10 a
     // second pass doubles an already hour-scale run for noise bars the
     // per-decade ratio analysis doesn't need.
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
-    val results = queries.map { case (name, fn) =>
-      name -> (1 to runs).map(_ => timeOnce(name, fn)).min
+    // a query that threw on any run has no time: it is listed as failed
+    val timed = queries.map { case (name, fn) =>
+      name -> (1 to runs).map(_ => timeOnce(name, fn))
     }
+    val (succeeded, threw) = timed.partition { case (_, ts) => ts.forall(_.isDefined) }
+    val results = succeeded.map { case (name, ts) => name -> ts.flatten.min }
+    val failed = threw.keys.toSeq.sorted
     // 3-decimal fixed-point keeps the one-line JSON compact enough that
     // the driver's bounded stdout tail captures every query (r3's full-
     // precision doubles pushed 16 queries past the capture window).
@@ -97,7 +109,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
+        s""""failed":${failed.map(n => s""""$n"""").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // Truncation-proof record (r4 captured only 71/90 per-query times
     // from stdout): persist the complete map to a file the judge can
     // read regardless of how much of the console tail survives. Only

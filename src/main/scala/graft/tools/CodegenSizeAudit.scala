@@ -11,9 +11,14 @@ package graft.tools
   * 8000 so Spark itself reports (and de-fuses) every such stage, runs
   * every registered query on a small SF through the bench sink, and
   * brackets each with stderr markers so the WARN lines attribute to a
-  * query. Caveat: Janino caches compiled classes by source, so a stage
-  * shared verbatim with an earlier query warns only once — read the
-  * report as "first query that compiles the oversized stage".
+  * query. Caveat: Spark caches compiled classes by source, in a cache
+  * GraftSession sizes to hold every class the surface compiles, so a
+  * stage shared verbatim with an earlier query warns only once — read
+  * the report as "first query that compiles the oversized stage".
+  *
+  * It ends with `AUDIT_CLASSES <n>`: the number of classes the run
+  * compiled (the `CodegenMetrics` count delta), i.e. the engine's codegen
+  * working set that `GraftSession.codegenResidency` must hold.
   * Not part of the library surface. */
 object CodegenSizeAudit {
   def main(args: Array[String]): Unit = {
@@ -28,6 +33,8 @@ object CodegenSizeAudit {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.WholeStageCodegenExec",
       org.apache.logging.log4j.Level.INFO)
+    def compiled() = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiledBefore = compiled()
     graft.SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
@@ -42,6 +49,7 @@ object CodegenSizeAudit {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
+    System.err.println(s"AUDIT_CLASSES ${compiled() - compiledBefore}")
     spark.stop()
   }
 }
