@@ -500,8 +500,8 @@ object Analytics {
     * distinct-hash-agg fallback and the two SMJ sorts spilled 41 GB
     * and ran 3.8×/3× super-linear (69 s solo) where this shape runs
     * 26 s at 1.7×/3× with spill confined to the basket aggregate
-    * (D15Probe, BASELINE round-9 study). The pair aggregate
-    * partial-combines map-side, and the final top-N is TakeOrdered
+    * (BASELINE.md, "Round-9 d15 stage probe + rewrite"). The pair
+    * aggregate partial-combines map-side, and the final top-N is TakeOrdered
     * (per-partition heaps + driver merge of N), not a global sort.
     * Ranking ties are impossible at the cutoff: the order is
     * (count desc, part_a, part_b) and pairs are unique. */

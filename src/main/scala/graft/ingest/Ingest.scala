@@ -122,10 +122,7 @@ object Ingest {
     * Scale shape: a CDC batch is tiny next to the accumulated base, so
     * the anti-join side (distinct change keys — one narrow column) is
     * broadcast: the 100 TB base never shuffles, never sorts, and the
-    * whole merge is one broadcast-anti pass plus the union. Callers with
-    * a change batch too big to broadcast pass `broadcastKeys = false`
-    * and get the standard shuffled anti-join on the same plan (AQE can
-    * still choose broadcast at runtime if the keys turn out small).
+    * whole merge is one broadcast-anti pass plus the union.
     *
     * The reference's pipeline re-lands full snapshots (data_extraction
     * .py:135-172 overwrites the CSV); this is the incremental form a
@@ -137,12 +134,10 @@ object Ingest {
     * matches the anti-join, so the base row would survive alongside the
     * change row. */
   def cdcMerge(base: DataFrame, changes: DataFrame, keyCol: String,
-               opCol: String, versionCol: String, tieBreak: String,
-               broadcastKeys: Boolean = true): DataFrame = {
+               opCol: String, versionCol: String, tieBreak: String): DataFrame = {
     val latest = dedupKeepLatest(changes, Seq(keyCol), versionCol, tieBreak)
     val changedKeys = changes.select(col(keyCol)).distinct()
-    val antiSide = if (broadcastKeys) broadcast(changedKeys) else changedKeys
-    base.join(antiSide, Seq(keyCol), "left_anti")
+    base.join(broadcast(changedKeys), Seq(keyCol), "left_anti")
       .unionByName(latest.filter(col(opCol) =!= "D").drop(opCol))
   }
 

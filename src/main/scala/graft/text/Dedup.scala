@@ -190,6 +190,15 @@ object Dedup {
   private def foldSig(cols: Seq[Column]): Column =
     cols.foldLeft(lit(0L): Column)((acc, h) => (acc * 31L + h) % PolyP)
 
+  /** (doc_id, mh_0..mh_{k-1}) minhash vectors over word shingles. */
+  private def minhashVectors(docs: DataFrame, idCol: String, textCol: String,
+                             shingleSize: Int, numHashes: Int): DataFrame = {
+    val mhAggs = (0 until numHashes).map(i =>
+      min(affineHash(col("h0"), "mh", i)).as(s"mh_$i"))
+    shingleRows(docs, idCol, textCol, shingleSize, "h0")
+      .groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
+  }
+
   /** MinHash + LSH banding candidate pairs.
     *
     * k minhashes over word shingles, grouped into bands; docs sharing
@@ -200,38 +209,58 @@ object Dedup {
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int, numHashes: Int, bands: Int,
-                      maxBucket: Int = 1000): DataFrame = {
-    val banded = bandSignatures(docs, idCol, textCol, shingleSize, numHashes, bands)
-    // Degenerate-bucket prune via PARTIAL-AGGREGATED sizes, not a count
-    // window (SURVEY §8 skew playbook): a window partitioned by
-    // (band, sig) would fully co-locate the pathological boilerplate
-    // bucket once just to measure it. The groupBy collapses bucket
-    // counts map-side, the hot list is tiny by construction (at most
-    // n/maxBucket buckets can exceed maxBucket), so it broadcasts and
-    // the hot rows are dropped map-side by the anti-join — the raw
-    // banded table never shuffles for the prune. The shared banded
-    // table materializes as a lazy localCheckpoint, NOT a persist
-    // (SURVEY §8 rule 3): measured at sf0.1 interleaved, persist's
-    // columnar encode + cache-scan plumbing cost e2 1.04 s vs 0.65 s
-    // with checkpoint blocks (recompute measured equal here because
-    // ReuseExchange dedupes the shared minhash-agg shuffle, but the
-    // checkpoint makes the sharing explicit rather than
-    // canonicalization-dependent).
-    val bandedM = banded.localCheckpoint(false)
-    val hot = bandedM.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select(col("band"), col("sig"))
-    // Explicit shuffle barrier on the bucket key before the self-join
-    // (SURVEY §8 rule 8, the e22/e4 shape): the checkpoint's LogicalRDD
-    // carries the PRE-checkpoint size estimate, so without an exchange
-    // below it the join strategy is chosen STATICALLY from rigged
-    // numbers — the e43 crash mechanism, here ~10× past sf30 because
-    // band rows are 20× narrower. The barrier gives AQE a materialized
-    // stage with REAL sizes (broadcast at bench scales, shuffle at
-    // corpus scale — a per-run decision), and spreads the quadratic
-    // within-bucket pair generation across the cluster instead of the
-    // checkpoint's scan-split parallelism.
-    val pruned = bandedM.join(broadcast(hot), Seq("band", "sig"), "left_anti")
+                      maxBucket: Int = 1000): DataFrame =
+    // The banded table (two consumers: hot-list agg + self-join) is a
+    // lazy localCheckpoint, NOT a persist (SURVEY §8 rule 3): measured
+    // at sf0.1 interleaved, persist's columnar encode + cache-scan
+    // plumbing cost e2 1.04 s vs 0.65 s with checkpoint blocks (equal
+    // to recompute, which ReuseExchange dedupes; the checkpoint makes
+    // the sharing explicit rather than canonicalization-dependent).
+    bucketPairs(bandSignatures(docs, idCol, textCol, shingleSize, numHashes, bands)
+      .localCheckpoint(false), maxBucket)
+
+  /** (doc_id, h) rows, one per word shingle of the normalized text.
+    * Shingle hashes come from ONE native pass per doc
+    * ([[graft.functions.StringExpressions.ShingleHashes]]): each
+    * shingle string is a contiguous window of the normalized text, so
+    * its polynomial hash folds in place — the explode+slice+concat
+    * chain this replaced allocated a words array plus a string per
+    * shingle through interpreted lambdas. */
+  private def shingleRows(docs: DataFrame, idCol: String, textCol: String,
+                          k: Int, hashAs: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      explode(graft.functions.StringExpressions.shingleHashes(
+        normalizeText(col(textCol)), k)).as(hashAs))
+
+  /** Fold each band of a minhash-vector table into one (doc_id, band,
+    * sig) row: sig = order-sensitive fold of the band's minhash tuple. */
+  private def bandRows(vecs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val rowsPerBand = numHashes / bands
+    vecs.select(col("doc_id"),
+      explode(array((0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          foldSig((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh_$i")))
+            .as("sig"))
+      }: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+  }
+
+  /** (doc_a < doc_b) pairs sharing a (band, sig) bucket after the
+    * hot-bucket prune — the bucket self-join of every banded operator.
+    *
+    * Explicit shuffle barrier on the bucket key before the self-join
+    * (SURVEY §8 rule 8, the e22/e4 shape): the checkpoint's LogicalRDD
+    * carries the PRE-checkpoint size estimate, so without an exchange
+    * below it the join strategy is chosen STATICALLY from rigged
+    * numbers — the e43 crash mechanism, here ~10× past sf30 because
+    * band rows are 20× narrower. The barrier gives AQE a materialized
+    * stage with REAL sizes (broadcast at bench scales, shuffle at
+    * corpus scale — a per-run decision), and spreads the quadratic
+    * within-bucket pair generation across the cluster instead of the
+    * checkpoint's scan-split parallelism. */
+  private def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val pruned = pruneHotBuckets(banded, Seq("band", "sig"), maxBucket)
       .repartition(col("band"), col("sig"))
     val a = pruned.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
     val b = pruned.select(col("band"), col("sig"), col("doc_id").as("doc_b"))
@@ -247,32 +276,11 @@ object Dedup {
     * ([[incrementalMinhashPairsFromTable]]): after a batch is admitted,
     * append `bandSignatures(admittedBatch, ...)` (same parameters) to
     * the persisted signature table instead of ever recomputing the
-    * corpus side. Shingle hashes come
-    * from ONE native pass per doc ([[graft.functions.StringExpressions
-    * .ShingleHashes]]): each shingle string is a contiguous window of
-    * the normalized text, so its polynomial hash folds in place — the
-    * explode+slice+concat chain this replaced allocated a words array
-    * plus a string per shingle through interpreted lambdas. Band
-    * signature = order-sensitive fold of the band's minhash tuple. */
+    * corpus side. */
   def bandSignatures(docs: DataFrame, idCol: String, textCol: String,
-                     shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val shingled = docs
-      .select(col(idCol).as("doc_id"),
-        explode(graft.functions.StringExpressions.shingleHashes(
-          normalizeText(col(textCol)), shingleSize)).as("h0"))
-    val mhAggs = (0 until numHashes).map(i =>
-      min(affineHash(col("h0"), "mh", i)).as(s"mh_$i"))
-    val minhashes = shingled.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
-    minhashes.select(col("doc_id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          foldSig((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh_$i")))
-            .as("sig"))
-      }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-  }
+                     shingleSize: Int, numHashes: Int, bands: Int): DataFrame =
+    bandRows(minhashVectors(docs, idCol, textCol, shingleSize, numHashes),
+      numHashes, bands)
 
   /** MinHash Jaccard ESTIMATE for LSH candidate pairs (round 8) — the
     * cheap middle tier of the near-dup funnel: e2 proposes candidates,
@@ -295,34 +303,8 @@ object Dedup {
   def minhashEstimatePairs(docs: DataFrame, idCol: String, textCol: String,
                            shingleSize: Int, numHashes: Int, bands: Int,
                            maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val shingled = docs
-      .select(col(idCol).as("doc_id"),
-        explode(graft.functions.StringExpressions.shingleHashes(
-          normalizeText(col(textCol)), shingleSize)).as("h0"))
-    val mhAggs = (0 until numHashes).map(i =>
-      min(affineHash(col("h0"), "mh", i)).as(s"mh_$i"))
-    val vecs = shingled.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
+    val vecs = minhashVectors(docs, idCol, textCol, shingleSize, numHashes)
       .localCheckpoint(false) // three consumers: banding + two score joins
-    val banded = vecs.select(col("doc_id"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            foldSig((b * rowsPerBand until (b + 1) * rowsPerBand)
-              .map(i => col(s"mh_$i"))).as("sig"))
-        }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      .localCheckpoint(false) // two consumers: hot-list agg + self-join
-    val hot = banded.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select(col("band"), col("sig"))
-    val pruned = banded.join(broadcast(hot), Seq("band", "sig"), "left_anti")
-      .repartition(col("band"), col("sig"))
-    val pairs = pruned.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(pruned.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
     val aSide = vecs.select(col("doc_id").as("doc_a") +:
       (0 until numHashes).map(i => col(s"mh_$i").as(s"__a_$i")): _*)
     val bSide = vecs.select(col("doc_id").as("doc_b") +:
@@ -330,11 +312,30 @@ object Dedup {
     val agree = (0 until numHashes)
       .map(i => when(col(s"__a_$i") === col(s"__b_$i"), 1L).otherwise(0L))
       .reduce(_ + _)
-    pairs.join(aSide, Seq("doc_a")).join(bSide, Seq("doc_b"))
+    val banded = bandRows(vecs, numHashes, bands).localCheckpoint(false) // agg + self-join
+    bucketPairs(banded, maxBucket).join(aSide, Seq("doc_a")).join(bSide, Seq("doc_b"))
       .withColumn("n_agree", agree)
       .select(col("doc_a"), col("doc_b"), col("n_agree"),
         (floor((col("n_agree") * 20000 + numHashes) / (numHashes * 2)) / 10000.0)
           .as("est_jaccard"))
+  }
+
+  /** Drop the rows of buckets (`keys`: (band, sig) for MinHash, (chunk,
+    * key) for SimHash) holding more than `maxBucket` docs (degenerate
+    * all-equal boilerplate) via PARTIAL-AGGREGATED sizes, not a count
+    * window (SURVEY §8 skew playbook): a window partitioned by the
+    * bucket would fully co-locate the pathological one just to measure
+    * it. The groupBy collapses bucket counts map-side, the hot list is
+    * tiny by construction (at most n/maxBucket buckets can exceed
+    * maxBucket), so it broadcasts and the hot rows are dropped map-side
+    * by the anti-join — the bucketed table never shuffles for the
+    * prune. */
+  private def pruneHotBuckets(rows: DataFrame, keys: Seq[String],
+                              maxBucket: Int): DataFrame = {
+    val hot = rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxBucket).select(keys.map(col): _*)
+    rows.join(broadcast(hot), keys, "left_anti")
   }
 
   /** LSH recall gate (round 8) — the text-dedup analogue of the e41
@@ -364,10 +365,9 @@ object Dedup {
                 shingleSize: Int, numHashes: Int, bands: Int,
                 sampleMax: Long, threshold: Double): DataFrame = {
     val sample = docs.filter(col(idCol).isNotNull && col(idCol) < sampleMax)
-    val grams = sample
-      .select(col(idCol).as("doc_id"),
-        explode(graft.functions.StringExpressions.shingleHashes(
-          normalizeText(col(textCol)), shingleSize)).as("h"))
+    // the eval set's shingle-hash sets, distinct per doc (a doc's
+    // repeated shingles count once in its Jaccard)
+    val grams = shingleRows(sample, idCol, textCol, shingleSize, "h")
       .distinct()
       .localCheckpoint(false) // counts + both sides of the pair join
     val counts = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -456,10 +456,10 @@ object Dedup {
       .localCheckpoint(false) // id list + inter join + count joins
     val ids = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val g = base
-      .select(col(idCol).as("doc_id"),
-        explode(graft.functions.StringExpressions.shingleHashes(
-          normalizeText(col(textCol)), shingleSize)).as("h"))
+    // verify sets: distinct shingle hashes per doc, built ONLY for docs
+    // named in a candidate (left-semi against the broadcast id list) —
+    // verify volume is O(Σ candidate grams), not O(corpus)
+    val g = shingleRows(base, idCol, textCol, shingleSize, "h")
       .distinct()
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
       .localCheckpoint(false) // counts + both sides of the inter join
@@ -536,11 +536,11 @@ object Dedup {
                                        idCol: String, textCol: String,
                                        shingleSize: Int, numHashes: Int,
                                        bands: Int, maxBucket: Int = 1000): DataFrame = {
-    val seenB = seenBands.select(col("doc_id"), col("band"), col("sig"))
-    val hot = seenB.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select(col("band"), col("sig"))
-    val pruned = seenB.join(broadcast(hot), Seq("band", "sig"), "left_anti")
+    // hot buckets prune on the SEEN side only: boilerplate lives in the
+    // accumulated corpus, and a batch doc in a hot bucket would fan out
+    // to millions of candidate rows
+    val pruned = pruneHotBuckets(seenBands.select(col("doc_id"), col("band"),
+      col("sig")), Seq("band", "sig"), maxBucket)
     val batchBands = bandSignatures(batch, idCol, textCol, shingleSize, numHashes, bands)
     pruned.select(col("band"), col("sig"), col("doc_id").as("seen_doc"))
       .join(broadcast(batchBands.select(col("band"), col("sig"),
@@ -580,10 +580,7 @@ object Dedup {
       shingleSize, numHashes, bands, maxBucket).localCheckpoint(false)
     def grams(df: DataFrame, outId: String) = df
       .select(col(idCol).as(outId), normalizeText(col(textCol)).as("norm"))
-      .select(col(outId),
-        when(col("norm").isNotNull,
-          graft.functions.StringExpressions.packedGrams(col("norm"), gramSize))
-          .otherwise(array().cast("array<bigint>")).as(s"grams_$outId"))
+      .select(col(outId), packedGramsOrEmpty(col("norm"), gramSize).as(s"grams_$outId"))
     val batchGrams = grams(batch, "batch_doc")
     val seenIds = cands.select(col("seen_doc")).distinct()
     val seenGrams = grams(
@@ -602,6 +599,11 @@ object Dedup {
     batch.select(col(idCol) +: keepCols.map(col): _*)
       .join(broadcast(dupIds), Seq(idCol), "left_anti")
   }
+
+  /** Sorted distinct packed n-gram codes; null text is an empty set. */
+  private def packedGramsOrEmpty(norm: Column, n: Int): Column =
+    when(norm.isNotNull, graft.functions.StringExpressions.packedGrams(norm, n))
+      .otherwise(array().cast("array<bigint>"))
 
   /** Train/benchmark contamination detection — the decontamination pass
     * every LLM training-data pipeline runs before training (the
@@ -658,9 +660,7 @@ object Dedup {
     * join output stays bounded by the (doc, hash) table itself. */
   def dupSpanStats(docs: DataFrame, idCol: String, textCol: String,
                    windowTokens: Int, minDocs: Int = 2): DataFrame = {
-    val perDoc = docs.select(col(idCol).as("doc_id"),
-        explode(graft.functions.StringExpressions.shingleHashes(
-          normalizeText(col(textCol)), windowTokens)).as("h"))
+    val perDoc = shingleRows(docs, idCol, textCol, windowTokens, "h")
       .groupBy(col("doc_id"), col("h"))
       .agg(count(lit(1)).as("__k"))
       .localCheckpoint(false)
@@ -871,15 +871,12 @@ object Dedup {
     // cache measured 1.48 s vs 1.15 s for the whole query at sf0.1
     // (recompute also 1.48 s — the vote agg re-runs per branch there).
     val withChunksM = withChunks.localCheckpoint(false)
-    val hot = withChunksM.groupBy(col("chunk"), col("key"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select(col("chunk"), col("key"))
     // Shuffle barrier before the self-join (SURVEY §8 rule 8, the
     // e22/e4 shape): without an exchange below the checkpoint the join
     // strategy is chosen statically from the LogicalRDD's rigged
     // pre-checkpoint estimate; the barrier gives AQE real sizes and
     // spreads within-bucket pair work beyond scan-split parallelism.
-    val pruned = withChunksM.join(broadcast(hot), Seq("chunk", "key"), "left_anti")
+    val pruned = pruneHotBuckets(withChunksM, Seq("chunk", "key"), maxBucket)
       .repartition(col("chunk"), col("key"))
     val a = pruned.select((col("chunk") +: col("key") +:
       col("doc_id").as("doc_a") +: simCols.map(s => col(s).as(s"__a_$s"))): _*)
@@ -950,9 +947,7 @@ object Dedup {
     * dataSize BroadcastExchange would observe for each derived stream.
     * varGramBytes = per-exploded-row aligned (doc_id + block) payload
     * summed over all gram rows; varDocBytes = per-doc aligned doc_id
-    * payload. Sentinel -1s = caller opted out of persistence, so no
-    * stats job runs and every join takes the scale-safe shuffled-hash
-    * path rather than paying a full recompute for stats. */
+    * payload. */
   private final case class GramStats(nDocs: Long, totalGrams: Long,
                                      varGramBytes: Long, varDocBytes: Long) {
     /** The FULL exploded gram stream (block, gram, doc, n[, pos]):
@@ -961,13 +956,11 @@ object Dedup {
       * 8 GiB check runs against relation.estimatedSize, NOT raw row
       * bytes. Probe-calibrated: sf1 relation 0.973 GB vs 0.456 GB raw
       * (2.13×); sf10 crash 8.4 GiB vs ~4.5 GB raw (1.98×). */
-    def fullStreamBytes: Long =
-      if (totalGrams < 0) -1L else (totalGrams * 48L + varGramBytes) * 2
+    def fullStreamBytes: Long = (totalGrams * 48L + varGramBytes) * 2
     /** The prefix-pruned stream — only n − ⌈t·n⌉ + 1 grams per doc
       * survive, so scale the full stream by the surviving fraction. */
     def prefixStreamBytes(t: Double): Long =
-      if (totalGrams < 0) -1L
-      else if (totalGrams == 0) 0L
+      if (totalGrams == 0) 0L
       else {
         val rows = ((1 - t) * totalGrams).toLong + nDocs
         (fullStreamBytes.toDouble * rows / totalGrams).toLong
@@ -977,25 +970,55 @@ object Dedup {
       * packed gram, measured doc_id payload. The map overhead swings
       * with BytesToBytesMap capacity doubling (probe: 1.13× raw at
       * sf1, 1.80× at sf10) — ×2 bounds it. */
-    def arrayTableBytes: Long =
-      if (totalGrams < 0) -1L
-      else (nDocs * 56L + varDocBytes + totalGrams * 8L) * 2
+    def arrayTableBytes: Long = (nDocs * 56L + varDocBytes + totalGrams * 8L) * 2
   }
 
   private def pad8(e: Column): Column = floor((e + lit(7)) / lit(8)) * lit(8)
 
-  private def gramStats(baseM: DataFrame, persisted: Boolean): GramStats =
-    if (!persisted) GramStats(-1L, -1L, -1L, -1L)
-    else {
-      val docB = pad8(octet_length(col("doc_id")))
-      val blockB = pad8(octet_length(col("block")))
-      val r = baseM.agg(count(lit(1)), sum(col("n_grams")),
-        sum(col("n_grams") * (docB + blockB)), sum(docB)).head()
-      if (r.isNullAt(1)) GramStats(r.getLong(0), 0L, 0L, 0L)
-      else GramStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    }
+  private def gramStats(grams: DataFrame): GramStats = {
+    val docB = pad8(octet_length(col("doc_id")))
+    val blockB = pad8(octet_length(col("block")))
+    val r = grams.agg(count(lit(1)), sum(col("n_grams")),
+      sum(col("n_grams") * (docB + blockB)), sum(docB)).head()
+    if (r.isNullAt(1)) GramStats(r.getLong(0), 0L, 0L, 0L)
+    else GramStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+  }
 
-  private def fits(bytes: Long, cap: Long): Boolean = bytes >= 0 && bytes <= cap
+  /** The gram index both n-gram operators prune and verify on: the
+    * materialized per-doc gram table, its exact stats, the broadcast
+    * budget, its exploded (doc, gram) stream and the rare-first prefix
+    * grams of every doc at threshold `t`. */
+  private final case class GramIndex(grams: DataFrame, st: GramStats, cap: Long,
+                                     exploded: DataFrame, prefixes: DataFrame) {
+    /** The prefix stream keyed for a candidate join, one side's names:
+      * doc_<s>, n<s>, pos_<s>. */
+    def prefixSide(s: String): DataFrame =
+      prefixes.select(col("block"), col("gram"), col("doc_id").as(s"doc_$s"),
+        col("n_grams").as(s"n$s"), col("pos").as(s"pos_$s"))
+  }
+
+  /** (doc_id, block, grams, n_grams) per doc, step 1 of
+    * [[ngramJaccardPairs]]: exact packed gram codes in ONE NARROW PASS,
+    * no shuffle — a native primitive byte loop per doc
+    * ([[graft.functions.StringExpressions.PackedGrams]]; the HOF
+    * split/transform/array_distinct chain it replaces was
+    * CodegenFallback, one UTF8String allocation per character plus a
+    * boxed lambda per gram, and dominated the sf1 base build). Codes
+    * come out SORTED distinct, so verification intersects per PAIR with
+    * an allocation-free two-pointer merge (SortedIntersectCount). Docs
+    * shorter than n (and null text: an empty gram set) yield no grams,
+    * as SQL range() does. Block columns join with U+0001 — the oracles'
+    * `chr(1)` — so ("a", "bc") and ("ab", "c") stay apart. */
+  private def gramBase(docs: DataFrame, idCol: String, textCol: String,
+                       blockCols: Seq[String], n: Int): DataFrame = {
+    require(n >= 1 && n <= 7, "gram packing supports 1 <= n <= 7")
+    docs
+      .select(col(idCol).as("doc_id"),
+        concat_ws("\u0001", blockCols.map(col): _*).as("block"),
+        normalizeText(col(textCol)).as("norm"))
+      .select(col("doc_id"), col("block"), packedGramsOrEmpty(col("norm"), n).as("grams"))
+      .withColumn("n_grams", size(col("grams")))
+  }
 
   /** Character n-gram Jaccard similarity with prefix + positional
     * filtering (AllPairs / PPJoin; Bayardo et al. WWW'07, Xiao et al.
@@ -1021,80 +1044,27 @@ object Dedup {
     *     surviving candidates.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        blockCols: Seq[String], n: Int, minJaccard: Double,
-                        persistIntermediate: Boolean = true): DataFrame = {
-    require(n >= 1 && n <= 7, "gram packing supports 1 <= n <= 7")
+                        blockCols: Seq[String], n: Int, minJaccard: Double): DataFrame = {
     // The final filter rounds to 4 decimals, so a pair with true J in
     // [minJaccard - 5e-5, minJaccard) still qualifies; loosen the prune
     // threshold so borderline pairs reach exact scoring.
     val t = minJaccard - 1e-4
-    val block = concat_ws("\u0001", blockCols.map(col): _*)
-    // Exact packed gram codes in ONE NARROW PASS, no shuffle: a native
-    // primitive byte loop per doc ([[graft.functions.StringExpressions
-    // .PackedGrams]] — the HOF split/transform/array_distinct chain it
-    // replaces was CodegenFallback, one UTF8String allocation per
-    // character plus a boxed lambda per gram, and dominated the sf1
-    // base build). Codes come out SORTED distinct, so verification
-    // intersects per PAIR with an allocation-free two-pointer merge
-    // (SortedIntersectCount). Docs shorter than n (and null text, kept
-    // as an empty gram set) yield no grams, same as the SQL range()
-    // semantics.
-    val base = docs
-      .select(col(idCol).as("doc_id"), block.as("block"),
-        normalizeText(col(textCol)).as("norm"))
-      .select(col("doc_id"), col("block"),
-        when(col("norm").isNotNull,
-          graft.functions.StringExpressions.packedGrams(col("norm"), n))
-          .otherwise(array().cast("array<bigint>")).as("grams"))
-      .withColumn("n_grams", size(col("grams")))
-      // Explicit shuffle barrier: the gram build is narrow, so without
-      // it downstream join planning sees no materialized stage and falls
-      // back to sort-merge over the exploded grams (the doc-keyed array
-      // rows are tiny — this exchange is cheap and gives AQE real sizes).
-      .repartition(col("doc_id"))
-    // base feeds three branches (document frequency, the prefix join,
-    // both sides of exact scoring); it must materialize once so no
-    // branch re-runs the scan+gram build (cf. MLlib
-    // approxSimilarityJoin caching its hashed datasets). Lazy
-    // localCheckpoint, not persist (SURVEY §8 rule 3): the grams
-    // column is a wide bigint array, the worst case for the columnar
-    // cache's per-row array (de)serialization — switching measured
-    // e4 7.27 vs 7.54 s and the downstream e17/e18 9.4/9.7 vs
-    // 10.9/10.5 s at sf1 (best-of-legs, same direction at sf0.1).
-    val baseM =
-      if (persistIntermediate) base.localCheckpoint(false) else base
-    // exact sizes for join planning (see broadcastCap's scaladoc)
-    val st = gramStats(baseM, persistIntermediate)
-    val cap = broadcastCap(docs.sparkSession)
-    val exploded = baseM.select(col("doc_id"), col("block"), col("n_grams"),
-      explode(col("grams")).as("gram"))
-    // per-block document frequency -> canonical rare-first total order.
-    // n <= 3 bounds the vocabulary by the gram space (37³ ≈ 50k per
-    // block over the normalized alphabet) — always broadcastable; wider
-    // spaces are priced by the corpus-derived upper bound.
-    val dfreqAgg =
-      exploded.groupBy(col("block"), col("gram")).agg(count(lit(1)).as("df"))
-    val dfreq =
-      if (n <= 3 || fits(st.fullStreamBytes, cap)) broadcast(dfreqAgg)
-      else dfreqAgg.hint("shuffle_hash")
-    val prefixLen = (col("n_grams") - ceil(lit(t) * col("n_grams")) + 1).cast("int")
-    // group by doc_id ALONE: block/n_grams are functionally dependent
-    // (constant per doc, folded via max), so when the df join broadcasts
-    // — the bounded-vocabulary regime — base's existing doc_id
-    // partitioning satisfies the aggregation and the joined gram table
-    // never re-shuffles.
-    val prefixes = exploded.join(dfreq, Seq("block", "gram"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("block")).as("block"), max(col("n_grams")).as("n_grams"),
-        array_sort(collect_list(struct(col("df"), col("gram")))).as("ordered"))
-      .select(col("doc_id"), col("block"), col("n_grams"),
-        posexplode(slice(col("ordered"), lit(1), prefixLen)))
-      .select(col("doc_id"), col("block"), col("n_grams"),
-        col("pos"), col("col.gram").as("gram"))
-    val a = prefixes.select(col("block"), col("gram"), col("doc_id").as("doc_a"),
-      col("n_grams").as("na"), col("pos").as("pos_a"))
-    val b = prefixes.select(col("block"), col("gram"), col("doc_id").as("doc_b"),
-      col("n_grams").as("nb"), col("pos").as("pos_b"))
+    // Explicit shuffle barrier: the gram build is narrow, so without it
+    // downstream join planning sees no materialized stage and falls back
+    // to sort-merge over the exploded grams (the doc-keyed array rows
+    // are tiny — this exchange is cheap and gives AQE real sizes). The
+    // gram table feeds three branches (document frequency, the prefix
+    // join, both sides of exact scoring), so it materializes once (cf.
+    // MLlib approxSimilarityJoin caching its hashed datasets). Lazy
+    // localCheckpoint, not persist (SURVEY §8 rule 3): the grams column
+    // is a wide bigint array, the worst case for the columnar cache's
+    // per-row array (de)serialization — switching measured e4 7.27 vs
+    // 7.54 s and the downstream e17/e18 9.4/9.7 vs 10.9/10.5 s at sf1
+    // (best-of-legs, same direction at sf0.1).
+    val idx = gramIndex(gramBase(docs, idCol, textCol, blockCols, n)
+      .repartition(col("doc_id")).localCheckpoint(false), n, t)
+    val a = idx.prefixSide("a")
+    val b = idx.prefixSide("b")
     // required overlap: J >= t  =>  inter >= t/(1+t) * (na+nb)
     val minOverlap = lit(t / (1 + t)) * (col("na") + col("nb"))
     // Candidate join, priced from measured bytes (broadcastCap doc):
@@ -1106,7 +1076,7 @@ object Dedup {
     // sorting hundreds of millions of gram rows measured ~2.8× slower
     // than the hash paths at sf1.
     val candidates = (
-      if (fits(st.prefixStreamBytes(t), cap)) a.join(broadcast(b), Seq("block", "gram"))
+      if (idx.st.prefixStreamBytes(t) <= idx.cap) a.join(broadcast(b), Seq("block", "gram"))
       else a.hint("shuffle_hash").join(b, Seq("block", "gram")))
       .filter(col("doc_a") < col("doc_b"))
       // length filter: J >= t implies |smaller| >= t * |larger|
@@ -1119,25 +1089,57 @@ object Dedup {
       // scoring re-verifies each hot pair many times — measured 2.3x
       // slower at sf1 than paying this one id-pair shuffle up front
       .select(col("doc_a"), col("doc_b")).distinct()
-    val ga = baseM.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"))
-    val gb = baseM.select(col("doc_id").as("doc_b"), col("grams").as("grams_b"))
-    verifyJoinBack(candidates, ga, gb, st, cap)
-      .withColumn("inter",
-        graft.functions.VectorExpressions
-          .sortedIntersectCount(col("grams_a"), col("grams_b")).cast("int"))
+    verifyJoinBack(candidates, idx)
       .withColumn("jaccard", round(col("inter").cast("double") /
         (size(col("grams_a")) + size(col("grams_b")) - col("inter")), 4))
       .filter(col("jaccard") >= minJaccard)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
+  /** Step 2 of [[ngramJaccardPairs]] over `grams`, a [[gramBase]]
+    * table the caller hash-partitioned on doc_id and localCheckpointed;
+    * the exact-stats aggregate is the first action on it, so it
+    * materializes the checkpoint the later branches read. */
+  private def gramIndex(grams: DataFrame, n: Int, t: Double): GramIndex = {
+    // exact sizes for join planning (see broadcastCap's scaladoc)
+    val st = gramStats(grams)
+    val cap = broadcastCap(grams.sparkSession)
+    val exploded = grams.select(col("doc_id"), col("block"), col("n_grams"),
+      explode(col("grams")).as("gram"))
+    // per-block document frequency -> canonical rare-first total order.
+    // n <= 3 bounds the vocabulary by the gram space (37³ ≈ 50k per
+    // block over the normalized alphabet) — always broadcastable; wider
+    // spaces are priced by the corpus-derived upper bound.
+    val dfreqAgg =
+      exploded.groupBy(col("block"), col("gram")).agg(count(lit(1)).as("df"))
+    val dfreq =
+      if (n <= 3 || st.fullStreamBytes <= cap) broadcast(dfreqAgg)
+      else dfreqAgg.hint("shuffle_hash")
+    val prefixLen = (col("n_grams") - ceil(lit(t) * col("n_grams")) + 1).cast("int")
+    // group by doc_id ALONE: block/n_grams are functionally dependent
+    // (constant per doc, folded via max), so when the df join broadcasts
+    // — the bounded-vocabulary regime — the gram table's existing doc_id
+    // partitioning satisfies the aggregation and the joined gram table
+    // never re-shuffles.
+    val prefixes = exploded.join(dfreq, Seq("block", "gram"))
+      .groupBy(col("doc_id"))
+      .agg(max(col("block")).as("block"), max(col("n_grams")).as("n_grams"),
+        array_sort(collect_list(struct(col("df"), col("gram")))).as("ordered"))
+      .select(col("doc_id"), col("block"), col("n_grams"),
+        posexplode(slice(col("ordered"), lit(1), prefixLen)))
+      .select(col("doc_id"), col("block"), col("n_grams"),
+        col("pos"), col("col.gram").as("gram"))
+    GramIndex(grams, st, cap, exploded, prefixes)
+  }
+
   /** Attach both docs' gram arrays to the candidate pairs, priced from
-    * measured bytes. Under the budget, broadcast both array tables —
-    * the pair stream then never shuffles (the measured fast path at
-    * bench scales; in local mode a broadcast is a same-heap reference).
-    * Over it: SHUFFLE_HASH both ways with bounded build sides — first
-    * join builds on the bare pair ids (output-scale) while the array
-    * table, which inherits baseM's doc_id hash partitioning through
+    * measured bytes, and count their exact intersection (`inter`).
+    * Under the budget, broadcast both array tables — the pair stream
+    * then never shuffles (the measured fast path at bench scales; in
+    * local mode a broadcast is a same-heap reference). Over it:
+    * SHUFFLE_HASH both ways with bounded build sides — first join
+    * builds on the bare pair ids (output-scale) while the array table,
+    * which inherits the gram table's doc_id hash partitioning through
     * the checkpoint, streams in place without re-shuffling; second
     * join builds on gb's per-partition array slice (corpus bytes /
     * shuffle.partitions) so the array-laden intermediate streams with
@@ -1145,13 +1147,18 @@ object Dedup {
     * an over-budget broadcast pins the corpus's arrays on every
     * executor plus the driver — the mid-scale crash under the rigged
     * estimates. */
-  private def verifyJoinBack(candidates: DataFrame, ga: DataFrame, gb: DataFrame,
-                             st: GramStats, cap: Long): DataFrame = {
-    if (fits(st.arrayTableBytes, cap))
-      candidates.join(broadcast(ga), "doc_a").join(broadcast(gb), "doc_b")
-    else
-      candidates.hint("shuffle_hash").join(ga, "doc_a")
-        .join(gb.hint("shuffle_hash"), "doc_b")
+  private def verifyJoinBack(candidates: DataFrame, idx: GramIndex): DataFrame = {
+    val ga = idx.grams.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"))
+    val gb = idx.grams.select(col("doc_id").as("doc_b"), col("grams").as("grams_b"))
+    val joined =
+      if (idx.st.arrayTableBytes <= idx.cap)
+        candidates.join(broadcast(ga), "doc_a").join(broadcast(gb), "doc_b")
+      else
+        candidates.hint("shuffle_hash").join(ga, "doc_a")
+          .join(gb.hint("shuffle_hash"), "doc_b")
+    joined.withColumn("inter",
+      graft.functions.VectorExpressions
+        .sortedIntersectCount(col("grams_a"), col("grams_b")).cast("int"))
   }
 
   /** Directed near-CONTAINMENT pairs (round 8): (a, b) where
@@ -1182,54 +1189,27 @@ object Dedup {
     * selective) or add a length band to blockCols so containers and
     * contained docs only meet within compatible length ranges. */
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                            blockCols: Seq[String], n: Int, minContainment: Double,
-                            persistIntermediate: Boolean = true): DataFrame = {
-    require(n >= 1 && n <= 7, "gram packing supports 1 <= n <= 7")
+                            blockCols: Seq[String], n: Int,
+                            minContainment: Double): DataFrame = {
     val t = minContainment - 1e-4 // round(·,4) boundary allowance, as e4
-    val block = concat_ws("", blockCols.map(col): _*)
-    val base = docs
-      .select(col(idCol).as("doc_id"), block.as("block"),
-        normalizeText(col(textCol)).as("norm"))
-      .select(col("doc_id"), col("block"),
-        when(col("norm").isNotNull,
-          graft.functions.StringExpressions.packedGrams(col("norm"), n))
-          .otherwise(array().cast("array<bigint>")).as("grams"))
-      .withColumn("n_grams", size(col("grams")))
-      .filter(col("n_grams") > 0)
-      .repartition(col("doc_id")) // shuffle barrier, as e4
-    val baseM =
-      if (persistIntermediate) base.localCheckpoint(false) else base
-    // exact sizes for join planning, as e4 (see broadcastCap)
-    val st = gramStats(baseM, persistIntermediate)
-    val cap = broadcastCap(docs.sparkSession)
-    val exploded = baseM.select(col("doc_id"), col("block"), col("n_grams"),
-      explode(col("grams")).as("gram"))
-    val dfreqAgg =
-      exploded.groupBy(col("block"), col("gram")).agg(count(lit(1)).as("df"))
-    val dfreq =
-      if (n <= 3 || fits(st.fullStreamBytes, cap)) broadcast(dfreqAgg)
-      else dfreqAgg.hint("shuffle_hash")
-    val prefixLen = (col("n_grams") - ceil(lit(t) * col("n_grams")) + 1).cast("int")
-    val prefixes = exploded.join(dfreq, Seq("block", "gram"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("block")).as("block"), max(col("n_grams")).as("n_grams"),
-        array_sort(collect_list(struct(col("df"), col("gram")))).as("ordered"))
-      .select(col("doc_id"), col("block"), col("n_grams"),
-        posexplode(slice(col("ordered"), lit(1), prefixLen)))
-      .select(col("doc_id"), col("block"), col("n_grams"),
-        col("pos"), col("col.gram").as("gram"))
-    val a = prefixes.select(col("block"), col("gram"), col("doc_id").as("doc_a"),
-      col("n_grams").as("na"), col("pos").as("pos_a"))
+    // The gram table takes e4's shuffle barrier and checkpoint. Docs
+    // with no grams (null, or shorter than n) can neither contain nor
+    // be contained, so they drop before it and the stats price only
+    // docs that can pair.
+    val idx = gramIndex(gramBase(docs, idCol, textCol, blockCols, n)
+      .filter(col("n_grams") > 0).repartition(col("doc_id"))
+      .localCheckpoint(false), n, t)
+    val a = idx.prefixSide("a")
     // The container side posts ALL grams — no prefix bound exists on
     // b, so it is priced at the FULL gram stream (this exact side was
     // the measured 13.2 GiB broadcast crash at sf10 under the rigged
     // estimates — see ngramJaccardPairs). Under budget, broadcast it
     // (the probe side keeps its partitioning, zero shuffles); over
     // budget, SHUFFLE_HASH building on the bounded prefix side.
-    val b = exploded.select(col("block"), col("gram"), col("doc_id").as("doc_b"),
+    val b = idx.exploded.select(col("block"), col("gram"), col("doc_id").as("doc_b"),
       col("n_grams").as("nb"))
     val candidates = (
-      if (fits(st.fullStreamBytes, cap)) a.join(broadcast(b), Seq("block", "gram"))
+      if (idx.st.fullStreamBytes <= idx.cap) a.join(broadcast(b), Seq("block", "gram"))
       else a.hint("shuffle_hash").join(b, Seq("block", "gram")))
       .filter(col("doc_a") =!= col("doc_b"))
       // container must be able to hold the required overlap
@@ -1237,12 +1217,7 @@ object Dedup {
       // positional: grams of a from pos_a on cannot reach t·na
       .filter((col("na") - col("pos_a")) >= lit(t) * col("na"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    val ga = baseM.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"))
-    val gb = baseM.select(col("doc_id").as("doc_b"), col("grams").as("grams_b"))
-    verifyJoinBack(candidates, ga, gb, st, cap)
-      .withColumn("inter",
-        graft.functions.VectorExpressions
-          .sortedIntersectCount(col("grams_a"), col("grams_b")).cast("int"))
+    verifyJoinBack(candidates, idx)
       .withColumn("containment",
         round(col("inter").cast("double") / size(col("grams_a")), 4))
       .filter(col("containment") >= minContainment)

@@ -786,10 +786,10 @@ object TextOps {
                     minCount: Long): DataFrame = {
     // NO materialization of the corpus-sized (doc, pair) table: its
     // two consumers each re-scan + re-shingle the corpus instead
-    // (columnar scan + the native kernel), which BigramVariantBench
-    // measured strictly cheaper than a localCheckpoint write of the
-    // 10×-wider exploded table (sf30: 21 s vs 66 s; sf10: 9.5 s vs
-    // checkpointed 19-34 s). Two rejected variants, both measured:
+    // (columnar scan + the native kernel), which the BASELINE.md e50
+    // plan study measured strictly cheaper than a localCheckpoint write
+    // of the 10×-wider exploded table (sf30: 21 s vs 66 s; sf10: 9.5 s
+    // vs checkpointed 19-34 s). Two rejected variants, both measured:
     // (a) a single join against an UNPRUNED per-pair score table —
     // loses the small-table broadcasts (the score table is the full
     // distinct-bigram population, the pruned kept/ctx tables are the

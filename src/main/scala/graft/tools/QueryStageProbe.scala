@@ -3,11 +3,11 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Generic per-stage probe for ANY registered SparkEntry query (round
-  * 12) — the [[D15Probe]] listener generalized so an optimization round
-  * can see, for a named query, where the task time, shuffle volume and
-  * spill actually land without hand-writing a probe per query. Runs the
-  * query against SPARK_GRAFT_SF_DIR through the pruning-proof bench
-  * sink and prints the per-stage table. Not part of the library
+  * 12) — the round-9 d15 stage listener (BASELINE.md) generalized so
+  * an optimization round can see, for a named query, where the task
+  * time, shuffle volume and spill actually land without hand-writing a
+  * probe per query. Runs the query against SPARK_GRAFT_SF_DIR through
+  * the pruning-proof bench sink and prints the per-stage table. Not part of the library
   * surface; numbers are for optimization work, never a bench record
   * (single run, no warm pass). */
 object QueryStageProbe {

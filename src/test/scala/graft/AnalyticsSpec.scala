@@ -169,7 +169,7 @@ class AnalyticsSpec extends SparkSpec {
     // basket aggregate + bounded explode — NO join and NO sort of the
     // fact table anywhere in the plan (the previous distinct+self-join
     // spilled 41 GB at sf30 across its three sort-heavy exchanges —
-    // D15Probe study in BASELINE.md)
+    // BASELINE.md, "Round-9 d15 stage probe + rewrite")
     val df = Analytics.partPairCounts(Tables.lineitem(spark, sf), 5)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString

@@ -46,37 +46,54 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("ngramJaccardPairs matches a naive exact computation on random corpora") {
     // Differential check of the prefix/positional-filter pruning: the
-    // optimized operator must return EXACTLY the naive all-pairs result.
+    // optimized operators — Jaccard and directed containment, which
+    // share the gram index — must return EXACTLY the naive all-pairs
+    // results. The two block columns concatenate to the same string in
+    // both blocks ("a"+"bc" = "ab"+"c") and every fifth mutant lands in
+    // the other block than its original, so a block key built without a
+    // separator would pair them.
     val rnd = new scala.util.Random(42)
     val vocab = "abcdefghij "
     def randDoc(len: Int): String =
       (1 to len).map(_ => vocab(rnd.nextInt(vocab.length))).mkString
+    val blocks = Seq(("a", "bc"), ("ab", "c"))
     val originals = (0 until 60).map(i =>
-      (i.toLong, randDoc(60 + rnd.nextInt(60)), if (i % 2 == 0) "x" else "y"))
+      (i.toLong, randDoc(60 + rnd.nextInt(60)), blocks(i % 2)))
     val mutants = (0 until 25).map { j =>
       val (_, text, blk) = originals(rnd.nextInt(originals.length))
       val pos = rnd.nextInt(text.length)
-      (1000L + j, text.updated(pos, vocab(rnd.nextInt(vocab.length))), blk)
+      val mblk = if (j % 5 == 0) blocks.filterNot(_ == blk).head else blk
+      (1000L + j, text.updated(pos, vocab(rnd.nextInt(vocab.length))), mblk)
     }
     val all = originals ++ mutants
-    val df = all.toDF("doc_id", "text", "blk")
-    val got = Dedup.ngramJaccardPairs(df, "doc_id", "text", Seq("blk"), 3, 0.6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val df = all.map { case (id, t, (b1, b2)) => (id, t, b1, b2) }
+      .toDF("doc_id", "text", "b1", "b2")
+    def pairs(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs(Dedup.ngramJaccardPairs(df, "doc_id", "text", Seq("b1", "b2"), 3, 0.6))
+    val gotC = pairs(
+      Dedup.ngramContainmentPairs(df, "doc_id", "text", Seq("b1", "b2"), 3, 0.8))
 
     def norm(t: String) =
       t.toLowerCase.replaceAll("[^a-z0-9\\s]", " ").replaceAll("\\s+", " ").trim
     def grams(t: String) = norm(t).sliding(3).toSet
+    def r4(x: Double) = math.round(x * 10000) / 10000.0
     val byId = all.map { case (id, t, b) => (id, b, grams(t)) }
-    val expected = (for {
+    // (a, b, same block, rounded Jaccard, rounded containment of a in b)
+    val scored = for {
       (ia, ba, ga) <- byId
       (ib, bb, gb) <- byId
-      if ia < ib && ba == bb
+      if ia != ib
       inter = (ga & gb).size
-      j = inter.toDouble / (ga.size + gb.size - inter)
-      if math.round(j * 10000) / 10000.0 >= 0.6
-    } yield (ia, ib)).toSet
-    assert(expected.nonEmpty, "test corpus produced no qualifying pairs")
+    } yield (ia, ib, ba == bb, r4(inter.toDouble / (ga.size + gb.size - inter)),
+      r4(inter.toDouble / ga.size))
+    val expected = scored.collect { case (a, b, true, j, _) if a < b && j >= 0.6 => (a, b) }.toSet
+    val expectedC = scored.collect { case (a, b, true, _, c) if c >= 0.8 => (a, b) }.toSet
+    val crossBlock = scored.collect { case (a, b, false, j, _) if a < b && j >= 0.6 => (a, b) }
+    assert(expected.nonEmpty && expectedC.nonEmpty, "test corpus produced no qualifying pairs")
+    assert(crossBlock.nonEmpty, "test corpus has no cross-block near-dup to guard the separator")
     assert(got == expected)
+    assert(gotC == expectedC)
   }
 
   test("ngramJaccardPairs: identical normalized docs score 1.0") {
