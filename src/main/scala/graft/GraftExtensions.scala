@@ -16,69 +16,41 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   * injection path for Spark-native libraries. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  /** (SQL name, usage, arity, builder over exactly `arity` arguments). */
+  private val functions: Seq[(String, String, Int, Seq[Expression] => Expression)] = Seq(
+    ("array_dot", "array_dot(a, b) - dot product of two numeric arrays (codegen'd)",
+      2, a => ArrayDot(a(0), a(1))),
+    ("array_norm2", "array_norm2(a) - sum of squares of a numeric array (codegen'd)",
+      1, a => ArrayNorm2(a(0))),
+    ("array_abs_max", "array_abs_max(a) - max absolute element of a numeric array (codegen'd)",
+      1, a => ArrayAbsMax(a(0))),
+    ("quantize_int8", "quantize_int8(a, scale) - symmetric int8 codes floor(v/scale*127+0.5) (codegen'd)",
+      2, a => QuantizeInt8(a(0), a(1))),
+    ("sorted_intersect_count",
+      "sorted_intersect_count(a, b) - intersection size of two SORTED array<bigint> (codegen'd two-pointer merge)",
+      2, a => SortedIntersectCount(a(0), a(1))),
+    ("poly_hash", "poly_hash(s) - polynomial rolling hash (acc*31+byte) mod 1e9+7 (codegen'd)",
+      1, a => PolyHash(a(0))),
+    ("normalize_text",
+      "normalize_text(s) - lower-case, non-alnum to space, collapse whitespace, trim; one fused pass",
+      1, a => NormalizeText(a(0))),
+    ("packed_grams",
+      "packed_grams(s, n) - sorted distinct byte-packed character n-grams of normalized text (codegen'd)",
+      2, a => PackedGrams(a(0), intLit(a(1), "packed_grams"))),
+    ("shingle_hashes",
+      "shingle_hashes(s, n) - poly_hash of every n-word shingle of normalized text (codegen'd)",
+      2, a => ShingleHashes(a(0), intLit(a(1), "shingle_hashes"))))
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("array_dot"),
-      info("array_dot", "array_dot(a, b) - dot product of two numeric arrays (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "array_dot takes 2 arguments")
-        ArrayDot(args.head, args(1))
-      }))
-    ext.injectFunction((FunctionIdentifier("array_norm2"),
-      info("array_norm2", "array_norm2(a) - sum of squares of a numeric array (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "array_norm2 takes 1 argument")
-        ArrayNorm2(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("array_abs_max"),
-      info("array_abs_max", "array_abs_max(a) - max absolute element of a numeric array (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "array_abs_max takes 1 argument")
-        ArrayAbsMax(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("quantize_int8"),
-      info("quantize_int8", "quantize_int8(a, scale) - symmetric int8 codes floor(v/scale*127+0.5) (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "quantize_int8 takes 2 arguments")
-        QuantizeInt8(args.head, args(1))
-      }))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(a, b) - intersection size of two SORTED array<bigint> (codegen'd two-pointer merge)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "sorted_intersect_count takes 2 arguments")
-        SortedIntersectCount(args.head, args(1))
-      }))
-    ext.injectFunction((FunctionIdentifier("poly_hash"),
-      info("poly_hash", "poly_hash(s) - polynomial rolling hash (acc*31+byte) mod 1e9+7 (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "poly_hash takes 1 argument")
-        PolyHash(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("normalize_text"),
-      info("normalize_text",
-        "normalize_text(s) - lower-case, non-alnum to space, collapse whitespace, trim; one fused pass"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "normalize_text takes 1 argument")
-        NormalizeText(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("packed_grams"),
-      info("packed_grams",
-        "packed_grams(s, n) - sorted distinct byte-packed character n-grams of normalized text (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "packed_grams takes 2 arguments")
-        PackedGrams(args.head, intLit(args(1), "packed_grams"))
-      }))
-    ext.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes",
-        "shingle_hashes(s, n) - poly_hash of every n-word shingle of normalized text (codegen'd)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "shingle_hashes takes 2 arguments")
-        ShingleHashes(args.head, intLit(args(1), "shingle_hashes"))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.foreach { case (name, usage, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        (args: Seq[Expression]) => {
+          require(args.length == arity,
+            s"$name takes $arity argument${if (arity == 1) "" else "s"}")
+          build(args)
+        }))
+    }
 
   /** The n of the gram/shingle builders is a STRUCTURAL parameter
     * (baked into the generated code), so the SQL form requires a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,38 +20,27 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StringExpressions {
 
+  /** Analysis-time validation shared by every expression here: the one
+    * child must be a string. */
+  private def checkString(name: String, child: Expression): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$name argument must be string, got ${other.catalogString}")
+    }
+
   /** Polynomial rolling hash acc = (acc*31 + byte) mod 1e9+7 over the
     * UTF-8 bytes of the input. On ASCII input this is bit-identical to
     * the per-character `ascii()` fold (the form the DuckDB oracles
     * replicate); all callers hash normalized text, which is ASCII by
     * construction. Wraparound-free: acc < 2^30, so acc*31 + 255 < 2^35. */
   case class PolyHash(child: Expression) extends UnaryExpression {
-    private val P = 1000000007L
     override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"poly_hash argument must be string, got ${other.catalogString}")
-    }
-    override protected def nullSafeEval(input: Any): Any = {
-      val bytes = input.asInstanceOf[UTF8String].getBytes
-      var acc = 0L
-      var i = 0
-      while (i < bytes.length) { acc = (acc * 31L + (bytes(i) & 0xff)) % P; i += 1 }
-      acc
-    }
+    override def checkInputDataTypes(): TypeCheckResult = checkString("poly_hash", child)
+    override protected def nullSafeEval(input: Any): Any =
+      ShinglePack.polyHash(input.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val (b, i, acc) = (ctx.freshName("b"), ctx.freshName("i"), ctx.freshName("acc"))
-        s"""
-           |byte[] $b = $a.getBytes();
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $b.length; $i++) {
-           |  $acc = ($acc * 31L + ($b[$i] & 0xff)) % ${P}L;
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"graft.functions.ShinglePack.polyHash($a)")
     override protected def withNewChildInternal(c: Expression): PolyHash = copy(child = c)
   }
 
@@ -71,16 +61,11 @@ object StringExpressions {
   case class PackedGrams(child: Expression, n: Int) extends UnaryExpression {
     require(n >= 1 && n <= 7, s"gram packing supports 1 <= n <= 7, got $n")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"packed_grams argument must be string, got ${other.catalogString}")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = checkString("packed_grams", child)
     override protected def nullSafeEval(input: Any): Any =
       GramPack.pack(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.GramPack.pack($a, $n);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.GramPack.pack($a, $n)")
     override protected def withNewChildInternal(c: Expression): PackedGrams =
       copy(child = c)
   }
@@ -107,16 +92,11 @@ object StringExpressions {
     // hash-keyed context join is the consumer
     require(n >= 1 && n <= 64, s"shingle size must be in [1, 64], got $n")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"shingle_hashes argument must be string, got ${other.catalogString}")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = checkString("shingle_hashes", child)
     override protected def nullSafeEval(input: Any): Any =
       ShinglePack.hashes(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.ShinglePack.hashes($a, $n);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.ShinglePack.hashes($a, $n)")
     override protected def withNewChildInternal(c: Expression): ShingleHashes =
       copy(child = c)
   }
@@ -135,16 +115,11 @@ object StringExpressions {
   case class ShingleStrings(child: Expression, n: Int) extends UnaryExpression {
     require(n >= 2 && n <= 64, s"shingle size must be in [2, 64], got $n")
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"shingle_strings argument must be string, got ${other.catalogString}")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = checkString("shingle_strings", child)
     override protected def nullSafeEval(input: Any): Any =
       ShinglePack.strings(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.ShinglePack.strings($a, $n);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.ShinglePack.strings($a, $n)")
     override protected def withNewChildInternal(c: Expression): ShingleStrings =
       copy(child = c)
   }
@@ -171,16 +146,11 @@ object StringExpressions {
     * runs to one space, trim the ends. */
   case class NormalizeText(child: Expression) extends UnaryExpression {
     override def dataType: DataType = StringType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"normalize_text argument must be string, got ${other.catalogString}")
-    }
+    override def checkInputDataTypes(): TypeCheckResult = checkString("normalize_text", child)
     override protected def nullSafeEval(input: Any): Any =
       TextNorm.normalize(input.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.TextNorm.normalize($a);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.TextNorm.normalize($a)")
     override protected def withNewChildInternal(c: Expression): NormalizeText =
       copy(child = c)
   }
@@ -229,69 +199,80 @@ object TextNorm {
   }
 }
 
-/** Shared kernel for [[StringExpressions.ShingleHashes]] — top-level so
-  * generated Java calls the static forwarder directly. */
+/** Shared kernels for [[StringExpressions.PolyHash]],
+  * [[StringExpressions.ShingleHashes]] and
+  * [[StringExpressions.ShingleStrings]] — top-level so generated Java
+  * calls the static forwarders directly. */
 object ShinglePack {
+  /** Modulus of the poly-hash recurrence. */
   private val P = 1000000007L
-  def hashes(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+
+  /** The poly-hash recurrence acc = (acc*31 + byte) mod P over
+    * b[from, until). */
+  private def polyFold(b: Array[Byte], from: Int, until: Int): Long = {
+    var acc = 0L
+    var i = from
+    while (i < until) { acc = (acc * 31L + (b(i) & 0xff)) % P; i += 1 }
+    acc
+  }
+
+  def polyHash(s: UTF8String): Long = {
     val b = s.getBytes
-    val empty = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.empty[Long])
-    if (b.length == 0) return empty
-    // word k spans [starts(k), ends(k)); single-space separators only
+    polyFold(b, 0, b.length)
+  }
+
+  /** The word-boundary walk: the start offset of every word of
+    * single-space-joined text (word k spans [starts(k), next space)),
+    * or null when the text is empty or has fewer than n words. */
+  private def wordStarts(b: Array[Byte], n: Int): Array[Int] = {
+    if (b.length == 0) return null
     var words = 1
     var i = 0
     while (i < b.length) { if (b(i) == ' '.toByte) words += 1; i += 1 }
-    if (words < n) return empty
+    if (words < n) return null
     val starts = new Array[Int](words)
     var w = 1
-    starts(0) = 0
     i = 0
     while (i < b.length) {
       if (b(i) == ' '.toByte) { starts(w) = i + 1; w += 1 }
       i += 1
     }
-    val out = new Array[Long](words - n + 1)
+    starts
+  }
+
+  /** End (exclusive) of the n-word shingle that starts at word k. */
+  private def shingleEnd(starts: Array[Int], len: Int, k: Int, n: Int): Int =
+    if (k + n == starts.length) len else starts(k + n) - 1
+
+  def hashes(s: UTF8String, n: Int): ArrayData = {
+    val b = s.getBytes
+    val starts = wordStarts(b, n)
+    if (starts == null)
+      return ArrayData.toArrayData(Array.empty[Long])
+    val out = new Array[Long](starts.length - n + 1)
     var k = 0
     while (k < out.length) {
-      val from = starts(k)
-      val until = if (k + n == words) b.length else starts(k + n) - 1
-      var acc = 0L
-      i = from
-      while (i < until) { acc = (acc * 31L + (b(i) & 0xff)) % P; i += 1 }
-      out(k) = acc
+      out(k) = polyFold(b, starts(k), shingleEnd(starts, b.length, k, n))
       k += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(out)
   }
 
   /** Same boundary walk as [[hashes]], returning the shingle STRINGS as
     * zero-copy byte-window slices of the parent. */
-  def strings(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def strings(s: UTF8String, n: Int): ArrayData = {
     val b = s.getBytes
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[Any])
-    if (b.length == 0) return empty
-    var words = 1
-    var i = 0
-    while (i < b.length) { if (b(i) == ' '.toByte) words += 1; i += 1 }
-    if (words < n) return empty
-    val starts = new Array[Int](words)
-    var w = 1
-    starts(0) = 0
-    i = 0
-    while (i < b.length) {
-      if (b(i) == ' '.toByte) { starts(w) = i + 1; w += 1 }
-      i += 1
-    }
-    val out = new Array[Any](words - n + 1)
+    val starts = wordStarts(b, n)
+    if (starts == null)
+      return new GenericArrayData(Array.empty[Any])
+    val out = new Array[Any](starts.length - n + 1)
     var k = 0
     while (k < out.length) {
       val from = starts(k)
-      val until = if (k + n == words) b.length else starts(k + n) - 1
-      out(k) = UTF8String.fromBytes(b, from, until - from)
+      out(k) = UTF8String.fromBytes(b, from, shingleEnd(starts, b.length, k, n) - from)
       k += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -301,10 +282,10 @@ object ShinglePack {
   * directly: the whole-stage pipeline stays compiled while the per-doc
   * work is one tight primitive pass. */
 object GramPack {
-  def pack(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def pack(s: UTF8String, n: Int): ArrayData = {
     val b = s.getBytes
     if (b.length < n)
-      return org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.empty[Long])
+      return ArrayData.toArrayData(Array.empty[Long])
     val m = b.length - n + 1
     val codes = new Array[Long](m)
     var i = 0
@@ -323,7 +304,7 @@ object GramPack {
       if (codes(i) != codes(w - 1)) { codes(w) = codes(i); w += 1 }
       i += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+    ArrayData.toArrayData(
       java.util.Arrays.copyOf(codes, w))
   }
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.annotation.switch
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -14,48 +16,29 @@ import org.apache.spark.sql.types._
   * `aggregate`) are CodegenFallback — every element goes through an
   * interpreted lambda with boxed Doubles. On the similarity/clustering
   * paths that cost dominates the whole query (round-1 e13 spent ~15 s
-  * mostly in interpreted distance lambdas at sf0.1). These expressions
-  * implement both `eval` and `doGenCode` with primitive `double` loops
-  * over `ArrayData`, so dot products, norms, and nearest-centroid
-  * argmin stay inside whole-stage codegen with zero boxing.
+  * mostly in interpreted distance lambdas at sf0.1). Each expression
+  * here has ONE kernel, a primitive `double` loop over `ArrayData` in
+  * [[VectorKernels]]: `nullSafeEval` calls it and `doGenCode` emits a
+  * single call to it, so dot products, norms, and nearest-centroid
+  * argmin stay inside whole-stage codegen with zero boxing and the two
+  * paths cannot drift apart.
   *
-  * Element null slots are treated as 0.0 on both the interpreted and
-  * codegen paths (the guard branch predicts perfectly on dense
-  * vectors); inputs that are not numeric arrays fail at analysis time
-  * via checkInputDataTypes rather than as runtime ClassCastExceptions.
+  * Element null slots are treated as 0.0 on both paths (the guard
+  * branch predicts perfectly on dense vectors); inputs that are not
+  * numeric arrays fail at analysis time via checkInputDataTypes rather
+  * than as runtime ClassCastExceptions.
   */
 object VectorExpressions {
 
-  private val supportedElems: Set[DataType] =
-    Set(DoubleType, FloatType, LongType, IntegerType)
+  private val K = "graft.functions.VectorKernels"
 
-  /** Null slots read as 0.0 on BOTH paths (documented contract; the
-    * branch predicts perfectly on dense vectors, so the 100 TB cost is
-    * nil — and without it the interpreted path NPEs on a null slot
-    * while codegen reads garbage). */
-  private def elemJava(arr: String, et: DataType, i: String): String = {
-    val raw = et match {
-      case DoubleType => s"$arr.getDouble($i)"
-      case FloatType  => s"(double) $arr.getFloat($i)"
-      case LongType   => s"(double) $arr.getLong($i)"
-      case IntegerType => s"(double) $arr.getInt($i)"
-      case other => throw new IllegalArgumentException(s"unsupported element type $other")
-    }
-    s"($arr.isNullAt($i) ? 0.0 : $raw)"
-  }
+  /** Supported element types and their [[VectorKernels]] read codes. */
+  private val elemCodes: Map[DataType, Int] = Map(DoubleType -> VectorKernels.F64,
+    FloatType -> VectorKernels.F32, LongType -> VectorKernels.I64, IntegerType -> VectorKernels.I32)
 
-  private def elemScala(arr: ArrayData, et: DataType, i: Int): Double =
-    if (arr.isNullAt(i)) 0.0
-    else et match {
-      case DoubleType => arr.getDouble(i)
-      case FloatType  => arr.getFloat(i).toDouble
-      case LongType   => arr.getLong(i).toDouble
-      case IntegerType => arr.getInt(i).toDouble
-      case other => throw new IllegalArgumentException(s"unsupported element type $other")
-    }
-
-  private def elementType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  /** The element-type code of an array child, fixed once per expression. */
+  private def elemCode(e: Expression): Int =
+    elemCodes(e.dataType.asInstanceOf[ArrayType].elementType)
 
   /** Analysis-time validation: every child must be array<numeric> with a
     * supported element width — without this, bad inputs surface as raw
@@ -63,7 +46,7 @@ object VectorExpressions {
   private def checkNumericArrays(name: String, children: Seq[Expression]): TypeCheckResult = {
     children.zipWithIndex.foreach { case (c, i) =>
       c.dataType match {
-        case ArrayType(et, _) if supportedElems.contains(et) => ()
+        case ArrayType(et, _) if elemCodes.contains(et) => ()
         case other => return TypeCheckResult.TypeCheckFailure(
           s"$name argument ${i + 1} must be array<double|float|bigint|int>, got " +
             other.catalogString)
@@ -77,57 +60,29 @@ object VectorExpressions {
     * contract — equivalent to zero-padding the shorter vector, which is
     * the conventional embedding semantics); null slots read as 0.0. */
   case class ArrayDot(left: Expression, right: Expression) extends BinaryExpression {
+    private lazy val lt = elemCode(left)
+    private lazy val rt = elemCode(right)
     override def dataType: DataType = DoubleType
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("array_dot", Seq(left, right))
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val (lt, rt) = (elementType(left), elementType(right))
-      val n = math.min(x.numElements(), y.numElements())
-      var s = 0.0; var i = 0
-      while (i < n) { s += elemScala(x, lt, i) * elemScala(y, rt, i); i += 1 }
-      s
-    }
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      VectorKernels.dot(a.asInstanceOf[ArrayData], lt, b.asInstanceOf[ArrayData], rt)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (i, n, s) = (ctx.freshName("i"), ctx.freshName("n"), ctx.freshName("s"))
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $s += ${elemJava(a, elementType(left), i)} * ${elemJava(b, elementType(right), i)};
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.dot($a, $lt, $b, $rt)")
     override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDot =
       copy(left = l, right = r)
   }
 
   /** Sum of squares of a numeric array column (squared L2 norm). */
   case class ArrayNorm2(child: Expression) extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = DoubleType
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("array_norm2", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      var s = 0.0; var i = 0
-      while (i < v.numElements()) { val x = elemScala(v, et, i); s += x * x; i += 1 }
-      s
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.norm2(input.asInstanceOf[ArrayData], t)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val (i, s, x) = (ctx.freshName("i"), ctx.freshName("s"), ctx.freshName("x"))
-        s"""
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  double $x = ${elemJava(a, elementType(child), i)};
-           |  $s += $x * $x;
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.norm2($a, $t)")
     override protected def withNewChildInternal(c: Expression): ArrayNorm2 = copy(child = c)
   }
 
@@ -137,46 +92,15 @@ object VectorExpressions {
     * overhead). Ties resolve to the lowest centroid index. */
   case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
       extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = IntegerType
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("nearest_centroid", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      var best = -1; var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < centroids.length) {
-        val cent = centroids(c)
-        val n = math.min(cent.length, v.numElements())
-        var d = 0.0; var i = 0
-        while (i < n) { val t = elemScala(v, et, i) - cent(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.nearestCentroid(input.asInstanceOf[ArrayData], t, centroids)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (c, i, n) = (ctx.freshName("c"), ctx.freshName("i"), ctx.freshName("n"))
-        val (d, t, best, bestD) = (ctx.freshName("d"), ctx.freshName("t"),
-          ctx.freshName("best"), ctx.freshName("bestD"))
-        s"""
-           |int $best = -1;
-           |double $bestD = Double.POSITIVE_INFINITY;
-           |for (int $c = 0; $c < $cents.length; $c++) {
-           |  double[] cent = $cents[$c];
-           |  int $n = java.lang.Math.min(cent.length, $a.numElements());
-           |  double $d = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $t = ${elemJava(a, elementType(child), i)} - cent[$i];
-           |    $d += $t * $t;
-           |  }
-           |  if ($d < $bestD) { $bestD = $d; $best = $c; }
-           |}
-           |${ev.value} = $best;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.nearestCentroid($a, $t, $cents)")
     }
     override protected def withNewChildInternal(c: Expression): NearestCentroid =
       copy(child = c)
@@ -187,44 +111,15 @@ object VectorExpressions {
     * primitive (nprobe selection sorts this tiny k-array per row). */
   case class CentroidDistances(child: Expression, centroids: Array[Array[Double]])
       extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("centroid_distances", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      val out = new Array[Double](centroids.length)
-      var c = 0
-      while (c < centroids.length) {
-        val cent = centroids(c)
-        val n = math.min(cent.length, v.numElements())
-        var d = 0.0; var i = 0
-        while (i < n) { val t = elemScala(v, et, i) - cent(i); d += t * t; i += 1 }
-        out(c) = d
-        c += 1
-      }
-      ArrayData.toArrayData(out)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.centroidDistances(input.asInstanceOf[ArrayData], t, centroids)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (c, i, n, d, t, out) = (ctx.freshName("c"), ctx.freshName("i"),
-          ctx.freshName("n"), ctx.freshName("d"), ctx.freshName("t"), ctx.freshName("out"))
-        s"""
-           |double[] $out = new double[$cents.length];
-           |for (int $c = 0; $c < $cents.length; $c++) {
-           |  double[] cent = $cents[$c];
-           |  int $n = java.lang.Math.min(cent.length, $a.numElements());
-           |  double $d = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $t = ${elemJava(a, elementType(child), i)} - cent[$i];
-           |    $d += $t * $t;
-           |  }
-           |  $out[$c] = $d;
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.centroidDistances($a, $t, $cents)")
     }
     override protected def withNewChildInternal(c: Expression): CentroidDistances =
       copy(child = c)
@@ -236,43 +131,15 @@ object VectorExpressions {
     * numPlanes interpreted zip_with/aggregate dot products. */
   case class PlaneSignature(child: Expression, planes: Array[Array[Double]])
       extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = LongType
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("plane_signature", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      var sig = 0L
-      var p = 0
-      while (p < planes.length) {
-        val plane = planes(p)
-        val n = math.min(plane.length, v.numElements())
-        var s = 0.0; var i = 0
-        while (i < n) { s += elemScala(v, et, i) * plane(i); i += 1 }
-        if (s >= 0) sig |= 1L << p
-        p += 1
-      }
-      sig
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.planeSignature(input.asInstanceOf[ArrayData], t, planes)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val mat = ctx.addReferenceObj("planes", planes, "double[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (p, i, n, s, sig) = (ctx.freshName("p"), ctx.freshName("i"),
-          ctx.freshName("n"), ctx.freshName("s"), ctx.freshName("sig"))
-        s"""
-           |long $sig = 0L;
-           |for (int $p = 0; $p < $mat.length; $p++) {
-           |  double[] plane = $mat[$p];
-           |  int $n = java.lang.Math.min(plane.length, $a.numElements());
-           |  double $s = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    $s += ${elemJava(a, elementType(child), i)} * plane[$i];
-           |  }
-           |  if ($s >= 0) $sig |= 1L << $p;
-           |}
-           |${ev.value} = $sig;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.planeSignature($a, $t, $mat)")
     }
     override protected def withNewChildInternal(c: Expression): PlaneSignature =
       copy(child = c)
@@ -282,30 +149,14 @@ object VectorExpressions {
     * Empty arrays yield 0.0; null slots read as 0.0 like every other
     * expression here. */
   case class ArrayAbsMax(child: Expression) extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = DoubleType
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("array_abs_max", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      var m = 0.0; var i = 0
-      while (i < v.numElements()) {
-        val x = math.abs(elemScala(v, et, i)); if (x > m) m = x; i += 1
-      }
-      m
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.absMax(input.asInstanceOf[ArrayData], t)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val (i, m, x) = (ctx.freshName("i"), ctx.freshName("m"), ctx.freshName("x"))
-        s"""
-           |double $m = 0.0;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  double $x = java.lang.Math.abs(${elemJava(a, elementType(child), i)});
-           |  if ($x > $m) $m = $x;
-           |}
-           |${ev.value} = $m;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.absMax($a, $t)")
     override protected def withNewChildInternal(c: Expression): ArrayAbsMax = copy(child = c)
   }
 
@@ -324,6 +175,7 @@ object VectorExpressions {
     * elements to 0 to match. Callers needing null propagation must
     * pre-filter. */
   case class QuantizeInt8(vec: Expression, scale: Expression) extends BinaryExpression {
+    private lazy val t = elemCode(vec)
     override def left: Expression = vec
     override def right: Expression = scale
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -335,34 +187,10 @@ object VectorExpressions {
           s"quantize_int8 argument 2 must be double, got ${scale.dataType.catalogString}")
       else TypeCheckResult.TypeCheckSuccess
     }
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val s = b.asInstanceOf[Double]
-      val et = elementType(vec)
-      val out = new Array[Int](v.numElements())
-      if (s > 0) {
-        var i = 0
-        while (i < v.numElements()) {
-          out(i) = math.floor(elemScala(v, et, i) / s * 127.0 + 0.5).toInt
-          i += 1
-        }
-      }
-      ArrayData.toArrayData(out)
-    }
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      VectorKernels.quantizeInt8(a.asInstanceOf[ArrayData], t, b.asInstanceOf[Double])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (i, out) = (ctx.freshName("i"), ctx.freshName("out"))
-        s"""
-           |int[] $out = new int[$a.numElements()];
-           |if ($b > 0) {
-           |  for (int $i = 0; $i < $a.numElements(); $i++) {
-           |    $out[$i] = (int) java.lang.Math.floor(
-           |      ${elemJava(a, elementType(vec), i)} / $b * 127.0 + 0.5);
-           |  }
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.quantizeInt8($a, $t, $b)")
     override protected def withNewChildrenInternal(l: Expression, r: Expression): QuantizeInt8 =
       copy(vec = l, scale = r)
   }
@@ -393,37 +221,31 @@ object VectorExpressions {
       }
       TypeCheckResult.TypeCheckSuccess
     }
-    private def elemLong(arr: ArrayData, i: Int): Long =
-      if (arr.isNullAt(i)) 0L else arr.getLong(i)
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      var i = 0; var j = 0; var c = 0
-      while (i < x.numElements() && j < y.numElements()) {
-        val xv = elemLong(x, i); val yv = elemLong(y, j)
-        if (xv < yv) i += 1
-        else if (xv > yv) j += 1
-        else { c += 1; i += 1; j += 1 }
-      }
-      c
-    }
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      VectorKernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (i, j, c) = (ctx.freshName("i"), ctx.freshName("j"), ctx.freshName("c"))
-        val (xv, yv) = (ctx.freshName("xv"), ctx.freshName("yv"))
-        s"""
-           |int $i = 0; int $j = 0; int $c = 0;
-           |while ($i < $a.numElements() && $j < $b.numElements()) {
-           |  long $xv = $a.isNullAt($i) ? 0L : $a.getLong($i);
-           |  long $yv = $b.isNullAt($j) ? 0L : $b.getLong($j);
-           |  if ($xv < $yv) { $i++; }
-           |  else if ($xv > $yv) { $j++; }
-           |  else { $c++; $i++; $j++; }
-           |}
-           |${ev.value} = $c;
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.sortedIntersectCount($a, $b)")
     override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
       copy(left = l, right = r)
+  }
+
+  /** Elementwise a ± b over two numeric array columns as array<double>:
+    * the body of [[ArraySub]] and [[ArrayAdd]], which differ only in
+    * the operator. No constructor parameters: Java serialization (task
+    * binaries) needs a no-arg constructor on this non-serializable
+    * superclass. */
+  sealed abstract class ElementwiseSumDiff extends BinaryExpression {
+    protected def fnName: String
+    protected def subtract: Boolean
+    private lazy val lt = elemCode(left)
+    private lazy val rt = elemCode(right)
+    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkNumericArrays(fnName, Seq(left, right))
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      VectorKernels.sumDiff(a.asInstanceOf[ArrayData], lt, b.asInstanceOf[ArrayData], rt, subtract)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) => s"$K.sumDiff($a, $lt, $b, $rt, $subtract)")
   }
 
   /** Elementwise a − b over two numeric array columns as array<double>
@@ -439,62 +261,18 @@ object VectorExpressions {
     * expression in this file (zip_with instead null-pads; vectors of
     * unequal length or with null slots are out of the ANN operators'
     * contract either way). */
-  case class ArraySub(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkNumericArrays("array_sub", Seq(left, right))
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val (lt, rt) = (elementType(left), elementType(right))
-      val n = math.min(x.numElements(), y.numElements())
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) { out(i) = elemScala(x, lt, i) - elemScala(y, rt, i); i += 1 }
-      ArrayData.toArrayData(out)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (i, n, out) = (ctx.freshName("i"), ctx.freshName("n"), ctx.freshName("out"))
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double[] $out = new double[$n];
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $out[$i] = ${elemJava(a, elementType(left), i)} - ${elemJava(b, elementType(right), i)};
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+  case class ArraySub(left: Expression, right: Expression) extends ElementwiseSumDiff {
+    override protected def fnName: String = "array_sub"
+    override protected def subtract: Boolean = true
     override protected def withNewChildrenInternal(l: Expression, r: Expression): ArraySub =
       copy(left = l, right = r)
   }
 
   /** Elementwise a + b as array<double> — [[ArraySub]]'s twin for the
     * IVF-PQ reconstruction x̂ = c_cell + q(x − c_cell). Same contract. */
-  case class ArrayAdd(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkNumericArrays("array_add", Seq(left, right))
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val (lt, rt) = (elementType(left), elementType(right))
-      val n = math.min(x.numElements(), y.numElements())
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) { out(i) = elemScala(x, lt, i) + elemScala(y, rt, i); i += 1 }
-      ArrayData.toArrayData(out)
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val (i, n, out) = (ctx.freshName("i"), ctx.freshName("n"), ctx.freshName("out"))
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double[] $out = new double[$n];
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $out[$i] = ${elemJava(a, elementType(left), i)} + ${elemJava(b, elementType(right), i)};
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+  case class ArrayAdd(left: Expression, right: Expression) extends ElementwiseSumDiff {
+    override protected def fnName: String = "array_add"
+    override protected def subtract: Boolean = false
     override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayAdd =
       copy(left = l, right = r)
   }
@@ -523,69 +301,15 @@ object VectorExpressions {
                            codebooks: Array[Array[Array[Double]]],
                            dsub: Int)
       extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("pq_reconstruct", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      val out = new Array[Double](codebooks.length * dsub)
-      var s = 0
-      while (s < codebooks.length) {
-        val cb = codebooks(s)
-        val off = s * dsub
-        val rem = math.max(v.numElements() - off, 0)
-        var best = -1; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cb.length) {
-          val cw = cb(c)
-          val n = math.min(cw.length, rem)
-          var d = 0.0; var i = 0
-          while (i < n) { val t = elemScala(v, et, off + i) - cw(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        val chosen = cb(best)
-        var j = 0
-        while (j < dsub) { out(off + j) = chosen(j); j += 1 }
-        s += 1
-      }
-      ArrayData.toArrayData(out)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.pqReconstruct(input.asInstanceOf[ArrayData], t, codebooks, dsub)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cbs = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (s, c, i, j, n) = (ctx.freshName("s"), ctx.freshName("c"),
-          ctx.freshName("i"), ctx.freshName("j"), ctx.freshName("n"))
-        val (off, rem, d, t, best, bestD, out) = (ctx.freshName("off"),
-          ctx.freshName("rem"), ctx.freshName("d"), ctx.freshName("t"),
-          ctx.freshName("best"), ctx.freshName("bestD"), ctx.freshName("out"))
-        val idx = ctx.freshName("idx")
-        s"""
-           |double[] $out = new double[$cbs.length * $dsub];
-           |for (int $s = 0; $s < $cbs.length; $s++) {
-           |  double[][] cb = $cbs[$s];
-           |  int $off = $s * $dsub;
-           |  int $rem = java.lang.Math.max($a.numElements() - $off, 0);
-           |  int $best = -1;
-           |  double $bestD = Double.POSITIVE_INFINITY;
-           |  for (int $c = 0; $c < cb.length; $c++) {
-           |    double[] cw = cb[$c];
-           |    int $n = java.lang.Math.min(cw.length, $rem);
-           |    double $d = 0.0;
-           |    for (int $i = 0; $i < $n; $i++) {
-           |      int $idx = $off + $i;
-           |      double $t = ${elemJava(a, elementType(child), idx)} - cw[$i];
-           |      $d += $t * $t;
-           |    }
-           |    if ($d < $bestD) { $bestD = $d; $best = $c; }
-           |  }
-           |  double[] chosen = cb[$best];
-           |  for (int $j = 0; $j < $dsub; $j++) { $out[$off + $j] = chosen[$j]; }
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.pqReconstruct($a, $t, $cbs, $dsub)")
     }
     override protected def withNewChildInternal(c: Expression): PqReconstruct =
       copy(child = c)
@@ -600,66 +324,15 @@ object VectorExpressions {
                       codebooks: Array[Array[Array[Double]]],
                       dsub: Int)
       extends UnaryExpression {
+    private lazy val t = elemCode(child)
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def checkInputDataTypes(): TypeCheckResult =
       checkNumericArrays("pq_assign", Seq(child))
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val et = elementType(child)
-      val out = new Array[Int](codebooks.length)
-      var s = 0
-      while (s < codebooks.length) {
-        val cb = codebooks(s)
-        val off = s * dsub
-        val rem = math.max(v.numElements() - off, 0)
-        var best = -1; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cb.length) {
-          val cw = cb(c)
-          val n = math.min(cw.length, rem)
-          var d = 0.0; var i = 0
-          while (i < n) { val t = elemScala(v, et, off + i) - cw(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        out(s) = best
-        s += 1
-      }
-      ArrayData.toArrayData(out)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      VectorKernels.pqAssign(input.asInstanceOf[ArrayData], t, codebooks, dsub)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val cbs = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val (s, c, i, n) = (ctx.freshName("s"), ctx.freshName("c"),
-          ctx.freshName("i"), ctx.freshName("n"))
-        val (off, rem, d, t, best, bestD, out) = (ctx.freshName("off"),
-          ctx.freshName("rem"), ctx.freshName("d"), ctx.freshName("t"),
-          ctx.freshName("best"), ctx.freshName("bestD"), ctx.freshName("out"))
-        val idx = ctx.freshName("idx")
-        s"""
-           |int[] $out = new int[$cbs.length];
-           |for (int $s = 0; $s < $cbs.length; $s++) {
-           |  double[][] cb = $cbs[$s];
-           |  int $off = $s * $dsub;
-           |  int $rem = java.lang.Math.max($a.numElements() - $off, 0);
-           |  int $best = -1;
-           |  double $bestD = Double.POSITIVE_INFINITY;
-           |  for (int $c = 0; $c < cb.length; $c++) {
-           |    double[] cw = cb[$c];
-           |    int $n = java.lang.Math.min(cw.length, $rem);
-           |    double $d = 0.0;
-           |    for (int $i = 0; $i < $n; $i++) {
-           |      int $idx = $off + $i;
-           |      double $t = ${elemJava(a, elementType(child), idx)} - cw[$i];
-           |      $d += $t * $t;
-           |    }
-           |    if ($d < $bestD) { $bestD = $d; $best = $c; }
-           |  }
-           |  $out[$s] = $best;
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"$K.pqAssign($a, $t, $cbs, $dsub)")
     }
     override protected def withNewChildInternal(c: Expression): PqAssign =
       copy(child = c)
@@ -697,19 +370,171 @@ object VectorExpressions {
   def arrayAdd(a: Column, b: Column): Column =
     ColumnBridge.column(ArrayAdd(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def pqReconstruct(v: Column, codebooks: Array[Array[Array[Double]]],
-                    dsub: Int): Column = {
+  private def requireCodebooks(codebooks: Array[Array[Array[Double]]], dsub: Int): Unit =
     require(codebooks.nonEmpty && codebooks.forall(cb =>
       cb.nonEmpty && cb.forall(_.length == dsub)),
       s"every codeword must be dsub=$dsub wide")
+
+  def pqReconstruct(v: Column, codebooks: Array[Array[Array[Double]]],
+                    dsub: Int): Column = {
+    requireCodebooks(codebooks, dsub)
     ColumnBridge.column(PqReconstruct(ColumnBridge.expression(v), codebooks, dsub))
   }
 
   def pqAssign(v: Column, codebooks: Array[Array[Array[Double]]],
                dsub: Int): Column = {
-    require(codebooks.nonEmpty && codebooks.forall(cb =>
-      cb.nonEmpty && cb.forall(_.length == dsub)),
-      s"every codeword must be dsub=$dsub wide")
+    requireCodebooks(codebooks, dsub)
     ColumnBridge.column(PqAssign(ColumnBridge.expression(v), codebooks, dsub))
+  }
+}
+
+/** The kernels behind [[VectorExpressions]] — each written once and
+  * called by both the expression's `nullSafeEval` and its generated
+  * code. Top-level so the Scala compiler emits static forwarders the
+  * generated Java calls directly. `t` is an element-type code
+  * ([[F64]], [[F32]], [[I64]], [[I32]]) fixed per expression; the
+  * generated code passes it as a literal, so the JIT folds the
+  * dispatch in [[elem]] to one read. Elements widen to double one at a
+  * time and every sum accumulates left to right. */
+object VectorKernels {
+  final val F64 = 0
+  final val F32 = 1
+  final val I64 = 2
+  final val I32 = 3
+
+  /** Element i as a double. Null slots read as 0.0 (the branch predicts
+    * perfectly on dense vectors). */
+  def elem(a: ArrayData, t: Int, i: Int): Double =
+    if (a.isNullAt(i)) 0.0
+    else (t: @switch) match {
+      case F64 => a.getDouble(i)
+      case F32 => a.getFloat(i).toDouble
+      case I64 => a.getLong(i).toDouble
+      case _ => a.getInt(i).toDouble
+    }
+
+  def dot(x: ArrayData, xt: Int, y: ArrayData, yt: Int): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) { s += elem(x, xt, i) * elem(y, yt, i); i += 1 }
+    s
+  }
+
+  def norm2(v: ArrayData, t: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.numElements()) { val x = elem(v, t, i); s += x * x; i += 1 }
+    s
+  }
+
+  /** Squared L2 distance from v[off, off + n) to w[0, n), with
+    * n = min(w.length, rem). */
+  private def sqDist(v: ArrayData, t: Int, off: Int, rem: Int, w: Array[Double]): Double = {
+    val n = math.min(w.length, rem)
+    var d = 0.0; var i = 0
+    while (i < n) { val x = elem(v, t, off + i) - w(i); d += x * x; i += 1 }
+    d
+  }
+
+  /** The squared-L2 argmin: index of the row of `m` nearest to v's
+    * slice from `off` (`rem` elements left); ties → lowest index. */
+  private def argmin(v: ArrayData, t: Int, off: Int, rem: Int, m: Array[Array[Double]]): Int = {
+    var best = -1; var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < m.length) {
+      val d = sqDist(v, t, off, rem, m(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  def nearestCentroid(v: ArrayData, t: Int, cents: Array[Array[Double]]): Int =
+    argmin(v, t, 0, v.numElements(), cents)
+
+  def centroidDistances(v: ArrayData, t: Int, cents: Array[Array[Double]]): ArrayData = {
+    val out = new Array[Double](cents.length)
+    var c = 0
+    while (c < cents.length) { out(c) = sqDist(v, t, 0, v.numElements(), cents(c)); c += 1 }
+    ArrayData.toArrayData(out)
+  }
+
+  def planeSignature(v: ArrayData, t: Int, planes: Array[Array[Double]]): Long = {
+    var sig = 0L
+    var p = 0
+    while (p < planes.length) {
+      val plane = planes(p)
+      val n = math.min(plane.length, v.numElements())
+      var s = 0.0; var i = 0
+      while (i < n) { s += elem(v, t, i) * plane(i); i += 1 }
+      if (s >= 0) sig |= 1L << p
+      p += 1
+    }
+    sig
+  }
+
+  def absMax(v: ArrayData, t: Int): Double = {
+    var m = 0.0; var i = 0
+    while (i < v.numElements()) { val x = math.abs(elem(v, t, i)); if (x > m) m = x; i += 1 }
+    m
+  }
+
+  def quantizeInt8(v: ArrayData, t: Int, scale: Double): ArrayData = {
+    val out = new Array[Int](v.numElements())
+    if (scale > 0) {
+      var i = 0
+      while (i < out.length) { out(i) = math.floor(elem(v, t, i) / scale * 127.0 + 0.5).toInt; i += 1 }
+    }
+    ArrayData.toArrayData(out)
+  }
+
+  /** Element i of a bigint array as an exact long; null slots read as 0L. */
+  private def exactLong(a: ArrayData, i: Int): Long = if (a.isNullAt(i)) 0L else a.getLong(i)
+
+  /** Two-pointer merge over sorted bigint arrays, compared as exact longs. */
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Int = {
+    var i = 0; var j = 0; var c = 0
+    while (i < x.numElements() && j < y.numElements()) {
+      val xv = exactLong(x, i); val yv = exactLong(y, j)
+      if (xv < yv) i += 1
+      else if (xv > yv) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+
+  /** Elementwise x − y (`subtract`) or x + y over the shorter length. */
+  def sumDiff(x: ArrayData, xt: Int, y: ArrayData, yt: Int, subtract: Boolean): ArrayData = {
+    val out = new Array[Double](math.min(x.numElements(), y.numElements()))
+    var i = 0
+    while (i < out.length) {
+      val a = elem(x, xt, i); val b = elem(y, yt, i)
+      out(i) = if (subtract) a - b else a + b
+      i += 1
+    }
+    ArrayData.toArrayData(out)
+  }
+
+  /** Codeword id per PQ subspace s: the argmin over `cbs(s)` of v's
+    * s-th `dsub`-slice (a short tail compares only what is left). */
+  private def pqCode(v: ArrayData, t: Int, cbs: Array[Array[Array[Double]]], dsub: Int,
+                     s: Int): Int =
+    argmin(v, t, s * dsub, math.max(v.numElements() - s * dsub, 0), cbs(s))
+
+  def pqAssign(v: ArrayData, t: Int, cbs: Array[Array[Array[Double]]], dsub: Int): ArrayData = {
+    val out = new Array[Int](cbs.length)
+    var s = 0
+    while (s < cbs.length) { out(s) = pqCode(v, t, cbs, dsub, s); s += 1 }
+    ArrayData.toArrayData(out)
+  }
+
+  def pqReconstruct(v: ArrayData, t: Int, cbs: Array[Array[Array[Double]]],
+                    dsub: Int): ArrayData = {
+    val out = new Array[Double](cbs.length * dsub)
+    var s = 0
+    while (s < cbs.length) {
+      System.arraycopy(cbs(s)(pqCode(v, t, cbs, dsub, s)), 0, out, s * dsub, dsub)
+      s += 1
+    }
+    ArrayData.toArrayData(out)
   }
 }

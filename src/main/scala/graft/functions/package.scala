@@ -21,9 +21,6 @@ package object functions {
     VectorExpressions.arrayDot(a, b) /
       (sqrt(VectorExpressions.arrayNorm2(a)) * sqrt(VectorExpressions.arrayNorm2(b)))
 
-  /** Dot product of two numeric array columns (double). */
-  def dotProduct(a: Column, b: Column): Column = VectorExpressions.arrayDot(a, b)
-
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

@@ -571,8 +571,8 @@ object Forecast {
         transform(array_sort(collect_list(struct(col("__rd"), col("__v")))),
           s => s.getField("__v")).as("__vals"))
       .filter(col("__n") === window)
-    val level = graft.functions.dotProduct(col("__vals"), typedLit(lw))
-    val trend = graft.functions.dotProduct(col("__vals"), typedLit(bw))
+    val level = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(lw))
+    val trend = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(bw))
     arr.select(
       col(keyCol) +:
       round(level, 4).as("level") +:
@@ -659,14 +659,14 @@ object Forecast {
         transform(array_sort(collect_list(struct(col("__rd"), col("__v")))),
           s => s.getField("__v")).as("__vals"))
       .filter(col("__n") === window)
-    val level = graft.functions.dotProduct(col("__vals"), typedLit(lw))
-    val trend = graft.functions.dotProduct(col("__vals"), typedLit(bw))
+    val level = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(lw))
+    val trend = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(bw))
     arr.select(
       col(keyCol) +:
       round(level, 4).as("level") +:
       round(trend, 4).as("trend") +:
       horizons.zip(fws).map { case (h, fw) =>
-        round(graft.functions.dotProduct(col("__vals"), typedLit(fw)), 4).as(s"f_h$h")
+        round(graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(fw)), 4).as(s"f_h$h")
       }: _*)
   }
 

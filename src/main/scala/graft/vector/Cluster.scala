@@ -35,10 +35,6 @@ object Cluster {
   private def centroidMatrix(cs: Array[(Int, Seq[Double])]): Array[Array[Double]] =
     cs.sortBy(_._1).map(_._2.toArray)
 
-  /** Narrow nearest-centroid argmin (ties → lowest cluster). */
-  private def nearestCluster(v: Column, cents: Array[Array[Double]]): Column =
-    VectorExpressions.nearestCentroid(v, cents)
-
   /** Seed-ordering hash: Knuth multiplicative on the row id mod the
     * prime 1000000007 — chosen over xxhash64 because it is expressible
     * verbatim in the DuckDB oracle (the e19 stratified-sample
@@ -102,7 +98,7 @@ object Cluster {
     for (_ <- 1 to iters) {
       val centArr = centroidMatrix(centroids)
       val updated = base
-        .select(nearestCluster(col("v"), centArr).as("cluster"),
+        .select(VectorExpressions.nearestCentroid(col("v"), centArr).as("cluster"),
           posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("cluster"), col("dim"))
         .agg(round(avg(col("x").cast("double")), 6).as("m"))
@@ -143,7 +139,7 @@ object Cluster {
     emb.select(col(idCol), asDouble(vecCol).as("v"))
       .filter(col("v").isNotNull)
       .withColumn("cluster",
-        element_at(typedLit(ids), nearestCluster(col("v"), centArr) + 1))
+        element_at(typedLit(ids), VectorExpressions.nearestCentroid(col("v"), centArr) + 1))
   }
 
   /** Product-quantization ANN top-k (round 10; Jégou et al. 2011) —
@@ -456,7 +452,7 @@ object Cluster {
     // directly, so the asDouble transform pass disappears too;
     // per-element double widening keeps the residuals bit-identical.
     val resFitRows = fitRows
-      .withColumn("__cl", nearestCluster(col("v"), centArr))
+      .withColumn("__cl", VectorExpressions.nearestCentroid(col("v"), centArr))
       .select(col("__id"),
         VectorExpressions.arraySub(col("v"),
           element_at(centLit, col("__cl") + 1)).as("v"))
@@ -494,7 +490,7 @@ object Cluster {
     // non-duplicated projection and every slice reads the attribute.
     val enc = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .filter(col("cv").isNotNull)
-      .withColumn("cluster", nearestCluster(col("cv"), centArr))
+      .withColumn("cluster", VectorExpressions.nearestCentroid(col("cv"), centArr))
       .withColumn("__cent", element_at(centLit, col("cluster") + 1))
       .withColumn("__res", VectorExpressions.arraySub(col("cv"), col("__cent")))
       .withColumn("rv",
@@ -565,7 +561,7 @@ object Cluster {
     val kActual = centroids.length
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .filter(col("cv").isNotNull)
-      .withColumn("cluster", nearestCluster(col("cv"), centArr))
+      .withColumn("cluster", VectorExpressions.nearestCentroid(col("cv"), centArr))
       .withColumn("cn2", VectorExpressions.arrayNorm2(col("cv")))
     maxCellSize.foreach(cap => guardCellSizes(c, cap, "annIvfTopK"))
     val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))

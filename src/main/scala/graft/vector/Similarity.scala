@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -29,8 +29,6 @@ object Similarity {
   private def withVecNorm(df: DataFrame, vecCol: String, v: String, n2: String): DataFrame =
     df.withColumn(v, col(vecCol))
       .withColumn(n2, VectorExpressions.arrayNorm2(col(v)))
-
-  private def dot(a: Column, b: Column): Column = VectorExpressions.arrayDot(a, b)
 
   /** Dimensionality probe: one 1-row job over a non-null vector (a null
     * sampled row would NPE on getInt). Mixed-dimension inputs are out of
@@ -73,7 +71,7 @@ object Similarity {
     a.join(b, Seq("block"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cosine",
-        round(dot(col("va"), col("vb")) / (sqrt(col("na2")) * sqrt(col("nb2"))), 4))
+        round(VectorExpressions.arrayDot(col("va"), col("vb")) / (sqrt(col("na2")) * sqrt(col("nb2"))), 4))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -90,7 +88,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        round(dot(col("qv"), col("cv")) / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
+        round(VectorExpressions.arrayDot(col("qv"), col("cv")) / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -138,7 +136,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        round(dot(col("qv"), col("cv")) / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
+        round(VectorExpressions.arrayDot(col("qv"), col("cv")) / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
     // rule-7 salted two-stage rank (round 12, the round-11 verdict's
     // quantizedTopK flag): this is the path a user copies for a
     // quantized corpus scan, so it must carry the scale-safe shape —
@@ -316,7 +314,7 @@ object Similarity {
     a.join(b, Seq("band", "key"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cosine",
-        round(dot(col("va"), col("vb")) / (sqrt(col("na2")) * sqrt(col("nb2"))), 4))
+        round(VectorExpressions.arrayDot(col("va"), col("vb")) / (sqrt(col("na2")) * sqrt(col("nb2"))), 4))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
       .distinct()
@@ -353,7 +351,7 @@ object Similarity {
         col("query_v"), col("query_n2"), col("neighbor_v"), col("neighbor_n2"))
       .distinct()
     val scored = cand.withColumn("cosine",
-      round(dot(col("query_v"), col("neighbor_v")) /
+      round(VectorExpressions.arrayDot(col("query_v"), col("neighbor_v")) /
         (sqrt(col("query_n2")) * sqrt(col("neighbor_n2"))), 6))
     // rule-7 salted two-stage rank (round 12): a query's same-bucket
     // candidate set grows with occupancy (corpus/2^bits per band), so
@@ -413,7 +411,7 @@ object Similarity {
         col("query_v"), col("query_n2"), col("neighbor_v"), col("neighbor_n2"))
       .distinct()
     val scored = cand.withColumn("cosine",
-      round(dot(col("query_v"), col("neighbor_v")) /
+      round(VectorExpressions.arrayDot(col("query_v"), col("neighbor_v")) /
         (sqrt(col("query_n2")) * sqrt(col("neighbor_n2"))), 6))
     // rule-7 salted two-stage rank (round 12) — the annLshTopK note
     Cluster.saltedTopK(scored, "cosine", k)

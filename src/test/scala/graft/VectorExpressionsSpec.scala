@@ -137,19 +137,114 @@ class VectorExpressionsSpec extends SparkSpec {
   test("null element slots read as 0.0 on interpreted and codegen paths") {
     val ndf = Seq((1L, Array[java.lang.Double](1.0, null, 3.0)))
       .toDF("id", "vec")
-    // codegen path (whole-stage over a projection)
+    // DataFrame path (a local Seq frame: ConvertToLocalRelation folds it
+    // and evaluates it interpreted — the projections below run codegen)
     val cg = ndf.select(
       VectorExpressions.arrayDot(col("vec"), col("vec")).as("d"),
       VectorExpressions.arrayNorm2(col("vec")).as("n")).head()
     assert(cg.getDouble(0) == 10.0 && cg.getDouble(1) == 10.0)
     // interpreted path (force eval through a literal-only expression tree)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+      InterpretedUnsafeProjection, Literal, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     val arr = Literal.create(ArrayData.toArrayData(Array[Any](1.0, null, 3.0)),
       ArrayType(DoubleType, containsNull = true))
     assert(VectorExpressions.ArrayDot(arr, arr).eval(null) == 10.0)
     assert(VectorExpressions.ArrayNorm2(arr).eval(null) == 10.0)
+
+    // Both paths for real, for every native projection expression in
+    // graft.functions: the same expressions run through compiled
+    // generated code (GenerateUnsafeProjection) and through nullSafeEval
+    // (InterpretedUnsafeProjection) over UnsafeRow input, and every
+    // output field must be bit-equal. Columns: 0-3 vector x and 4-7
+    // vector y as array<double|float|bigint|int>, 8-9 sorted
+    // array<bigint>, 10 string, 11 double scale, 12 bigint key.
+    import graft.functions.StringExpressions._
+    import graft.functions.VectorExpressions._
+    val elemTypes = Seq(DoubleType, FloatType, LongType, IntegerType)
+    val schema: Seq[DataType] = (elemTypes ++ elemTypes).map(ArrayType(_, containsNull = true)) ++
+      Seq(ArrayType(LongType, containsNull = true), ArrayType(LongType, containsNull = true),
+        StringType, DoubleType, LongType)
+    val prnd = new scala.util.Random(41)
+    type Vec = Seq[Option[Double]]
+    def dense(n: Int): Vec = Seq.fill(n)(Some(prnd.nextDouble() * 4 - 2))
+    def typed(v: Vec, et: DataType): ArrayData = if (v == null) null else
+      new GenericArrayData(v.map(_.map[Any] { d => et match {
+        case DoubleType => d
+        case FloatType => d.toFloat
+        case LongType => math.round(d * 50)
+        case _ => math.round(d * 50).toInt
+      }}.orNull))
+    def longs(xs: Any*): ArrayData = new GenericArrayData(xs.toArray)
+    val big = 1L << 53
+    // (x, y, sorted a, sorted b, text, scale, key): null slots, unequal
+    // lengths (both ways, and past/short of the PQ width 6), empty and
+    // null arrays
+    val rows: Seq[(Vec, Vec, ArrayData, ArrayData, String, java.lang.Double, java.lang.Long)] = Seq(
+      (dense(6), dense(6), longs(1L, 5L, 9L), longs(5L, 9L, 11L), "the quick brown fox", 2.0, 7L),
+      (dense(6).updated(1, None).updated(4, None), dense(6).updated(0, None),
+        longs(null, 3L, big + 1), longs(null, big + 1, big + 2),
+        "Hello,  World! 42", 1.5, 11L),
+      (dense(3), dense(6), longs(), longs(2L), "a", 0.0, -3L),
+      (Seq(), dense(4), longs(big + 1), longs(big + 2), "", -1.0, 0L),
+      (dense(8), Seq(), longs(1L, 2L, 3L), longs(), "repeat repeat repeat", 3.0, 42L),
+      (null, dense(6), null, longs(4L), "ÀÉÎ unicode éß", null, null),
+      (dense(6), null, longs(4L), null, null, 2.5, 5L))
+    val input = UnsafeProjection.create(schema.toArray)
+    val inputRows = rows.map { case (x, y, a, b, s, scale, key) =>
+      input(InternalRow.fromSeq(elemTypes.map(typed(x, _)) ++ elemTypes.map(typed(y, _)) ++
+        Seq(a, b, if (s == null) null else UTF8String.fromString(s), scale, key))).copy()
+    }
+    def ref(i: Int): Expression = BoundReference(i, schema(i), nullable = true)
+    val cents = Array.fill(5)(Array.fill(6)(prnd.nextDouble() * 4 - 2)) :+ Array(0.5, -0.5, 1.0, 0.0)
+    val planes = Array.fill(10)(Array.fill(6)(prnd.nextDouble() * 2 - 1)) :+ Array(1.0, -1.0)
+    val codebooks = Array.fill(2)(Array.fill(4)(Array.fill(3)(prnd.nextDouble() * 4 - 2)))
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100)
+    Seq(7L, 42L, -3L).foreach(bloom.putLong)
+    val exprs: Seq[Expression] =
+      elemTypes.indices.flatMap { xi =>
+        val x = ref(xi)
+        Seq(ArrayNorm2(x), ArrayAbsMax(x), NearestCentroid(x, cents),
+          CentroidDistances(x, cents), PlaneSignature(x, planes),
+          QuantizeInt8(x, ref(11)), QuantizeInt8(x, ArrayAbsMax(x)),
+          PqReconstruct(x, codebooks, 3), PqAssign(x, codebooks, 3)) ++
+          elemTypes.indices.flatMap { yi =>
+            Seq(ArrayDot(x, ref(4 + yi)), ArraySub(x, ref(4 + yi)), ArrayAdd(x, ref(4 + yi)))
+          }
+      } ++ Seq(SortedIntersectCount(ref(8), ref(9)),
+        PolyHash(ref(10)), PackedGrams(ref(10), 3), PackedGrams(ref(10), 7),
+        ShingleHashes(ref(10), 1), ShingleHashes(ref(10), 2), ShingleStrings(ref(10), 2),
+        NormalizeText(ref(10)),
+        graft.functions.SketchExpressions.BloomMightContainLong(ref(12), bloom))
+    // every native projection expression is covered (SimhashVotes is an
+    // aggregate with no projection form)
+    assert(exprs.map(_.getClass.getSimpleName).toSet == Set("ArrayDot", "ArrayNorm2",
+      "NearestCentroid", "CentroidDistances", "PlaneSignature", "ArrayAbsMax", "QuantizeInt8",
+      "SortedIntersectCount", "ArraySub", "ArrayAdd", "PqReconstruct", "PqAssign", "PolyHash",
+      "PackedGrams", "ShingleHashes", "ShingleStrings", "NormalizeText", "BloomMightContainLong"))
+    assert(exprs.forall(_.checkInputDataTypes().isSuccess))
+    // the interpreted side evaluates copies shipped through Java
+    // serialization, as every task binary ships them
+    val ser = new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf).newInstance()
+    val generated = GenerateUnsafeProjection.generate(exprs)
+    val interpreted = InterpretedUnsafeProjection.createProjection(
+      exprs.map(e => ser.deserialize[Expression](ser.serialize(e))))
+    inputRows.zipWithIndex.foreach { case (row, r) =>
+      val (g, p) = (generated(row).copy(), interpreted(row).copy())
+      exprs.zipWithIndex.foreach { case (e, i) =>
+        assert(java.util.Objects.equals(g.get(i, e.dataType), p.get(i, e.dataType)),
+          s"row $r: $e codegen ${g.get(i, e.dataType)} != interpreted ${p.get(i, e.dataType)}")
+      }
+      assert(g == p, s"row $r: output rows differ in bytes")
+    }
+    // the null-slot rule holds on the compiled path too (row 1: x has
+    // null slots; the norm equals the sum over the non-null ones)
+    val x1 = rows(1)._1.map(_.getOrElse(0.0))
+    assert(generated(inputRows(1)).getDouble(0) == x1.foldLeft(0.0)((s, d) => s + d * d))
   }
 
   test("sortedIntersectCount matches a driver-side set intersection") {
