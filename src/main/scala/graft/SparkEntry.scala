@@ -14,6 +14,7 @@ import graft.text.{Dedup, TextOps}
 import graft.timeseries.{Decompose, Forecast, TimeSeries}
 import graft.validate.Quality
 import graft.vector.Similarity
+import graft.Checkpoint._
 
 /** Driver contract — see SURVEY.md §2 for the operator inventory.
   * Every query key has a library operator behind it; the oracleSql map
@@ -832,7 +833,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       val table = Dedup.bandSignatures(
         docs.filter(col("doc_id") >= 250), "doc_id", "text", 3, 16, 4)
-        .localCheckpoint(false)
+        .checkpointAs("SparkEntry.e39_maintained_minhash.table")
       Dedup.incrementalMinhashPairsFromTable(
         docs.filter(col("doc_id") < 250), table, "doc_id", "text", 3, 16, 4)
     }),

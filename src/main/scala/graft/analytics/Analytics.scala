@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.fracE4
+import graft.Checkpoint._
 
 /** General relational analytics surface — the engine's query layer.
   *
@@ -348,7 +350,7 @@ object Analytics {
       .agg(min(col("__w")).as("cohort_week"), collect_set(col("__w")).as("__weeks"))
       // user-count-sized, but TWO consumers (cohort sizes + the
       // activity explode) — materialize so the corpus aggregates once
-      .localCheckpoint(false)
+      .checkpointAs("Analytics.cohortRetention.perUser")
     val sizes = perUser.groupBy(col("cohort_week"))
       .agg(count(lit(1)).as("cohort_size"))
     val act = perUser
@@ -357,9 +359,7 @@ object Analytics {
         expr("datediff(__aw, cohort_week) div 7").cast("long").as("weeks_since"))
       .agg(count(lit(1)).as("n_active"))
     act.join(broadcast(sizes), Seq("cohort_week"))
-      .withColumn("retention",
-        floor((col("n_active") * 20000 + col("cohort_size")) /
-          (col("cohort_size") * 2)) / 10000.0)
+      .withColumn("retention", fracE4(col("n_active"), col("cohort_size")))
   }
 
   /** Week-over-week revenue movers (round 8) — the "what changed"
@@ -453,7 +453,7 @@ object Analytics {
       .agg(sum(col("__orev")).as("__rev"))
       // customer-bounded and consumed TWICE (totals + ranking) —
       // materialize so the fact join computes once (§8 rule 3)
-      .localCheckpoint(false)
+      .checkpointAs("Analytics.revenueConcentration.perCustomer")
     // nation totals as a 25-row broadcast aggregate, NOT three
     // unbounded windows — the §8 aggregate-then-join discipline: the
     // rank/cumsum window already pays the per-nation sort; re-scanning
@@ -474,8 +474,7 @@ object Analytics {
       .groupBy(col("n_name"))
       .agg(min(col("__ncust")).as("n_customers"),
         min(col("__rank")).cast("long").as("n_top80"),
-        min(floor((col("__top") * 20000 + col("__total")) / (col("__total") * 2)) / 10000.0)
-          .as("top1_share"))
+        min(fracE4(col("__top"), col("__total"))).as("top1_share"))
   }
 
   /** Market-basket co-occurrence (round 8): the top-N part pairs that
@@ -561,7 +560,7 @@ object Analytics {
     * division — the d1/b19 discipline. */
   def basketLift(lineitem: DataFrame, topN: Int): DataFrame = {
     require(topN > 0, "topN must be positive")
-    val baskets = orderBaskets(lineitem).localCheckpoint(false)
+    val baskets = orderBaskets(lineitem).checkpointAs("Analytics.basketLift.baskets")
     val nBaskets = baskets.agg(count(lit(1)).as("n_baskets"))
     // two consumers (the n_a and n_b joins): materialized so the
     // basket table isn't re-exploded per branch (rule 3); the table
@@ -570,7 +569,7 @@ object Analytics {
       .select(explode(col("__ps")).as("part"))
       .groupBy(col("part"))
       .agg(count(lit(1)).as("n_part"))
-      .localCheckpoint(false)
+      .checkpointAs("Analytics.basketLift.itemCounts")
     val topPairs = pairCounts(baskets.filter(size(col("__ps")) >= 2))
       .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
       .limit(topN)
@@ -584,8 +583,7 @@ object Analytics {
       .crossJoin(broadcast(nBaskets))
       .select(col("part_a"), col("part_b"), col("n_orders"),
         col("n_a"), col("n_b"), col("n_baskets"),
-        (floor((col("n_orders") * 20000 + col("n_a")) / (col("n_a") * 2)) / 10000.0)
-          .as("confidence"),
+        fracE4(col("n_orders"), col("n_a")).as("confidence"),
         (graft.functions.divLong(liftNum + liftDen, liftDen * 2).cast("double") / 10000.0)
           .as("lift"))
       .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
@@ -683,7 +681,7 @@ object Analytics {
       .select(col("l_partkey"),
         round(col("l_quantity") * 100, 0).cast("long").as("__qc"),
         round(col("l_extendedprice") * 10000, 0).cast("long").as("__p4"))
-      .localCheckpoint(false)
+      .checkpointAs("Analytics.smallQuantityRevenue.lineitems")
     val avgq = li.groupBy(col("l_partkey"))
       .agg(sum(col("__qc")).as("__sq"), count(lit(1)).as("__nq"))
     li.join(broadcast(avgq), Seq("l_partkey"))

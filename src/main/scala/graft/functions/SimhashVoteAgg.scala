@@ -43,8 +43,6 @@ case class SimhashVotes(child: Expression,
   require(a.length == words * 64 && b.length == words * 64,
     s"need ${words * 64} affine constants, got ${a.length}/${b.length}")
 
-  private val P = 2147483647L // Dedup.AffineP
-
   override def children: Seq[Expression] = child :: Nil
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -60,10 +58,11 @@ case class SimhashVotes(child: Expression,
     val v = child.eval(input)
     if (v != null) {
       val h0 = v.asInstanceOf[Long]
+      val p = graft.text.Dedup.AffineP
       val n = buf.length
       var i = 0
       while (i < n) {
-        buf(i) += ((((a(i) * h0 + b(i)) % P) & 1L) << 1) - 1L
+        buf(i) += ((((a(i) * h0 + b(i)) % p) & 1L) << 1) - 1L
         i += 1
       }
     }

@@ -40,6 +40,12 @@ package object functions {
   def roundMeanE4(sumCents: Column, n: Column): Column =
     floor((sumCents * 200 + n) / (n * 2)) / 10000.0
 
+  /** Half-up e4-rounded ratio num/den of non-negative longs, in exact
+    * integer arithmetic (the roundMeanE4 idiom without the cents
+    * factor) — engine-portable at ...5 boundaries. */
+  def fracE4(num: Column, den: Column): Column =
+    floor((num * 20000 + den) / (den * 2)) / 10000.0
+
   /** Exact integral division (SQL `div`) of two long columns. Column
     * `/` casts both operands to double, so quotients drift once the
     * dividend passes 2^53 — this stays exact at any int64 magnitude.

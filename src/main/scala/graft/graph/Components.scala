@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoint._
 
 /** Distributed connected components over a pair (edge) table.
   *
@@ -70,13 +71,9 @@ object Components {
     val seed0 = edges.groupBy(col("src").as("node"))
       .agg(min(col("dst")).as("__m"))
       .select(col("node"), least(col("node"), col("__m")).as("__c1"))
-      .localCheckpoint(false)
-    var labels = seed0
-      .join(seed0.select(col("__c1").as("__cc"), col("node").as("__c1")),
-        Seq("__c1"), "left")
-      .select(col("node"),
-        least(col("__c1"), coalesce(col("__cc"), col("__c1"))).as("component"))
-      .localCheckpoint()
+      .checkpointAs("Components.connectedComponents.seed")
+    var labels = pointerJump(seed0)
+      .checkpointAs("Components.connectedComponents.seedJump", eager = true)
     // Convergence via the LABEL-SUM SIGNATURE: min-propagation only ever
     // DECREASES a label, so sum(component) is strictly decreasing until
     // the fixpoint and equality between rounds proves no label moved —
@@ -116,17 +113,8 @@ object Components {
         .unionByName(labels)
         .groupBy(col("node"))
         .agg(min(col("component")).as("__c1"))
-        .localCheckpoint(false)
-      // pointer jumping: component <- min(component, label(component)).
-      // Labels are always ids of nodes present in the table, so the
-      // lookup hits (left join + coalesce only guards the first round's
-      // transient states).
-      val next = prop
-        .join(prop.select(col("__c1").as("__cc"), col("node").as("__c1")),
-          Seq("__c1"), "left")
-        .select(col("node"),
-          least(col("__c1"), coalesce(col("__cc"), col("__c1"))).as("component"))
-        .localCheckpoint(false)
+        .checkpointAs("Components.connectedComponents.propagate")
+      val next = pointerJump(prop).checkpointAs("Components.connectedComponents.round")
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -140,6 +128,14 @@ object Components {
           "component labels would be silently wrong; raise maxIter")
     labels
   }
+
+  /** Pointer jumping over (node, __c1): component ← min(__c1,
+    * label(__c1)). Labels are ids of nodes in the table, so the lookup
+    * hits (left join + coalesce guards only first-round states). */
+  private def pointerJump(t: DataFrame): DataFrame =
+    t.join(t.select(col("__c1").as("__cc"), col("node").as("__c1")), Seq("__c1"), "left")
+      .select(col("node"),
+        least(col("__c1"), coalesce(col("__cc"), col("__c1"))).as("component"))
 
   /** Corpus dedup by cluster: drop every non-canonical member (node
     * whose component label is not its own id); documents in no pair

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.text.{Dedup, TextOps}
 import graft.graph.Components
 import graft.sample.Sampling
+import graft.Checkpoint._
 
 /** End-to-end corpus build (e56, round 9) — the composition the
   * standalone E-group operators exist FOR, run as ONE query so the
@@ -64,14 +65,14 @@ object CorpusBuild {
     val sv = TextOps.curationSurvivors(
       docs.filter(col(srcCol).isNotNull), idCol, textCol, Seq(srcCol),
       minQuality, minWords, maxWords)
-      .localCheckpoint(false)
+      .checkpointAs("CorpusBuild.corpusBuild.survivors")
     // stage 4: near-dup clusters (e4 pairs, blocked per source — the
     // survivor set is single-language) → keep the canonical member (e18)
     val pairs = Dedup.ngramJaccardPairs(sv, idCol, textCol, Seq(srcCol),
       shingleSize, jaccardThreshold)
     // two consumers (scrub + join-back) — same rule
     val kept = Components.keepCanonical(sv, pairs, idCol, "doc_a", "doc_b")
-      .localCheckpoint(false)
+      .checkpointAs("CorpusBuild.corpusBuild.kept")
     // stage 5: duplicate-span scrub (e44) — clean_text is the
     // normalized stream, the representation every stage below ranks,
     // packs, and counts on
@@ -92,7 +93,7 @@ object CorpusBuild {
     // scrub pass for nothing.
     val scored = scrubbed.withColumn("stopword_ratio",
       TextOps.stopwordRatioCol(col("clean_text")))
-      .localCheckpoint(false)
+      .checkpointAs("CorpusBuild.corpusBuild.scored")
     val filtered = Sampling.quantileTopFilter(scored, "stopword_ratio",
       srcCol, keepNum, keepDen)
     // stage 7-8: exact per-source cap (e47), temperature mixture (e33)

@@ -3,6 +3,7 @@ package graft.sample
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoint._
 
 /** Deterministic corpus sampling for training-data curation.
   *
@@ -215,7 +216,7 @@ object Sampling {
     // corpus count scan, turning a two-pass operator into three passes
     val stats = df.groupBy(col(srcCol)).agg(count(lit(1)).as("__n"))
       .withColumn("__w", floor(sqrt(col("__n").cast("double")) * 1000).cast("long"))
-      .localCheckpoint(false)
+      .checkpointAs("Sampling.temperatureMixSample.stats")
     val tot = stats.agg(sum(col("__n")).as("__totn"), sum(col("__w")).as("__totw"))
     val rates = stats.crossJoin(broadcast(tot))
       .withColumn("__t", least(lit(buckets),

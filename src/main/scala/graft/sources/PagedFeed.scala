@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Offset-paginated feed connector — the reference's EIA fetch loop
@@ -95,14 +95,6 @@ object PagedFeed {
     * round 8); this alias keeps the a8 API surface stable. */
   type ConcurrentLandingException = LandingLease.ConcurrentLandingException
 
-  private def acquireLease(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                           leaseMs: Long): String =
-    LandingLease.acquire(fs, dir, leaseMs)
-
-  private def releaseLease(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                           token: String): Unit =
-    LandingLease.release(fs, dir, token)
-
   /** Land the feed as `dir/page=N` parquet pages, resuming from
     * whatever is already on disk. `maxPages` bounds the pages landed
     * by THIS call (specs use it to simulate a crash between pages).
@@ -126,13 +118,13 @@ object PagedFeed {
     require(pageSize > 0, "pageSize must be positive")
     require(leaseMs > 0, "leaseMs must be positive")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = acquireLease(fs, dir, leaseMs)
-    try landLocked(spark, src, dir, pageSize, maxPages)
-    finally releaseLease(fs, dir, token)
+    val token = LandingLease.acquire(fs, dir, leaseMs)
+    try landLocked(spark, fs, src, dir, pageSize, maxPages)
+    finally LandingLease.release(fs, dir, token)
   }
 
-  private def landLocked(spark: SparkSession, src: PageSource, dir: String,
-                         pageSize: Int, maxPages: Int): Int = {
+  private def landLocked(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                         src: PageSource, dir: String, pageSize: Int, maxPages: Int): Int = {
     val total = src.total
     var page = resumePage(spark, dir)
     // a COMPLETE last page need not be refetched: completeness is
@@ -143,11 +135,9 @@ object PagedFeed {
     // overwritten; a short-but-complete page that the feed has since
     // GROWN past also fails it and is refetched with its new rows.
     val expected = math.min(pageSize.toLong, total - page.toLong * pageSize)
-    if (expected > 0 &&
-        scala.util.Try(spark.read.parquet(s"$dir/page=$page").count()).toOption
-          .contains(expected)) {
+    val last = s"$dir/page=$page"
+    if (expected > 0 && fs.exists(new Path(last)) && landedRows(spark, last) == expected)
       page += 1
-    }
     var landed = 0
     while (page.toLong * pageSize < total && landed < maxPages) {
       src.fetch(page.toLong * pageSize, pageSize)
@@ -157,6 +147,12 @@ object PagedFeed {
     }
     landed
   }
+
+  /** Rows in a landed page; -1 for mid-write debris that holds no
+    * committed file yet (no schema to infer). Other failures propagate. */
+  private def landedRows(spark: SparkSession, page: String): Long =
+    try spark.read.parquet(page).count()
+    catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => -1L }
 
   /** The landed feed: one partitioned-directory scan; partition
     * discovery restores each record's `page` (int). Pages are disjoint

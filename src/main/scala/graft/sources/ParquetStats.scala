@@ -26,26 +26,29 @@ import scala.jdk.CollectionConverters._
   * would not have been published either. */
 object ParquetStats {
 
+  /** The parquet data files under `path`, recursively, sidecars
+    * (_SUCCESS, .crc, committer staging) skipped. */
+  private def parquetFiles(conf: org.apache.hadoop.conf.Configuration,
+                           path: String): Seq[Path] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
+    while (it.hasNext) {
+      val st = it.next()
+      val name = st.getPath.getName
+      if (st.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
+        !name.startsWith("."))
+        buf += st.getPath
+    }
+    buf.toSeq
+  }
+
   /** Exact row count of a parquet file or directory (recursive), summed
     * from footer metadata. Non-data sidecars (_SUCCESS, .crc, committer
     * staging) are skipped by the same data-file filter the sinks use. */
   def rowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-          buf += st.getPath
-      }
-      buf
-    }
-    files.iterator.map { f =>
+    parquetFiles(conf, path).iterator.map { f =>
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       try rd.getFooter.getBlocks.asScala.iterator.map(_.getRowCount).sum
       finally rd.close()
@@ -63,21 +66,7 @@ object ParquetStats {
   def columnRange(spark: SparkSession, path: String,
                   column: String): Seq[(String, Long, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-          buf += st.getPath
-      }
-      buf
-    }
-    files.iterator.map { f =>
+    parquetFiles(conf, path).iterator.map { f =>
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       try {
         val ranges = rd.getFooter.getBlocks.asScala.iterator.flatMap { block =>
@@ -122,20 +111,7 @@ object ParquetStats {
     require(columns.nonEmpty, "at least one column")
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-          buf += st.getPath.toString
-      }
-      buf.toSeq
-    }
+    val files = parquetFiles(conf, path).map(_.toString)
     require(files.nonEmpty, s"no parquet data files under $path")
     val bc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(conf))

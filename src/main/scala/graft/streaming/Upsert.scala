@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Checkpoint._
 
 /** Streaming keyed-table upsert — the `foreachBatch` CDC-sink pattern.
   *
@@ -90,7 +91,7 @@ object Upsert {
       }
     // eager pin: the overwrite below deletes the very files `merged`'s
     // lineage would re-read (contract 3)
-    val pinned = merged.localCheckpoint(true)
+    val pinned = merged.checkpointAs("Upsert.upsertLocked.merged", eager = true)
     graft.sources.Sources.relandPartitions(pinned, tablePath, Seq("bucket"))
   }
 

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.Checkpoint._
 
 /** Deduplication operators for LLM training-data pipelines.
   *
@@ -129,7 +130,7 @@ object Dedup {
     val batchH = batch
       .select(col(idCol) +: keepCols.map(col) :+ hash.as("text_hash") :+
         xxhash64(normalizeText(col(textCol))).as("__bk"): _*)
-      .localCheckpoint(false) // two consumers: maybe + definite branches
+      .checkpointAs("Dedup.bloomPrefilterDedup.batch") // maybe + definite branches
     val probe = graft.functions.SketchExpressions
       .bloomMightContainLong(col("__bk"), bf)
     val maybe = batchH.filter(probe)
@@ -217,7 +218,7 @@ object Dedup {
     // to recompute, which ReuseExchange dedupes; the checkpoint makes
     // the sharing explicit rather than canonicalization-dependent).
     bucketPairs(bandSignatures(docs, idCol, textCol, shingleSize, numHashes, bands)
-      .localCheckpoint(false), maxBucket)
+      .checkpointAs("Dedup.minhashLshPairs.banded"), maxBucket)
 
   /** (doc_id, h) rows, one per word shingle of the normalized text.
     * Shingle hashes come from ONE native pass per doc
@@ -304,7 +305,7 @@ object Dedup {
                            shingleSize: Int, numHashes: Int, bands: Int,
                            maxBucket: Int = 1000): DataFrame = {
     val vecs = minhashVectors(docs, idCol, textCol, shingleSize, numHashes)
-      .localCheckpoint(false) // three consumers: banding + two score joins
+      .checkpointAs("Dedup.minhashEstimatePairs.vectors") // banding + two score joins
     val aSide = vecs.select(col("doc_id").as("doc_a") +:
       (0 until numHashes).map(i => col(s"mh_$i").as(s"__a_$i")): _*)
     val bSide = vecs.select(col("doc_id").as("doc_b") +:
@@ -312,12 +313,12 @@ object Dedup {
     val agree = (0 until numHashes)
       .map(i => when(col(s"__a_$i") === col(s"__b_$i"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val banded = bandRows(vecs, numHashes, bands).localCheckpoint(false) // agg + self-join
+    val banded = bandRows(vecs, numHashes, bands)
+      .checkpointAs("Dedup.minhashEstimatePairs.banded") // agg + self-join
     bucketPairs(banded, maxBucket).join(aSide, Seq("doc_a")).join(bSide, Seq("doc_b"))
       .withColumn("n_agree", agree)
       .select(col("doc_a"), col("doc_b"), col("n_agree"),
-        (floor((col("n_agree") * 20000 + numHashes) / (numHashes * 2)) / 10000.0)
-          .as("est_jaccard"))
+        fracE4(col("n_agree"), lit(numHashes)).as("est_jaccard"))
   }
 
   /** Drop the rows of buckets (`keys`: (band, sig) for MinHash, (chunk,
@@ -336,6 +337,23 @@ object Dedup {
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxBucket).select(keys.map(col): _*)
     rows.join(broadcast(hot), keys, "left_anti")
+  }
+
+  /** The (doc_a, doc_b) pairs of `inter` (shared-shingle count in
+    * `interCol`) whose Jaccard over `grams`' distinct (doc_id, h) sets
+    * is at least `threshold`, gated in EXACT integers: j ≥ t ⇔
+    * inter·10⁴ ≥ (t·10⁴)·union (t is 4-decimal by contract). A
+    * round(j,4) ≥ t gate could flip at an x.00005 boundary between
+    * Spark and the oracle (the b19/c26 double-rounding pattern). */
+  private def jaccardAtLeast(inter: DataFrame, interCol: String, grams: DataFrame,
+                             threshold: Double): DataFrame = {
+    val counts = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    inter
+      .join(counts.select(col("doc_id").as("doc_a"), col("n").as("__na")), Seq("doc_a"))
+      .join(counts.select(col("doc_id").as("doc_b"), col("n").as("__nb")), Seq("doc_b"))
+      .filter(col(interCol) * 10000L >=
+        lit(math.round(threshold * 10000)) * (col("__na") + col("__nb") - col(interCol)))
+      .select(col("doc_a"), col("doc_b"))
   }
 
   /** LSH recall gate (round 8) — the text-dedup analogue of the e41
@@ -369,34 +387,22 @@ object Dedup {
     // repeated shingles count once in its Jaccard)
     val grams = shingleRows(sample, idCol, textCol, shingleSize, "h")
       .distinct()
-      .localCheckpoint(false) // counts + both sides of the pair join
-    val counts = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+      .checkpointAs("Dedup.lshRecall.grams") // counts + both sides of the pair join
     val inter = grams.select(col("doc_id").as("doc_a"), col("h"))
       .join(grams.select(col("doc_id").as("doc_b"), col("h")), Seq("h"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    // threshold gate in EXACT integers: j >= t ⇔ i·10⁴ ≥ (t·10⁴)·union
-    // (t is 4-decimal by contract). The former round(j,4) >= t form is
-    // the double-rounding pattern the b19/c26 notes flag — a Jaccard
-    // landing on an x.00005 boundary could flip verified status
-    // between Spark and the oracle (round-9 advice).
-    val exact = inter
-      .join(counts.select(col("doc_id").as("doc_a"), col("n").as("__na")), Seq("doc_a"))
-      .join(counts.select(col("doc_id").as("doc_b"), col("n").as("__nb")), Seq("doc_b"))
-      .filter(col("inter") * 10000L >=
-        lit(math.round(threshold * 10000)) * (col("__na") + col("__nb") - col("inter")))
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(false) // count + hit semi-join
+    val exact = jaccardAtLeast(inter, "inter", grams, threshold)
+      .checkpointAs("Dedup.lshRecall.exact") // count + hit semi-join
     val cand = minhashLshPairs(docs, idCol, textCol, shingleSize, numHashes, bands)
       .filter(col("doc_a") < sampleMax && col("doc_b") < sampleMax)
-      .localCheckpoint(false) // count + hit semi-join
+      .checkpointAs("Dedup.lshRecall.candidates") // count + hit semi-join
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val nCand = cand.agg(count(lit(1)).as("n_candidates"))
     val nHit = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
     nExact.crossJoin(nCand).crossJoin(nHit)
-      .withColumn("recall", when(col("n_exact") > 0,
-        floor((col("n_hit") * 20000 + col("n_exact")) / (col("n_exact") * 2)) / 10000.0))
+      .withColumn("recall", when(col("n_exact") > 0, fracE4(col("n_hit"), col("n_exact"))))
   }
 
   /** Per-source exact-duplication profile (round 8) — the curation
@@ -421,8 +427,7 @@ object Dedup {
         sum(col("__c")).as("n_docs"),
         count(lit(1)).as("n_distinct"),
         sum(col("__c") - 1L).as("n_dup_docs"))
-      .withColumn("dup_rate",
-        floor((col("n_dup_docs") * 20000 + col("n_docs")) / (col("n_docs") * 2)) / 10000.0)
+      .withColumn("dup_rate", fracE4(col("n_dup_docs"), col("n_docs")))
   }
 
   /** Cross-source NEAR-duplication matrix (round 8) — the pairwise
@@ -453,7 +458,7 @@ object Dedup {
     val base = docs.filter(col(idCol).isNotNull && col(textCol).isNotNull &&
       col(srcCol).isNotNull)
     val cand = minhashLshPairs(base, idCol, textCol, shingleSize, numHashes, bands)
-      .localCheckpoint(false) // id list + inter join + count joins
+      .checkpointAs("Dedup.crossSourceNeardup.candidates") // id list + inter + count joins
     val ids = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     // verify sets: distinct shingle hashes per doc, built ONLY for docs
@@ -462,19 +467,12 @@ object Dedup {
     val g = shingleRows(base, idCol, textCol, shingleSize, "h")
       .distinct()
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .localCheckpoint(false) // counts + both sides of the inter join
-    val cnt = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+      .checkpointAs("Dedup.crossSourceNeardup.grams") // counts + both sides of the inter join
     val inter = cand
       .join(g.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
       .join(g.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("__i"))
-    // exact-integer threshold gate — same rationale as lshRecall's
-    val ver = inter
-      .join(cnt.select(col("doc_id").as("doc_a"), col("n").as("__na")), Seq("doc_a"))
-      .join(cnt.select(col("doc_id").as("doc_b"), col("n").as("__nb")), Seq("doc_b"))
-      .filter(col("__i") * 10000L >=
-        lit(math.round(threshold * 10000)) * (col("__na") + col("__nb") - col("__i")))
-      .select(col("doc_a"), col("doc_b"))
+    val ver = jaccardAtLeast(inter, "__i", g, threshold)
     val src = base.select(col(idCol).as("doc_id"), col(srcCol).as("__src"))
     ver.join(src.select(col("doc_id").as("doc_a"), col("__src").as("__sa")), Seq("doc_a"))
       .join(src.select(col("doc_id").as("doc_b"), col("__src").as("__sb")), Seq("doc_b"))
@@ -506,7 +504,7 @@ object Dedup {
                               bands: Int, maxBucket: Int = 1000): DataFrame =
     incrementalMinhashPairsFromTable(batch,
       bandSignatures(seen, idCol, textCol, shingleSize, numHashes, bands)
-        .localCheckpoint(false), // two consumers: hot-list agg + candidate join
+        .checkpointAs("Dedup.incrementalMinhashPairs.seenBands"), // hot-list agg + candidate join
       idCol, textCol, shingleSize, numHashes, bands, maxBucket)
 
   /** The MAINTAINED-TABLE form of [[incrementalMinhashPairs]] — the
@@ -577,7 +575,8 @@ object Dedup {
                                gramSize: Int, minJaccard: Double,
                                maxBucket: Int = 1000): DataFrame = {
     val cands = incrementalMinhashPairs(batch, seen, idCol, textCol,
-      shingleSize, numHashes, bands, maxBucket).localCheckpoint(false)
+      shingleSize, numHashes, bands, maxBucket)
+      .checkpointAs("Dedup.incrementalNeardupFilter.candidates")
     def grams(df: DataFrame, outId: String) = df
       .select(col(idCol).as(outId), normalizeText(col(textCol)).as("norm"))
       .select(col(outId), packedGramsOrEmpty(col("norm"), gramSize).as(s"grams_$outId"))
@@ -621,18 +620,15 @@ object Dedup {
     * .StringExpressions.ShingleHashes]]). */
   def contaminationPairs(train: DataFrame, bench: DataFrame, idCol: String,
                          textCol: String, n: Int, minShared: Int): DataFrame = {
-    def grams(df: DataFrame, outId: String): DataFrame =
-      df.select(col(idCol).as(outId),
-        explode(graft.functions.StringExpressions.shingleHashes(
-          normalizeText(col(textCol)), n)).as("__g"))
     // Dedup order matters at scale: distinct-ing the TRAIN gram table
     // first would shuffle the whole exploded corpus. Instead the raw
     // train grams broadcast-join against the (small, deduped) benchmark
     // gram set — a narrow filter keeping only matching grams — and the
     // count_distinct dedupes the tiny matched remainder, so the one
     // real shuffle carries contaminated-gram rows only.
-    grams(train, "doc_id")
-      .join(broadcast(grams(bench, "bench_id").distinct()), Seq("__g"))
+    shingleRows(train, idCol, textCol, n, "__g")
+      .join(broadcast(shingleRows(bench, idCol, textCol, n, "__g")
+        .withColumnRenamed("doc_id", "bench_id").distinct()), Seq("__g"))
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count_distinct(col("__g")).as("shared_ngrams"))
       .filter(col("shared_ngrams") >= minShared)
@@ -663,7 +659,7 @@ object Dedup {
     val perDoc = shingleRows(docs, idCol, textCol, windowTokens, "h")
       .groupBy(col("doc_id"), col("h"))
       .agg(count(lit(1)).as("__k"))
-      .localCheckpoint(false)
+      .checkpointAs("Dedup.dupSpanStats.perDoc")
     // rows are one-per-(doc, hash), so a plain count IS distinct docs
     val dupHashes = perDoc.groupBy(col("h"))
       .agg(count(lit(1)).as("__docs"))
@@ -718,7 +714,7 @@ object Dedup {
         when(col("norm") === "", array().cast("array<string>"))
           .otherwise(split(col("norm"), " ")).as("words"),
         graft.functions.StringExpressions.shingleHashes(col("norm"), w).as("hs"))
-      .localCheckpoint(false)
+      .checkpointAs("Dedup.dupSpanScrub.windows")
     val starts = base.select(col("doc_id"),
       posexplode(col("hs")).as(Seq("pos", "h")))
     // two-level: collapse within-doc repeats map-side, then count DOCS
@@ -870,7 +866,7 @@ object Dedup {
     // vote aggregation must not run twice, and persist's columnar
     // cache measured 1.48 s vs 1.15 s for the whole query at sf0.1
     // (recompute also 1.48 s — the vote agg re-runs per branch there).
-    val withChunksM = withChunks.localCheckpoint(false)
+    val withChunksM = withChunks.checkpointAs("Dedup.pigeonholePairs.chunks")
     // Shuffle barrier before the self-join (SURVEY §8 rule 8, the
     // e22/e4 shape): without an exchange below the checkpoint the join
     // strategy is chosen statically from the LogicalRDD's rigged
@@ -1049,20 +1045,7 @@ object Dedup {
     // [minJaccard - 5e-5, minJaccard) still qualifies; loosen the prune
     // threshold so borderline pairs reach exact scoring.
     val t = minJaccard - 1e-4
-    // Explicit shuffle barrier: the gram build is narrow, so without it
-    // downstream join planning sees no materialized stage and falls back
-    // to sort-merge over the exploded grams (the doc-keyed array rows
-    // are tiny — this exchange is cheap and gives AQE real sizes). The
-    // gram table feeds three branches (document frequency, the prefix
-    // join, both sides of exact scoring), so it materializes once (cf.
-    // MLlib approxSimilarityJoin caching its hashed datasets). Lazy
-    // localCheckpoint, not persist (SURVEY §8 rule 3): the grams column
-    // is a wide bigint array, the worst case for the columnar cache's
-    // per-row array (de)serialization — switching measured e4 7.27 vs
-    // 7.54 s and the downstream e17/e18 9.4/9.7 vs 10.9/10.5 s at sf1
-    // (best-of-legs, same direction at sf0.1).
-    val idx = gramIndex(gramBase(docs, idCol, textCol, blockCols, n)
-      .repartition(col("doc_id")).localCheckpoint(false), n, t)
+    val idx = gramIndex(gramBase(docs, idCol, textCol, blockCols, n), n, t)
     val a = idx.prefixSide("a")
     val b = idx.prefixSide("b")
     // required overlap: J >= t  =>  inter >= t/(1+t) * (na+nb)
@@ -1096,11 +1079,24 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** Step 2 of [[ngramJaccardPairs]] over `grams`, a [[gramBase]]
-    * table the caller hash-partitioned on doc_id and localCheckpointed;
-    * the exact-stats aggregate is the first action on it, so it
-    * materializes the checkpoint the later branches read. */
-  private def gramIndex(grams: DataFrame, n: Int, t: Double): GramIndex = {
+  /** Step 2 of [[ngramJaccardPairs]] over a [[gramBase]] table:
+    * hash-partitioned on doc_id and checkpointed once; the exact-stats
+    * aggregate is the first action on it, so it materializes the
+    * checkpoint the later branches read. */
+  private def gramIndex(base: DataFrame, n: Int, t: Double): GramIndex = {
+    // Explicit shuffle barrier: the gram build is narrow, so without it
+    // downstream join planning sees no materialized stage and falls back
+    // to sort-merge over the exploded grams (the doc-keyed array rows
+    // are tiny — this exchange is cheap and gives AQE real sizes). The
+    // gram table feeds three branches (document frequency, the prefix
+    // join, both sides of exact scoring), so it materializes once (cf.
+    // MLlib approxSimilarityJoin caching its hashed datasets). Lazy
+    // localCheckpoint, not persist (SURVEY §8 rule 3): the grams column
+    // is a wide bigint array, the worst case for the columnar cache's
+    // per-row array (de)serialization — switching measured e4 7.27 vs
+    // 7.54 s and the downstream e17/e18 9.4/9.7 vs 10.9/10.5 s at sf1
+    // (best-of-legs, same direction at sf0.1).
+    val grams = base.repartition(col("doc_id")).checkpointAs("Dedup.gramIndex.grams")
     // exact sizes for join planning (see broadcastCap's scaladoc)
     val st = gramStats(grams)
     val cap = broadcastCap(grams.sparkSession)
@@ -1192,13 +1188,12 @@ object Dedup {
                             blockCols: Seq[String], n: Int,
                             minContainment: Double): DataFrame = {
     val t = minContainment - 1e-4 // round(·,4) boundary allowance, as e4
-    // The gram table takes e4's shuffle barrier and checkpoint. Docs
-    // with no grams (null, or shorter than n) can neither contain nor
-    // be contained, so they drop before it and the stats price only
-    // docs that can pair.
+    // Docs with no grams (null, or shorter than n) can neither contain
+    // nor be contained, so they drop before the gram index's shuffle
+    // barrier and checkpoint, and the stats price only docs that can
+    // pair.
     val idx = gramIndex(gramBase(docs, idCol, textCol, blockCols, n)
-      .filter(col("n_grams") > 0).repartition(col("doc_id"))
-      .localCheckpoint(false), n, t)
+      .filter(col("n_grams") > 0), n, t)
     val a = idx.prefixSide("a")
     // The container side posts ALL grams — no prefix bound exists on
     // b, so it is priced at the FULL gram stream (this exact side was

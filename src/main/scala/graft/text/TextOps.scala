@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.Checkpoint._
 
 /** Text-analysis operators for LLM training-data pipelines:
   * quality scoring, token counting, language ID, fingerprinting.
@@ -336,6 +337,14 @@ object TextOps {
           .otherwise("neutral"))
   }
 
+  /** (doc_id, `as`) rows, one per non-empty word of the normalized
+    * text — the word stream every token and BPE operator reads. */
+  private def wordRows(docs: DataFrame, idCol: String, textCol: String,
+                       as: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+        explode(split(normalizeText(col(textCol)), " ")).as(as))
+      .filter(length(col(as)) > 0)
+
   /** Corpus token-frequency table: per-token total count + document
     * frequency — the vocabulary-building input for tokenizer/BPE
     * training and stopword derivation.
@@ -352,9 +361,7 @@ object TextOps {
     * before it is ever collected. */
   def tokenFrequency(docs: DataFrame, idCol: String, textCol: String,
                      minCount: Long): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    wordRows(docs, idCol, textCol, "token")
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("__tf"))
       .groupBy(col("token"))
@@ -406,9 +413,7 @@ object TextOps {
     * window: its partition is bounded by construction). */
   def bpePairCounts(docs: DataFrame, idCol: String, textCol: String,
                     minCount: Long): DataFrame = {
-    val wordFreq = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("word"))
-      .filter(length(col("word")) > 0)
+    val wordFreq = wordRows(docs, idCol, textCol, "word")
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("__tf"))
       .groupBy(col("word"))
@@ -481,19 +486,14 @@ object TextOps {
   private def bpeTrainVocab(docs: DataFrame, idCol: String, textCol: String,
                             nMerges: Int, minCount: Long): (DataFrame, Seq[(Long, String, Long)]) = {
     require(nMerges >= 1 && nMerges <= 10000, s"nMerges $nMerges out of range")
-    val wordFreq = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("word"))
-      .filter(length(col("word")) > 0)
+    val wordFreq = wordRows(docs, idCol, textCol, "word")
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("__tf"))
       .groupBy(col("word"))
       .agg(sum(col("__tf")).as("c"))
     // the ONLY corpus-derived table; checkpointed so the loop's
     // per-round actions replay vocab blocks, never the corpus scan
-    var vocab = wordFreq.select(col("word"),
-        concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" _ ")).as("w"),
-        col("c"))
-      .localCheckpoint(false)
+    var vocab = bpeInitialVocab(wordFreq)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var r = 0
     var done = false
@@ -511,19 +511,35 @@ object TextOps {
         val pair = top(0).getString(0)
         val pc = top(0).getLong(1)
         merges += ((r.toLong, pair, pc))
-        // greedy rewrite via the doubled-space scheme (see scaladoc):
-        // " x  y " consumes one space of each boundary, leaving the
-        // neighbors' outer spaces intact for the next match
-        val pat = lit(s" ${pair.replace(" ", "  ")} ")
-        val rep = lit(s" ${pair.replace(" ", "")} ")
-        vocab = vocab
-          .withColumn("w",
-            replace(replace(replace(col("w"), lit(" "), lit("  ")), pat, rep),
-              lit("  "), lit(" ")))
-          .localCheckpoint(false)
+        vocab = bpeMerge(vocab, pair)
       }
     }
     (vocab, merges.toSeq)
+  }
+
+  /** The merge-free BPE vocab state of a word table: `w` is each word's
+    * symbols, space-joined and padded with boundary spaces, plus the
+    * end-of-word sentinel (" h e l l o _ "); the table's other columns
+    * follow. Checkpointed: every merge round reads it. */
+  private def bpeInitialVocab(words: DataFrame): DataFrame =
+    words.select(col("word") +:
+        concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" _ ")).as("w") +:
+        words.columns.filter(_ != "word").map(col): _*)
+      .checkpointAs("TextOps.bpeInitialVocab")
+
+  /** One BPE merge of `pair` ("x y") over a vocab state, by the
+    * doubled-space scheme (see [[bpeMergeLoop]]): " x  y " consumes one
+    * space of each boundary, leaving the neighbors' outer spaces intact
+    * for the next match. Checkpointed per round, so the plan does not
+    * grow with the rounds. */
+  private def bpeMerge(vocab: DataFrame, pair: String): DataFrame = {
+    val pat = lit(s" ${pair.replace(" ", "  ")} ")
+    val rep = lit(s" ${pair.replace(" ", "")} ")
+    vocab
+      .withColumn("w",
+        replace(replace(replace(col("w"), lit(" "), lit("  ")), pat, rep),
+          lit("  "), lit(" ")))
+      .checkpointAs("TextOps.bpeMerge")
   }
 
   /** Per-doc token counts under the TRAINED BPE tokenizer (round 11) —
@@ -552,9 +568,7 @@ object TextOps {
     val (vocab, _) = bpeTrainVocab(docs, idCol, textCol, nMerges, minCount)
     val counts = vocab.select(col("word"),
       size(split(trim(col("w")), " ")).cast("long").as("__tc"))
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("word"))
-      .filter(length(col("word")) > 0)
+    wordRows(docs, idCol, textCol, "word")
       .join(counts, Seq("word"))
       .groupBy(col("doc_id"))
       .agg(sum(col("__tc")).as("n_tokens"), count(lit(1)).as("n_words"))
@@ -580,22 +594,8 @@ object TextOps {
   def applyBpeMerges(docs: DataFrame, idCol: String, textCol: String,
                      merges: Seq[String]): DataFrame = {
     require(merges.forall(_.contains(" ")), "merges must be 'x y' pairs")
-    val inst = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-    var vocab = inst.select(col("word")).distinct()
-      .withColumn("w",
-        concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" _ ")))
-      .localCheckpoint(false)
-    for (pair <- merges) {
-      val pat = lit(s" ${pair.replace(" ", "  ")} ")
-      val rep = lit(s" ${pair.replace(" ", "")} ")
-      vocab = vocab
-        .withColumn("w",
-          replace(replace(replace(col("w"), lit(" "), lit("  ")), pat, rep),
-            lit("  "), lit(" ")))
-        .localCheckpoint(false)
-    }
+    val inst = wordRows(docs, idCol, textCol, "word")
+    val vocab = merges.foldLeft(bpeInitialVocab(inst.select(col("word")).distinct()))(bpeMerge)
     inst.join(vocab.select(col("word"),
         size(split(trim(col("w")), " ")).cast("long").as("__tc")), Seq("word"))
       .groupBy(col("doc_id"))
@@ -623,9 +623,7 @@ object TextOps {
     * join only if the vocabulary outgrows the broadcast budget. */
   def tfidfTopK(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val toks = wordRows(docs, idCol, textCol, "token")
     // The tf table feeds two branches (df aggregate + join-back), so it
     // must materialize ONCE — every alternative was measured at sf1,
     // min-of-3 interleaved in one JVM (local[32]):
@@ -640,12 +638,8 @@ object TextOps {
     //     turns it back into count(1))
     //   lazy localCheckpoint                  1.23 s  (raw UnsafeRow
     //     blocks, no columnar encode; both branches read the blocks)
-    // localCheckpoint truncates lineage: an executor loss fails the job
-    // instead of recomputing — the same trade Components.scala makes
-    // per propagation round, acceptable for a batch projection; swap
-    // for persist on clusters with executor churn.
     val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .checkpointAs("TextOps.tfidfTopK.tf")
     // tf rows are distinct (doc, token), so df = per-token row count
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("__n"))
@@ -685,16 +679,14 @@ object TextOps {
     * measured lazy-localCheckpoint trade as [[tfidfTopK]] above. */
   def unigramLogProb(docs: DataFrame, idCol: String, textCol: String,
                      minCount: Long): DataFrame = {
-    val tf = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalizeText(col(textCol)), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val tf = wordRows(docs, idCol, textCol, "token")
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .checkpointAs("TextOps.unigramLogProb.tf")
     // vocabulary-sized, but TWO consumers (the total scalar and the
     // minCount-pruned join side) — materialize so the tf table is
     // shuffled into per-token totals exactly once
     val vocabAll = tf.groupBy(col("token")).agg(sum(col("tf")).as("__vn"))
-      .localCheckpoint(false)
+      .checkpointAs("TextOps.unigramLogProb.vocab")
     val total = vocabAll.agg(sum(col("__vn")).as("__total"))
     val vocab = vocabAll.filter(col("__vn") >= minCount)
     val lnTotal = col("__total").cast("double")
@@ -740,7 +732,7 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"), col("logprob"),
         round(col("logprob") * 10000).cast("long").as("__lp"))
       .join(docs.select(col(idCol).as("doc_id"), col(langCol)), "doc_id")
-      .localCheckpoint(false)
+      .checkpointAs("TextOps.lmQualityBuckets.scored")
     val cumW = Window.partitionBy(col(langCol)).orderBy(col("__lp").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val thr = scored
@@ -803,7 +795,7 @@ object TextOps {
       .groupBy(col("doc_id"), col("pair")).agg(count(lit(1)).as("tf"))
     val pairCounts = tf2.groupBy(col("pair")).agg(sum(col("tf")).as("__c2"))
       .withColumn("__prev", substring_index(col("pair"), " ", 1))
-      .localCheckpoint(false) // vocab-sized, three consumers: ctx, V, kept
+      .checkpointAs("TextOps.bigramLogProb.pairCounts") // vocab-sized: ctx, V, kept
     val ctx = pairCounts.groupBy(col("__prev"))
       .agg(sum(col("__c2")).as("__nctx"))
     val vocabV = ctx.filter(col("__nctx") >= minCount)
@@ -848,12 +840,6 @@ object TextOps {
   def fingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),
       polyFingerprint(normalizeText(col(textCol))).as("fingerprint"))
-
-  /** Half-up e4-rounded ratio num/den of non-negative longs, in exact
-    * integer arithmetic (the roundMeanE4 idiom without the cents
-    * factor) — engine-portable at ...5 boundaries. */
-  private def fracE4(num: Column, den: Column): Column =
-    floor((num * 20000 + den) / (den * 2)) / 10000.0
 
   /** Gopher-style repetition quality signals (Rae et al. 2021 §A1.1):
     * per doc, the fraction of words in the most-frequent word, the

@@ -3,6 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoint._
 
 /** Distributed forecasting operators.
   *
@@ -243,7 +244,7 @@ object Forecast {
       .withColumn("__xmin", min(when(col("__train"), col("__x"))).over(kw))
       .withColumn("__t", expr("(__x - __xmin) div 3600"))
       .withColumn("__slot", expr("(__x div 3600) % 168"))
-      .localCheckpoint(false)
+      .checkpointAs("Forecast.seasonalRidgeForecast.ranked")
     val train = ranked.filter(col("__train"))
     // exact int64 Gram sums -> one fixed double formula per key
     val coefs = train.groupBy(col(keyCol)).agg(
@@ -559,25 +560,9 @@ object Forecast {
                    window: Int, horizons: Seq[Int]): DataFrame = {
     require(window >= 2 && horizons.nonEmpty, "window >= 2, horizons non-empty")
     val (lw, bw) = holtWeights(alpha, beta, window)
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col("period").desc, col(idCol).desc)
-    val arr = df.filter(col(valueCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol).cast("double").as("__v"))
-      .withColumn("__rd", row_number().over(w))
-      .filter(col("__rd") <= window)
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("__n"),
-        transform(array_sort(collect_list(struct(col("__rd"), col("__v")))),
-          s => s.getField("__v")).as("__vals"))
-      .filter(col("__n") === window)
-    val level = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(lw))
-    val trend = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(bw))
-    arr.select(
-      col(keyCol) +:
-      round(level, 4).as("level") +:
-      round(trend, 4).as("trend") +:
-      horizons.map(h => round(level + lit(h) * trend, 4).as(s"f_h$h")): _*)
+    newestWindowForecast(df, keyCol, tsCol, idCol, valueCol, window, lw, bw) { (level, trend) =>
+      horizons.map(h => round(level + lit(h) * trend, 4).as(s"f_h$h"))
+    }
   }
 
   /** Additive Holt-Winters per key (round 10): level + trend + a
@@ -637,16 +622,31 @@ object Forecast {
     weightVectorForecast(df, keyCol, tsCol, idCol, valueCol, window, horizons,
       holtWintersDampedWeights(alpha, beta, gamma, phi, season, window, horizons))
 
-  /** Shared c29/c31 execution: rank the newest `window` rows per key,
-    * collect the BOUNDED newest-first value array, dot the published
-    * weight vectors (native left-to-right ArrayDot — the c28 parity
-    * argument), round 4. */
+  /** Shared c29/c31 execution: each horizon's forecast dots its
+    * published weight vector with the newest-first value array (native
+    * left-to-right ArrayDot — the c28 parity argument), round 4. */
   private def weightVectorForecast(df: DataFrame, keyCol: String, tsCol: String,
                                    idCol: String, valueCol: String, window: Int,
                                    horizons: Seq[Int],
                                    weights: (Seq[Double], Seq[Double], Seq[Seq[Double]])): DataFrame = {
     require(horizons.nonEmpty && horizons.forall(_ >= 1), "horizons >= 1")
     val (lw, bw, fws) = weights
+    newestWindowForecast(df, keyCol, tsCol, idCol, valueCol, window, lw, bw) { (_, _) =>
+      horizons.zip(fws).map { case (h, fw) =>
+        round(graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(fw)), 4).as(s"f_h$h")
+      }
+    }
+  }
+
+  /** The c28/c29/c31 per-key state: rank the newest `window` rows per
+    * key, collect the BOUNDED newest-first value array `__vals` (keys
+    * with fewer rows drop), dot the level and trend weight vectors and
+    * emit (key, level, trend) plus the `forecasts` columns built from
+    * the unrounded level and trend. */
+  private def newestWindowForecast(df: DataFrame, keyCol: String, tsCol: String,
+                                   idCol: String, valueCol: String, window: Int,
+                                   lw: Seq[Double], bw: Seq[Double])(
+                                   forecasts: (Column, Column) => Seq[Column]): DataFrame = {
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col("period").desc, col(idCol).desc)
     val arr = df.filter(col(valueCol).isNotNull)
@@ -661,13 +661,8 @@ object Forecast {
       .filter(col("__n") === window)
     val level = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(lw))
     val trend = graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(bw))
-    arr.select(
-      col(keyCol) +:
-      round(level, 4).as("level") +:
-      round(trend, 4).as("trend") +:
-      horizons.zip(fws).map { case (h, fw) =>
-        round(graft.functions.VectorExpressions.arrayDot(col("__vals"), typedLit(fw)), 4).as(s"f_h$h")
-      }: _*)
+    arr.select(col(keyCol) +: round(level, 4).as("level") +: round(trend, 4).as("trend") +:
+      forecasts(level, trend): _*)
   }
 
   /** The Holt-Winters coefficient weight vectors (newest-first):

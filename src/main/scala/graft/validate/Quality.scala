@@ -3,7 +3,8 @@ package graft.validate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.roundMeanE4
+import graft.functions.{fracE4, roundMeanE4}
+import graft.Checkpoint._
 
 /** Data-quality / validation operators.
   *
@@ -336,7 +337,7 @@ object Quality {
       // aggregate (SURVEY §8 rule 3 — ReuseExchange does not dedupe
       // them once column pruning diverges the subtrees). The table is
       // keys×(K+1) rows — checkpoint cost is nil next to a corpus scan.
-      .localCheckpoint(false)
+      .checkpointAs("Quality.psiDrift.counts")
     val totals = counts.groupBy(col(keyCol))
       .agg(sum(col("r")).as("n_ref"), sum(col("c")).as("n_cur"))
       .filter(col("n_ref") > 0 && col("n_cur") > 0)
@@ -617,8 +618,7 @@ object Quality {
     // round(double, 4): integer-count ratios land on x.00005
     // boundaries where Spark and DuckDB round() disagree (the c26
     // sf1 lesson; flags/z keep the unrounded mean)
-    val meanE4 = floor((col("base_sum") * 20000 + col("base_n")) /
-      (col("base_n") * 2)) / 10000.0
+    val meanE4 = fracE4(col("base_sum"), col("base_n"))
     base
       .withColumn("base_mean", when(full, meanE4))
       .withColumn("base_std", when(full, round(std, 4)))
@@ -720,8 +720,7 @@ object Quality {
           count(when(col("__p").isNotNull && col("__cn").isNull, lit(1)))
             .as("n_childless"),
           when(coalesce(childRows, lit(0L)) === 0L, lit(0.0))
-            .otherwise(floor((coalesce(orphanRows, lit(0L)) * 20000 + childRows) /
-              (childRows * 2)) / 10000.0).as("orphan_pct"))
+            .otherwise(fracE4(coalesce(orphanRows, lit(0L)), childRows)).as("orphan_pct"))
         .select(lit(r.name).as("relation"), col("*"))
     }.reduce(_.unionByName(_))
   }

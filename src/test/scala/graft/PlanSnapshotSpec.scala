@@ -24,6 +24,14 @@ import scala.jdk.CollectionConverters._
   * schemas, partitioning. Static (pre-AQE) plans are compared — they
   * are deterministic without executing the query; AQE-finalized shapes
   * for the scale-critical set stay PlanAuditSpec's job.
+  *
+  * Checkpoints print by operator name, not by source line: every
+  * checkpoint in the engine goes through [[graft.Checkpoint]]'s
+  * `checkpointAs`, so a checkpointed intermediate reads
+  * `MapPartitionsRDD[N] at graft.checkpoint: <Object>.<operator>[.<part>]`
+  * and moving code moves no snapshot. New code calls the helper; a
+  * plan that pins a checkpoint to a line (`at localCheckpoint at
+  * <File>.scala:<n>`) fails the snapshot test.
   */
 class PlanSnapshotSpec extends SparkSpec {
 
@@ -53,6 +61,8 @@ class PlanSnapshotSpec extends SparkSpec {
     .replaceAll("rowCount=\\d+", "rowCount=N")
     .replaceAll("(?m)[ \\t]+$", "")
 
+  private val lineAnchored = "at localCheckpoint at \\w+\\.scala:\\d+".r
+
   private def staticPlan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
     normalize(df.queryExecution.explainString(
@@ -67,6 +77,10 @@ class PlanSnapshotSpec extends SparkSpec {
         try staticPlan(name)
         catch { case e: Throwable => s"PLAN BUILD FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}" }
       val file = snapDir.resolve(s"$name.txt")
+      lineAnchored.findFirstIn(plan).foreach { site =>
+        failures += s"$name: checkpoint pinned to a source line ($site); " +
+          "call graft.Checkpoint's checkpointAs instead of localCheckpoint"
+      }
       if (regen) {
         Files.writeString(file, plan)
       } else if (!Files.exists(file)) {
@@ -84,6 +98,50 @@ class PlanSnapshotSpec extends SparkSpec {
       }
     }
     assert(failures.isEmpty, s"${failures.size} plan(s) drifted:\n${failures.mkString("\n")}")
+  }
+
+  test("checkpointAs names the checkpoint and restores the caller's call site") {
+    import graft.Checkpoint._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error}
+    val sc = spark.sparkContext
+    def callSite = (sc.getLocalProperty("callSite.short"), sc.getLocalProperty("callSite.long"))
+    def checkpointRdd(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.toString }.get
+    // call sites of the RDDs in every submitted stage
+    val stageSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.foreach(r => stageSites.add(r.callSite))
+    }
+    val before = callSite
+    sc.setCallSite("caller short")
+    sc.setLocalProperty("callSite.long", "caller long")
+    sc.addSparkListener(listener)
+    try {
+      val frame = spark.range(0, 100, 1, 2).select(col("id"), (col("id") % 7).as("k"))
+      val eager = frame.checkpointAs("PlanSnapshotSpec.eager", eager = true)
+      assert(callSite == (("caller short", "caller long")))
+      assert(checkpointRdd(eager).endsWith(" at graft.checkpoint: PlanSnapshotSpec.eager"))
+      val lazyCp = frame.checkpointAs("PlanSnapshotSpec.lazy")
+      assert(callSite == (("caller short", "caller long")))
+      assert(checkpointRdd(lazyCp).endsWith(" at graft.checkpoint: PlanSnapshotSpec.lazy"))
+      assert(lazyCp.count() == 100 && eager.count() == 100)
+      val failing = spark.range(0, 4, 1, 2)
+        .select(raise_error(concat(lit("boom "), col("id").cast("string"))).as("x"))
+      intercept[Exception](failing.checkpointAs("PlanSnapshotSpec.failing", eager = true))
+      assert(callSite == (("caller short", "caller long")))
+      // the failed job ran over the checkpoint RDD, named by the helper
+      val deadline = System.nanoTime() + 30000000000L
+      while (!stageSites.contains("graft.checkpoint: PlanSnapshotSpec.failing") &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(stageSites.contains("graft.checkpoint: PlanSnapshotSpec.failing"))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setLocalProperty("callSite.short", before._1)
+      sc.setLocalProperty("callSite.long", before._2)
+    }
   }
 
   test("snapshot directory carries no orphaned or missing entries") {

@@ -210,7 +210,27 @@ class SourcesSpec extends SparkSpec {
     val feed = pagedFeedFixture(10) // pageSize 4 -> pages of 4, 4, 2
     val dir = java.nio.file.Files.createTempDirectory("graft_paged").toString + "/feed"
     val src = new PagedFeed.OrderedFramePages(feed, "id")
-    assert(PagedFeed.land(spark, src, dir, 4) == 3)
+    // a fresh landing probes no missing page: no query execution fails
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "paged_feed_sentinel")) sentinel.countDown()
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = failed.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(PagedFeed.land(spark, src, dir, 4) == 3)
+      // listener events arrive in order: once the sentinel's success is
+      // delivered, every execution of the landing has been reported
+      spark.range(1).toDF("paged_feed_sentinel").collect()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(failed.get() == 0, s"${failed.get()} query execution(s) failed in a fresh landing")
+    } finally spark.listenerManager.unregister(listener)
     val back = PagedFeed.load(spark, dir)
     assert(back.select("id", "payload").collect().toSet ==
       feed.collect().toSet)
