@@ -44,7 +44,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     functions.foreach { case (name, usage, arity, build) =>
       ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+          "", "", "", "", "", "", ""),
         (args: Seq[Expression]) => {
           require(args.length == arity,
             s"$name takes $arity argument${if (arity == 1) "" else "s"}")

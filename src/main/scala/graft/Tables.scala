@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(spark, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Offset-paginated feed connector — the reference's EIA fetch loop
@@ -128,15 +128,16 @@ object PagedFeed {
     val total = src.total
     var page = resumePage(spark, dir)
     // a COMPLETE last page need not be refetched: completeness is
-    // checkable from the landed rows alone (count == the page's
-    // expected slice of `total`), so re-running a finished window
-    // lands nothing — a true idempotent no-op. A torn page (fewer
-    // rows, or unreadable mid-write debris) fails the check and is
-    // overwritten; a short-but-complete page that the feed has since
-    // GROWN past also fails it and is refetched with its new rows.
+    // checkable from the landed rows alone (their footer row count ==
+    // the page's expected slice of `total`, no Spark job), so
+    // re-running a finished window lands nothing — a true idempotent
+    // no-op. A torn page (fewer committed rows; mid-write debris under
+    // `_temporary` holds none) fails the check and is overwritten; a
+    // short-but-complete page that the feed has since GROWN past also
+    // fails it and is refetched with its new rows.
     val expected = math.min(pageSize.toLong, total - page.toLong * pageSize)
     val last = s"$dir/page=$page"
-    if (expected > 0 && fs.exists(new Path(last)) && landedRows(spark, last) == expected)
+    if (expected > 0 && fs.exists(new Path(last)) && ParquetStats.rowCount(spark, last) == expected)
       page += 1
     var landed = 0
     while (page.toLong * pageSize < total && landed < maxPages) {
@@ -148,16 +149,10 @@ object PagedFeed {
     landed
   }
 
-  /** Rows in a landed page; -1 for mid-write debris that holds no
-    * committed file yet (no schema to infer). Other failures propagate. */
-  private def landedRows(spark: SparkSession, page: String): Long =
-    try spark.read.parquet(page).count()
-    catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => -1L }
-
   /** The landed feed: one partitioned-directory scan; partition
     * discovery restores each record's `page` (int). Pages are disjoint
     * offset ranges by construction, so no dedup pass is needed —
     * downstream accumulation is a5's high-water-mark merge. */
   def load(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Sources.readParquet(spark, dir)
 }

@@ -1,9 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -26,32 +31,57 @@ import scala.jdk.CollectionConverters._
   * would not have been published either. */
 object ParquetStats {
 
-  /** The parquet data files under `path`, recursively, sidecars
-    * (_SUCCESS, .crc, committer staging) skipped. */
-  private def parquetFiles(conf: org.apache.hadoop.conf.Configuration,
-                           path: String): Seq[Path] = {
-    val p = new Path(path)
-    val it = p.getFileSystem(conf).listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val st = it.next()
+  /** The parquet data files under `path`, recursively, as Spark's reader
+    * sees them: nothing below `path` whose name is hidden by
+    * `InMemoryFileIndex`'s rule — it starts with `.`, or with `_` and
+    * holds no `=` — is read or descended into. So sidecars (_SUCCESS,
+    * .crc) are skipped, and so are the part files under `_temporary/…`
+    * (a crashed or in-flight commit) and `.spark-staging-*` (a dynamic
+    * partition overwrite), while `page=3`-style partition directories
+    * are read. Plain `listStatus` calls, as Spark lists: no
+    * `LocatedFileStatus`, whose constructor reads every file's
+    * permission. */
+  private[sources] def parquetFiles(conf: org.apache.hadoop.conf.Configuration,
+                                    path: String): Seq[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String) = name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def walk(dir: Path): Iterator[Path] = fs.listStatus(dir).iterator.flatMap { st =>
       val name = st.getPath.getName
-      if (st.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-        !name.startsWith("."))
-        buf += st.getPath
+      if (hidden(name)) Iterator.empty
+      else if (st.isDirectory) walk(st.getPath)
+      else if (name.endsWith(".parquet")) Iterator.single(st.getPath)
+      else Iterator.empty
     }
-    buf.toSeq
+    val top = fs.getFileStatus(root)
+    if (top.isDirectory) walk(top.getPath).toSeq
+    else Seq(top.getPath).filter(_.getName.endsWith(".parquet"))
   }
 
+  /** One parquet footer, opened and closed on the driver. */
+  private def withFooter[A](conf: org.apache.hadoop.conf.Configuration, f: Path)(
+      body: ParquetMetadata => A): A = {
+    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try body(rd.getFooter) finally rd.close()
+  }
+
+  /** The Spark schema of one data file, from its footer alone, by Spark's
+    * own footer-to-schema step: the Spark schema the writer stored, else
+    * the parquet schema converted under the session's binary-as-string,
+    * INT96, NTZ-inference and nanosAsLong settings. That is the step
+    * schema inference runs on the same file, without the job. */
+  private[sources] def footerSchema(spark: SparkSession,
+                                    conf: org.apache.hadoop.conf.Configuration,
+                                    f: Path): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(f, withFooter(conf, f)(identity)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
   /** Exact row count of a parquet file or directory (recursive), summed
-    * from footer metadata. Non-data sidecars (_SUCCESS, .crc, committer
-    * staging) are skipped by the same data-file filter the sinks use. */
+    * from footer metadata over the data files [[parquetFiles]] lists. */
   def rowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     parquetFiles(conf, path).iterator.map { f =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try rd.getFooter.getBlocks.asScala.iterator.map(_.getRowCount).sum
-      finally rd.close()
+      withFooter(conf, f)(_.getBlocks.asScala.iterator.map(_.getRowCount).sum)
     }.sum
   }
 
@@ -67,13 +97,12 @@ object ParquetStats {
                   column: String): Seq[(String, Long, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     parquetFiles(conf, path).iterator.map { f =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
-        val ranges = rd.getFooter.getBlocks.asScala.iterator.flatMap { block =>
+      withFooter(conf, f) { footer =>
+        val ranges = footer.getBlocks.asScala.iterator.flatMap { block =>
           block.getColumns.asScala.iterator
             .filter(_.getPath.toDotString == column)
             .map { cc =>
-              val st = cc.getStatistics
+              val st: Statistics[_] = cc.getStatistics
               require(st != null && !st.isEmpty, s"no stats for $column in $f")
               (st.genericGetMin, st.genericGetMax) match {
                 case (mn: java.lang.Long, mx: java.lang.Long) => (mn.toLong, mx.toLong)
@@ -83,7 +112,7 @@ object ParquetStats {
             }
         }.toSeq
         (f.getName, ranges.map(_._1).min, ranges.map(_._2).max)
-      } finally rd.close()
+      }
     }.toSeq
   }
 
@@ -137,7 +166,7 @@ object ParquetStats {
                 block.getColumns.asScala
                   .filter(_.getPath.toDotString == colName).foreach { cc =>
                     found = true
-                    val st = cc.getStatistics
+                    val st: Statistics[_] = cc.getStatistics
                     require(st != null && !st.isEmpty,
                       s"writer omitted stats for $colName in $f")
                     nulls += st.getNumNulls

@@ -70,7 +70,7 @@ object RunLedger {
                   batchId: Long): Long = {
     val cur = Sources.currentVersion(spark, table)
     val applied = cur > 0 && {
-      val newest = spark.read.parquet(s"$table/data/v$cur")
+      val newest = Sources.readParquet(spark, s"$table/data/v$cur")
       // enforce the one-schema-per-table contract explicitly (round-11
       // advice): a newest version written by appendRun has no
       // __batch_id column and the filter below would surface as an

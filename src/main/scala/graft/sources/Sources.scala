@@ -78,9 +78,27 @@ object Sources {
                               partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  /** Read back a partitioned parquet sink. */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Read parquet: the engine's one parquet reader. The schema comes from
+    * the footer of the first data file (in path order, the file Spark's
+    * own inference would pick), read on the driver, and is handed to
+    * `spark.read.schema`; partition columns (`page=`, `bucket=`) are
+    * still discovered from the paths. So the frame, its plan and its
+    * results are the ones `spark.read.parquet(paths: _*)` gives, without
+    * the one-task schema-inference job Spark runs for every read that
+    * names no schema (7 of the 60 jobs of a warm forecast-DAG pass).
+    * Where no data file is listed (a missing path, an empty or
+    * only-uncommitted directory, a glob) the read is Spark's own, so it
+    * raises Spark's own error (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`). */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = paths.flatMap { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      if (path.getFileSystem(conf).exists(path)) ParquetStats.parquetFiles(conf, p) else Nil
+    }
+    if (files.isEmpty) spark.read.parquet(paths: _*)
+    else spark.read.schema(ParquetStats.footerSchema(spark, conf, files.minBy(_.toString)))
+      .parquet(paths: _*)
+  }
 
   /** Dynamic-partition-overwrite re-land — the idempotent form of the
     * reference's scheduled full re-land to the object store
@@ -206,9 +224,9 @@ object Sources {
       .filter(st => st.isFile && isDataFile(st.getPath.getName))
       .map(_.getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(srcPath).repartition(n)
+    readParquet(spark, srcPath).repartition(n)
       .write.mode("overwrite").parquet(dstPath)
-    spark.read.parquet(dstPath)
+    readParquet(spark, dstPath)
   }
 
   /** Range-sorted data layout — the scan-pruning lever compaction
@@ -224,13 +242,20 @@ object Sources {
     * one extra shuffle at write time, amortized over every read.
     * Content is layout-invariant (the oracle is the plain feed);
     * the disjointness property itself is asserted from footer stats
-    * ([[ParquetStats.columnRange]]) in SourcesSpec. */
+    * ([[ParquetStats.columnRange]]) in SourcesSpec.
+    *
+    * The file boundaries are not a function of the data alone: Spark's
+    * `RangePartitioner` seeds its boundary sample with the id of the RDD
+    * it samples, so anything that changes how many RDDs the session
+    * created before this write (one job more or fewer anywhere earlier)
+    * moves the boundaries, and with them the per-file ranges, the files
+    * a pruned read keeps and the compressed bytes — never the content. */
   def writeSortedLayout(df: DataFrame, path: String, rangeCol: String,
                         nFiles: Int): DataFrame = {
     df.repartitionByRange(nFiles, col(rangeCol))
       .sortWithinPartitions(rangeCol)
       .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    readParquet(df.sparkSession, path)
   }
 
   /** Z-order (Morton-interleaved) TWO-column layout (round 8) — the
@@ -277,7 +302,7 @@ object Sources {
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    readParquet(df.sparkSession, path)
   }
 
   private def isDataFile(name: String): Boolean =
@@ -440,7 +465,7 @@ object Sources {
     val root = new org.apache.hadoop.fs.Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val dirs = manifestDirs(fs, root, version, table)
-    spark.read.parquet(dirs.map(d => s"$table/$d"): _*)
+    readParquet(spark, dirs.map(d => s"$table/$d"): _*)
   }
 
   /** Atomic manifest publish: write to a dot-prefixed temp (invisible

@@ -457,7 +457,7 @@ object Streams {
             // clear the counter when the watermark passes the window end
             state.setTimeoutTimestamp(math.max(
               winStartMs + windowSeconds * 1000,
-              state.getCurrentWatermarkMs + 1))
+              state.getCurrentWatermarkMs() + 1))
             out.iterator
           }
       }
@@ -542,7 +542,7 @@ object Streams {
               state.update(FunnelState(anchors.toSeq, emitted))
               val horizon = (anchors.max + windowSeconds) * 1000
               state.setTimeoutTimestamp(
-                math.max(horizon, state.getCurrentWatermarkMs + 1))
+                math.max(horizon, state.getCurrentWatermarkMs() + 1))
             }
             out.iterator
           }
@@ -593,7 +593,7 @@ object Streams {
               state.update(s)
               // must stay ahead of the current watermark or Spark rejects it
               state.setTimeoutTimestamp(
-                math.max((s.last + gapSeconds) * 1000, state.getCurrentWatermarkMs + 1))
+                math.max((s.last + gapSeconds) * 1000, state.getCurrentWatermarkMs() + 1))
             }
             closed.iterator
           }

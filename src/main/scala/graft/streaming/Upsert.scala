@@ -84,7 +84,7 @@ object Upsert {
         // touched-bucket list is bounded by nBuckets — a driver-safe pull
         val touched = batchLatest.select(col("bucket")).distinct()
           .collect().map(_.getInt(0)).toSeq
-        val existing = spark.read.parquet(tablePath)
+        val existing = graft.sources.Sources.readParquet(spark, tablePath)
           .filter(col("bucket").isin(touched: _*))
         graft.ingest.Ingest.dedupKeepLatest(
           existing.unionByName(batchLatest), Seq(keyCol), seqCol, tieCol)
@@ -114,5 +114,5 @@ object Upsert {
   /** Read the maintained state table (bucket column dropped — layout is
     * an implementation detail of the sink, not part of the row). */
   def readTable(spark: SparkSession, tablePath: String): DataFrame =
-    spark.read.parquet(tablePath).drop("bucket")
+    graft.sources.Sources.readParquet(spark, tablePath).drop("bucket")
 }

@@ -524,7 +524,7 @@ object TextOps {
   private def bpeInitialVocab(words: DataFrame): DataFrame =
     words.select(col("word") +:
         concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" _ ")).as("w") +:
-        words.columns.filter(_ != "word").map(col): _*)
+        words.columns.toSeq.filter(_ != "word").map(col): _*)
       .checkpointAs("TextOps.bpeInitialVocab")
 
   /** One BPE merge of `pair` ("x y") over a vocab state, by the

@@ -218,11 +218,13 @@ class PlanAuditSpec extends SparkSpec {
       "footer row count must equal the scan count")
     // self-calibrating job accounting: footer-gate construction must
     // run exactly countJobs fewer jobs than the round-7 count()-gate
-    // shape (both share the identical dim-probe + plan construction)
+    // shape (both share the identical dim-probe + plan construction, and
+    // both read through the engine's reader, which runs no
+    // schema-inference job)
     val a0 = stableJobCount()
     val df = SparkEntry.queries("e22_cosine_dup_lsh")(spark, sf) // construction only
     val a1 = stableJobCount()
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val emb = graft.sources.Sources.readParquet(spark, s"$sf/embeddings.parquet")
     graft.vector.Similarity.cosineDupPairsLsh(emb, "vec_id", "embedding",
       graft.vector.Similarity.autoPlanes(emb.count(), 8), 8, 0.25)
     val a2 = stableJobCount()

@@ -102,7 +102,7 @@ class PropertySpec extends SparkSpec {
           (w(0) & 0xffL) * 65536L + (w(1) & 0xffL) * 256L + (w(2) & 0xffL))
           .toSeq.distinct.sorted
       val gotGrams = graft.functions.GramPack.pack(UTF8String.fromString(norm), 3)
-        .toLongArray.toSeq
+        .toLongArray().toSeq
       assert(gotGrams == wantGrams, s"grams #$i of '$norm'")
       // n=7 exercises 56-bit codes (beyond double's 2^53 exactness)
       val want7 =
@@ -110,7 +110,7 @@ class PropertySpec extends SparkSpec {
         else bytes.sliding(7).map(_.foldLeft(0L)((c, b) => (c << 8) | (b & 0xffL)))
           .toSeq.distinct.sorted
       val got7 = graft.functions.GramPack.pack(UTF8String.fromString(norm), 7)
-        .toLongArray.toSeq
+        .toLongArray().toSeq
       assert(got7 == want7, s"7-grams #$i of '$norm'")
       // ShingleHashes == polyHash of every 2-word window
       val words = norm.split(" ", -1).toSeq
@@ -118,7 +118,7 @@ class PropertySpec extends SparkSpec {
         if (norm.isEmpty || words.length < 2) Seq.empty[Long]
         else words.sliding(2).map(w => refPoly(w.mkString(" "))).toSeq
       val gotSh = graft.functions.ShinglePack.hashes(UTF8String.fromString(norm), 2)
-        .toLongArray.toSeq
+        .toLongArray().toSeq
       assert(gotSh == wantSh, s"shingles #$i of '$norm'")
     }
   }

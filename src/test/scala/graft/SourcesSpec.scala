@@ -611,4 +611,151 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.readVersion(spark, tC, 3L).select("id").as[Long]
       .collect().toSeq == Seq(3L))
   }
+
+  // ---- reading without a job, touching files without a process ----
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A `page=`-partitioned landing and a `bucket=`-partitioned upsert
+    * table, the two partitioned sinks the engine reads back. */
+  private def partitionedSinks(): (String, String) = {
+    val root = tmpDir("graft_sinks")
+    val feed = pagedFeedFixture(10)
+    PagedFeed.land(spark, new PagedFeed.OrderedFramePages(feed, "id"), s"$root/landing", 4)
+    graft.streaming.Upsert.upsertIntoTable(spark,
+      feed.withColumn("ts", col("id")), s"$root/table", "id", "ts", "payload", 4)
+    (s"$root/landing", s"$root/table")
+  }
+
+  test("footer counts skip uncommitted and staging part files, as the reader does") {
+    val dir = tmpDir("graft_debris") + "/t"
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").write.parquet(dir)
+    // debris a crashed commit and a dynamic overwrite leave behind: real
+    // parquet part files under hidden directories
+    val stray = tmpDir("graft_stray") + "/s"
+    Seq((9L, "x"), (8L, "y")).toDF("id", "s").coalesce(1).write.parquet(stray)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(stray)).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).head
+    for (debris <- Seq("_temporary/0/task_x/part-0.parquet", ".spark-staging-1/part-1.parquet"))
+      org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, new org.apache.hadoop.fs.Path(dir, debris),
+        false, spark.sessionState.newHadoopConf())
+    assert(graft.sources.ParquetStats.rowCount(spark, dir) == spark.read.parquet(dir).count())
+    assert(graft.sources.ParquetStats.rowCount(spark, dir) == 3L)
+    assert(graft.sources.ParquetStats.columnRange(spark, dir, "id").map(_._3).max == 3L)
+    // a directory holding only debris has no data file: Spark's own error
+    val only = tmpDir("graft_debris_only")
+    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs,
+      new org.apache.hadoop.fs.Path(only, "_temporary/0/task_x/part-0.parquet"),
+      false, spark.sessionState.newHadoopConf())
+    val e = intercept[org.apache.spark.sql.AnalysisException](Sources.readParquet(spark, only))
+    assert(e.getCondition == "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("readParquet takes the schema Spark infers: every corpus table and both partitioned sinks") {
+    val (landing, table) = partitionedSinks()
+    val tables = Seq("lineitem", "orders", "customer", "supplier", "part", "nation", "region",
+      "events", "documents", "embeddings").map(t => s"$sf/$t.parquet")
+    for (p <- tables :+ landing :+ table) {
+      val got = Sources.readParquet(spark, p)
+      val inferred = spark.read.parquet(p)
+      assert(got.schema == inferred.schema, p)
+      assert(got.count() == inferred.count(), p)
+    }
+    assert(Sources.readParquet(spark, landing).schema.fieldNames.last == "page")
+    assert(Sources.readParquet(spark, table).schema.fieldNames.last == "bucket")
+  }
+
+  test("building read frames starts no Spark job") {
+    val (landing, table) = partitionedSinks()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+        if (desc == "read_frames_sentinel") sentinel.countDown()
+        else jobs.add(s"job ${e.jobId}: ${e.stageInfos.map(_.name).mkString(", ")}")
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Tables.documents(spark, sf)
+      Tables.events(spark, sf)
+      PagedFeed.load(spark, landing)
+      Sources.readParquet(spark, table)
+      // listener events arrive in order: once the sentinel's job start is
+      // delivered, every job the reads started has been reported
+      spark.sparkContext.setJobDescription("read_frames_sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.isEmpty, jobs.toArray.mkString("; "))
+  }
+
+  test("the fork-free local filesystem reports the permissions Hadoop's own reports") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sessionState.newHadoopConf()
+    val nio = new graft.sources.NioRawLocalFileSystem
+    val stock = new RawLocalFileSystem
+    Seq(nio, stock).foreach(_.initialize(java.net.URI.create("file:///"), conf))
+    def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
+    val root = new Path(tmpDir("graft_nio"))
+    val (file, dir, sticky) = (new Path(root, "f"), new Path(root, "d"), new Path(root, "s"))
+    nio.create(file).close()
+    nio.mkdirs(dir)
+    nio.mkdirs(sticky)
+    nio.setPermission(file, octal("640"))
+    nio.setPermission(dir, octal("750"))
+    nio.setPermission(sticky, octal("1777")) // Hadoop's own path
+    def attrs(st: org.apache.hadoop.fs.FileStatus) =
+      (st.getPath, st.getPermission, st.getOwner, st.getGroup, st.getLen, st.isDirectory)
+    for (p <- Seq(root, file, dir, sticky)) {
+      assert(attrs(nio.getFileStatus(p)) == attrs(stock.getFileStatus(p)), p)
+      assert(attrs(nio.getFileLinkStatus(p)) == attrs(stock.getFileLinkStatus(p)), p)
+      assert(nio.listStatus(p).toSeq.map(attrs).sortBy(_._1) ==
+        stock.listStatus(p).toSeq.map(attrs).sortBy(_._1), p)
+    }
+    assert(stock.getFileStatus(file).getPermission == octal("640"))
+    assert(stock.getFileStatus(dir).getPermission == octal("750"))
+    assert(stock.getFileStatus(sticky).getPermission.getStickyBit)
+    intercept[java.io.FileNotFoundException](nio.getFileStatus(new Path(root, "missing")))
+    intercept[java.io.FileNotFoundException](nio.setPermission(new Path(root, "missing"), octal("644")))
+  }
+
+  test("a session round trip spawns no process") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("graft_nofork")
+    val events = Tables.events(spark, sf).limit(200)
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try {
+      events.write.parquet(s"$root/written")
+      val back = Sources.readParquet(spark, s"$root/written")
+      assert(graft.sources.ParquetStats.rowCount(spark, s"$root/written") == back.count())
+      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.rename(new org.apache.hadoop.fs.Path(root, "written"),
+        new org.apache.hadoop.fs.Path(root, "renamed")))
+      graft.streaming.Upsert.streamUpsert(
+        spark.readStream.schema(back.schema).parquet(s"$root/renamed"),
+        s"$root/latest", s"$root/checkpoint", "user_id", "ts", "event_id", 4)
+        .awaitTermination()
+      assert(graft.streaming.Upsert.readTable(spark, s"$root/latest").count() > 0)
+    } finally recording.stop()
+    val dump = java.nio.file.Files.createTempFile("graft_nofork", ".jfr")
+    try {
+      recording.dump(dump)
+      val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+      val n = starts.size
+      assert(n == 0, s"processes started, first: ${starts.take(3).mkString("; ")}")
+    } finally {
+      recording.close()
+      java.nio.file.Files.delete(dump)
+    }
+  }
 }

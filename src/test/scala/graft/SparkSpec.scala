@@ -5,13 +5,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — suites
   * run sequentially in the forked test JVM). It takes the engine's
-  * codegen-residency settings from GraftSession, so tests compile and
-  * cache generated code the way production does. */
+  * codegen-residency and local-filesystem settings from GraftSession, so
+  * tests compile and cache generated code, and touch files, the way
+  * production does. */
 object TestSpark {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
     .config(GraftSession.codegenResidency)
+    .config(GraftSession.localFileSystem)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
