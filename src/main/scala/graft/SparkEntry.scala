@@ -1479,13 +1479,14 @@ object SparkEntry {
     *
     * ORACLE REPLAY BOUND: planes for up to `oracleMaxPer` = 12
     * bits/band are embedded, so this SQL mirror is exact while
-    * n < targetBucket·2^12 (2.05M vectors at the default 500) — every
+    * n < TargetBucket·2^12 (2.05M vectors at TargetBucket = 500) — every
     * SF the oracle is ever replayed at (sf10 = 200k). The ENGINE's
     * bound is 62 bits/band; past 2M vectors either raise this
     * constant (mechanical) or audit via the sampled-exactness harness
     * (tools/e22_scale_check.py). */
-  private def lshBandCteAuto(bands: Int, targetBucket: Long = 500L): String = {
+  private def lshBandCteAuto(bands: Int): String = {
     val oracleMaxPer = 12
+    val targetBucket = graft.vector.Similarity.TargetBucket
     s"""planes(p, vec) AS (VALUES ${planesValuesSql(bands * oracleMaxPer, 64)}),
         cfg AS (SELECT coalesce(
             (SELECT min(bb.b) FROM (SELECT unnest(range(2, ${oracleMaxPer + 1})) AS b) bb

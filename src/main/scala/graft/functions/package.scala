@@ -62,20 +62,4 @@ package object functions {
     * "\\s+", " ")) that every DuckDB oracle replicates. */
   def normalizeText(text: Column): Column =
     StringExpressions.normalizeTextNative(text)
-
-  /** Distinct character n-grams of a string as an array column. */
-  def charNgrams(text: Column, n: Int): Column =
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(length(text) - (n - 1), lit(0))),
-        i => text.substr(i, lit(n))))
-
-  /** Word n-gram shingles (space-joined) of a string. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val words = split(text, "\\s+")
-    array_distinct(
-      transform(
-        sequence(lit(0), greatest(size(words) - n, lit(-1))),
-        i => concat_ws(" ", slice(words, i + 1, lit(n)))))
-  }
 }

@@ -20,16 +20,19 @@ object Sources {
 
   val corruptCol = "_corrupt_record"
 
+  /** Seconds-precision timestamp text of every CSV/JSON-lines source and
+    * sink: keeps the roundtrip lossless for the canonical feed. */
+  private val TimestampFormat = "yyyy-MM-dd HH:mm:ss"
+
   /** Schema-enforced CSV read; malformed lines land in `_corrupt_record`
     * instead of aborting (PERMISSIVE). Pair with validRecords /
     * corruptRecords to split the quarantine. */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              timestampFormat: String = "yyyy-MM-dd HH:mm:ss"): DataFrame =
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
-      .option("timestampFormat", timestampFormat)
+      .option("timestampFormat", TimestampFormat)
       .schema(schema.add(corruptCol, "string"))
       .csv(path)
 
@@ -64,11 +67,10 @@ object Sources {
 
   /** CSV sink (save_data_to_csv parity). Seconds-precision timestamp
     * format keeps the roundtrip lossless for the canonical feed. */
-  def writeCsv(df: DataFrame, path: String,
-               timestampFormat: String = "yyyy-MM-dd HH:mm:ss"): Unit =
+  def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite")
       .option("header", "true")
-      .option("timestampFormat", timestampFormat)
+      .option("timestampFormat", TimestampFormat)
       .csv(path)
 
   /** Partitioned parquet sink: the at-scale layout (one directory per
@@ -122,22 +124,20 @@ object Sources {
   /** JSON-lines sink (one object per line — the interchange format
     * most raw corpora land in). Seconds-precision timestamps keep the
     * roundtrip lossless for the canonical feed. */
-  def writeJsonl(df: DataFrame, path: String,
-                 timestampFormat: String = "yyyy-MM-dd HH:mm:ss"): Unit =
+  def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite")
-      .option("timestampFormat", timestampFormat)
+      .option("timestampFormat", TimestampFormat)
       .json(path)
 
   /** Schema-enforced JSON-lines read with PERMISSIVE corrupt-record
     * quarantine — same contract as [[readCsv]]: explicit schema (no
     * inference scan at 100 TB), malformed lines land in
     * `_corrupt_record` instead of aborting. */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType,
-                timestampFormat: String = "yyyy-MM-dd HH:mm:ss"): DataFrame =
+  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
-      .option("timestampFormat", timestampFormat)
+      .option("timestampFormat", TimestampFormat)
       .schema(schema.add(corruptCol, "string"))
       .json(path)
 

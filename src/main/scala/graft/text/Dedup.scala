@@ -100,7 +100,7 @@ object Dedup {
     *  - probe = false (or null key) ⟹ PROVABLY unseen — a Bloom
     *    filter has no false negatives, and the key is the same
     *    deterministic xxhash64 both sides — admitted with no join;
-    *  - probe = true ⟹ maybe-seen (fpp, default 1%) — only these rows
+    *  - probe = true ⟹ maybe-seen (fpp 1%, `BloomFpp`) — only these rows
     *    reach the exact check: the corpus is scanned once more and
     *    semi-probed against the BROADCAST maybe-hash set, so the
     *    second pass also moves nothing corpus-sized.
@@ -124,8 +124,8 @@ object Dedup {
     * the exact-path traffic, never correctness. */
   def bloomPrefilterDedup(batch: DataFrame, seen: DataFrame, idCol: String,
                           textCol: String, keepCols: Seq[String],
-                          expectedSeen: Long, fpp: Double = 0.01): DataFrame = {
-    val bf = bloomFilterFor(seen, textCol, expectedSeen, fpp)
+                          expectedSeen: Long): DataFrame = {
+    val bf = bloomFilterFor(seen, textCol, expectedSeen)
     val hash = md5(normalizeText(col(textCol)))
     val batchH = batch
       .select(col(idCol) +: keepCols.map(col) :+ hash.as("text_hash") :+
@@ -154,11 +154,14 @@ object Dedup {
     * distributed build over the corpus's xxhash64 text keys. Persist
     * with `BloomFilter.writeTo` and reload with `readFrom` to amortize
     * the build scan across crawls. */
-  def bloomFilterFor(seen: DataFrame, textCol: String, expectedItems: Long,
-                     fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
+  def bloomFilterFor(seen: DataFrame, textCol: String,
+                     expectedItems: Long): org.apache.spark.util.sketch.BloomFilter =
     seen.select(xxhash64(normalizeText(col(textCol))).as("__bk"))
       .filter(col("__bk").isNotNull)
-      .stat.bloomFilter("__bk", math.max(expectedItems, 1L), fpp)
+      .stat.bloomFilter("__bk", math.max(expectedItems, 1L), BloomFpp)
+
+  /** False-positive rate the Bloom artifact is sized for. */
+  private val BloomFpp = 0.01
 
   /** Prime moduli for the engine-reproducible hash family: every
     * intermediate stays under 2^62, so DuckDB (which raises on BIGINT
@@ -171,14 +174,21 @@ object Dedup {
     * embedded in the Spark plan and in the DuckDB oracle SQL, so the
     * generator never needs to be replicated cross-engine. */
   def hashConst(salt: String, i: Int): Long = {
+    val h = xxhashChain(s"graft-$salt", i)
+    val m = AffineP - 1
+    ((h % m) + m) % m + 1
+  }
+
+  /** The catalyst `xxhash64(lit(tag), lit(i0), lit(i1), …)` value (seed
+    * 42, same fold order), computed on the driver: the one generator
+    * behind [[hashConst]] and the LSH hyperplanes
+    * ([[graft.vector.Similarity.planeMatrix]]). */
+  private[graft] def xxhashChain(tag: String, ints: Int*): Long = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.{IntegerType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
-    var h = 42L
-    h = XxHash64Function.hash(UTF8String.fromString(s"graft-$salt"), StringType, h)
-    h = XxHash64Function.hash(i, IntegerType, h)
-    val m = AffineP - 1
-    ((h % m) + m) % m + 1
+    ints.foldLeft(XxHash64Function.hash(UTF8String.fromString(tag), StringType, 42L))(
+      (h, i) => XxHash64Function.hash(i, IntegerType, h))
   }
 
   /** i-th minhash of a poly-fingerprint column: (a_i*h0 + b_i) mod P.
@@ -322,7 +332,7 @@ object Dedup {
   }
 
   /** Drop the rows of buckets (`keys`: (band, sig) for MinHash, (chunk,
-    * key) for SimHash) holding more than `maxBucket` docs (degenerate
+    * key) for SimHash, (band, key) for the embedding LSH) holding more than `maxBucket` docs (degenerate
     * all-equal boilerplate) via PARTIAL-AGGREGATED sizes, not a count
     * window (SURVEY §8 skew playbook): a window partitioned by the
     * bucket would fully co-locate the pathological one just to measure
@@ -331,7 +341,7 @@ object Dedup {
     * maxBucket), so it broadcasts and the hot rows are dropped map-side
     * by the anti-join — the bucketed table never shuffles for the
     * prune. */
-  private def pruneHotBuckets(rows: DataFrame, keys: Seq[String],
+  private[graft] def pruneHotBuckets(rows: DataFrame, keys: Seq[String],
                               maxBucket: Int): DataFrame = {
     val hot = rows.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"))

@@ -120,7 +120,7 @@ object Forecast {
 
   /** Empirical prediction intervals (round 8) — the uncertainty bands
     * every operational forecast needs and the reference's point
-    * forecasters never emit: per key, the [qLo, qHi] quantiles of the
+    * forecasters never emit: per key, the [0.1, 0.9] quantiles of the
     * in-sample seasonal-naive residuals attach to each prediction as
     * `lo`/`hi` (split-conformal shape: the interval's coverage is the
     * residual distribution's, assuming exchangeable errors).
@@ -136,16 +136,14 @@ object Forecast {
     * per-key exact percentile pass (value buffer bounded by the key's
     * history), quantile rows broadcast back by AQE. */
   def forecastIntervals(df: DataFrame, keyCol: String, tsCol: String,
-                        idCol: String, valueCol: String, season: Int,
-                        qLo: Double = 0.1, qHi: Double = 0.9): DataFrame = {
-    require(qLo > 0 && qHi < 1 && qLo < qHi, s"bad quantiles [$qLo, $qHi]")
+                        idCol: String, valueCol: String, season: Int): DataFrame = {
     val fc = seasonalNaive(df, keyCol, tsCol, idCol, valueCol, season)
       .withColumn("__pc", round(col("prediction") * 100, 0).cast("long"))
       .withColumn("__rc",
         round(col(valueCol) * 100, 0).cast("long") - col("__pc"))
     val q = fc.groupBy(col(keyCol)).agg(
-      percentile(col("__rc"), lit(qLo)).as("__qlo"),
-      percentile(col("__rc"), lit(qHi)).as("__qhi"))
+      percentile(col("__rc"), lit(0.1)).as("__qlo"),
+      percentile(col("__rc"), lit(0.9)).as("__qhi"))
     fc.join(q, Seq(keyCol))
       .select(col(keyCol), col("period"), col(idCol), col(valueCol),
         col("prediction"),

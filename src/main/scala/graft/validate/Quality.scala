@@ -380,8 +380,7 @@ object Quality {
     * window and per-key totals run over THAT bounded histogram
     * (winsorize's discipline), then collapse to one row per key. */
   def ksDrift(df: DataFrame, keyCol: String, tsCol: String, valueCol: String,
-              referenceDays: Int, currentDays: Int,
-              c2Micro: Long = 1844164L): DataFrame = {
+              referenceDays: Int, currentDays: Int): DataFrame = {
     val maxTs = df.agg(max(date_trunc("second", col(tsCol))).as("max_ts"))
     val curStart = col("max_ts") - expr(s"INTERVAL $currentDays DAYS")
     val refStart = col("max_ts") - expr(s"INTERVAL ${currentDays + referenceDays} DAYS")
@@ -416,7 +415,7 @@ object Quality {
     agg.select(col(keyCol), col("n_ref"), col("n_cur"),
       (graft.functions.divLong(col("__d") * 2000000 + den, den * 2)
         .cast("double") / 1000000.0).as("ks"),
-      (dD * dD > (lit(c2Micro).cast("double") / lit(1000000.0))
+      (dD * dD > (lit(1844164L).cast("double") / lit(1000000.0))
         * (col("n_ref").cast("double") + col("n_cur").cast("double"))
         * col("n_ref").cast("double") * col("n_cur").cast("double"))
         .as("drifted"))
@@ -656,8 +655,7 @@ object Quality {
     * Scale shape: one partial-aggregated groupBy to (key, digit) — at
     * most 9 rows per key cross the shuffle — then a per-key rollup of
     * the 9-row groups. No windows, no joins. */
-  def leadingDigitProfile(df: DataFrame, keyCol: String, valueCol: String,
-                          chi2Cut: Double = 15.507): DataFrame = {
+  def leadingDigitProfile(df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
     val micro = floor(abs(col(valueCol)) * 1e6).cast("long")
     val g = df.filter(col(keyCol).isNotNull && col(valueCol).isNotNull &&
         micro > 0L)
@@ -672,7 +670,7 @@ object Quality {
     m.select(col(keyCol), col("n"),
       (floor((s2 * 20000 + dec(col("n"))).cast("double") /
         (col("n") * 2).cast("double")) / 10000.0).as("chi2_uniform"),
-      (s2.cast("double") > lit(chi2Cut) * col("n").cast("double"))
+      (s2.cast("double") > lit(15.507) * col("n").cast("double"))
         .as("is_nonuniform"))
   }
 

@@ -1,7 +1,6 @@
 package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
@@ -62,15 +61,21 @@ object Cluster {
     * to 6 decimals each iteration in BOTH engines, truncating the
     * ~1e-13 sum-order noise so the converged centroids are identical
     * doubles. Rounding centroids at 1e-6 is quality-neutral for
-    * clustering. */
+    * clustering.
+    *
+    * The fit is [[fitPqCodebooksFromSeeds]] with one subspace: one seed
+    * collect, then one aggregate job per iteration. No vectors, no
+    * centroids. */
   def fitCentroids(emb: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
     // raw vector column (float or double) — the native expressions read
     // either element type directly, so no per-row array-copy cast pass
     val base = emb.select(col(idCol).as("__id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
-    centroidsDF(spark, lloyd(base, seedVectors(base, k), iters))
+    val seeds = seedVectors(base, k)
+    val cents = if (seeds.isEmpty) Array.empty[Array[Double]]
+      else fitPqCodebooksFromSeeds(base, seeds, 1, iters)._1.head
+    centroidsDF(emb.sparkSession, cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
   }
 
   /** Deterministic seed sample: the k smallest id-hashes, in (hash, id)
@@ -87,31 +92,6 @@ object Cluster {
       .collect()
       .sortBy(_.getLong(0)) // stable: ties keep Spark's (__h, __id) order
       .map(_.getSeq[Double](1))
-
-  /** Lloyd's iterations from given seed vectors (one aggregate job per
-    * iteration; round-13 split of [[fitCentroids]] so callers with an
-    * already-collected seed sample skip the seed job). */
-  private def lloyd(base: DataFrame, seeds: Array[Seq[Double]],
-                    iters: Int): Array[(Int, Seq[Double])] = {
-    var centroids: Array[(Int, Seq[Double])] =
-      seeds.zipWithIndex.map { case (v, i) => (i, v) }
-    for (_ <- 1 to iters) {
-      val centArr = centroidMatrix(centroids)
-      val updated = base
-        .select(VectorExpressions.nearestCentroid(col("v"), centArr).as("cluster"),
-          posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(round(avg(col("x").cast("double")), 6).as("m"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("cluster"), transform(col("dm"), s => s.getField("m")).as("centroid"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-      // keep seeds for clusters that lost all members (stable arity)
-      val byId = updated.toMap
-      centroids = centroids.map { case (cid, c) => (cid, byId.getOrElse(cid, c)) }
-    }
-    centroids
-  }
 
   private def centroidsDF(spark: SparkSession, cs: Array[(Int, Seq[Double])]): DataFrame = {
     import org.apache.spark.sql.types._
@@ -197,17 +177,14 @@ object Cluster {
       .withColumn("rv", pqReconstruct(col("cv"), codebooks, dsub))
       .withColumn("rn2", VectorExpressions.arrayNorm2(col("rv")))
       .select(col("neighbor_id"), col("rv"), col("rn2"))
-    val q = queries.select(col(idCol).as("query_id"), asDouble(vecCol).as("qv"))
-      .filter(col("qv").isNotNull)
-      .withColumn("qn2", VectorExpressions.arrayNorm2(col("qv")))
+    val q = normedQueries(queries, idCol, asDouble(vecCol))
     // stage 1: ADC shortlist — approximate cosine against x̂ over the
     // whole encoded corpus, rerank-deep per query, via the rule-7
     // salted two-stage top-k (see [[saltedShortlist]] — a plain
     // per-query window here would funnel the WHOLE corpus's ADC scores
     // through one task per query)
-    val adcDot = VectorExpressions.arrayDot(col("qv"), col("rv"))
     val adc = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("__adc", adcDot / (sqrt(col("qn2")) * sqrt(col("rn2"))))
+      .withColumn("__adc", TopK.cosine("qv", "qn2", "rv", "rn2"))
     val shortlist = saltedShortlist(adc, rerank)
       .select(col("query_id"), col("qv"), col("qn2"), col("neighbor_id"))
     exactRerank(corpus, idCol, vecCol, shortlist, topK)
@@ -229,6 +206,12 @@ object Cluster {
     if (keepEvery == 1L) allRows
     else allRows.filter(seedHash(col("__id")) % keepEvery === 0)
   }
+
+  /** The query side of every cell/ADC search: ids as `query_id`, the
+    * non-null vectors as `qv` with their squared norms as `qn2`. */
+  private def normedQueries(queries: DataFrame, idCol: String, vec: Column): DataFrame =
+    TopK.normed(queries, Seq(col(idCol).as("query_id")), vec, "qv", "qn2")
+      .filter(col("qv").isNotNull)
 
   /** FUSED per-subspace codebook fit — all m k-means runs in one job
     * per iteration. m sequential fitCentroids calls are semantically
@@ -258,10 +241,12 @@ object Cluster {
     fitPqCodebooksFromSeeds(fitRows,
       seedVectors(fitRows.select(col("__id"), col("v")), ksub), m, iters)
 
-  /** [[fitPqCodebooks]] from an already-collected seed sample (round
-    * 13): e62 collects ONE (hash, id)-ordered seed prefix for both the
-    * coarse quantizer and the codebooks instead of paying two top-k
-    * collect jobs over the same fit rows. `fitRows` still drives the
+  /** Lloyd's k-means per subspace from an already-collected seed sample:
+    * the engine's one Lloyd fit. With `m` = 1 it is plain k-means, the
+    * [[fitCentroids]] and IVF-PQ coarse-quantizer fit. Round 13: e62
+    * collects ONE (hash, id)-ordered seed prefix for both the coarse
+    * quantizer and the codebooks instead of paying two top-k collect
+    * jobs over the same fit rows. `fitRows` still drives the
     * update iterations; `seedRows` must be the ksub smallest id-hash
     * vectors of the SAME key space (for the residual codebooks: the
     * residual transform applied to those seed vectors — driver-side,
@@ -318,45 +303,10 @@ object Cluster {
                             dsub: Int): Column =
     VectorExpressions.pqReconstruct(v, codebooks.toArray, dsub)
 
-  /** Rule-7 salted two-stage top-`rerank` per query over a scored
-    * candidate set carrying (query_id, neighbor_id, __adc, …): first a
-    * window over (query_id, pmod(hash(neighbor_id), SALT)) — partial,
-    * SALT-way parallel, every partition sees ~1/SALT of the
-    * candidates — keeps `rerank` per bucket; the final per-query
-    * window then ranks at most SALT·rerank survivors. EXACT by the
-    * e42 argument: every global top-`rerank` row is also within the
-    * top `rerank` of its own bucket, so stage 1 can never drop one.
-    * This is the shape that keeps a per-query shortlist scale-safe
-    * when the candidate set is corpus-sized (e61) or probed-cell-sized
-    * with hot cells (e62) — the plain per-query window funnels ALL
-    * candidates of a query through one task (§8 rule 1/7's banned
-    * shape, flagged on e61's first cut by the round-10 judge). */
-  private val ShortlistSalt = 32
-
-  /** The rule-7 two-stage top-`k` with the final per-query rank kept
-    * as `__ar` (1-based, ties → lowest neighbor_id). Shared by the ADC
-    * shortlists (score = `__adc`, rank dropped) and the exact-scored
-    * per-query rankings (e13 / [[Similarity.quantizedTopK]]: score =
-    * `cosine`, `__ar` IS the output rank). Exactness is the e42
-    * argument: any global top-`k` row is within the top `k` of its own
-    * salt bucket, so stage 1 never drops one, and stage 2 ranks at
-    * most SALT·k survivors per query — never a corpus-sized partition. */
-  private[vector] def saltedTopK(scored: DataFrame, scoreCol: String,
-                                 k: Int): DataFrame = {
-    val salted = scored.withColumn("__sb",
-      pmod(hash(col("neighbor_id")), lit(ShortlistSalt)))
-    val w1 = Window.partitionBy(col("query_id"), col("__sb"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    val survivors = salted.withColumn("__r1", row_number().over(w1))
-      .filter(col("__r1") <= k)
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    survivors.withColumn("__ar", row_number().over(w2))
-      .filter(col("__ar") <= k)
-  }
-
+  /** Rule-7 salted top-`rerank` per query by `__adc` ([[TopK.saltedRank]]),
+    * rank dropped: the ADC shortlist. */
   private def saltedShortlist(scored: DataFrame, rerank: Int): DataFrame =
-    saltedTopK(scored, "__adc", rerank)
+    TopK.saltedRank(scored, "__adc", rerank)
       .drop("__sb", "__r1", "__ar")
 
   /** Stage 2 of the two-stage ANN form: exact cosine re-rank of a
@@ -365,17 +315,11 @@ object Cluster {
     * shuffles, and the final window partition is `rerank`-bounded. */
   private def exactRerank(corpus: DataFrame, idCol: String, vecCol: String,
                           shortlist: DataFrame, topK: Int): DataFrame = {
-    val orig = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("ov"))
+    val orig = TopK.normed(corpus, Seq(col(idCol).as("neighbor_id")), col(vecCol), "ov", "on2")
       .filter(col("ov").isNotNull)
-      .withColumn("on2", VectorExpressions.arrayNorm2(col("ov")))
-    val exactDot = VectorExpressions.arrayDot(col("qv"), col("ov"))
     val rescored = orig.join(broadcast(shortlist), Seq("neighbor_id"))
-      .withColumn("cosine", round(exactDot / (sqrt(col("qn2")) * sqrt(col("on2"))), 6))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("rank").cast("long").as("rank"))
+      .withColumn("cosine", round(TopK.cosine("qv", "qn2", "ov", "on2"), 6))
+    TopK.windowed(rescored, topK)
   }
 
   /** IVF-PQ ANN top-k (round 11) — the production billion-vector
@@ -438,10 +382,9 @@ object Cluster {
       math.max(kCells, ksub))
     // coarse quantizer: Lloyd's on the fit sample (cell means saturate
     // long before the corpus does — same argument as the codebooks)
-    val centroids = lloyd(fitRows.select(col("__id"), col("v")),
-      seeds.take(kCells), ivfIters)
-    val centArr = centroidMatrix(centroids)
-    val kActual = centroids.length
+    val centArr = fitPqCodebooksFromSeeds(fitRows.select(col("__id"), col("v")),
+      seeds.take(kCells), 1, ivfIters)._1.head
+    val kActual = centArr.length
     val centLit = typedLit(centArr.map(_.toSeq).toSeq)
     // residual codebooks: fit rows re-expressed as x − c_cell(x).
     // Native arraySub, not zip_with (round 12): the HOF is
@@ -507,15 +450,12 @@ object Cluster {
     maxCellSize.foreach { cap =>
       if (!corpusRows.exists(_ <= cap)) guardCellSizes(enc, cap, "ivfPqAnnTopK")
     }
-    val qBase = queries.select(col(idCol).as("query_id"), asDouble(vecCol).as("qv"))
-      .filter(col("qv").isNotNull)
-      .withColumn("qn2", VectorExpressions.arrayNorm2(col("qv")))
-    val probes = probeCells(qBase, centArr, kActual, nprobe)
+    val probes = probeCells(normedQueries(queries, idCol, asDouble(vecCol)),
+      centArr, kActual, nprobe)
     // stage 1: ADC over probed cells only, salted shortlist
-    val adcDot = VectorExpressions.arrayDot(col("qv"), col("rv"))
     val adc = enc.join(broadcast(probes), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("__adc", adcDot / (sqrt(col("qn2")) * sqrt(col("rn2"))))
+      .withColumn("__adc", TopK.cosine("qv", "qn2", "rv", "rn2"))
     val shortlist = saltedShortlist(adc, rerank)
       .select(col("query_id"), col("qv"), col("qn2"), col("neighbor_id"))
     exactRerank(corpus, idCol, vecCol, shortlist, topK)
@@ -564,22 +504,16 @@ object Cluster {
       .withColumn("cluster", VectorExpressions.nearestCentroid(col("cv"), centArr))
       .withColumn("cn2", VectorExpressions.arrayNorm2(col("cv")))
     maxCellSize.foreach(cap => guardCellSizes(c, cap, "annIvfTopK"))
-    val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(col("qv").isNotNull)
-      .withColumn("qn2", VectorExpressions.arrayNorm2(col("qv")))
-    val probes = probeCells(qBase, centArr, kActual, nprobe)
-    val dot = VectorExpressions.arrayDot(col("qv"), col("cv"))
+    val probes = probeCells(normedQueries(queries, idCol, col(vecCol)), centArr, kActual, nprobe)
     val scored = c.join(broadcast(probes), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(dot / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
+      .withColumn("cosine", round(TopK.cosine("qv", "qn2", "cv", "cn2"), 6))
     // rule-7 salted two-stage rank (round 12, the round-11 verdict's
     // e13 flag): a per-query window here would funnel ~nprobe/kCells
     // of the corpus through ONE task per query — the same §8 rule-1/7
-    // shape fixed on e61/e62 in round 11. [[saltedTopK]] keeps topK
+    // shape fixed on e61/e62 in round 11. [[TopK.salted]] keeps topK
     // per (query, salt bucket) first, so the final rank window sees at
     // most SALT·topK survivors; output identical (e42 exactness).
-    saltedTopK(scored, "cosine", topK)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("__ar").cast("long").as("rank"))
+    TopK.salted(scored, topK)
   }
 }

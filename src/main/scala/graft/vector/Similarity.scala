@@ -1,9 +1,9 @@
 package graft.vector
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.text.Dedup
 
 /** Embedding similarity search.
   *
@@ -24,11 +24,6 @@ import graft.functions._
   * casting the array first).
   */
 object Similarity {
-
-  /** Squared-norm pre-computation for one side (vector kept raw). */
-  private def withVecNorm(df: DataFrame, vecCol: String, v: String, n2: String): DataFrame =
-    df.withColumn(v, col(vecCol))
-      .withColumn(n2, VectorExpressions.arrayNorm2(col(v)))
 
   /** Dimensionality probe: one 1-row job over a non-null vector (a null
     * sampled row would NPE on getInt). Mixed-dimension inputs are out of
@@ -63,15 +58,13 @@ object Similarity {
         s"cosineDupPairs blocks exceed maxBlockSize=$cap (quadratic pair space): " +
           over.mkString(", ") + " -- use cosineDupPairsLsh (e22) or a finer block column")
     }
-    val pre = withVecNorm(
-      emb.select(col(blockCol).as("block"), col(idCol).as("id"), col(vecCol)),
-      vecCol, "v", "n2")
+    val pre = TopK.normed(emb, Seq(col(blockCol).as("block"), col(idCol).as("id")),
+      col(vecCol), "v", "n2")
     val a = pre.select(col("block"), col("id").as("id_a"), col("v").as("va"), col("n2").as("na2"))
     val b = pre.select(col("block"), col("id").as("id_b"), col("v").as("vb"), col("n2").as("nb2"))
     a.join(b, Seq("block"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        round(VectorExpressions.arrayDot(col("va"), col("vb")) / (sqrt(col("na2")) * sqrt(col("nb2"))), 4))
+      .withColumn("cosine", round(TopK.cosine("va", "na2", "vb", "nb2"), 4))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -80,22 +73,18 @@ object Similarity {
     * The query side is broadcast; ranking is deterministic (rounded
     * cosine desc, then neighbor id). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                     vecCol: String, k: Int): DataFrame = {
-    val q = withVecNorm(queries.select(col(idCol).as("query_id"), col(vecCol)),
-      vecCol, "qv", "qn2").select(col("query_id"), col("qv"), col("qn2"))
-    val c = withVecNorm(corpus.select(col(idCol).as("neighbor_id"), col(vecCol)),
-      vecCol, "cv", "cn2").select(col("neighbor_id"), col("cv"), col("cn2"))
-    val scored = c.crossJoin(broadcast(q))
+                     vecCol: String, k: Int): DataFrame =
+    TopK.windowed(crossScored(
+      TopK.normed(corpus, Seq(col(idCol).as("neighbor_id")), col(vecCol), "cv", "cn2"),
+      TopK.normed(queries, Seq(col(idCol).as("query_id")), col(vecCol), "qv", "qn2")), k)
+
+  /** Every corpus row (neighbor_id, cv, cn2) scored against the
+    * broadcast query set (query_id, qv, qn2), self pairs excluded: the
+    * candidate stage of the exact scans. */
+  private def crossScored(c: DataFrame, q: DataFrame): DataFrame =
+    c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        round(VectorExpressions.arrayDot(col("qv"), col("cv")) / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("rank").cast("long").as("rank"))
-  }
+      .withColumn("cosine", round(TopK.cosine("qv", "qn2", "cv", "cn2"), 6))
 
   /** Symmetric int8 quantization of an embedding column — the 4×/8×
     * (vs float/double) storage and shuffle-width reduction that makes
@@ -126,26 +115,23 @@ object Similarity {
     * floats. Recall vs the exact float ranking is bounded by the
     * quantization angle error (spec-checked), not by the plan. */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                    vecCol: String, k: Int): DataFrame = {
-    val q = quantizeInt8(queries, idCol, vecCol)
-      .select(col(idCol).as("query_id"), col("qvec").as("qv"),
-        VectorExpressions.arrayNorm2(col("qvec")).as("qn2"))
-    val c = quantizeInt8(corpus, idCol, vecCol)
-      .select(col(idCol).as("neighbor_id"), col("qvec").as("cv"),
-        VectorExpressions.arrayNorm2(col("qvec")).as("cn2"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        round(VectorExpressions.arrayDot(col("qv"), col("cv")) / (sqrt(col("qn2")) * sqrt(col("cn2"))), 6))
+                    vecCol: String, k: Int): DataFrame =
     // rule-7 salted two-stage rank (round 12, the round-11 verdict's
     // quantizedTopK flag): this is the path a user copies for a
     // quantized corpus scan, so it must carry the scale-safe shape —
     // a per-query window over the WHOLE corpus's scores funnels N rows
     // through one task per query. Output identical (e42 exactness).
-    Cluster.saltedTopK(scored, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("__ar").cast("long").as("rank"))
-  }
+    TopK.salted(crossScored(quantizedSide(corpus, idCol, vecCol, "neighbor_id", "cv", "cn2"),
+      quantizedSide(queries, idCol, vecCol, "query_id", "qv", "qn2")), k)
+
+  /** One side of [[quantizedTopK]] as a single projection over the
+    * codes, norm read from `qvec` itself: [[TopK.normed]]'s
+    * alias-then-norm form plans the aliases into the quantizing
+    * projection instead. */
+  private def quantizedSide(df: DataFrame, idCol: String, vecCol: String,
+                            id: String, v: String, n2: String): DataFrame =
+    quantizeInt8(df, idCol, vecCol).select(col(idCol).as(id), col("qvec").as(v),
+      VectorExpressions.arrayNorm2(col("qvec")).as(n2))
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * xxhash64 folded to [-1, 1). Computed ONCE on the driver with the
@@ -154,13 +140,7 @@ object Similarity {
     * identical on every executor and across engine versions with zero
     * driver state beyond the (numPlanes × dim)-double matrix. */
   private def planeComponent(plane: Int, dim: Int): Double = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.{IntegerType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
-    var h = 42L
-    h = XxHash64Function.hash(UTF8String.fromString("graft-lsh"), StringType, h)
-    h = XxHash64Function.hash(plane, IntegerType, h)
-    h = XxHash64Function.hash(dim, IntegerType, h)
+    val h = Dedup.xxhashChain("graft-lsh", plane, dim)
     val m = 2000001L
     (((h % m) + m) % m - 1000000L).toDouble / 1000000.0
   }
@@ -172,10 +152,34 @@ object Similarity {
   def planeMatrix(numPlanes: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(numPlanes, dim)((p, i) => planeComponent(p, i))
 
-  /** Plane count keeping expected LSH bucket occupancy ≤ targetBucket
+  /** Hyperplane-LSH banding: `bands` OR-amplification bands of `per`
+    * planes each; band b's key is the sign bits of planes
+    * b·per .. b·per+per−1 as one long. */
+  private final class Banding(val planes: Array[Array[Double]], val bands: Int, val per: Int) {
+    /** One [[VectorExpressions.PlaneSignature]] per band. */
+    def keys(v: Column): Seq[Column] = (0 until bands).map { b =>
+      VectorExpressions.planeSignature(v, planes.slice(b * per, (b + 1) * per))
+    }
+  }
+
+  /** The banding for `numPlanes` planes over `df`'s dimensionality: the
+    * dimensionality probe is one 1-row job, then the plane matrix is a
+    * driver constant shipped with the task closures. */
+  private def banding(df: DataFrame, vecCol: String, numPlanes: Int, bands: Int): Banding = {
+    require(numPlanes % bands == 0)
+    val per = numPlanes / bands
+    require(per <= 62, s"bits per band must stay off the long sign bit, got $per")
+    new Banding(planeMatrix(numPlanes, probeDim(df, vecCol)), bands, per)
+  }
+
+  /** Expected LSH bucket occupancy [[autoPlanes]] sizes for; the
+    * e22/e37/e38 DuckDB oracles re-derive the plane count from it. */
+  val TargetBucket = 500L
+
+  /** Plane count keeping expected LSH bucket occupancy ≤ TargetBucket
     * at corpus size n, with `bands` OR-amplification bands: bits per
-    * band = the smallest b ≥ 2 with targetBucket·2^b ≥ n (i.e.
-    * max(2, ceil(log2(n / targetBucket)))). Integer-exact on purpose:
+    * band = the smallest b ≥ 2 with TargetBucket·2^b ≥ n (i.e.
+    * max(2, ceil(log2(n / TargetBucket)))). Integer-exact on purpose:
     * the DuckDB oracle re-derives the same count from its own
     * `count(*)`, and a float `ceil(log2(...))` can flip at exact
     * powers of two.
@@ -185,20 +189,19 @@ object Similarity {
     * is bounded at 62 — keeping `1L << bit` off the sign bit and
     * inside DuckDB's BIGINT — NOT at 64/bands. The old shared-64-bit
     * signature capped 8 bands at 8 bits each, saturating at
-    * n ≈ targetBucket·2^8 = 128k vectors, after which mean bucket
+    * n ≈ TargetBucket·2^8 = 128k vectors, after which mean bucket
     * occupancy (and with it the QUADRATIC within-bucket pair work)
     * grew linearly with n — measured at sf10 (200k vectors): 27.3 s
     * vs a ~12 s linear extrapolation (BASELINE.md). 62 bits covers
-    * targetBucket·2^62 vectors — no realistic corpus saturates it.
+    * TargetBucket·2^62 vectors — no realistic corpus saturates it.
     * Deployments re-derive this as the corpus grows; the e22 driver
     * gate does exactly that from the corpus count. */
-  def autoPlanes(n: Long, bands: Int, targetBucket: Long = 500L): Int = {
+  def autoPlanes(n: Long, bands: Int): Int = {
     require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
-    require(targetBucket >= 1, s"targetBucket must be positive, got $targetBucket")
     val maxBits = 62
-    // ((n-1) >> b) < targetBucket  ⟺  targetBucket * 2^b >= n, overflow-free
+    // ((n-1) >> b) < TargetBucket  ⟺  TargetBucket * 2^b >= n, overflow-free
     var bits = 2
-    while (bits < maxBits && ((n - 1) >> bits) >= targetBucket) bits += 1
+    while (bits < maxBits && ((n - 1) >> bits) >= TargetBucket) bits += 1
     bands * math.min(bits, maxBits)
   }
 
@@ -215,7 +218,7 @@ object Similarity {
     * SCALING RULE (measured at sf1, BASELINE.md): bucket occupancy is
     * n / 2^(numPlanes/bands) per band, and candidate volume grows with
     * occupancy SQUARED — so bits-per-band must grow as
-    * log2(n / targetBucket) or a 10× corpus costs ~100× the pair work.
+    * log2(n / TargetBucket) or a 10× corpus costs ~100× the pair work.
     * [[autoPlanes]] computes that. The recall/bits trade-off is set by
     * how similar the pairs you must keep are (P[bit agrees] =
     * 1 − θ/π per plane): tight thresholds (0.8+, true near-dups)
@@ -226,15 +229,11 @@ object Similarity {
   def cosineDupPairsLsh(emb: DataFrame, idCol: String, vecCol: String,
                         numPlanes: Int, bands: Int, threshold: Double,
                         maxBucket: Int = 10000): DataFrame = {
-    require(numPlanes % bands == 0)
-    val per = numPlanes / bands
-    require(per <= 62, s"bits per band must stay off the long sign bit, got $per")
-    val dim = probeDim(emb, vecCol)
-    val planes = planeMatrix(numPlanes, dim)
+    val lsh = banding(emb, vecCol, numPlanes, bands)
     // Band keys outgrow one 64-bit signature when autoPlanes asks for
     // more than 64/bands bits: the old always-folded form capped
     // bands × bits at 64, so autoPlanes saturated at
-    // n ≈ targetBucket·2^(64/bands) — 128k vectors at 8 bands — after
+    // n ≈ TargetBucket·2^(64/bands) — 128k vectors at 8 bands — after
     // which bucket occupancy and the quadratic within-bucket work grew
     // with n (27.3 s at sf10 vs ~12 s linear, BASELINE.md). Two paths,
     // provably identical keys (bit i of band b = sign of plane
@@ -242,7 +241,8 @@ object Similarity {
     //  - numPlanes ≤ 64: ONE folded signature, band keys sliced by
     //    shifts — one narrow cached long, the round-5 shape, kept
     //    because it is the measured-fastest form at every gate SF
-    //    through sf1;
+    //    through sf1 (the per-band form measured +1.3 s at sf1 under
+    //    the full Bench lifecycle, 4.00 vs 2.74 s, BASELINE.md round 6);
     //  - numPlanes > 64 (first reached between sf1 and sf10): one
     //    PlaneSignature per band as `bands` PRIMITIVE LONG columns
     //    (primitive, not array<long> — the columnar cache encodes
@@ -250,14 +250,12 @@ object Similarity {
     //    UnsafeArrayData (de)serialization on every read).
     val folded = numPlanes <= 64
     val sigd = {
-      val base = withVecNorm(emb.select(col(idCol).as("id"), col(vecCol)), vecCol, "v", "n2")
+      val base = TopK.normed(emb, Seq(col(idCol).as("id"), col(vecCol)), col(vecCol), "v", "n2")
       if (folded)
-        base.withColumn("__sig", VectorExpressions.planeSignature(col("v"), planes))
+        base.withColumn("__sig", VectorExpressions.planeSignature(col("v"), lsh.planes))
       else
-        base.select(Seq(col("id"), col("v"), col("n2")) ++ (0 until bands).map { b =>
-          VectorExpressions.planeSignature(col("v"),
-            planes.slice(b * per, (b + 1) * per)).as(s"__k$b")
-        }: _*)
+        base.select(Seq(col("id"), col("v"), col("n2")) ++
+          lsh.keys(col("v")).zipWithIndex.map { case (k, b) => k.as(s"__k$b") }: _*)
     }
     // Persisted ONE ROW PER VECTOR (id, v, n2, signature long(s)): the
     // signatures are the expensive map work (numPlanes × dim products
@@ -272,6 +270,7 @@ object Similarity {
     // buckets (measured 7.4 vs 2.8 s for the query at sf1).
     // Disk-backed at corpus scale.
     sigd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val per = lsh.per
     val bandStructs = array((0 until bands).map { b =>
       val key =
         if (folded) shiftright(col("__sig"), b * per).bitwiseAND((1L << per) - 1L)
@@ -282,17 +281,9 @@ object Similarity {
       .select(col("id"), col("v"), col("n2"),
         col("bk.band").as("band"), col("bk.key").as("key"))
     // Degenerate-bucket prune (near-zero / boilerplate embeddings that
-    // collapse onto one signature) via PARTIAL-AGGREGATED bucket sizes,
-    // not a count window (SURVEY §8 skew playbook): a window partitioned
-    // by (band, key) would co-locate the pathological bucket once just
-    // to measure it. The size branch reads the cached sigd with the
-    // vector column pruned, so only (band, key, count) partials shuffle;
-    // the hot list (≤ n/maxBucket rows) broadcasts and the anti-join
-    // drops hot rows map-side.
-    val hot = sigd.select(explode(bandStructs).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"))
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select(col("band"), col("key"))
+    // collapse onto one signature), the MinHash path's partial-aggregated
+    // prune: its size branch reads the cached sigd with the vector
+    // column pruned, so only (band, key, count) partials shuffle.
     // Explicit shuffle barrier on the bucket key (the e4 repartition
     // trick): the banded table otherwise inherits the SCAN's
     // partitioning — a handful of input splits at bench scale, and
@@ -302,7 +293,7 @@ object Similarity {
     // parallelism (measured 2.2× the whole query on one core; the old
     // count window inserted this exchange as a side effect). The
     // barrier also hands AQE a materialized stage with real sizes.
-    val pruned = pre.join(broadcast(hot), Seq("band", "key"), "left_anti")
+    val pruned = Dedup.pruneHotBuckets(pre, Seq("band", "key"), maxBucket)
       .repartition(col("band"), col("key"))
     val a = pruned.select(col("band"), col("key"),
       col("id").as("id_a"), col("v").as("va"), col("n2").as("na2"))
@@ -313,8 +304,7 @@ object Similarity {
     // distinct, and the dedup row is then just (id_a, id_b, cosine)
     a.join(b, Seq("band", "key"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        round(VectorExpressions.arrayDot(col("va"), col("vb")) / (sqrt(col("na2")) * sqrt(col("nb2"))), 4))
+      .withColumn("cosine", round(TopK.cosine("va", "na2", "vb", "nb2"), 4))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
       .distinct()
@@ -324,43 +314,8 @@ object Similarity {
     * against same-bucket candidates. Recall/latency trades on
     * numPlanes; multi-probe = OR of per-band signatures. */
   def annLshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, numPlanes: Int, bands: Int, k: Int): DataFrame = {
-    require(numPlanes % bands == 0)
-    val per = numPlanes / bands
-    require(per <= 62, s"bits per band must stay off the long sign bit, got $per")
-    // dimensionality probe: one 1-row job, then the plane matrix is a
-    // driver constant shipped with the task closures
-    val dim = probeDim(corpus, vecCol)
-    val planes = planeMatrix(numPlanes, dim)
-    // per-band signatures, not one folded 64-bit long — see
-    // [[cosineDupPairsLsh]]: unbounds bands × bits at corpus scale
-    def banded(df: DataFrame, role: String): DataFrame = {
-      val pre = withVecNorm(df.select(col(idCol).as(s"${role}_id"), col(vecCol)),
-        vecCol, s"${role}_v", s"${role}_n2")
-      pre.select(col(s"${role}_id"), col(s"${role}_v"), col(s"${role}_n2"),
-        posexplode(array((0 until bands).map { b =>
-          VectorExpressions.planeSignature(col(s"${role}_v"),
-            planes.slice(b * per, (b + 1) * per))
-        }: _*)).as(Seq("band", "key")))
-    }
-    val c = banded(corpus, "neighbor")
-    val q = banded(queries, "query")
-    val cand = c.join(broadcast(q), Seq("band", "key"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        col("query_v"), col("query_n2"), col("neighbor_v"), col("neighbor_n2"))
-      .distinct()
-    val scored = cand.withColumn("cosine",
-      round(VectorExpressions.arrayDot(col("query_v"), col("neighbor_v")) /
-        (sqrt(col("query_n2")) * sqrt(col("neighbor_n2"))), 6))
-    // rule-7 salted two-stage rank (round 12): a query's same-bucket
-    // candidate set grows with occupancy (corpus/2^bits per band), so
-    // the plain per-query window funnels it through one task at scale.
-    // Output identical (e42 exactness).
-    Cluster.saltedTopK(scored, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"),
-        col("__ar").cast("long").as("rank"))
-  }
+                 vecCol: String, numPlanes: Int, bands: Int, k: Int): DataFrame =
+    lshTopK(corpus, queries, idCol, vecCol, None, numPlanes, bands, k)
 
   /** Hard-negative mining for contrastive training (round 9): for
     * each anchor vector, the top-k most-similar corpus vectors whose
@@ -382,42 +337,47 @@ object Similarity {
     * cosine desc, then neighbor id), the e6/e7 contract. */
   def hardNegativesLsh(corpus: DataFrame, queries: DataFrame, idCol: String,
                        vecCol: String, labelCol: String,
-                       numPlanes: Int, bands: Int, k: Int): DataFrame = {
-    require(numPlanes % bands == 0)
-    val per = numPlanes / bands
-    require(per <= 62, s"bits per band must stay off the long sign bit, got $per")
-    val dim = probeDim(corpus, vecCol)
-    val planes = planeMatrix(numPlanes, dim)
+                       numPlanes: Int, bands: Int, k: Int): DataFrame =
+    lshTopK(corpus, queries, idCol, vecCol, Some(labelCol), numPlanes, bands, k)
+
+  /** The LSH top-k of [[annLshTopK]] and [[hardNegativesLsh]]: per-band
+    * signatures on both sides (one PlaneSignature per band, not one
+    * folded 64-bit long — see [[cosineDupPairsLsh]]: unbounds
+    * bands × bits at corpus scale), a same-(band, key) join against the
+    * broadcast query side, candidates deduplicated across bands, exact
+    * cosine, salted top-k. With a `labelCol`, null-label rows drop on
+    * both sides, each side carries its label (`query_label`,
+    * `neighbor_label`), and a candidate must differ from the query's
+    * label before it is scored. */
+  private def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+                      labelCol: Option[String], numPlanes: Int, bands: Int,
+                      k: Int): DataFrame = {
+    val lsh = banding(corpus, vecCol, numPlanes, bands)
+    val labels = labelCol.toSeq
     def banded(df: DataFrame, role: String): DataFrame = {
-      val pre = withVecNorm(
-        df.filter(col(labelCol).isNotNull)
-          .select(col(idCol).as(s"${role}_id"), col(labelCol).as(s"${role}_label"),
-            col(vecCol)),
-        vecCol, s"${role}_v", s"${role}_n2")
-      pre.select(col(s"${role}_id"), col(s"${role}_label"),
-        col(s"${role}_v"), col(s"${role}_n2"),
-        posexplode(array((0 until bands).map { b =>
-          VectorExpressions.planeSignature(col(s"${role}_v"),
-            planes.slice(b * per, (b + 1) * per))
-        }: _*)).as(Seq("band", "key")))
+      val names = s"${role}_id" +: labels.map(_ => s"${role}_label")
+      val (v, n2) = (s"${role}_v", s"${role}_n2")
+      val carried = (idCol +: labels).zip(names).map { case (c, n) => col(c).as(n) }
+      TopK.normed(labels.foldLeft(df)((d, l) => d.filter(col(l).isNotNull)), carried,
+          col(vecCol), v, n2)
+        .select((names :+ v :+ n2).map(col) :+
+          posexplode(array(lsh.keys(col(v)): _*)).as(Seq("band", "key")): _*)
     }
     val c = banded(corpus, "neighbor")
     val q = banded(queries, "query")
+    val keys = ("query_id" +: labels.map(_ => "query_label")) ++
+      ("neighbor_id" +: labels.map(_ => "neighbor_label"))
     val cand = c.join(broadcast(q), Seq("band", "key"))
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        col("neighbor_label") =!= col("query_label"))
-      .select(col("query_id"), col("query_label"),
-        col("neighbor_id"), col("neighbor_label"),
-        col("query_v"), col("query_n2"), col("neighbor_v"), col("neighbor_n2"))
+      .filter(labels.map(_ => col("neighbor_label") =!= col("query_label"))
+        .foldLeft(col("query_id") =!= col("neighbor_id"))(_ && _))
+      .select((keys ++ Seq("query_v", "query_n2", "neighbor_v", "neighbor_n2")).map(col): _*)
       .distinct()
-    val scored = cand.withColumn("cosine",
-      round(VectorExpressions.arrayDot(col("query_v"), col("neighbor_v")) /
-        (sqrt(col("query_n2")) * sqrt(col("neighbor_n2"))), 6))
-    // rule-7 salted two-stage rank (round 12) — the annLshTopK note
-    Cluster.saltedTopK(scored, "cosine", k)
-      .select(col("query_id"), col("query_label"),
-        col("neighbor_id"), col("neighbor_label"),
-        round(col("cosine"), 4).as("cosine"), col("__ar").cast("long").as("rank"))
+    // rule-7 salted two-stage rank (round 12): a query's same-bucket
+    // candidate set grows with occupancy (corpus/2^bits per band), so
+    // the plain per-query window funnels it through one task at scale.
+    // Output identical (e42 exactness).
+    TopK.salted(cand.withColumn("cosine",
+      round(TopK.cosine("query_v", "query_n2", "neighbor_v", "neighbor_n2"), 6)), k, keys)
   }
 
   /** Index-quality gate: recall@k of the LSH ANN path against the exact

@@ -929,6 +929,57 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(a1.values.toSet.size > 1, "degenerate clustering")
   }
 
+  test("fitCentroids equals a plain Lloyd replay on parquet embeddings; no vectors, no centroids") {
+    val emb = Tables.embeddings(spark, sf)
+    val got = graft.vector.Cluster.fitCentroids(emb, "vec_id", "embedding", 4, 3)
+      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1)
+    // replay: seeds are the 4 smallest (seedHash, id); assignment is the
+    // ascending-i squared-distance fold with ties to the lowest cluster;
+    // each update is the member mean per dim, rounded half-up to 1e-6;
+    // a cluster left empty keeps its centroid
+    val rows = emb.filter(col("embedding").isNotNull).select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
+    val p = 1000000007L
+    def seedHash(id: Long) = ((id % p) * 654435747L) % p
+    def dist(v: Array[Double], c: Array[Double]) = {
+      var d = 0.0; var i = 0
+      while (i < math.min(v.length, c.length)) { val t = v(i) - c(i); d += t * t; i += 1 }
+      d
+    }
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    var cents = rows.sortBy { case (id, _) => (seedHash(id), id) }.take(4).map(_._2)
+    for (_ <- 1 to 3) {
+      val members = rows.map(_._2).groupBy(v => cents.indices.minBy(c => dist(v, cents(c))))
+      cents = cents.indices.map { c =>
+        members.get(c).fold(cents(c)) { vs =>
+          Array.tabulate(vs.head.length)(i => round6(vs.map(_(i)).sum / vs.length))
+        }
+      }.toArray
+    }
+    assert(got.map(_._1).toSeq == (0 until 4))
+    assert(got.map(_._2) sameElements cents.map(_.toSeq), s"got ${got.toSeq}")
+    assert(graft.vector.Cluster.fitCentroids(emb.filter(lit(false)),
+      "vec_id", "embedding", 4, 3).count() == 0)
+  }
+
+  test("hardNegativesLsh over distinct non-null labels is annLshTopK plus the labels") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_hardneg").toString + "/emb"
+    Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"),
+      concat(lit("L"), col("vec_id")).as("label")).write.parquet(dir)
+    val emb = graft.sources.Sources.readParquet(spark, dir)
+    val queries = emb.filter(col("vec_id") < 10)
+    val mined = Similarity.hardNegativesLsh(emb, queries, "vec_id", "embedding", "label", 16, 4, 5)
+    assert(mined.columns.toSeq ==
+      Seq("query_id", "query_label", "neighbor_id", "neighbor_label", "cosine", "rank"))
+    val labelled = Similarity.annLshTopK(emb, queries, "vec_id", "embedding", 16, 4, 5)
+      .select(col("query_id"), concat(lit("L"), col("query_id")).as("query_label"),
+        col("neighbor_id"), concat(lit("L"), col("neighbor_id")).as("neighbor_label"),
+        col("cosine"), col("rank"))
+    assert(mined.count() > 0)
+    assert(mined.exceptAll(labelled).isEmpty && labelled.exceptAll(mined).isEmpty)
+  }
+
   test("cosineDupPairs is symmetric-free and above threshold") {
     val emb = Tables.embeddings(spark, sf)
     val out = Similarity.cosineDupPairs(emb, "vec_id", "embedding", "label", 0.25).collect()

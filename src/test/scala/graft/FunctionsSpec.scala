@@ -36,16 +36,6 @@ class FunctionsSpec extends SparkSpec {
     assert(got == "hello world 42")
   }
 
-  test("charNgrams produces distinct sliding character grams") {
-    val got = Seq("abab").toDF("t").select(charNgrams(col("t"), 3)).as[Seq[String]].head()
-    assert(got.toSet == Set("aba", "bab"))
-  }
-
-  test("wordShingles produces word n-grams") {
-    val got = Seq("a b c d").toDF("t").select(wordShingles(col("t"), 3)).as[Seq[String]].head()
-    assert(got.toSet == Set("a b c", "b c d"))
-  }
-
   test("roundMeanE4 half-up rounds exact boundary means") {
     // 33909 cents over 8 rows = 42.38625 -> must round UP to 42.3863
     val df = Seq((33909.0, 8L)).toDF("s", "n")
