@@ -58,16 +58,14 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.NioLocalFs].getName)
 
-  def build(master: String, shufflePartitions: Int,
-            appName: String = "graft"): SparkSession =
-    SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config(codegenResidency)
-      .config(localFileSystem)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** Every setting an engine session runs with, as one table: [[build]]
+    * applies it, and so does the test session, which changes only its
+    * warehouse directory — tests run the session production runs. */
+  def settings(shufflePartitions: Int): Map[String, String] =
+    codegenResidency ++ localFileSystem ++ Map(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // 64 MB broadcast budget (default 10 MB is sized for small-heap
       // executors): lets AQE broadcast mid-size build sides it measures
       // at runtime — e.g. e4's 50k-doc gram-array table at sf1 (~55 MB),
@@ -75,7 +73,7 @@ object GraftSession {
       // sort-merge shuffle. Sides that outgrow the budget at real scale
       // fall back to shuffle automatically, so this is a per-run
       // decision from measured sizes, not a plan-time gamble.
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+      "spark.sql.autoBroadcastJoinThreshold" -> (64 * 1024 * 1024).toString,
       // Scan-partition granularity sized to the parallelism (SURVEY §5,
       // round 9): the defaults (128 MB max + 4 MB open cost) PACK small
       // part-files until a mid-size table scans in 3-5 tasks — at sf10
@@ -86,7 +84,7 @@ object GraftSession {
       // layout. 16 MB / 512 KB keeps small-file packing (thousands of
       // tiny files still coalesce) while letting tables from ~0.5 GB
       // up scan at full parallelism.
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString,
       // Round 13 probe: lowering the open-cost floor to 64 KB (so the
       // 594 KB sf0.1 documents file scans ~10-way instead of 2-way for
       // the regex-heavy passes) was measured-REJECTED — e8 1.07→1.55 s,
@@ -96,14 +94,14 @@ object GraftSession {
       // still lands on the row-group-holding tasks. Scan parallelism
       // is row-group-bound; at deployment scale files carry many row
       // groups and 16 MB splits already give full wave parallelism.
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
+      "spark.sql.files.openCostInBytes" -> (512 * 1024).toString,
       // collect_set/collect_list run on ObjectHashAggregate, which falls
       // back to SORT-based aggregation after only 128 distinct groups per
       // partition — every signature-building aggregation (gram sets,
       // minhash bands) would pay an extra sort of the exploded rows.
       // 128k keeps those hash-based with a safety valve for genuinely
       // huge per-partition group counts.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072",
       // hugeMethodLimit stays at Spark's 64 KB default DELIBERATELY
       // (round 12): tools/CodegenSizeAudit found 3 stages surface-wide
       // whose largest generated method exceeds the JVM JIT's ~8 KB
@@ -115,15 +113,22 @@ object GraftSession {
       // virtual calls everywhere. The real cure for a GROSSLY oversized
       // method is shrinking the kernel (the e62 PqReconstruct fusion,
       // 5x), never de-fusing the stage.
-      .config("spark.sql.session.timeZone", "UTC")
+      "spark.sql.session.timeZone" -> "UTC",
       // Feeds carrying TIMESTAMP(NANOS) parquet timestamps (events) are
       // read as nanos-since-epoch longs — set once at session build so
       // table loaders never mutate session state (racy as a library).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // bucketed tables (Sources.writeBucketed) land outside the repo
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse",
       // native expressions as SQL functions (array_dot, array_norm2)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.ui.enabled" -> "false")
+
+  def build(master: String, shufflePartitions: Int,
+            appName: String = "graft"): SparkSession =
+    SparkSession.builder()
+      .master(master)
+      .appName(appName)
+      .config(settings(shufflePartitions))
       .getOrCreate()
 }
