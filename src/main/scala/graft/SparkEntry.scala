@@ -868,7 +868,7 @@ object SparkEntry {
       Seq(1L, 2L).map { v =>
         graft.sources.Sources.readVersion(s, dir, v)
           .agg(count(lit(1)).as("n_rows"),
-            (sum(round(col("value") * 100, 0).cast("long")) / 100.0).as("sum_value"))
+            graft.functions.centsSum(col("value")).as("sum_value"))
           .select(lit(v).as("version"), col("n_rows"), col("sum_value"))
       }.reduce(_ union _)
     }),
@@ -896,7 +896,7 @@ object SparkEntry {
       Seq(3L, 4L).map { v =>
         graft.sources.Sources.readVersion(s, dir, v)
           .agg(count(lit(1)).as("n_rows"),
-            (sum(round(col("value") * 100, 0).cast("long")) / 100.0).as("sum_value"))
+            graft.functions.centsSum(col("value")).as("sum_value"))
           .select(lit(v).as("version"), col("n_rows"), col("sum_value"),
             lit(nExpired.toLong).as("n_expired"), lit(nRemoved.toLong).as("n_removed"),
             lit(liveManifests.toLong).as("live_manifests"),

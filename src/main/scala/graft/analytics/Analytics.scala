@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.fracE4
+import graft.functions.{centsSum, fracE4}
 import graft.Checkpoint._
 
 /** General relational analytics surface — the engine's query layer.
@@ -102,7 +102,7 @@ object Analytics {
       .agg(
         grouping_id().cast("long").as("gid"),
         count(lit(1)).as("n_lines"),
-        (sum(round(col("l_quantity") * 100, 0).cast("long")) / 100.0).as("sum_qty"),
+        centsSum(col("l_quantity")).as("sum_qty"),
         (sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
           .cast("long")) / 10000.0).as("revenue"))
 
@@ -121,8 +121,7 @@ object Analytics {
     require(types.nonEmpty)
     val counters = types.map(t =>
       count(when(col(typeCol) === t, lit(1))).as(s"n_$t"))
-    val mass = (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0)
-      .as("sum_value")
+    val mass = centsSum(col(valueCol)).as("sum_value")
     events.groupBy(col(keyCol)).agg(counters.head, (counters.tail :+ mass): _*)
   }
 
@@ -225,7 +224,7 @@ object Analytics {
     val li = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)
     val big = li.groupBy(col("l_orderkey"))
-      .agg((sum(round(col("l_quantity") * 100, 0).cast("long")) / 100.0).as("total_qty"))
+      .agg(centsSum(col("l_quantity")).as("total_qty"))
       .filter(col("total_qty") > qtyThreshold)
     o.join(big, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
@@ -339,8 +338,7 @@ object Analytics {
     events.filter(col(tsCol).isNotNull)
       .groupBy(dayofweek(col(tsCol)).cast("long").as("dow"),
         hour(col(tsCol)).cast("long").as("hour_of_day"))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(count(lit(1)).as("n"), centsSum(col(valueCol)).as("sum_value"))
 
   def cohortRetention(events: DataFrame, userCol: String, tsCol: String): DataFrame = {
     val perUser = events

@@ -54,6 +54,22 @@ package object functions {
   def divLong(a: Column, b: Column): Column =
     ColumnBridge.column(IntegralDivide(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
+  /** Sign-aware half-up integer division of exact-long `t` by a
+    * positive long `d` — negatives round away from zero, matching
+    * round-half-up on the decimal value — as a signed long. [[divLong]]
+    * keeps it exact past 2^53, where `/` detours through doubles. */
+  def halfUpDiv(t: Column, d: Column): Column = {
+    val q = divLong(abs(t) + divLong(d, lit(2L)), d)
+    when(t < 0, -q).otherwise(q)
+  }
+
+  /** Exact-cents sum of a 2-decimal column: the per-value cents are
+    * summed as longs, so the total is independent of summation order
+    * at any group size, where a double sum drifts in the 4th decimal
+    * once a group grows with the corpus (the d1 sf30 lesson). */
+  def centsSum(v: Column): Column =
+    sum(round(v * 100, 0).cast("long")) / 100.0
+
   /** Lower-cased, punctuation-stripped, whitespace-normalized text —
     * the canonical form used by dedup and fingerprinting. One fused
     * native pass ([[StringExpressions.NormalizeText]]), bit-identical

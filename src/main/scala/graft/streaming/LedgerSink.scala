@@ -39,14 +39,13 @@ object LedgerSink {
           .as("sum_cents"))
 
   /** The sink: drain the stream, appending one ledger version per
-    * micro-batch. Trigger.AvailableNow by default (the f8 contract). */
+    * micro-batch. Trigger.AvailableNow (the f8 contract). */
   def streamQualityLedger(stream: DataFrame, tablePath: String,
                           checkpointDir: String, tsCol: String,
-                          valueCol: String,
-                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                          valueCol: String): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.sources.RunLedger.appendBatch(
           batchReport(batch, tsCol, valueCol), batch.sparkSession, tablePath, id)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.centsSum
 
 /** Streaming-shaped operators.
   *
@@ -13,6 +14,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * partition by key, so both forms share one shuffle layout.
   */
 object Streams {
+
+  /** The PSI above which a [[windowedDrift]] window is `drifted`, in
+    * micro-units (0.1). */
+  private val DriftThresholdMicro = 100000L
+
+  /** The watermark delay of the flatMapGroupsWithState twins: none —
+    * each stream admits nothing older than the newest event time of
+    * its earlier micro-batches (their late-data contracts below). */
+  private val WatermarkDelay = "0 seconds"
 
   /** Gap-based sessionization (batch form): a new session starts after
     * `gapSeconds` of inactivity; emits per-session rollups.
@@ -61,19 +71,9 @@ object Streams {
     * unbounded session streams (f1's twin, flatMapGroupsWithState, is
     * the custom-state escape hatch; this is the declarative one). */
   def sessionWindowAgg(events: DataFrame, keyCol: String, tsCol: String,
-                       valueCol: String, gapSeconds: Long): DataFrame = {
-    require(gapSeconds > 0, "session gap must be positive")
-    events
-      .filter(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol))
-      .groupBy(col(keyCol), session_window(col("period"), s"$gapSeconds seconds"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
-      .select(col(keyCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("sum_value"))
-  }
+                       valueCol: String, gapSeconds: Long): DataFrame =
+    sessionAgg(sessionInput(events, keyCol, tsCol, valueCol, gapSeconds),
+      keyCol, valueCol, gapSeconds)
 
   /** Streaming twin of [[sessionWindowAgg]]: the state-store-backed
     * native session operator — sessions merge across micro-batches in
@@ -92,20 +92,30 @@ object Streams {
     * on re-run. */
   def sessionWindowAggStream(events: DataFrame, keyCol: String, tsCol: String,
                              valueCol: String, gapSeconds: Long,
-                             watermark: String): DataFrame = {
+                             watermark: String): DataFrame =
+    sessionAgg(sessionInput(events, keyCol, tsCol, valueCol, gapSeconds)
+      .withWatermark("period", watermark), keyCol, valueCol, gapSeconds)
+
+  /** The input projection of both session twins: null key/ts rows
+    * drop and timestamps truncate to the second. */
+  private def sessionInput(events: DataFrame, keyCol: String, tsCol: String,
+                           valueCol: String, gapSeconds: Long): DataFrame = {
     require(gapSeconds > 0, "session gap must be positive")
     events
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull)
       .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol))
-      .withWatermark("period", watermark)
+  }
+
+  /** The session aggregate of both session twins. */
+  private def sessionAgg(input: DataFrame, keyCol: String, valueCol: String,
+                         gapSeconds: Long): DataFrame =
+    input
       .groupBy(col(keyCol), session_window(col("period"), s"$gapSeconds seconds"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(count(lit(1)).as("n_events"), centsSum(col(valueCol)).as("sum_value"))
       .select(col(keyCol),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("sum_value"))
-  }
 
   /** Tumbling-window aggregation (batch form): fixed windows via
     * date_trunc; the streaming twin uses window() + watermark. Value
@@ -117,8 +127,7 @@ object Streams {
   def tumblingWindow(events: DataFrame, tsCol: String, dimCol: String,
                      valueCol: String, unit: String): DataFrame =
     events.groupBy(date_trunc(unit, col(tsCol)).as("window_start"), col(dimCol))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(count(lit(1)).as("n"), centsSum(col(valueCol)).as("sum_value"))
 
   /** Stream-static enrichment (batch form): join the event feed to a
     * slowly-changing dimension (here: segment attributes keyed by the
@@ -143,8 +152,7 @@ object Streams {
     events.join(broadcast(dim.select(col(dimKey), col(segCol))),
         col(eventKey) === col(dimKey))
       .groupBy(date_trunc(unit, col(tsCol)).as("window_start"), col(segCol))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(count(lit(1)).as("n"), centsSum(col(valueCol)).as("sum_value"))
 
   /** Idempotent event dedup (batch form): first occurrence per natural
     * key; the streaming twin is dropDuplicatesWithinWatermark. */
@@ -158,14 +166,19 @@ object Streams {
     * validation run (nulls, negatives, volume, value mass per window).
     */
   def windowedQuality(events: DataFrame, tsCol: String, valueCol: String,
-                      unit: String): DataFrame =
+                      unit: String): DataFrame = {
+    val aggs = qualityAggs(valueCol)
     events.groupBy(date_trunc(unit, col(tsCol)).as("window_start"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col(valueCol).isNull, 1L).otherwise(0L)).as("null_values"),
-        sum(when(col(valueCol) < 0, 1L).otherwise(0L)).as("negative_values"),
-        // exact integer cents — corpus-scale windows, the f5 discipline
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The per-window counters of both [[windowedQuality]] forms. */
+  private def qualityAggs(valueCol: String): Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    sum(when(col(valueCol).isNull, 1L).otherwise(0L)).as("null_values"),
+    sum(when(col(valueCol) < 0, 1L).otherwise(0L)).as("negative_values"),
+    // exact integer cents — corpus-scale windows, the f5 discipline
+    centsSum(col(valueCol)).as("sum_value"))
 
   /** Hopping (sliding) window aggregation (batch form): each event lands
     * in `size/hop` overlapping windows — the smoothing/trend view a
@@ -178,10 +191,13 @@ object Streams {
     * groupBy and the same plan holds. */
   def hoppingWindow(events: DataFrame, tsCol: String, valueCol: String,
                     size: String, hop: String): DataFrame =
-    events.filter(col(tsCol).isNotNull)
-      .groupBy(window(col(tsCol), size, hop).as("w"))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+    hopping(events.filter(col(tsCol).isNotNull), tsCol, valueCol, size, hop)
+
+  /** The `window()` aggregate of both [[hoppingWindow]] forms. */
+  private def hopping(input: DataFrame, tsCol: String, valueCol: String,
+                      size: String, hop: String): DataFrame =
+    input.groupBy(window(col(tsCol), size, hop).as("w"))
+      .agg(count(lit(1)).as("n"), centsSum(col(valueCol)).as("sum_value"))
       .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
         col("n"), col("sum_value"))
 
@@ -266,13 +282,7 @@ object Streams {
     * watermark passes their end. */
   def hoppingWindowStream(events: DataFrame, tsCol: String, valueCol: String,
                           size: String, hop: String, watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), size, hop).as("w"))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("n"), col("sum_value"))
+    hopping(events.withWatermark(tsCol, watermark), tsCol, valueCol, size, hop)
 
   /** Streaming tumbling-window aggregation with watermarking. Integer
     * cents like the batch form — shared semantics by construction. */
@@ -281,8 +291,7 @@ object Streams {
     events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen), col(dimCol))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(count(lit(1)).as("n"), centsSum(col(valueCol)).as("sum_value"))
 
   /** Streaming twin of [[staticEnrich]]: the static dimension joins
     * statelessly (re-evaluated and re-broadcast each micro-batch),
@@ -301,8 +310,7 @@ object Streams {
       .join(broadcast(dim.select(col(dimKey), col(segCol))),
         col(eventKey) === col(dimKey))
       .groupBy(window(col(tsCol), windowLen).as("w"), col(segCol))
-      .agg(count(lit(1)).as("n"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(count(lit(1)).as("n"), centsSum(col(valueCol)).as("sum_value"))
       .select(col("w.start").as("window_start"), col(segCol),
         col("n"), col("sum_value"))
 
@@ -320,33 +328,18 @@ object Streams {
   /** Streaming twin of [[windowedQuality]]: watermarked tumbling-window
     * violation counts, emitted as windows close. */
   def windowedQualityStream(events: DataFrame, tsCol: String, valueCol: String,
-                            windowLen: String, watermark: String): DataFrame =
+                            windowLen: String, watermark: String): DataFrame = {
+    val aggs = qualityAggs(valueCol)
     events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col(valueCol).isNull, 1L).otherwise(0L)).as("null_values"),
-        sum(when(col(valueCol) < 0, 1L).otherwise(0L)).as("negative_values"),
-        (sum(round(col(valueCol) * 100, 0).cast("long")) / 100.0).as("sum_value"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
 
   case class CapEvent(key: Long, ts: java.sql.Timestamp, id: Long)
   case class CapOut(key: Long, windowStart: java.sql.Timestamp,
                     period: java.sql.Timestamp, id: Long, seq: Long)
 
-  /** Streaming twin of [[rateCap]]: one admit counter per open
-    * (key, window) via flatMapGroupsWithState, event-time timeout
-    * clearing the counter once the watermark passes the window end
-    * (state is O(open windows)). Within a micro-batch the group's
-    * events sort by (ts, id) before admitting, so a stream fed in
-    * event-time order emits exactly the batch form's rows; admits past
-    * the cap drop inline — the stream never buffers a window's events.
-    * windowSeconds must match the batch form's `unit` for parity.
-    * Late-data contract (StreamsSpec): events below the watermark are
-    * dropped BEFORE the operator — once a window's counter state has
-    * timed out, a late event would otherwise re-open it and grant
-    * admits past the budget; the batch form absorbs such rows on
-    * re-run. */
   /** Per-window PSI drift monitor against a STATIC reference
     * distribution (round 9): every tumbling window's category mix is
     * scored with b14's PSI term math against a published baseline —
@@ -367,13 +360,12 @@ object Streams {
     * emitted — absorbing them would re-open closed windows), a batch
     * re-run absorbs them. */
   def windowedDrift(events: DataFrame, tsCol: String, catCol: String,
-                    domain: Seq[String], refCounts: Seq[(String, Long)],
-                    thresholdMicro: Long = 100000L): DataFrame = {
+                    domain: Seq[String], refCounts: Seq[(String, Long)]): DataFrame = {
     val counts = driftCounts(catCol, domain)
     val counted = events
       .groupBy(date_trunc("hour", col(tsCol)).as("window_start"))
       .agg(counts.head, counts.tail: _*)
-    driftProject(counted, domain, refCounts, thresholdMicro)
+    driftProject(counted, domain, refCounts)
   }
 
   /** Streaming twin of [[windowedDrift]]: watermarked tumbling-window
@@ -383,8 +375,7 @@ object Streams {
     * watermark close; below-watermark stragglers drop. */
   def windowedDriftStream(events: DataFrame, tsCol: String, catCol: String,
                           domain: Seq[String], refCounts: Seq[(String, Long)],
-                          windowLen: String, watermark: String,
-                          thresholdMicro: Long = 100000L): DataFrame = {
+                          windowLen: String, watermark: String): DataFrame = {
     val counts = driftCounts(catCol, domain)
     val counted = events
       .withWatermark(tsCol, watermark)
@@ -392,7 +383,7 @@ object Streams {
       .agg(counts.head, counts.tail: _*)
       .withColumn("window_start", col("__w.start"))
       .drop("__w")
-    driftProject(counted, domain, refCounts, thresholdMicro)
+    driftProject(counted, domain, refCounts)
   }
 
   /** The k+1 statically-unrolled conditional category counts shared by
@@ -409,8 +400,7 @@ object Streams {
     * expression tree for the batch and streaming forms so the twins
     * cannot drift. */
   private def driftProject(counted: DataFrame, domain: Seq[String],
-                           refCounts: Seq[(String, Long)],
-                           thresholdMicro: Long): DataFrame = {
+                           refCounts: Seq[(String, Long)]): DataFrame = {
     val cats = domain :+ "__other__"
     require(refCounts.map(_._1).sorted == cats.sorted,
       s"refCounts must cover exactly ${cats.sorted}")
@@ -428,16 +418,28 @@ object Streams {
       .withColumn("__psi_micro", terms.reduce(_ + _))
       .select(col("window_start"), col("n_cur"),
         (col("__psi_micro").cast("double") / 1e6).as("psi"),
-        (col("__psi_micro") > thresholdMicro).as("drifted"))
+        (col("__psi_micro") > DriftThresholdMicro).as("drifted"))
   }
 
+  /** Streaming twin of [[rateCap]]: one admit counter per open
+    * (key, window) via flatMapGroupsWithState, event-time timeout
+    * clearing the counter once the watermark passes the window end
+    * (state is O(open windows)). Within a micro-batch the group's
+    * events sort by (ts, id) before admitting, so a stream fed in
+    * event-time order emits exactly the batch form's rows; admits past
+    * the cap drop inline — the stream never buffers a window's events.
+    * windowSeconds must match the batch form's `unit` for parity.
+    * Late-data contract (StreamsSpec): events below the watermark are
+    * dropped BEFORE the operator — once a window's counter state has
+    * timed out, a late event would otherwise re-open it and grant
+    * admits past the budget; the batch form absorbs such rows on
+    * re-run. */
   def rateCapStream(events: Dataset[CapEvent], windowSeconds: Long,
-                    maxPerWindow: Int,
-                    watermarkDelay: String = "0 seconds"): Dataset[CapOut] = {
+                    maxPerWindow: Int): Dataset[CapOut] = {
     import events.sparkSession.implicits._
     require(maxPerWindow > 0, "cap must be positive")
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .groupByKey(e => (e.key, e.ts.getTime / 1000 / windowSeconds))
       .flatMapGroupsWithState[Long, CapOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -500,8 +502,7 @@ object Streams {
     * evicted, making output arrival-order-dependent; the batch form
     * absorbs them on re-run. */
   def windowFunnelStream(events: Dataset[FunnelEvent], steps: Seq[String],
-                         windowSeconds: Long,
-                         watermarkDelay: String = "0 seconds"): Dataset[FunnelReach] = {
+                         windowSeconds: Long): Dataset[FunnelReach] = {
     import events.sparkSession.implicits._
     require(steps.size >= 2, "a funnel needs at least two steps")
     val k = steps.size
@@ -509,7 +510,7 @@ object Streams {
     val stepIdx = steps.zipWithIndex.toMap
     events
       .filter(e => e.ts != null && e.eventType != null && stepIdx.contains(e.eventType))
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .groupByKey(_.user)
       .flatMapGroupsWithState[FunnelState, FunnelReach](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -561,11 +562,10 @@ object Streams {
     * run continuous empty batches (so processAllAvailable never sees
     * quiescence). State is partitioned by key in the state store — the
     * same layout that scales to millions of concurrent sessions. */
-  def sessionizeStream(events: Dataset[SessionEvent], gapSeconds: Long,
-                       watermarkDelay: String = "0 seconds"): Dataset[SessionOut] = {
+  def sessionizeStream(events: Dataset[SessionEvent], gapSeconds: Long): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .groupByKey(_.key)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

@@ -96,16 +96,15 @@ object Upsert {
   }
 
   /** The streaming sink: every micro-batch upserts into `tablePath`.
-    * Trigger.AvailableNow by default — drains the source then stops,
-    * the batch-job-shaped run Verify and the specs use; pass a
-    * processing-time trigger for an always-on pipeline. */
+    * Trigger.AvailableNow — drains the source then stops, the
+    * batch-job-shaped run a scheduled pipeline, Verify and the specs
+    * use. */
   def streamUpsert(stream: DataFrame, tablePath: String, checkpointDir: String,
                    keyCol: String, seqCol: String, tieCol: String,
-                   nBuckets: Int,
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+                   nBuckets: Int): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         upsertIntoTable(batch.sparkSession, batch, tablePath,
           keyCol, seqCol, tieCol, nBuckets)

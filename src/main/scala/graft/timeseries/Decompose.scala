@@ -1,8 +1,9 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.halfUpDiv
 
 /** Classical additive seasonal decomposition — value = trend + seasonal
   * + remainder — the time-series diagnostic the reference's forecasting
@@ -30,14 +31,6 @@ import org.apache.spark.sql.functions._
   * independent series. No driver work, no iteration.
   */
 object Decompose {
-
-  /** Sign-aware half-up integer division of exact-long `t` by `d` —
-    * negatives round away from zero, matching round-half-up on the
-    * decimal value. Integral division keeps it exact past 2^53. */
-  private def halfUpDiv(t: Column, d: Column): Column = {
-    val q = graft.functions.divLong(abs(t) + graft.functions.divLong(d, lit(2L)), d)
-    when(t < 0, -q).otherwise(q)
-  }
 
   def seasonalDecompose(df: DataFrame, keyCol: String, tsCol: String,
                         idCol: String, valueCol: String,

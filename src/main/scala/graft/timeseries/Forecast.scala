@@ -1,9 +1,10 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Checkpoint._
+import graft.functions.halfUpDiv
 
 /** Distributed forecasting operators.
   *
@@ -29,12 +30,16 @@ object Forecast {
   /** Per-key forecast evaluation: RMSE + MAPE (model.py:270-279,
     * same epsilon guard on the denominator). */
   def metrics(df: DataFrame, keyCol: String, actualCol: String, predCol: String): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sqrt(avg(pow(col(actualCol) - col(predCol), 2))), 4).as("rmse"),
-        round(avg(abs((col(actualCol) - col(predCol)) / (col(actualCol) + lit(1e-8)))) * 100, 4)
-          .as("mape"))
+    errorStats(df.groupBy(col(keyCol)), col(actualCol), col(predCol))
+
+  /** `n`, RMSE and MAPE per group — the error aggregates of [[metrics]]
+    * and [[backtest]]. */
+  private def errorStats(groups: RelationalGroupedDataset, actual: Column,
+                         pred: Column): DataFrame =
+    groups.agg(
+      count(lit(1)).as("n"),
+      round(sqrt(avg(pow(actual - pred, 2))), 4).as("rmse"),
+      round(avg(abs((actual - pred) / (actual + lit(1e-8)))) * 100, 4).as("mape"))
 
   /** Per-key OLS trend via regr_slope/regr_intercept aggregates —
     * closed-form, fully distributed (map-side partials; no iteration).
@@ -62,15 +67,8 @@ object Forecast {
     * mean shift vs threshold. The global max-ts scalar is broadcast. */
   def drift(df: DataFrame, keyCol: String, tsCol: String, valueCol: String,
             referenceDays: Int, currentDays: Int, threshold: Double): DataFrame = {
-    val maxTs = df.agg(max(date_trunc("second", col(tsCol))).as("max_ts"))
-    val curStart = col("max_ts") - expr(s"INTERVAL $currentDays DAYS")
-    val refStart = col("max_ts") - expr(s"INTERVAL ${currentDays + referenceDays} DAYS")
-    df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol))
-      .crossJoin(broadcast(maxTs))
-      .withColumn("bucket",
-        when(col("period") >= curStart, "current")
-          .when(col("period") >= refStart, "reference"))
-      .filter(col("bucket").isNotNull)
+    driftWindows(df, tsCol, referenceDays, currentDays,
+        df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol)))
       // means from exact integer cents: order-independent sums, so the
       // rounded output is reproducible across engines/partitionings
       .withColumn("cents", round(col(valueCol) * 100, 0))
@@ -94,6 +92,25 @@ object Forecast {
           (col("s_ref") / col("n_ref")) > threshold).as("drifted"))
   }
 
+  /** The drift windows of [[drift]] and of
+    * [[graft.validate.Quality.psiDrift]]/[[graft.validate.Quality.ksDrift]]:
+    * `rows` (which carry the second-truncated `period`) gain the
+    * anchor `max_ts` — the newest second-truncated `tsCol` over ALL of
+    * `df`, a 1-row broadcast scalar — and a `bucket` label, "current"
+    * for [max−cur days, max] and "reference" for
+    * [max−(cur+ref) days, max−cur days); rows in neither window drop. */
+  private[graft] def driftWindows(df: DataFrame, tsCol: String, referenceDays: Int,
+                                  currentDays: Int, rows: DataFrame): DataFrame = {
+    val maxTs = df.agg(max(date_trunc("second", col(tsCol))).as("max_ts"))
+    val curStart = col("max_ts") - expr(s"INTERVAL $currentDays DAYS")
+    val refStart = col("max_ts") - expr(s"INTERVAL ${currentDays + referenceDays} DAYS")
+    rows.crossJoin(broadcast(maxTs))
+      .withColumn("bucket",
+        when(col("period") >= curStart, "current")
+          .when(col("period") >= refStart, "reference"))
+      .filter(col("bucket").isNotNull)
+  }
+
   /** Rolling-origin backtest: the per-key series is cut into `folds`
     * equal time slices and the (causal) seasonal-naive forecast is
     * scored per slice — RMSE/MAPE per (key, fold), the distributed form
@@ -106,16 +123,11 @@ object Forecast {
     val fc = seasonalNaive(df, keyCol, tsCol, idCol, valueCol, season)
     val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
     val cw = Window.partitionBy(col(keyCol))
-    fc.withColumn("__rn", row_number().over(ow))
+    val folded = fc.withColumn("__rn", row_number().over(ow))
       .withColumn("__n", count(lit(1)).over(cw))
       .withColumn("fold",
         least(floor((col("__rn") - 1) * folds / col("__n")), lit(folds - 1)).cast("int"))
-      .groupBy(col(keyCol), col("fold"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sqrt(avg(pow(col(valueCol) - col("prediction"), 2))), 4).as("rmse"),
-        round(avg(abs((col(valueCol) - col("prediction")) / (col(valueCol) + lit(1e-8)))) * 100, 4)
-          .as("mape"))
+    errorStats(folded.groupBy(col(keyCol), col("fold")), col(valueCol), col("prediction"))
   }
 
   /** Empirical prediction intervals (round 8) — the uncertainty bands
@@ -283,10 +295,8 @@ object Forecast {
       .join(coefs, Seq(keyCol))
       .join(seasonal, Seq(keyCol, "__slot"), "left")
       .withColumn("__p6", fitMicro + floor(coalesce(col("__s"), lit(0.0))))
-      .withColumn("__q", expr("(abs(__p6) + 50L) div 100L"))
       .select(col(keyCol), col("period"), col(idCol), col(valueCol),
-        (when(col("__p6") < 0, -1.0).otherwise(1.0) * col("__q") / 10000.0)
-          .as("prediction"))
+        (halfUpDiv(col("__p6"), lit(100L)) / 10000.0).as("prediction"))
   }
 
   /** Equal-weight forecast blend (round 11): the mean of the c30
@@ -361,10 +371,8 @@ object Forecast {
     lagFeats(fresh, keyCol, tsCol, idCol, valueCol, season)
       .join(broadcast(coefs), Seq(keyCol))
       .withColumn("__p8", p8)
-      .withColumn("__q", expr("(abs(__p8) + 5000L) div 10000L"))
       .select(col(idCol), col(keyCol), col("period"), col(valueCol),
-        (when(col("__p8") < 0, -1.0).otherwise(1.0) * col("__q") / 10000.0)
-          .as("prediction"))
+        (halfUpDiv(col("__p8"), lit(10000L)) / 10000.0).as("prediction"))
   }
 
   /** Per-key lag features [x1 = lag 1, x2 = lag season] over the
@@ -495,18 +503,8 @@ object Forecast {
   def modelSelection(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                      valueCol: String, season: Int, lambdas: Seq[Double],
                      trainFrac: Double, valFrac: Double): DataFrame = {
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
-    val cw = Window.partitionBy(col(keyCol))
-    // exact decimal split boundaries (see TimeSeries.trainValTestSplit)
-    val trainBd = lit(java.math.BigDecimal.valueOf(trainFrac))
-    val valBd = lit(java.math.BigDecimal.valueOf(valFrac))
-    val feats = lagFeats(df, keyCol, tsCol, idCol, valueCol, season)
-      .withColumn("__rn", row_number().over(ow))
-      .withColumn("__n", count(lit(1)).over(cw))
-      .withColumn("split",
-        when(col("__rn") <= floor(col("__n") * trainBd), "train")
-          .when(col("__rn") <= floor(col("__n") * trainBd) + floor(col("__n") * valBd), "val")
-          .otherwise("test"))
+    val feats = TimeSeries.splitLabels(lagFeats(df, keyCol, tsCol, idCol, valueCol, season),
+      keyCol, idCol, trainFrac, valFrac)
     val sums = gramSums(feats.filter(col("split") === "train"), keyCol, valueCol)
     // keys × lambdas rows; solve A x = b with A = Gram + lambda*I
     val lam = sums.select(col(keyCol), explode(typedLit(lambdas)).as("lambda"),

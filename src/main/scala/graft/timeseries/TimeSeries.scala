@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{roundMeanE4, VectorExpressions}
+import graft.functions.{halfUpDiv, roundMeanE4, VectorExpressions}
 
 /** Time-series preparation operators.
   *
@@ -39,9 +39,18 @@ object TimeSeries {
     val mx = max(col(valueCol)).over(w)
     df.select(col(idCol), col(keyCol),
       date_trunc("second", col(tsCol)).as("period"), col(valueCol),
-      round(when(mx === mn, 0.0).otherwise((col(valueCol) - mn) / (mx - mn)), 6)
-        .as("value_scaled"))
+      minMaxScaled(col(valueCol), mn, mx).as("value_scaled"))
   }
+
+  /** The MinMax formula of [[scaleMinMax]] and [[applyScaler]]: 0 for
+    * a constant series, 6 decimals. */
+  private def minMaxScaled(v: Column, mn: Column, mx: Column): Column =
+    round(when(mx === mn, 0.0).otherwise((v - mn) / (mx - mn)), 6)
+
+  /** The z-score formula of [[scaleStandard]] and [[applyScaler]]: 0 for
+    * a constant series, 4 decimals. */
+  private def standardScaled(v: Column, mu: Column, sd: Column): Column =
+    round(when(sd === 0.0, 0.0).otherwise((v - mu) / sd), 4)
 
   /** Per-key z-score standardization (model.py:182 StandardScaler).
     * Population std (ddof=0) to match sklearn's StandardScaler. */
@@ -61,8 +70,7 @@ object TimeSeries {
     val sd = sqrt(greatest((ss - s * s / n) / n, lit(0.0)))
     df.select(col(idCol), col(keyCol),
       date_trunc("second", col(tsCol)).as("period"), col(valueCol),
-      round(when(sd === 0.0, 0.0).otherwise((cents - mu) / sd), 4)
-        .as("value_scaled"))
+      standardScaled(cents, mu, sd).as("value_scaled"))
   }
 
   /** Per-key scaler parameters as a reusable table — the distributed
@@ -100,12 +108,8 @@ object TimeSeries {
                   idCol: String, valueCol: String, method: String): DataFrame = {
     val p = scalerCols(params, keyCol)
     val scaled = method match {
-      case "minmax" =>
-        round(when(col("__mx") === col("__mn"), 0.0)
-          .otherwise((col(valueCol) - col("__mn")) / (col("__mx") - col("__mn"))), 6)
-      case "standard" =>
-        round(when(col("__sd") === 0.0, 0.0)
-          .otherwise((col(valueCol) - col("__mu")) / col("__sd")), 4)
+      case "minmax" => minMaxScaled(col(valueCol), col("__mn"), col("__mx"))
+      case "standard" => standardScaled(col(valueCol), col("__mu"), col("__sd"))
       case other => throw new IllegalArgumentException(s"unknown scaler method $other")
     }
     df.select(col(idCol), col(keyCol),
@@ -134,13 +138,9 @@ object TimeSeries {
                     scaledCol: String, method: String): DataFrame = {
     val p = scalerCols(params, keyCol)
     // exact half-up rounding of t (an integer in 1/unitsPerE4 * 1e-4
-    // units) to 4 decimals: sign-aware so negatives round away from
-    // zero, integral division (not `/`, which detours through doubles
-    // and drifts past 2^53) so the quotient is exact at any magnitude
-    def roundE4(t: Column, unitsPerE4: Long): Column = {
-      val q = graft.functions.divLong(abs(t) + lit(unitsPerE4 / 2), lit(unitsPerE4))
-      when(t < 0, -q).otherwise(q) / 10000.0
-    }
+    // units) to 4 decimals
+    def roundE4(t: Column, unitsPerE4: Long): Column =
+      halfUpDiv(t, lit(unitsPerE4)) / 10000.0
     val restored = method match {
       case "minmax" =>
         val s6 = round(col(scaledCol) * 1e6, 0).cast("long")
@@ -166,8 +166,18 @@ object TimeSeries {
   /** Ordered train/val/test split labels per key
     * (kubeflow_pipeline.py:127-132: 0.7/0.15/0.15 by time order). */
   def trainValTestSplit(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
-                        trainFrac: Double, valFrac: Double): DataFrame = {
-    val cw = Window.partitionBy(col(keyCol))
+                        trainFrac: Double, valFrac: Double): DataFrame =
+    splitLabels(
+      df.select(col(idCol), col(keyCol), date_trunc("second", col(tsCol)).as("period")),
+      keyCol, idCol, trainFrac, valFrac)
+      .drop("__rn", "__n")
+
+  /** Adds the per-key time rank `__rn` (by `period`, then `idCol`), the
+    * key's row count `__n` and the ordered `split` label: the first
+    * floor(n·trainFrac) rows are "train", the next floor(n·valFrac)
+    * "val", the rest "test". */
+  private[graft] def splitLabels(df: DataFrame, keyCol: String, idCol: String,
+                                 trainFrac: Double, valFrac: Double): DataFrame = {
     // Split boundaries in EXACT decimal arithmetic: floor(n * 0.7) in
     // doubles misplaces the boundary whenever n*frac is integral
     // (210 * 0.7 = 146.999... -> 146), so the boundary row's label would
@@ -175,15 +185,13 @@ object TimeSeries {
     // n * frac exact in Spark, matching SQL DECIMAL semantics.
     val trainBd = lit(java.math.BigDecimal.valueOf(trainFrac))
     val valBd = lit(java.math.BigDecimal.valueOf(valFrac))
-    df.select(col(idCol), col(keyCol), date_trunc("second", col(tsCol)).as("period"))
-      .withColumn("__rn", row_number().over(
+    df.withColumn("__rn", row_number().over(
         Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))))
-      .withColumn("__n", count(lit(1)).over(cw))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col(keyCol))))
       .withColumn("split",
         when(col("__rn") <= floor(col("__n") * trainBd), "train")
           .when(col("__rn") <= floor(col("__n") * trainBd) + floor(col("__n") * valBd), "val")
           .otherwise("test"))
-      .drop("__rn", "__n")
   }
 
   /** Supervised lag features — the TimeSeriesDataset sliding window

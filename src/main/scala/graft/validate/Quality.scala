@@ -1,10 +1,11 @@
 package graft.validate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{fracE4, roundMeanE4}
 import graft.Checkpoint._
+import graft.timeseries.Forecast.driftWindows
 
 /** Data-quality / validation operators.
   *
@@ -84,13 +85,16 @@ object Quality {
   /** Global value statistics (data_validation.py:156-173): count, mean,
     * std, min, max, exact median. */
   def valueStats(df: DataFrame, valueCol: String): DataFrame =
-    df.agg(
-      count(col(valueCol)).as("n"),
-      roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(col(valueCol))).as("mean"),
-      round(stddev_samp(col(valueCol)), 4).as("std"),
-      round(min(col(valueCol)), 4).as("min"),
-      round(max(col(valueCol)), 4).as("max"),
-      round(expr(s"percentile($valueCol, 0.5)"), 4).as("median"))
+    df.agg(count(col(valueCol)).as("n"),
+      moments(valueCol) :+ round(expr(s"percentile($valueCol, 0.5)"), 4).as("median"): _*)
+
+  /** mean, std, min and max — the aggregates [[valueStats]] and
+    * [[valueStatsApprox]] share after their count `n`. */
+  private def moments(valueCol: String): Seq[Column] = Seq(
+    roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(col(valueCol))).as("mean"),
+    round(stddev_samp(col(valueCol)), 4).as("std"),
+    round(min(col(valueCol)), 4).as("min"),
+    round(max(col(valueCol)), 4).as("max"))
 
   /** Approximate value stats — the 100 TB twin of [[valueStats]]:
     * exact `percentile` keeps every value in the aggregation buffer
@@ -100,15 +104,10 @@ object Quality {
     * `accuracy`), so the quantiles cost one streaming pass like the
     * moments do. Error bound: rank error ≤ 1/accuracy. */
   def valueStatsApprox(df: DataFrame, valueCol: String, accuracy: Int): DataFrame =
-    df.agg(
-      count(col(valueCol)).as("n"),
-      roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(col(valueCol))).as("mean"),
-      round(stddev_samp(col(valueCol)), 4).as("std"),
-      round(min(col(valueCol)), 4).as("min"),
-      round(max(col(valueCol)), 4).as("max"),
+    df.agg(count(col(valueCol)).as("n"), moments(valueCol) ++ Seq(
       round(expr(s"approx_percentile($valueCol, 0.5, $accuracy)"), 4).as("p50_approx"),
       round(expr(s"approx_percentile($valueCol, 0.95, $accuracy)"), 4).as("p95_approx"),
-      round(expr(s"approx_percentile($valueCol, 0.99, $accuracy)"), 4).as("p99_approx"))
+      round(expr(s"approx_percentile($valueCol, 0.99, $accuracy)"), 4).as("p99_approx")): _*)
 
   /** Approximate-distinct quality counts — the 100 TB twin of the
     * exact `count_distinct` fields in [[qualityReport]] /
@@ -284,7 +283,7 @@ object Quality {
     * monitor for that (banking model-risk practice; also the
     * "distribution shift" the reference's config gestures at).
     *
-    * Windows mirror Forecast.drift exactly: reference
+    * Windows are Forecast.drift's (`Forecast.driftWindows`): reference
     * [max−(cur+ref) days, max−cur days), current [max−cur days, max];
     * the 1-row max-ts scalar broadcasts. Categories are the caller's
     * closed domain plus an `__other__` bucket (nulls and out-of-domain
@@ -315,20 +314,12 @@ object Quality {
   def psiDrift(df: DataFrame, keyCol: String, tsCol: String, catCol: String,
                domain: Seq[String], referenceDays: Int, currentDays: Int,
                threshold: Double): DataFrame = {
-    val maxTs = df.agg(max(date_trunc("second", col(tsCol))).as("max_ts"))
-    val curStart = col("max_ts") - expr(s"INTERVAL $currentDays DAYS")
-    val refStart = col("max_ts") - expr(s"INTERVAL ${currentDays + referenceDays} DAYS")
     val cats = domain :+ "__other__"
     val k = cats.size
-    val counts = df
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        when(col(catCol).isin(domain: _*), col(catCol))
-          .otherwise("__other__").as("cat"))
-      .crossJoin(broadcast(maxTs))
-      .withColumn("bucket",
-        when(col("period") >= curStart, "current")
-          .when(col("period") >= refStart, "reference"))
-      .filter(col("bucket").isNotNull)
+    val counts = driftWindows(df, tsCol, referenceDays, currentDays,
+        df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
+          when(col(catCol).isin(domain: _*), col(catCol))
+            .otherwise("__other__").as("cat")))
       .groupBy(col(keyCol), col("cat"))
       .agg(count(when(col("bucket") === "reference", lit(1))).as("r"),
         count(when(col("bucket") === "current", lit(1))).as("c"))
@@ -381,18 +372,11 @@ object Quality {
     * (winsorize's discipline), then collapse to one row per key. */
   def ksDrift(df: DataFrame, keyCol: String, tsCol: String, valueCol: String,
               referenceDays: Int, currentDays: Int): DataFrame = {
-    val maxTs = df.agg(max(date_trunc("second", col(tsCol))).as("max_ts"))
-    val curStart = col("max_ts") - expr(s"INTERVAL $currentDays DAYS")
-    val refStart = col("max_ts") - expr(s"INTERVAL ${currentDays + referenceDays} DAYS")
-    val counts = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        round(col(valueCol) * 100, 0).cast("long").as("__v"))
-      .crossJoin(broadcast(maxTs))
-      .withColumn("bucket",
-        when(col("period") >= curStart, "current")
-          .when(col("period") >= refStart, "reference"))
-      .filter(col("bucket").isNotNull)
+    // the windows anchor on max_ts over ALL rows, null values included
+    val counts = driftWindows(df, tsCol, referenceDays, currentDays,
+        df.filter(col(valueCol).isNotNull)
+          .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
+            round(col(valueCol) * 100, 0).cast("long").as("__v")))
       .groupBy(col(keyCol), col("__v"))
       .agg(count(when(col("bucket") === "reference", lit(1))).as("__r"),
         count(when(col("bucket") === "current", lit(1))).as("__c"))
@@ -472,17 +456,8 @@ object Quality {
     * Spark plans the mixed distinct/non-distinct aggregate with one
     * Expand, still a single scan. The per-rule report explosion
     * happens on the 1-row aggregate — free. */
-  def expectationReport(df: DataFrame, rules: Seq[Expectation]): DataFrame = {
-    require(rules.nonEmpty, "empty expectation suite")
-    require(rules.map(_.ruleId).distinct.size == rules.size, "duplicate ruleId")
-    val aggs = count(lit(1)).as("__n") +:
-      rules.zipWithIndex.map { case (r, i) => ruleViolations(r).as(s"__v$i") }
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(ruleExplode(rules).as("r"))
-      .select(col("r.rule_id"), col("r.col_name"), col("r.kind"),
-        col("r.n_rows"), col("r.n_violations"),
-        (col("r.n_violations") === 0L).as("pass"))
-  }
+  def expectationReport(df: DataFrame, rules: Seq[Expectation]): DataFrame =
+    expectations(df, Nil, rules)
 
   /** Per-key twin of [[expectationReport]] — the reference's per-region
     * checks generalized: the SAME rule algebra evaluated per key, one
@@ -493,24 +468,32 @@ object Quality {
     * drives per-partition quarantine the way b10's global verdict
     * gates a whole land. */
   def expectationReportByKey(df: DataFrame, keyCol: String,
-                             rules: Seq[Expectation]): DataFrame = {
+                             rules: Seq[Expectation]): DataFrame =
+    expectations(df, Seq(keyCol), rules)
+
+  /** The one body of both reports: the rule counters aggregate per
+    * `keys` (globally when there are none — `df.agg` is
+    * `groupBy().agg`), then explode to one row per (keys, rule). */
+  private def expectations(df: DataFrame, keys: Seq[String],
+                           rules: Seq[Expectation]): DataFrame = {
     require(rules.nonEmpty, "empty expectation suite")
     require(rules.map(_.ruleId).distinct.size == rules.size, "duplicate ruleId")
     val aggs = count(lit(1)).as("__n") +:
       rules.zipWithIndex.map { case (r, i) => ruleViolations(r).as(s"__v$i") }
-    df.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-      .select(col(keyCol), ruleExplode(rules).as("r"))
-      .select(col(keyCol), col("r.rule_id"), col("r.col_name"), col("r.kind"),
+    val keyCols = keys.map(col)
+    df.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+      .select(keyCols :+ ruleExplode(rules).as("r"): _*)
+      .select(keyCols ++ Seq(col("r.rule_id"), col("r.col_name"), col("r.kind"),
         col("r.n_rows"), col("r.n_violations"),
-        (col("r.n_violations") === 0L).as("pass"))
+        (col("r.n_violations") === 0L).as("pass")): _*)
   }
 
   /** The row-local violation PREDICATE (unique is the one aggregate-
     * shaped rule and is handled in [[ruleViolations]] directly). */
-  private def rowViolation(r: Expectation): org.apache.spark.sql.Column = r match {
+  private def rowViolation(r: Expectation): Column = r match {
     case ExpectNotNull(_, c) => col(c).isNull
     case ExpectBetween(_, c, mn, mx) =>
-      val bad = (mn.map(col(c) < _): Iterable[org.apache.spark.sql.Column]) ++
+      val bad = (mn.map(col(c) < _): Iterable[Column]) ++
         mx.map(col(c) > _)
       col(c).isNotNull && bad.reduce(_ || _)
     case ExpectInSet(_, c, vs) => col(c).isNotNull && !col(c).isin(vs: _*)
@@ -662,7 +645,7 @@ object Quality {
       .groupBy(col(keyCol),
         substring(micro.cast("string"), 1, 1).cast("int").as("__d"))
       .agg(count(lit(1)).as("__c"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+    val dec = (c: Column) => c.cast("decimal(38,0)")
     val m = g.groupBy(col(keyCol)).agg(
       sum(col("__c")).as("n"),
       sum(dec(col("__c")) * dec(col("__c"))).as("__sq"))
