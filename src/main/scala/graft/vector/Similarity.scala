@@ -250,7 +250,7 @@ object Similarity {
     //    UnsafeArrayData (de)serialization on every read).
     val folded = numPlanes <= 64
     val sigd = {
-      val base = TopK.normed(emb, Seq(col(idCol).as("id"), col(vecCol)), col(vecCol), "v", "n2")
+      val base = TopK.normed(emb, Seq(col(idCol).as("id")), col(vecCol), "v", "n2")
       if (folded)
         base.withColumn("__sig", VectorExpressions.planeSignature(col("v"), lsh.planes))
       else
