@@ -137,25 +137,23 @@ object TimeSeries {
   def inverseScaler(df: DataFrame, params: DataFrame, keyCol: String,
                     scaledCol: String, method: String): DataFrame = {
     val p = scalerCols(params, keyCol)
-    // exact half-up rounding of t (an integer in 1/unitsPerE4 * 1e-4
-    // units) to 4 decimals
-    def roundE4(t: Column, unitsPerE4: Long): Column =
-      halfUpDiv(t, lit(unitsPerE4)) / 10000.0
-    val restored = method match {
+    // the restored value in 1e-4 units: the exact integer in 1e-10
+    // (minmax) or 1e-8 (standard) units, half-up divided down
+    val restoredE4 = method match {
       case "minmax" =>
         val s6 = round(col(scaledCol) * 1e6, 0).cast("long")
         val d4 = round((col("__mx") - col("__mn")) * 1e4, 0).cast("long")
         val m4 = round(col("__mn") * 1e4, 0).cast("long")
-        roundE4(s6 * d4 + m4 * lit(1000000L), 1000000L)
+        halfUpDiv(s6 * d4 + m4 * lit(1000000L), lit(1000000L))
       case "standard" =>
         val s4 = round(col(scaledCol) * 1e4, 0).cast("long")
         val sd4 = round(col("__sd") * 1e4, 0).cast("long")
         val mu4 = round(col("__mu") * 1e4, 0).cast("long")
-        roundE4(s4 * sd4 + mu4 * lit(10000L), 10000L)
+        halfUpDiv(s4 * sd4 + mu4 * lit(10000L), lit(10000L))
       case other => throw new IllegalArgumentException(s"unknown scaler method $other")
     }
     df.join(p, Seq(keyCol))
-      .withColumn("value_restored", restored)
+      .withColumn("value_restored", restoredE4 / 10000.0)
       .drop("__mn", "__mx", "__mu", "__sd")
   }
 

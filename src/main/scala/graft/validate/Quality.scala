@@ -85,16 +85,16 @@ object Quality {
   /** Global value statistics (data_validation.py:156-173): count, mean,
     * std, min, max, exact median. */
   def valueStats(df: DataFrame, valueCol: String): DataFrame =
-    df.agg(count(col(valueCol)).as("n"),
-      moments(valueCol) :+ round(expr(s"percentile($valueCol, 0.5)"), 4).as("median"): _*)
+    stats(df, valueCol, round(expr(s"percentile($valueCol, 0.5)"), 4).as("median"))
 
-  /** mean, std, min and max — the aggregates [[valueStats]] and
-    * [[valueStatsApprox]] share after their count `n`. */
-  private def moments(valueCol: String): Seq[Column] = Seq(
-    roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(col(valueCol))).as("mean"),
-    round(stddev_samp(col(valueCol)), 4).as("std"),
-    round(min(col(valueCol)), 4).as("min"),
-    round(max(col(valueCol)), 4).as("max"))
+  /** The five aggregates [[valueStats]] and [[valueStatsApprox]] share
+    * (n, mean, std, min, max), then `quantiles`, in one pass. */
+  private def stats(df: DataFrame, valueCol: String, quantiles: Column*): DataFrame =
+    df.agg(count(col(valueCol)).as("n"), Seq(
+      roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(col(valueCol))).as("mean"),
+      round(stddev_samp(col(valueCol)), 4).as("std"),
+      round(min(col(valueCol)), 4).as("min"),
+      round(max(col(valueCol)), 4).as("max")) ++ quantiles: _*)
 
   /** Approximate value stats — the 100 TB twin of [[valueStats]]:
     * exact `percentile` keeps every value in the aggregation buffer
@@ -104,10 +104,10 @@ object Quality {
     * `accuracy`), so the quantiles cost one streaming pass like the
     * moments do. Error bound: rank error ≤ 1/accuracy. */
   def valueStatsApprox(df: DataFrame, valueCol: String, accuracy: Int): DataFrame =
-    df.agg(count(col(valueCol)).as("n"), moments(valueCol) ++ Seq(
+    stats(df, valueCol,
       round(expr(s"approx_percentile($valueCol, 0.5, $accuracy)"), 4).as("p50_approx"),
       round(expr(s"approx_percentile($valueCol, 0.95, $accuracy)"), 4).as("p95_approx"),
-      round(expr(s"approx_percentile($valueCol, 0.99, $accuracy)"), 4).as("p99_approx")): _*)
+      round(expr(s"approx_percentile($valueCol, 0.99, $accuracy)"), 4).as("p99_approx"))
 
   /** Approximate-distinct quality counts — the 100 TB twin of the
     * exact `count_distinct` fields in [[qualityReport]] /
