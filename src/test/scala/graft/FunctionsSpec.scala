@@ -36,6 +36,42 @@ class FunctionsSpec extends SparkSpec {
     assert(got == "hello world 42")
   }
 
+  test("halfUpDiv rounds half away from zero, exactly past 2^53, generated and interpreted") {
+    val big = 900719925474099350L // 9007199254740993.5 * 100: not a double
+    // (t, d, half-up t/d): 1.5 -> 2 and -1.5 -> -2; -0.49 -> 0, not -0
+    val cases = Seq((151L, 100L, 2L), (150L, 100L, 2L), (149L, 100L, 1L),
+      (50L, 100L, 1L), (49L, 100L, 0L), (0L, 100L, 0L), (-49L, 100L, 0L),
+      (-50L, 100L, -1L), (-149L, 100L, -1L), (-150L, 100L, -2L), (-151L, 100L, -2L),
+      (big, 100L, 9007199254740994L), (-big, 100L, -9007199254740994L),
+      (7L, 2L, 4L), (-7L, 2L, -4L), (5L, 3L, 2L), (-4L, 3L, -1L), (1L, 3L, 0L))
+    val dir = java.nio.file.Files.createTempDirectory("graft_halfup").toString + "/t"
+    cases.toDF("t", "d", "want").write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    def run(): Seq[(Long, Long, Long)] =
+      df.select(col("t"), halfUpDiv(col("t"), lit(100L)), halfUpDiv(col("t"), col("d")),
+          col("d"), col("want"))
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq
+        .map { case (t, by100, byD, d, want) =>
+          assert(d != 100L || by100 == byD, s"t=$t")
+          (t, byD, want)
+        }
+    def check(rows: Seq[(Long, Long, Long)]): Unit = {
+      assert(rows.size == cases.size)
+      rows.foreach { case (t, got, want) => assert(got == want, s"t=$t") }
+    }
+    check(run())
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      check(run())
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("roundMeanE4 half-up rounds exact boundary means") {
     // 33909 cents over 8 rows = 42.38625 -> must round UP to 42.3863
     val df = Seq((33909.0, 8L)).toDF("s", "n")

@@ -326,8 +326,11 @@ class NullToleranceSpec extends SparkSpec {
       (Some(4L), Some(Timestamp.valueOf("2024-01-20 11:00:00")), Some("a"), None),
       (None, Some(Timestamp.valueOf("2024-01-20 12:00:00")), Some("b"), Some(4.0)))
       .toDF("event_id", "ts", "event_type", "value")
+    // ksDrift: null-value rows carry no magnitude and the null-ts row no
+    // window; every key then lacks one window (a: reference only, b and
+    // the null key: current only), so no key is scored
     assert(graft.validate.Quality.ksDrift(ev, "event_type", "ts", "value", 14, 7)
-      .count() >= 0) // no crash; null-value rows carry no magnitude
+      .count() == 0)
     assert(graft.timeseries.Forecast.holtForecast(ev, "event_type", "ts",
       "event_id", "value", 0.5, 0.25, 48, Seq(1)).count() == 0) // all series short
     // c29: same window contract — every series here is too short

@@ -161,6 +161,50 @@ class TimeSeriesSpec extends SparkSpec {
     assert(out.getAs[Double]("cur_mean") > out.getAs[Double]("ref_mean"))
   }
 
+  test("drift, psiDrift and ksDrift share one window: boundary rows and a null-valued anchor") {
+    // newest ts T carries a NULL value and still anchors every window;
+    // current = [T-7d, T], reference = [T-21d, T-7d)
+    val t = Timestamp.valueOf("2024-03-31 12:00:00").toInstant
+    def at(secondsBefore: Long) = Timestamp.from(t.minusSeconds(secondsBefore))
+    val curStart = 7 * 86400L
+    val refStart = 21 * 86400L
+    val dir = java.nio.file.Files.createTempDirectory("graft_drift_windows").toString + "/ev"
+    Seq(
+      (1L, 1L, at(refStart + 1), Some(100.0), "x"), // one second too old: dropped
+      (2L, 1L, at(refStart), Some(10.0), "x"),      // reference start: reference
+      (3L, 1L, at(curStart + 1), Some(20.0), "y"),  // last reference second
+      (4L, 1L, at(curStart), Some(30.0), "x"),      // current start: current
+      (5L, 1L, at(3600), Some(50.0), "z"),          // out of domain: __other__
+      (6L, 1L, at(0), None, "y"),                   // the anchor, null value
+      (7L, 2L, at(2 * 86400), Some(5.0), "x"))      // key 2: no reference rows
+      .toDF("event_id", "user_id", "ts", "value", "event_type").write.parquet(dir)
+    val ev = spark.read.parquet(dir)
+
+    // drift counts the null-valued current row in n_cur but not in s_cur
+    val d = Forecast.drift(ev, "user_id", "ts", "value", 14, 7, 0.5).collect()
+    assert(d.length == 1 && d.head.getAs[Long]("user_id") == 1L)
+    assert(d.head.getAs[Double]("ref_mean") == 15.0)
+    assert(d.head.getAs[Double]("cur_mean") == 26.6667)
+    assert(d.head.getAs[Double]("shift") == 0.777778)
+    assert(d.head.getAs[Boolean]("drifted"))
+
+    // reference x,y = 1,1; current x,y,__other__ = 1,1,1; Laplace +1
+    val p = graft.validate.Quality.psiDrift(ev, "user_id", "ts", "event_type",
+      Seq("x", "y"), 14, 7, 0.05).collect()
+    assert(p.length == 1 && p.head.getAs[Long]("user_id") == 1L)
+    assert(p.head.getAs[Long]("n_ref") == 2L && p.head.getAs[Long]("n_cur") == 3L)
+    assert(p.head.getAs[Double]("psi") == 0.092418)
+    assert(p.head.getAs[Boolean]("drifted"))
+
+    // ksDrift drops null values but anchors on max_ts over ALL rows: an
+    // anchor at the newest non-null row (T-1h) would admit event 1
+    val k = graft.validate.Quality.ksDrift(ev, "user_id", "ts", "value", 14, 7).collect()
+    assert(k.length == 1 && k.head.getAs[Long]("user_id") == 1L)
+    assert(k.head.getAs[Long]("n_ref") == 2L && k.head.getAs[Long]("n_cur") == 2L)
+    assert(k.head.getAs[Double]("ks") == 1.0)
+    assert(!k.head.getAs[Boolean]("drifted"))
+  }
+
   test("rollingStats window mean matches a hand-computed prefix") {
     val out = TimeSeries.rollingStats(series, "key", "ts", "event_id", "value", 24)
     val first = out.filter(col("key") === "A").orderBy("period").limit(3)
