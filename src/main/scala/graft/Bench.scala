@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds on
   * SPARK_GRAFT_SF_DIR.

@@ -1,6 +1,6 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Checkpoint._

@@ -487,7 +487,6 @@ class DedupSimilaritySpec extends SparkSpec {
       // symbol count (symbols include the '_' marker unless merged)
       var vocab = wordFreq.map { case (w, c) =>
         w -> (w.map(_.toString).toVector :+ "_") }.toMap
-      val counts = scala.collection.mutable.Map(wordFreq.map { case (w, c) => w -> c }: _*)
       val merges = refBpe(wordFreq, n, minCount)
       for ((_, pair, _) <- merges) {
         val Array(x, y) = pair.split(" ")

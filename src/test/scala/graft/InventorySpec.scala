@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 /** The operator inventory exists in three places — `SparkEntry.queries`
   * (the driver contract), `SparkEntry.oracleSql` (the correctness
   * gate), and SURVEY.md §2 (the coverage checklist the judge reads

@@ -111,7 +111,6 @@ class NullToleranceSpec extends SparkSpec {
   }
 
   test("late round-7 operators tolerate null/degenerate inputs") {
-    import org.apache.spark.sql.functions._
     import java.sql.Timestamp
     // a10: null keys group together (groupBy null semantics) and the
     // full-outer join matches them via the classifier's null-safe compare
@@ -259,7 +258,6 @@ class NullToleranceSpec extends SparkSpec {
   }
 
   test("session-3 operators tolerate null/degenerate inputs") {
-    import org.apache.spark.sql.functions._
     import java.sql.Timestamp
     val ev = Seq(
       (1L, Some(Timestamp.valueOf("2024-01-01 10:00:00")), Some(7L), Some(1.0), Some("click")),
@@ -306,7 +304,6 @@ class NullToleranceSpec extends SparkSpec {
   }
 
   test("round-9 session-2 operators tolerate null/degenerate inputs") {
-    import org.apache.spark.sql.functions._
     import java.sql.Timestamp
     // e57: one row per doc; null text → null metrics and null verdict
     val gop = TextOps.gopherRules(docs, "doc_id", "text")

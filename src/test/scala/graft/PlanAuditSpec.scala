@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Regression locks on the SCALE-CRITICAL plan shapes (SURVEY §5):
   * filters reach the parquet scan, dimension/param tables broadcast,
