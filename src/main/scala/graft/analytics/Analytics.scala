@@ -15,6 +15,18 @@ import graft.Checkpoint._
   */
 object Analytics {
 
+  /** A line's discounted revenue in exact integer ten-thousandths
+    * (extendedprice and discount are 2-decimal, so the product is
+    * exactly 4-decimal). Every revenue sum accumulates these longs: a
+    * plain double sum is summation-order-dependent, and at ~1e10
+    * revenue magnitude the engine-vs-engine drift reaches the 4th
+    * decimal. */
+  private val revenueE4 =
+    round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0).cast("long")
+
+  /** Summed [[revenueE4]] back in currency units. */
+  private def revenue = sum(revenueE4) / 10000.0
+
   /** Q1-style pricing summary: single wide scan, multi-aggregate, no
     * join — the whole-stage-codegen happy path.
     *
@@ -35,8 +47,6 @@ object Analytics {
     * half-up formula. */
   def pricingSummary(lineitem: DataFrame): DataFrame = {
     val priceCents = round(col("l_extendedprice") * 100, 0).cast("long")
-    val disc4 = round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-      .cast("long")
     val charge6 = round(col("l_extendedprice") * (lit(1) - col("l_discount")) *
       (lit(1) + col("l_tax")) * 1000000, 0).cast("decimal(38,0)")
     val discCents = round(col("l_discount") * 100, 0).cast("long")
@@ -46,7 +56,7 @@ object Analytics {
       .agg(
         round(sum(col("l_quantity")), 4).as("sum_qty"),
         (sum(priceCents) / 100.0).as("sum_base_price"),
-        (sum(disc4) / 10000.0).as("sum_disc_price"),
+        revenue.as("sum_disc_price"),
         (sum(charge6).cast("double") / 1000000.0).as("sum_charge"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         graft.functions.roundMeanE4(sum(priceCents), count(lit(1))).as("avg_price"),
@@ -54,19 +64,13 @@ object Analytics {
         count(lit(1)).as("count_order"))
   }
 
-  /** Q5-style revenue rollup across the full star join. Bounded-size
-    * dimensions (nation/region) are broadcast explicitly; customer and
-    * part GROW with the fact tables, so their join strategy is left to
-    * AQE — broadcast at small SF, shuffle-on-key at 100 TB. The only
-    * unavoidable big shuffle is lineitem⋈orders on orderkey. */
   /** Region/nation revenue ROLLUP — the multi-level reporting cube
     * (grand total, per-region subtotal, per-nation detail) in ONE
     * aggregation pass over the joined facts (Spark expands grouping
-    * sets map-side; no per-level rescan). Revenue sums exact integer
-    * ten-thousandths (extendedprice and discount are 2-decimal, so the
-    * product is exactly 4-decimal) — the global-total row aggregates
-    * the whole fact table, where double accumulation order across
-    * engines/partitions would otherwise flip the 4th decimal. */
+    * sets map-side; no per-level rescan). Revenue sums [[revenueE4]]
+    * — the global-total row aggregates the whole fact table, where
+    * double accumulation order across engines/partitions would
+    * otherwise flip the 4th decimal. */
   def revenueRollup(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)
@@ -79,8 +83,7 @@ object Analytics {
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       .agg(
-        (sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-          .cast("long")) / 10000.0).as("revenue"),
+        revenue.as("revenue"),
         count(lit(1)).as("n_lines"))
   }
 
@@ -103,8 +106,7 @@ object Analytics {
         grouping_id().cast("long").as("gid"),
         count(lit(1)).as("n_lines"),
         centsSum(col("l_quantity")).as("sum_qty"),
-        (sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-          .cast("long")) / 10000.0).as("revenue"))
+        revenue.as("revenue"))
 
   /** Pivoted activity report (round 8): per-user event counts widened
     * into one column per event type plus exact-cents value mass — the
@@ -125,6 +127,11 @@ object Analytics {
     events.groupBy(col(keyCol)).agg(counters.head, (counters.tail :+ mass): _*)
   }
 
+  /** Q5-style revenue by nation across the full star join. Bounded-size
+    * dimensions (nation/region) are broadcast explicitly; customer and
+    * part GROW with the fact tables, so their join strategy is left to
+    * AQE — broadcast at small SF, shuffle-on-key at 100 TB. The only
+    * unavoidable big shuffle is lineitem⋈orders on orderkey. */
   def revenueByNation(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)
@@ -137,11 +144,7 @@ object Analytics {
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
       .agg(
-        // exact integer ten-thousandths, like revenueRollup: a plain
-        // double sum is summation-order-dependent, and at ~1e10 revenue
-        // magnitude the engine-vs-engine drift reaches the 4th decimal
-        (sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-          .cast("long")) / 10000.0).as("revenue"),
+        revenue.as("revenue"),
         count(lit(1)).as("n_lines"))
   }
 
@@ -151,12 +154,11 @@ object Analytics {
     val li = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)
     val c = Tables.customer(spark, dir)
-    // revenue from exact integer ten-thousandths (see revenueByNation),
+    // revenue from exact integer ten-thousandths (see revenueE4),
     // half-up rounded to cents in integer arithmetic: the top-N CUTOFF
     // compares these values across engines, so a 4th-decimal drift in a
     // double sum could reorder rank 10 vs 11
-    val t = sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-      .cast("long"))
+    val t = sum(revenueE4)
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
@@ -393,8 +395,7 @@ object Analytics {
     val c = Tables.customer(spark, dir)
     val n = Tables.nation(spark, dir)
     val perOrder = li.groupBy(col("l_orderkey"))
-      .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-        .cast("long")).as("__orev"))
+      .agg(sum(revenueE4).as("__orev"))
     val weekly = perOrder.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -439,8 +440,7 @@ object Analytics {
     val c = Tables.customer(spark, dir)
     val n = Tables.nation(spark, dir)
     val perOrder = li.groupBy(col("l_orderkey"))
-      .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-        .cast("long")).as("__orev"))
+      .agg(sum(revenueE4).as("__orev"))
     // customer joins WITHOUT a broadcast hint — it scales with SF, so
     // forcing the build side would OOM past AQE's sizing (round-9
     // advice; same reasoning as weeklyRevenueMovers above)
@@ -626,8 +626,7 @@ object Analytics {
       .filter(col("l_shipdate").isNotNull &&
         col("l_shipdate") >= lit(startDate) && col("l_shipdate") < lit(endDate))
       .groupBy(col("l_suppkey"))
-      .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000, 0)
-        .cast("long")).as("__r4"))
+      .agg(sum(revenueE4).as("__r4"))
     val mx = rev.agg(max(col("__r4")).as("__mx"))
     rev.crossJoin(broadcast(mx))
       .filter(col("__r4") === col("__mx"))

@@ -15,58 +15,63 @@ object TextOps {
 
   private val stopwordsRe = "\\b(the|a|an|and|of|to|in|is|it|for|on|with)\\b"
 
+  /** Whitespace word count — the e9 `n_words` expression, shared by
+    * every operator that counts whitespace words so none can drift. */
+  private def nWordsCol(t: Column): Column =
+    when(length(trim(t)) === 0, 0).otherwise(size(split(trim(t), "\\s+")))
+
+  /** Characters of `t` that `re` matches (each match is one char). */
+  private def nMatchingChars(t: Column, re: String): Column =
+    length(t) - length(regexp_replace(t, re, ""))
+
+  /** `n / max(d, 1)` as a double rounded to `scale` — every e9 ratio. */
+  private def ratio(n: Column, d: Column, scale: Int): Column =
+    round(n.cast("double") / greatest(d, lit(1)), scale)
+
+  private def avgWordLenCol(t: Column): Column = ratio(length(t), nWordsCol(t), 4)
+
+  private def punctRatioCol(t: Column): Column =
+    ratio(nMatchingChars(t, "[^a-zA-Z0-9\\s]"), length(t), 6)
+
+  /** The e9 stopword ratio as a column expression — shared with
+    * [[qualityScore]] and the e56 corpus-build chain (which re-scores
+    * the post-scrub text), so the ranking value can never drift from
+    * the standalone operator's. */
+  private[graft] def stopwordRatioCol(t: Column): Column =
+    ratio(size(regexp_extract_all(lower(t), lit(stopwordsRe), lit(0))), nWordsCol(t), 6)
+
+  /** The e9 composite score: [[qualityScore]] passes its staged output
+    * columns, [[qualityScoreCol]] the inline feature expressions. */
+  private def composite(nWords: Column, avgWordLen: Column, punctRatio: Column,
+                        stopRatio: Column): Column =
+    round(when(nWords < 5, 0.0).otherwise(lit(1.0)
+      * when(avgWordLen.between(3, 10), 1.0).otherwise(0.5)
+      * when(punctRatio < 0.2, 1.0).otherwise(0.5)
+      * when(stopRatio > 0.01, 1.0).otherwise(0.7)), 4)
+
+  /** The e9 composite `quality_score` as one column expression over
+    * raw text. Shared with [[curationFunnel]] and [[curationSurvivors]]. */
+  private def qualityScoreCol(t: Column): Column =
+    composite(nWordsCol(t), avgWordLenCol(t), punctRatioCol(t), stopwordRatioCol(t))
+
   /** Document quality features + composite score: length, word stats,
     * punctuation/stopword/digit ratios. Mirrors standard pretraining
     * quality filters (C4/Gopher-style heuristics). `keepCols` carries
     * extra columns (e.g. the source for e46's per-source quantile
     * filter) through the same single narrow pass. */
-  /** Whitespace word count — the e9 `n_words` expression, shared with
-    * [[curationFunnel]] so the two can never drift. */
-  private def nWordsCol(t: Column): Column =
-    when(length(trim(t)) === 0, 0).otherwise(size(split(trim(t), "\\s+")))
-
-  /** The e9 composite `quality_score` as one column expression over
-    * raw text (identical rounding to [[qualityScore]]'s staged form —
-    * the intermediate ratios round before the composite multiplies,
-    * exactly as the output columns do). Shared with
-    * [[curationFunnel]]. */
-  private def qualityScoreCol(t: Column): Column = {
-    val nChars = length(t)
-    val nWords = nWordsCol(t)
-    val nPunct = length(t) - length(regexp_replace(t, "[^a-zA-Z0-9\\s]", ""))
-    val nStop = size(regexp_extract_all(lower(t), lit(stopwordsRe), lit(0)))
-    val avgWordLen = round(nChars.cast("double") / greatest(nWords, lit(1)), 4)
-    val punctRatio = round(nPunct.cast("double") / greatest(nChars, lit(1)), 6)
-    val stopRatio = round(nStop.cast("double") / greatest(nWords, lit(1)), 6)
-    round(when(nWords < 5, 0.0).otherwise(lit(1.0)
-      * when(avgWordLen.between(3, 10), 1.0).otherwise(0.5)
-      * when(punctRatio < 0.2, 1.0).otherwise(0.5)
-      * when(stopRatio > 0.01, 1.0).otherwise(0.7)), 4)
-  }
-
   def qualityScore(docs: DataFrame, idCol: String, textCol: String,
                    keepCols: Seq[String] = Nil): DataFrame = {
     val t = col(textCol)
-    val nChars = length(t)
-    val nWords = nWordsCol(t)
-    val nPunct = length(t) - length(regexp_replace(t, "[^a-zA-Z0-9\\s]", ""))
-    val nDigit = length(t) - length(regexp_replace(t, "[0-9]", ""))
-    val nStop = size(regexp_extract_all(lower(t), lit(stopwordsRe), lit(0)))
     docs.select(
       col(idCol) +: keepCols.map(col) :+
-      nChars.cast("long").as("n_chars_computed") :+
-      nWords.cast("long").as("n_words") :+
-      round(nChars.cast("double") / greatest(nWords, lit(1)), 4).as("avg_word_len") :+
-      round(nPunct.cast("double") / greatest(nChars, lit(1)), 6).as("punct_ratio") :+
-      round(nDigit.cast("double") / greatest(nChars, lit(1)), 6).as("digit_ratio") :+
-      round(nStop.cast("double") / greatest(nWords, lit(1)), 6).as("stopword_ratio"): _*)
-      .withColumn("quality_score",
-        round(
-          when(col("n_words") < 5, 0.0).otherwise(
-            lit(1.0)
-              * when(col("avg_word_len").between(3, 10), 1.0).otherwise(0.5)
-              * when(col("punct_ratio") < 0.2, 1.0).otherwise(0.5)
-              * when(col("stopword_ratio") > 0.01, 1.0).otherwise(0.7)), 4))
+      length(t).cast("long").as("n_chars_computed") :+
+      nWordsCol(t).cast("long").as("n_words") :+
+      avgWordLenCol(t).as("avg_word_len") :+
+      punctRatioCol(t).as("punct_ratio") :+
+      ratio(nMatchingChars(t, "[0-9]"), length(t), 6).as("digit_ratio") :+
+      stopwordRatioCol(t).as("stopword_ratio"): _*)
+      .withColumn("quality_score", composite(col("n_words"), col("avg_word_len"),
+        col("punct_ratio"), col("stopword_ratio")))
   }
 
   /** Per-document Gopher quality-rule report (round 9) — the
@@ -123,7 +128,7 @@ object TextOps {
     * for tokenizer budgeting over a 100 TB corpus. */
   def tokenCount(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
-    val ws = when(length(trim(t)) === 0, 0).otherwise(size(split(trim(t), "\\s+")))
+    val ws = nWordsCol(t)
     val bpe = size(regexp_extract_all(t, lit("[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\\s]"), lit(0)))
     docs.select(col(idCol), ws.cast("long").as("ws_tokens"), bpe.cast("long").as("bpe_tokens"),
       round(bpe.cast("double") / greatest(ws, lit(1)), 4).as("tokens_per_word"))
@@ -150,12 +155,18 @@ object TextOps {
     * offsets per group in deterministic id order, bin = offset div
     * budget. `docs` must carry (idCol, groupCol, countCol). */
   def packSequencesByCount(docs: DataFrame, idCol: String, countCol: String,
-                           groupCol: String, budget: Int): DataFrame = {
+                           groupCol: String, budget: Int): DataFrame =
+    binByOffset(docs.select(col(idCol), col(groupCol), col(countCol).cast("long").as("tokens")),
+      idCol, groupCol, budget)
+
+  /** The running-offset bin window over `base`'s long `tokens`, shared
+    * by [[packSequencesByCount]] and [[binAssign]]. */
+  private def binByOffset(base: DataFrame, idCol: String, groupCol: String,
+                          budget: Int): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(groupCol)).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
-    docs.select(col(idCol), col(groupCol), col(countCol).cast("long").as("tokens"))
+    base
       .withColumn("start_offset", coalesce(sum(col("tokens")).over(w), lit(0L)))
       .withColumn("bin", graft.functions.divLong(col("start_offset"), lit(budget.toLong)))
       .withColumn("bin_offset", col("start_offset") % budget)
@@ -170,20 +181,12 @@ object TextOps {
     * exchange. */
   private def binAssign(docs: DataFrame, idCol: String, textCol: String,
                         groupCol: String, budget: Int, carryText: Boolean): DataFrame = {
-    require(budget > 0, s"budget must be positive, got $budget")
-    import org.apache.spark.sql.expressions.Window
     val t = col(textCol)
-    val toks = when(length(trim(t)) === 0, 0)
-      .otherwise(size(split(trim(t), "\\s+"))).cast("long")
-    val w = Window.partitionBy(col(groupCol)).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val toks = nWordsCol(t).cast("long")
     val base =
       if (carryText) docs.select(col(idCol), col(groupCol), t.as("__text"), toks.as("tokens"))
       else docs.select(col(idCol), col(groupCol), toks.as("tokens"))
-    base
-      .withColumn("start_offset", coalesce(sum(col("tokens")).over(w), lit(0L)))
-      .withColumn("bin", graft.functions.divLong(col("start_offset"), lit(budget.toLong)))
-      .withColumn("bin_offset", col("start_offset") % budget)
+    binByOffset(base, idCol, groupCol, budget)
   }
 
   /** Materialize [[packSequences]]' bin assignment into the actual
@@ -214,9 +217,6 @@ object TextOps {
             array_sort(collect_list(struct(col(idCol).as("i"), col("__text").as("t")))),
             s => s.getField("t"))).as("packed_text"))
 
-  /** N-gram/stopword-heuristic language ID. Scores each candidate
-    * language by marker-word/script hits; deterministic argmax with
-    * alphabetical tie-break. */
   /** The e8 marker-hit argmax as (detected_lang, marker_hits) column
     * expressions over raw text — shared by [[langId]] and
     * [[curationFunnel]]. Alphabetical tie-break via a strict-greater
@@ -236,11 +236,32 @@ object TextOps {
     (when(bestScore > 0, bestLang).otherwise(lit("und")), bestScore)
   }
 
+  /** N-gram/stopword-heuristic language ID. Scores each candidate
+    * language by marker-word/script hits; deterministic argmax with
+    * alphabetical tie-break. */
   def langId(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val (bestLang, bestScore) = langIdCols(col(textCol))
     docs.select(col(idCol),
       bestLang.as("detected_lang"),
       bestScore.cast("long").as("marker_hits"))
+  }
+
+  /** The documents SURVIVING [[curationFunnel]]'s cumulative lang →
+    * quality → length stages (e53 reports the counts; this returns the
+    * rows — the hand-off a real corpus build makes into its dedup
+    * stage). Shares [[langIdCols]]/[[qualityScoreCol]]/[[nWordsCol]]
+    * with the funnel so the two can never drift. Keeps `idCol`,
+    * `textCol`, and `keepCols`; one narrow pass, no shuffle. */
+  def curationSurvivors(docs: DataFrame, idCol: String, textCol: String,
+                        keepCols: Seq[String], minQuality: Double,
+                        minWords: Long, maxWords: Long): DataFrame = {
+    require(minWords <= maxWords, "minWords must be <= maxWords")
+    val t = col(textCol)
+    val (bestLang, _) = langIdCols(t)
+    docs.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+      .filter(bestLang === "en" && qualityScoreCol(t) >= minQuality &&
+        nWordsCol(t).cast("long").between(minWords, maxWords))
+      .select(col(idCol) +: col(textCol) +: keepCols.map(col): _*)
   }
 
   /** Curation-funnel report (round 8) — the corpus-build accounting
@@ -263,33 +284,6 @@ object TextOps {
     * partial-aggregate map-side to one row per partition, and only the
     * distinct-hash count shuffles (16-byte md5 per surviving doc,
     * partial-distinct before the exchange). The corpus never moves. */
-  /** The e9 stopword ratio as a column expression — shared with
-    * [[qualityScore]] and the e56 corpus-build chain (which re-scores
-    * the post-scrub text), so the ranking value can never drift from
-    * the standalone operator's. */
-  private[graft] def stopwordRatioCol(t: Column): Column = {
-    val nStop = size(regexp_extract_all(lower(t), lit(stopwordsRe), lit(0)))
-    round(nStop.cast("double") / greatest(nWordsCol(t), lit(1)), 6)
-  }
-
-  /** The documents SURVIVING [[curationFunnel]]'s cumulative lang →
-    * quality → length stages (e53 reports the counts; this returns the
-    * rows — the hand-off a real corpus build makes into its dedup
-    * stage). Shares [[langIdCols]]/[[qualityScoreCol]]/[[nWordsCol]]
-    * with the funnel so the two can never drift. Keeps `idCol`,
-    * `textCol`, and `keepCols`; one narrow pass, no shuffle. */
-  def curationSurvivors(docs: DataFrame, idCol: String, textCol: String,
-                        keepCols: Seq[String], minQuality: Double,
-                        minWords: Long, maxWords: Long): DataFrame = {
-    require(minWords <= maxWords, "minWords must be <= maxWords")
-    val t = col(textCol)
-    val (bestLang, _) = langIdCols(t)
-    docs.filter(col(idCol).isNotNull && col(textCol).isNotNull)
-      .filter(bestLang === "en" && qualityScoreCol(t) >= minQuality &&
-        nWordsCol(t).cast("long").between(minWords, maxWords))
-      .select(col(idCol) +: col(textCol) +: keepCols.map(col): _*)
-  }
-
   def curationFunnel(docs: DataFrame, idCol: String, textCol: String,
                      minQuality: Double, minWords: Long, maxWords: Long): DataFrame = {
     require(minWords <= maxWords, "minWords must be <= maxWords")
@@ -337,13 +331,27 @@ object TextOps {
           .otherwise("neutral"))
   }
 
-  /** (doc_id, `as`) rows, one per non-empty word of the normalized
-    * text — the word stream every token and BPE operator reads. */
+  /** (`keyAs`, `as`) rows, one per non-empty word of the normalized
+    * text, keyed by `idCol` — the word stream every token and BPE
+    * operator reads. */
   private def wordRows(docs: DataFrame, idCol: String, textCol: String,
-                       as: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
+                       as: String, keyAs: String = "doc_id"): DataFrame =
+    docs.select(col(idCol).as(keyAs),
         explode(split(normalizeText(col(textCol)), " ")).as(as))
       .filter(length(col(as)) > 0)
+
+  /** The two-level (doc_id, `term`) → `term` aggregate (`n`, `doc_freq`)
+    * of [[tokenFrequency]] and [[ngramFrequency]]. */
+  private def termFrequency(rows: DataFrame, term: String, minCount: Long): DataFrame =
+    rows.groupBy(col("doc_id"), col(term))
+      .agg(count(lit(1)).as("__tf"))
+      .groupBy(col(term))
+      // count(doc_id), not count(*): a null doc_id forms its own level-1
+      // group, and COUNT(DISTINCT doc_id) semantics (the pre-two-level
+      // shape and the SQL oracle) exclude nulls from the document count.
+      // Its occurrences still land in `n` via the sum, as COUNT(*) does.
+      .agg(sum(col("__tf")).as("n"), count(col("doc_id")).as("doc_freq"))
+      .filter(col("n") >= minCount)
 
   /** Corpus token-frequency table: per-token total count + document
     * frequency — the vocabulary-building input for tokenizer/BPE
@@ -361,16 +369,7 @@ object TextOps {
     * before it is ever collected. */
   def tokenFrequency(docs: DataFrame, idCol: String, textCol: String,
                      minCount: Long): DataFrame =
-    wordRows(docs, idCol, textCol, "token")
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("__tf"))
-      .groupBy(col("token"))
-      // count(doc_id), not count(*): a null doc_id forms its own level-1
-      // group, and COUNT(DISTINCT doc_id) semantics (the pre-two-level
-      // shape and the SQL oracle) exclude nulls from the document count.
-      // Its occurrences still land in `n` via the sum, as COUNT(*) does.
-      .agg(sum(col("__tf")).as("n"), count(col("doc_id")).as("doc_freq"))
-      .filter(col("n") >= minCount)
+    termFrequency(wordRows(docs, idCol, textCol, "token"), "token", minCount)
 
   /** Corpus word-n-gram frequency table — the merge-candidate input a
     * BPE/WordPiece tokenizer build selects from (most-frequent adjacent
@@ -385,14 +384,9 @@ object TextOps {
     * minCount prunes the Zipfian tail before it is ever collected. */
   def ngramFrequency(docs: DataFrame, idCol: String, textCol: String,
                      n: Int, minCount: Long): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
+    termFrequency(docs.select(col(idCol).as("doc_id"),
         explode(graft.functions.StringExpressions.shingleStrings(
-          normalizeText(col(textCol)), n)).as("ngram"))
-      .groupBy(col("doc_id"), col("ngram"))
-      .agg(count(lit(1)).as("__tf"))
-      .groupBy(col("ngram"))
-      .agg(sum(col("__tf")).as("n"), count(col("doc_id")).as("doc_freq"))
-      .filter(col("n") >= minCount)
+          normalizeText(col(textCol)), n)).as("ngram")), "ngram", minCount)
 
   /** BPE merge-candidate table (round 8) — the first iteration of BPE
     * tokenizer training (Sennrich et al. 2016): frequency of every
@@ -413,13 +407,8 @@ object TextOps {
     * window: its partition is bounded by construction). */
   def bpePairCounts(docs: DataFrame, idCol: String, textCol: String,
                     minCount: Long): DataFrame = {
-    val wordFreq = wordRows(docs, idCol, textCol, "word")
-      .groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("__tf"))
-      .groupBy(col("word"))
-      .agg(sum(col("__tf")).as("__c"))
     val sym = concat(col("word"), lit("_"))
-    wordFreq
+    wordFrequency(docs, idCol, textCol, "__c")
       .select(col("__c"),
         explode(transform(sequence(lit(1), length(sym) - 1),
           i => sym.substr(i, lit(2)))).as("pair"))
@@ -486,14 +475,9 @@ object TextOps {
   private def bpeTrainVocab(docs: DataFrame, idCol: String, textCol: String,
                             nMerges: Int, minCount: Long): (DataFrame, Seq[(Long, String, Long)]) = {
     require(nMerges >= 1 && nMerges <= 10000, s"nMerges $nMerges out of range")
-    val wordFreq = wordRows(docs, idCol, textCol, "word")
-      .groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("__tf"))
-      .groupBy(col("word"))
-      .agg(sum(col("__tf")).as("c"))
     // the ONLY corpus-derived table; checkpointed so the loop's
     // per-round actions replay vocab blocks, never the corpus scan
-    var vocab = bpeInitialVocab(wordFreq)
+    var vocab = bpeInitialVocab(wordFrequency(docs, idCol, textCol, "c"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var r = 0
     var done = false
@@ -516,6 +500,16 @@ object TextOps {
     }
     (vocab, merges.toSeq)
   }
+
+  /** The corpus word-frequency table of BPE training: (word, count
+    * `as`), by the same two-level aggregate as [[tokenFrequency]]. */
+  private def wordFrequency(docs: DataFrame, idCol: String, textCol: String,
+                            as: String): DataFrame =
+    wordRows(docs, idCol, textCol, "word")
+      .groupBy(col("doc_id"), col("word"))
+      .agg(count(lit(1)).as("__tf"))
+      .groupBy(col("word"))
+      .agg(sum(col("__tf")).as(as))
 
   /** The merge-free BPE vocab state of a word table: `w` is each word's
     * symbols, space-joined and padded with boundary spaces, plus the
@@ -566,13 +560,16 @@ object TextOps {
   def bpeTokenCounts(docs: DataFrame, idCol: String, textCol: String,
                      nMerges: Int, minCount: Long): DataFrame = {
     val (vocab, _) = bpeTrainVocab(docs, idCol, textCol, nMerges, minCount)
-    val counts = vocab.select(col("word"),
-      size(split(trim(col("w")), " ")).cast("long").as("__tc"))
-    wordRows(docs, idCol, textCol, "word")
-      .join(counts, Seq("word"))
+    encodedCounts(wordRows(docs, idCol, textCol, "word"), vocab)
+  }
+
+  /** Per-doc (n_tokens, n_words) of (doc_id, word) rows whose words
+    * count the symbols of their final `vocab` state. */
+  private def encodedCounts(words: DataFrame, vocab: DataFrame): DataFrame =
+    words.join(vocab.select(col("word"),
+        size(split(trim(col("w")), " ")).cast("long").as("__tc")), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(sum(col("__tc")).as("n_tokens"), count(lit(1)).as("n_words"))
-  }
 
   /** ENCODE-ONLY application of a persisted merge table (round 11) —
     * the inference half of the tokenizer lifecycle [[bpeTrainVocab]]
@@ -596,10 +593,7 @@ object TextOps {
     require(merges.forall(_.contains(" ")), "merges must be 'x y' pairs")
     val inst = wordRows(docs, idCol, textCol, "word")
     val vocab = merges.foldLeft(bpeInitialVocab(inst.select(col("word")).distinct()))(bpeMerge)
-    inst.join(vocab.select(col("word"),
-        size(split(trim(col("w")), " ")).cast("long").as("__tc")), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("__tc")).as("n_tokens"), count(lit(1)).as("n_words"))
+    encodedCounts(inst, vocab)
   }
 
   /** Per-doc top-k terms by TF-IDF — the keyword/vocabulary projection
@@ -622,7 +616,6 @@ object TextOps {
     * join-back at runtime and falls back to a shuffled (skew-splitting)
     * join only if the vocabulary outgrows the broadcast budget. */
   def tfidfTopK(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = wordRows(docs, idCol, textCol, "token")
     // The tf table feeds two branches (df aggregate + join-back), so it
     // must materialize ONCE — every alternative was measured at sf1,
@@ -690,18 +683,24 @@ object TextOps {
     val total = vocabAll.agg(sum(col("__vn")).as("__total"))
     val vocab = vocabAll.filter(col("__vn") >= minCount)
     val lnTotal = col("__total").cast("double")
-    tf.join(vocab, Seq("token"), "left")
+    val scored = tf.join(vocab, Seq("token"), "left")
       .crossJoin(broadcast(total))
       .withColumn("__lpq", floor(
         when(col("__vn").isNull, log(lit(0.5) / lnTotal))
           .otherwise(log(col("__vn").cast("double") / lnTotal)) * 1e6)
         .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_tokens"),
-        sum(when(col("__vn").isNull, col("tf")).otherwise(lit(0L))).as("oov_tokens"),
+    microLogScore(scored, "n_tokens", "oov_tokens", "__vn")
+  }
+
+  /** Per-doc `total` tf, `rare` tf (null `model`) and the tf-weighted
+    * mean micro-log `__lpq` floored onto the 1e-4 grid, in exact integers. */
+  private def microLogScore(scored: DataFrame, total: String, rare: String,
+                            model: String): DataFrame =
+    scored.groupBy(col("doc_id"))
+      .agg(sum(col("tf")).as(total),
+        sum(when(col(model).isNull, col("tf")).otherwise(lit(0L))).as(rare),
         (floor(sum(col("__lpq") * col("tf")).cast("double") /
           (lit(100.0) * sum(col("tf")))) / 10000.0).as("logprob"))
-  }
 
   /** CCNet-style LM-quality bucketing (round 9, after Wenzek et al.
     * 2020): per language, rank documents by their corpus-LM score
@@ -727,7 +726,6 @@ object TextOps {
     * bucket join) — materialized per §8 rule 3. */
   def lmQualityBuckets(docs: DataFrame, idCol: String, textCol: String,
                        langCol: String, minCount: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val scored = unigramLogProb(docs, idCol, textCol, minCount)
       .select(col("doc_id"), col("n_tokens"), col("logprob"),
         round(col("logprob") * 10000).cast("long").as("__lp"))
@@ -802,7 +800,7 @@ object TextOps {
       .agg((count(lit(1)) + 1L).as("__v"))
     val kept = pairCounts.filter(col("__c2") >= minCount)
       .select(col("pair"), col("__c2"))
-    tf2
+    val scored = tf2
       .withColumn("__prev", substring_index(col("pair"), " ", 1))
       .join(kept, Seq("pair"), "left")
       .join(ctx, Seq("__prev"), "left")
@@ -810,12 +808,7 @@ object TextOps {
       .withColumn("__lpq", floor(log(
         (coalesce(col("__c2"), lit(0L)) + 1L).cast("double") /
           (col("__nctx") + col("__v")).cast("double")) * 1e6).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_bigrams"),
-        sum(when(col("__c2").isNull, col("tf")).otherwise(lit(0L)))
-          .as("rare_bigrams"),
-        (floor(sum(col("__lpq") * col("tf")).cast("double") /
-          (lit(100.0) * sum(col("tf")))) / 10000.0).as("logprob"))
+    microLogScore(scored, "n_bigrams", "rare_bigrams", "__c2")
   }
 
   /** PII-style redaction for corpus cleaning: emails → <EMAIL>, URLs →
@@ -957,10 +950,8 @@ object TextOps {
   def sourceTokenLift(docs: DataFrame, idCol: String, textCol: String,
                       sourceCol: String, minCount: Long, k: Int): DataFrame = {
     require(k > 0 && minCount >= 1)
-    val tok = docs.filter(col(sourceCol).isNotNull)
-      .select(col(sourceCol).as("source"),
-        explode(split(normalizeText(col(textCol)), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val tok = wordRows(docs.filter(col(sourceCol).isNotNull), sourceCol, textCol, "token",
+      keyAs = "source")
     val st = tok.groupBy(col("source"), col("token")).agg(count(lit(1)).as("c_s"))
     val tot = st.groupBy(col("token")).agg(sum(col("c_s")).as("c_all"))
     val src = st.groupBy(col("source")).agg(sum(col("c_s")).as("n_s"))
