@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Analytics
@@ -23,6 +23,12 @@ import graft.Checkpoint._
 object SparkEntry {
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
+
+  /** The event feed as every landing/source query reads it: the
+    * second-truncated `ts` as `period`. */
+  private def feedCols: Seq[Column] = Seq(col("event_id"),
+    date_trunc("second", col("ts")).as("period"),
+    col("user_id"), col("event_type"), col("value"))
 
   /** f12's funnel steps — shared by the query and the generated oracle. */
   private val f12Steps = Seq("signup", "view", "click", "purchase")
@@ -80,8 +86,7 @@ object SparkEntry {
       Ingest.typedIngest(Tables.events(s, d), "event_id", "ts", "user_id", "event_type", "value")),
     "a2_time_range_filter" -> ((s, d) =>
       Ingest.timeRangeFilter(Tables.events(s, d), "ts", "2024-01-08 00:00:00", "2024-01-15 00:00:00")
-        .select(col("event_id"), date_trunc("second", col("ts")).as("period"),
-          col("user_id"), col("event_type"), col("value"))),
+        .select(feedCols: _*)),
     "a3_dedup_keep_latest" -> ((s, d) =>
       Ingest.dedupKeepLatest(
         Tables.events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
@@ -92,9 +97,7 @@ object SparkEntry {
         Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice")),
         "o_custkey", col("o_orderdate"), col("o_orderkey"), 5)),
     "a5_incremental_ingest" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       // two overlapping offset pages (crash-recovery refetch) merge to
       // exactly the full feed
       Ingest.incrementalIngest(ev.filter(col("event_id") < 600),
@@ -172,9 +175,7 @@ object SparkEntry {
         Seq("c_name", "c_mktsegment", "c_acctbal"))
     }),
     "a6_cdc_merge" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       // a CDC batch over the feed's tail: every 7th key a delete, the
       // rest updates (value shifted so merged rows are distinguishable)
       val changes = ev.filter(col("event_id") >= 7000)
@@ -844,9 +845,7 @@ object SparkEntry {
     // negative for Int.MinValue, letting one run's batches bleed into
     // another's read)
     "g1_csv_roundtrip" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/csv_${pathTag(d)}"
       graft.sources.Sources.writeCsv(ev, tmp)
       graft.sources.Sources.validRecords(
@@ -947,9 +946,7 @@ object SparkEntry {
       // (bad long, bad double, short row, extra columns), read back
       // PERMISSIVE and report the valid count + each quarantined raw
       // line — the scan survives, nothing coerces silently
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/rescue_${pathTag(d)}"
       graft.sources.Sources.writeCsv(ev, tmp)
       graft.sources.Sources.appendRawCsvPart(s, tmp, "part-torn.csv",
@@ -966,9 +963,7 @@ object SparkEntry {
       good.unionByName(bad)
     }),
     "g2_partitioned_sink_prune" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/pq_${pathTag(d)}"
       graft.sources.Sources.writePartitionedParquet(ev, tmp, Seq("event_type"))
       // the filter prunes to one partition directory at planning time
@@ -978,9 +973,7 @@ object SparkEntry {
           col("event_type").cast("string").as("event_type"), col("value"))
     }),
     "g7_partition_overwrite" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/dpo_${pathTag(d)}"
       // initial full land (static), then the scheduled re-land
       // recomputes ONE partition under dynamic overwrite — siblings
@@ -995,9 +988,7 @@ object SparkEntry {
           col("event_type").cast("string").as("event_type"), col("value"))
     }),
     "g8_compaction" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/compact_${pathTag(d)}"
       // a year of incremental lands: the feed fragmented into 64 small
       // files; compact to ~1 MiB targets and return the read-back —
@@ -1006,9 +997,7 @@ object SparkEntry {
       graft.sources.Sources.compactParquet(s, s"$tmp/src", s"$tmp/dst", 1L << 20)
     }),
     "g9_sorted_layout" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/sorted_${pathTag(d)}"
       // range-partition + sort on the time key: every file owns a
       // disjoint period range (footer-stats proof in SourcesSpec), so
@@ -1016,9 +1005,7 @@ object SparkEntry {
       graft.sources.Sources.writeSortedLayout(ev, tmp, "period", 16)
     }),
     "g10_zorder_layout" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/zorder_${pathTag(d)}"
       // Morton-interleave user_id × period: every file gets a tight
       // min/max box in BOTH dimensions, so user predicates AND time
@@ -1033,9 +1020,7 @@ object SparkEntry {
       graft.sources.ParquetStats.analyzeTable(s, s"$d/events.parquet",
         Seq("event_id", "user_id"))),
     "g4_jsonl_roundtrip" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/jsonl_${pathTag(d)}"
       graft.sources.Sources.writeJsonl(ev, tmp)
       graft.sources.Sources.validRecords(
@@ -1149,9 +1134,7 @@ object SparkEntry {
           col("event_type"), col("value"))
     }),
     "g6_schema_evolution" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/evo_${pathTag(d)}"
       // batch 1 written before the `value` column existed; batch 2 after
       ev.filter(col("event_id") < 5000).drop("value")
@@ -1163,9 +1146,7 @@ object SparkEntry {
           col("event_type"), col("value"), col("batch").cast("long").as("batch"))
     }),
     "g5_orc_roundtrip" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
-        col("user_id"), col("event_type"), col("value"))
+      val ev = Tables.events(s, d).select(feedCols: _*)
       val tmp = s"/tmp/graft_sources/orc_${pathTag(d)}"
       graft.sources.Sources.writeOrc(ev, tmp)
       graft.sources.Sources.readOrc(s, tmp,
