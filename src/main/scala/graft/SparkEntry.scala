@@ -2357,9 +2357,9 @@ object SparkEntry {
            FROM events, m),
          g AS (SELECT user_id,
            sum(cents) FILTER (WHERE bucket = 'reference') AS s_ref,
-           count(*) FILTER (WHERE bucket = 'reference') AS n_ref,
+           count(cents) FILTER (WHERE bucket = 'reference') AS n_ref,
            sum(cents) FILTER (WHERE bucket = 'current') AS s_cur,
-           count(*) FILTER (WHERE bucket = 'current') AS n_cur
+           count(cents) FILTER (WHERE bucket = 'current') AS n_cur
            FROM t WHERE bucket IS NOT NULL GROUP BY 1)
          SELECT user_id,
            floor((s_ref * 200 + n_ref) / (n_ref * 2)) / 10000.0 AS ref_mean,

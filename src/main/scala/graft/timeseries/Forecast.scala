@@ -70,14 +70,15 @@ object Forecast {
     driftWindows(df, tsCol, referenceDays, currentDays,
         df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol)))
       // means from exact integer cents: order-independent sums, so the
-      // rounded output is reproducible across engines/partitionings
+      // rounded output is reproducible across engines/partitionings; a
+      // null reading enters neither sum nor count (pandas' mean skips it)
       .withColumn("cents", round(col(valueCol) * 100, 0))
       .groupBy(col(keyCol))
       .agg(
         sum(when(col("bucket") === "reference", col("cents"))).as("s_ref"),
-        count(when(col("bucket") === "reference", lit(1))).as("n_ref"),
+        count(when(col("bucket") === "reference", col("cents"))).as("n_ref"),
         sum(when(col("bucket") === "current", col("cents"))).as("s_cur"),
-        count(when(col("bucket") === "current", lit(1))).as("n_cur"))
+        count(when(col("bucket") === "current", col("cents"))).as("n_cur"))
       .filter(col("n_ref") > 0 && col("n_cur") > 0)
       // displayed means use the exact-integer-cents rounding (see
       // roundMeanE4): round(s/n/100, 4) half-up-rounds a double that can

@@ -180,12 +180,12 @@ class TimeSeriesSpec extends SparkSpec {
       .toDF("event_id", "user_id", "ts", "value", "event_type").write.parquet(dir)
     val ev = spark.read.parquet(dir)
 
-    // drift counts the null-valued current row in n_cur but not in s_cur
+    // drift skips the null-valued current row in both s_cur and n_cur
     val d = Forecast.drift(ev, "user_id", "ts", "value", 14, 7, 0.5).collect()
     assert(d.length == 1 && d.head.getAs[Long]("user_id") == 1L)
     assert(d.head.getAs[Double]("ref_mean") == 15.0)
-    assert(d.head.getAs[Double]("cur_mean") == 26.6667)
-    assert(d.head.getAs[Double]("shift") == 0.777778)
+    assert(d.head.getAs[Double]("cur_mean") == 40.0)
+    assert(d.head.getAs[Double]("shift") == 1.666667)
     assert(d.head.getAs[Boolean]("drifted"))
 
     // reference x,y = 1,1; current x,y,__other__ = 1,1,1; Laplace +1
