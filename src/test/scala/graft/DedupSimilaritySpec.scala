@@ -1534,6 +1534,52 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(order.map(real).zip(order.tail.map(real)).forall { case (a, b) => b <= a })
   }
 
+  test("shared text rules agree on a parquet corpus: survivors, stopword ratio, packing") {
+    val fluent = "the cat and the dog sat on the mat in the sun"
+    // 100 words holding one stopword: stopword_ratio is exactly 0.01,
+    // which the composite's strict > 0.01 scores 0.7, not 1.0
+    val atBoundary = ("the" +: "that" +: Seq.fill(98)("cats")).mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_rules").toString + "/docs"
+    Seq(
+      (1L, "", "s1"),                                                 // empty
+      (2L, "the cat sat", "s1"),                                      // < 5 words
+      (3L, "the cat!!! and the dog??? sat!!! on the mat!!! it is fine!!!", "s1"), // punct
+      (4L, "der hund und die katze sind nicht da zu hause heute", "s2"),  // de
+      (5L, atBoundary, "s2"),
+      (6L, fluent, "s2"),
+      (7L, Seq.fill(20)(fluent).mkString(" "), "s1"))                 // 240 words
+      .toDF("doc_id", "text", "source").write.parquet(dir)
+    val corpus = spark.read.parquet(dir)
+
+    val q = TextOps.qualityScore(corpus, "doc_id", "text").collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    def score(id: Long) = q(id).getAs[Double]("quality_score")
+    assert(q(5L).getAs[Double]("stopword_ratio") == 0.01 && score(5L) == 0.7)
+    assert(q(3L).getAs[Double]("punct_ratio") == 0.25 && score(3L) == 0.5)
+    assert(q(1L).getAs[Long]("n_words") == 0L && score(2L) == 0.0)
+    val lang = TextOps.langId(corpus, "doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    for ((minQ, minW, maxW, pinned) <- Seq((0.7, 5L, 200L, Set(5L, 6L)),
+        (0.75, 5L, 200L, Set(6L)), (0.0, 0L, 1000L, Set(2L, 3L, 5L, 6L, 7L)))) {
+      val expect = q.collect { case (id, r) if lang(id) == "en" && score(id) >= minQ &&
+        r.getAs[Long]("n_words") >= minW && r.getAs[Long]("n_words") <= maxW => id }.toSet
+      val got = TextOps.curationSurvivors(corpus, "doc_id", "text", Nil, minQ, minW, maxW)
+        .collect().map(_.getLong(0)).toSet
+      assert(got == expect && got == pinned, s"q=$minQ [$minW, $maxW]: $got vs $expect")
+    }
+
+    val ratio = corpus.select(col("doc_id"), TextOps.stopwordRatioCol(col("text"))).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ratio == q.map { case (id, r) => id -> r.getAs[Double]("stopword_ratio") })
+
+    val packed = TextOps.packSequences(corpus, "doc_id", "text", "source", 16).collect().toSet
+    val counted = TextOps.tokenCount(corpus, "doc_id", "text")
+      .join(corpus.select("doc_id", "source"), "doc_id")
+    val byCount = TextOps.packSequencesByCount(counted, "doc_id", "ws_tokens", "source", 16)
+      .collect().toSet
+    assert(packed.size == 7 && packed == byCount, s"$packed vs $byCount")
+  }
+
   test("dupRateBySource attributes duplication per source; null texts group per source") {
     val d = Seq(
       (1L, Option("same text here"), "s1"), (2L, Option("same text here"), "s1"),
