@@ -1038,8 +1038,8 @@ object SparkEntry {
       graft.sources.Sources.writeBucketed(
         Tables.customer(s, d).select(col("c_custkey"), col("c_name"), col("c_acctbal")),
         s"g3_customer_$sfx", "c_custkey", 8)
-      graft.sources.Sources.readTable(s, s"g3_orders_$sfx")
-        .join(graft.sources.Sources.readTable(s, s"g3_customer_$sfx"),
+      s.table(s"g3_orders_$sfx")
+        .join(s.table(s"g3_customer_$sfx"),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_custkey"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1102,8 +1102,7 @@ object SparkEntry {
         date_trunc("second", col("ts")).as("period"), col("value"))
       ev.write.mode("overwrite").parquet(s"$tmp/src")
       val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/src")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
+      val fs = graft.sources.Sources.fileSystem(s, tmp)
       fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ledger"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ckpt"), true)
       graft.streaming.LedgerSink.streamQualityLedger(stream,
@@ -1122,8 +1121,7 @@ object SparkEntry {
         col("value"))
       ev.write.mode("overwrite").parquet(s"$tmp/src")
       val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/src")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
+      val fs = graft.sources.Sources.fileSystem(s, tmp)
       fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/table"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ckpt"), true)
       Upsert.streamUpsert(stream, s"$tmp/table", s"$tmp/ckpt",

@@ -2,11 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Single-writer lease for a landing/state directory — shared by the
-  * paginated-feed lander (a8) and the streaming upsert sink (f8), both
-  * of which mutate a directory in ways that two live writers would
-  * corrupt (interleaved pages; interleaved dynamic-partition
-  * overwrites).
+/** Single-writer lease for a landing/state directory — shared by every
+  * directory mutator: the paginated-feed lander (a8), the streaming
+  * upsert sink (f8) and version retention, each of which mutates a
+  * directory in ways that two live writers would corrupt (interleaved
+  * pages; interleaved dynamic-partition overwrites; a sweep racing a
+  * publish).
   *
   * The marker file holds `token\nexpiryEpochMs`; a lease whose expiry
   * has passed (its writer crashed without releasing) or whose content
@@ -25,51 +26,58 @@ object LandingLease {
   final class ConcurrentLandingException(message: String)
     extends RuntimeException(message)
 
+  /** How long a lease holds before a later writer may take it over: above
+    * the worst-case critical section of every guarded writer (a window
+    * landing, an upsert merge, a retention sweep), so a live writer never
+    * loses its lease, while a crashed one's goes stale after 15 min. */
+  private val LeaseMs = 15 * 60 * 1000L
+
   /** Underscore-prefixed on purpose: Spark's file index treats `_`/`.`
     * names as hidden, so readers and partition discovery never see it. */
   private def lockFile(dir: String): Path = new Path(dir, "_LOCK")
 
+  /** Run `body` holding the lease for `dir`: acquire it or throw
+    * [[ConcurrentLandingException]], and release it however `body` ends. */
+  def held[A](fs: FileSystem, dir: String)(body: => A): A = {
+    val token = acquire(fs, dir)
+    try body finally release(fs, dir, token)
+  }
+
   /** Acquire the lease for `dir` or throw
     * [[ConcurrentLandingException]]; returns the token to release with. */
-  def acquire(fs: FileSystem, dir: String, leaseMs: Long): String = {
+  private def acquire(fs: FileSystem, dir: String): String = {
     val lp = lockFile(dir)
     val token = java.util.UUID.randomUUID().toString
     def tryCreate(): Boolean =
       try {
-        val out = fs.create(lp, false)
-        try out.write(s"$token\n${System.currentTimeMillis() + leaseMs}".getBytes("UTF-8"))
-        finally out.close()
+        Sources.writeUtf8(fs, lp, s"$token\n${System.currentTimeMillis() + LeaseMs}",
+          overwrite = false)
         true
       } catch { case _: java.io.IOException => false }
-    if (tryCreate()) return token
-    val expiry: Long =
-      try {
-        val in = fs.open(lp)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        txt.split("\n")(1).trim.toLong
-      } catch { case _: Exception => Long.MinValue } // torn/vanished: stale
-    if (System.currentTimeMillis() <= expiry)
-      throw new ConcurrentLandingException(
-        s"another writer holds $lp until epoch-ms $expiry; refusing to interleave")
-    fs.delete(lp, false)
-    if (!tryCreate())
-      throw new ConcurrentLandingException(
-        s"lost the stale-lease takeover race on $lp to another writer")
+    if (!tryCreate()) {
+      val expiry: Long =
+        try Sources.readUtf8(fs, lp).split("\n")(1).trim.toLong
+        catch { case _: Exception => Long.MinValue } // torn/vanished: stale
+      if (System.currentTimeMillis() <= expiry)
+        throw new ConcurrentLandingException(
+          s"another writer holds $lp until epoch-ms $expiry; refusing to interleave")
+      fs.delete(lp, false)
+      if (!tryCreate())
+        throw new ConcurrentLandingException(
+          s"lost the stale-lease takeover race on $lp to another writer")
+    }
     token
   }
 
   /** Release the lease IF still ours: a token mismatch means the lease
     * expired mid-run and another writer took over — leave its marker
-    * alone (size `leaseMs` above the worst-case critical-section time
+    * alone ([[LeaseMs]] sits above the worst-case critical-section time
     * to keep this a non-event). */
-  def release(fs: FileSystem, dir: String, token: String): Unit = {
+  private def release(fs: FileSystem, dir: String, token: String): Unit = {
     val lp = lockFile(dir)
     val ours =
-      try {
-        val in = fs.open(lp)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        txt.startsWith(token)
-      } catch { case _: Exception => false }
+      try Sources.readUtf8(fs, lp).startsWith(token)
+      catch { case _: Exception => false }
     if (ours) fs.delete(lp, false)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,30 +70,21 @@ object PagedFeed {
     * landed page index (0 when nothing landed). It is the only page a
     * crash can have torn or cut short; [[land]] refetches and
     * overwrites it unless its landed rows prove it complete. */
-  def resumePage(spark: SparkSession, dir: String): Int = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else {
-      val pages = fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("page="))
-        .map(_.getPath.getName.stripPrefix("page=").toInt)
-      if (pages.isEmpty) 0 else pages.max
-    }
-  }
+  def resumePage(spark: SparkSession, dir: String): Int =
+    resumePage(Sources.fileSystem(spark, dir), dir)
+
+  private def resumePage(fs: FileSystem, dir: String): Int =
+    Sources.children(fs, new Path(dir))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("page="))
+      .map(_.getPath.getName.stripPrefix("page=").toInt)
+      .maxOption.getOrElse(0)
 
   /** Remove a landing directory (fresh-window reset). */
   def reset(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Sources.fileSystem(spark, dir)
     if (fs.exists(p)) fs.delete(p, true)
   }
-
-  /** A second lander is already holding the landing lease — fail fast
-    * rather than interleave pages with a live writer. The machinery
-    * lives in [[LandingLease]] (shared with the f8 upsert sink since
-    * round 8); this alias keeps the a8 API surface stable. */
-  type ConcurrentLandingException = LandingLease.ConcurrentLandingException
 
   /** Land the feed as `dir/page=N` parquet pages, resuming from
     * whatever is already on disk. `maxPages` bounds the pages landed
@@ -105,28 +96,23 @@ object PagedFeed {
     * other page.
     *
     * Single-writer contract: the whole call runs under the landing
-    * lease (`dir/_LOCK`). A second concurrent lander fails fast with
-    * [[ConcurrentLandingException]] instead of interleaving page
-    * overwrites; a CRASHED lander's lease expires after `leaseMs`, at
-    * which point the next run takes the marker over and resumes
-    * normally (the resume rule already absorbs whatever the dead
-    * writer tore). Size `leaseMs` above the worst-case window landing
-    * time — the default 10 min is generous for an API-bounded daily
-    * increment. */
+    * lease (`dir/_LOCK`, [[LandingLease.held]]). A second concurrent
+    * lander fails fast with [[LandingLease.ConcurrentLandingException]]
+    * instead of interleaving page overwrites; a CRASHED lander's lease
+    * goes stale after 15 min, at which point the next run takes the
+    * marker over and resumes normally (the resume rule already absorbs
+    * whatever the dead writer tore). */
   def land(spark: SparkSession, src: PageSource, dir: String, pageSize: Int,
-           maxPages: Int = Int.MaxValue, leaseMs: Long = 600000L): Int = {
+           maxPages: Int = Int.MaxValue): Int = {
     require(pageSize > 0, "pageSize must be positive")
-    require(leaseMs > 0, "leaseMs must be positive")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = LandingLease.acquire(fs, dir, leaseMs)
-    try landLocked(spark, fs, src, dir, pageSize, maxPages)
-    finally LandingLease.release(fs, dir, token)
+    val fs = Sources.fileSystem(spark, dir)
+    LandingLease.held(fs, dir)(landLocked(spark, fs, src, dir, pageSize, maxPages))
   }
 
-  private def landLocked(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+  private def landLocked(spark: SparkSession, fs: FileSystem,
                          src: PageSource, dir: String, pageSize: Int, maxPages: Int): Int = {
     val total = src.total
-    var page = resumePage(spark, dir)
+    var page = resumePage(fs, dir)
     // a COMPLETE last page need not be refetched: completeness is
     // checkable from the landed rows alone (their footer row count ==
     // the page's expected slice of `total`, no Spark job), so

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -38,27 +38,30 @@ object ParquetStats {
     * .crc) are skipped, and so are the part files under `_temporary/…`
     * (a crashed or in-flight commit) and `.spark-staging-*` (a dynamic
     * partition overwrite), while `page=3`-style partition directories
-    * are read. Plain `listStatus` calls, as Spark lists: no
+    * are read. This is the engine's one rule for what a data file is:
+    * reads, footer stats, compaction sizing and the file-count probe
+    * all list through it. Plain `listStatus` calls, as Spark lists: no
     * `LocatedFileStatus`, whose constructor reads every file's
-    * permission. */
+    * permission; each file's listed status (path, length) is returned. */
   private[sources] def parquetFiles(conf: org.apache.hadoop.conf.Configuration,
-                                    path: String): Seq[Path] = {
+                                    path: String): Seq[FileStatus] = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     def hidden(name: String) = name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-    def walk(dir: Path): Iterator[Path] = fs.listStatus(dir).iterator.flatMap { st =>
+    def walk(dir: Path): Iterator[FileStatus] = fs.listStatus(dir).iterator.flatMap { st =>
       val name = st.getPath.getName
       if (hidden(name)) Iterator.empty
       else if (st.isDirectory) walk(st.getPath)
-      else if (name.endsWith(".parquet")) Iterator.single(st.getPath)
+      else if (name.endsWith(".parquet")) Iterator.single(st)
       else Iterator.empty
     }
     val top = fs.getFileStatus(root)
     if (top.isDirectory) walk(top.getPath).toSeq
-    else Seq(top.getPath).filter(_.getName.endsWith(".parquet"))
+    else Seq(top).filter(_.getPath.getName.endsWith(".parquet"))
   }
 
-  /** One parquet footer, opened and closed on the driver. */
+  /** One parquet footer, opened and closed (on the driver, or in an
+    * [[analyzeTable]] task). */
   private def withFooter[A](conf: org.apache.hadoop.conf.Configuration, f: Path)(
       body: ParquetMetadata => A): A = {
     val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
@@ -80,9 +83,23 @@ object ParquetStats {
     * from footer metadata over the data files [[parquetFiles]] lists. */
   def rowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    parquetFiles(conf, path).iterator.map { f =>
-      withFooter(conf, f)(_.getBlocks.asScala.iterator.map(_.getRowCount).sum)
+    parquetFiles(conf, path).iterator.map { st =>
+      withFooter(conf, st.getPath)(_.getBlocks.asScala.iterator.map(_.getRowCount).sum)
     }.sum
+  }
+
+  /** (min, max) of one integer-physical (INT32/INT64) column chunk from
+    * its footer statistics; None when the chunk holds no non-null value.
+    * Fails loudly on a writer that omitted the stats and on non-integer
+    * stats. */
+  private def intRange(st: Statistics[_], column: String, f: Path): Option[(Long, Long)] = {
+    require(st != null && !st.isEmpty, s"writer omitted stats for $column in $f")
+    if (!st.hasNonNullValue) None
+    else (st.genericGetMin, st.genericGetMax) match {
+      case (mn: java.lang.Long, mx: java.lang.Long) => Some((mn.toLong, mx.toLong))
+      case (mn: java.lang.Integer, mx: java.lang.Integer) => Some((mn.toLong, mx.toLong))
+      case other => sys.error(s"non-integer stats for $column: $other")
+    }
   }
 
   /** Per-file (min, max) of an integer-physical column (INT32/INT64 —
@@ -92,24 +109,18 @@ object ParquetStats {
     * a data layout: after [[Sources.writeSortedLayout]], these ranges
     * must be pairwise disjoint (each file owns one key range); on an
     * unsorted write every file spans ~the whole domain and nothing can
-    * skip. Driver-side footer opens, O(files), no data pages. */
+    * skip. Driver-side footer opens, O(files), no data pages. A chunk
+    * without stats or without a non-null value fails the call. */
   def columnRange(spark: SparkSession, path: String,
                   column: String): Seq[(String, Long, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
-    parquetFiles(conf, path).iterator.map { f =>
+    parquetFiles(conf, path).iterator.map(_.getPath).map { f =>
       withFooter(conf, f) { footer =>
         val ranges = footer.getBlocks.asScala.iterator.flatMap { block =>
           block.getColumns.asScala.iterator
             .filter(_.getPath.toDotString == column)
-            .map { cc =>
-              val st: Statistics[_] = cc.getStatistics
-              require(st != null && !st.isEmpty, s"no stats for $column in $f")
-              (st.genericGetMin, st.genericGetMax) match {
-                case (mn: java.lang.Long, mx: java.lang.Long) => (mn.toLong, mx.toLong)
-                case (mn: java.lang.Integer, mx: java.lang.Integer) => (mn.toLong, mx.toLong)
-                case other => sys.error(s"non-integer stats for $column: $other")
-              }
-            }
+            .map(cc => intRange(cc.getStatistics, column, f)
+              .getOrElse(sys.error(s"no non-null $column value in a row group of $f")))
         }.toSeq
         (f.getName, ranges.map(_._1).min, ranges.map(_._2).max)
       }
@@ -140,7 +151,7 @@ object ParquetStats {
     require(columns.nonEmpty, "at least one column")
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
-    val files = parquetFiles(conf, path).map(_.toString)
+    val files = parquetFiles(conf, path).map(_.getPath.toString)
     require(files.nonEmpty, s"no parquet data files under $path")
     val bc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(conf))
@@ -150,11 +161,10 @@ object ParquetStats {
         spark.sparkContext.defaultParallelism)))
       .mapPartitions { it =>
         val c = bc.value.value
-        it.flatMap { f =>
-          val rd = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(f), c))
-          try {
-            val blocks = rd.getFooter.getBlocks.asScala.toSeq
+        it.flatMap { file =>
+          val f = new Path(file)
+          withFooter(c, f) { footer =>
+            val blocks = footer.getBlocks.asScala.toSeq
             cols.map { colName =>
               var rows = 0L
               var nulls = 0L
@@ -166,19 +176,9 @@ object ParquetStats {
                 block.getColumns.asScala
                   .filter(_.getPath.toDotString == colName).foreach { cc =>
                     found = true
-                    val st: Statistics[_] = cc.getStatistics
-                    require(st != null && !st.isEmpty,
-                      s"writer omitted stats for $colName in $f")
-                    nulls += st.getNumNulls
-                    if (st.hasNonNullValue) {
-                      val (a, b) = (st.genericGetMin, st.genericGetMax) match {
-                        case (x: java.lang.Long, y: java.lang.Long) =>
-                          (x.toLong, y.toLong)
-                        case (x: java.lang.Integer, y: java.lang.Integer) =>
-                          (x.toLong, y.toLong)
-                        case other =>
-                          sys.error(s"non-integer stats for $colName: $other")
-                      }
+                    val range = intRange(cc.getStatistics, colName, f)
+                    nulls += cc.getStatistics.getNumNulls
+                    range.foreach { case (a, b) =>
                       mn = Some(mn.fold(a)(math.min(_, a)))
                       mx = Some(mx.fold(b)(math.max(_, b)))
                     }
@@ -186,8 +186,8 @@ object ParquetStats {
               }
               require(found, s"column $colName absent from $f")
               (colName, rows, nulls, mn, mx)
-            } // strict Seq.map: fully materialized before the close below
-          } finally rd.close()
+            } // strict Seq.map: fully materialized before the footer closes
+          }
         }
       }
       .toDF("column_name", "__rows", "__nulls", "__mn", "__mx")

@@ -47,11 +47,6 @@ object RunLedger {
   def readLedger(spark: SparkSession, table: String): DataFrame =
     Sources.readVersion(spark, table, Sources.currentVersion(spark, table))
 
-  /** The ledger AS OF run `version` — what the pipeline had reported
-    * up to that run. */
-  def readAsOf(spark: SparkSession, table: String, version: Long): DataFrame =
-    Sources.readVersion(spark, table, version)
-
   /** Streaming-facing idempotent append (round 11, the f13 sink): land
     * an arbitrary bounded payload as one ledger version stamped with
     * `__batch_id`, EXACTLY ONCE under foreachBatch's at-least-once

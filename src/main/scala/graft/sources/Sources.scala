@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -58,12 +59,8 @@ object Sources {
     * the Hadoop FS API so the same call works on any filesystem the
     * session can reach. */
   def appendRawCsvPart(spark: SparkSession, dirPath: String, name: String,
-                       content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dirPath, name)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
+                       content: String): Unit =
+    writeUtf8(fileSystem(spark, dirPath), new Path(dirPath, name), content, overwrite = true)
 
   /** CSV sink (save_data_to_csv parity). Seconds-precision timestamp
     * format keeps the roundtrip lossless for the canonical feed. */
@@ -94,9 +91,9 @@ object Sources {
   def readParquet(spark: SparkSession, paths: String*): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val files = paths.flatMap { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
+      val path = new Path(p)
       if (path.getFileSystem(conf).exists(path)) ParquetStats.parquetFiles(conf, p) else Nil
-    }
+    }.map(_.getPath)
     if (files.isEmpty) spark.read.parquet(paths: _*)
     else spark.read.schema(ParquetStats.footerSchema(spark, conf, files.minBy(_.toString)))
       .parquet(paths: _*)
@@ -175,16 +172,12 @@ object Sources {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     // a location left behind by a previous session (not in THIS catalog)
     // still blocks CTAS with LOCATION_ALREADY_EXISTS — clear it
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    val fs = fileSystem(spark, loc.toString)
     if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, bucketCol).sortBy(bucketCol).saveAsTable(table)
   }
-
-  /** Read a bucketed table back (bucket metadata intact). */
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
   /** Small-file compaction — the maintenance chore every scheduled
     * pipeline accumulates: each incremental land (a5/a8) writes a few
@@ -193,9 +186,11 @@ object Sources {
     * scans (and whose listing dominates planning). Rewrites a directory
     * into ceil(bytes / targetBytes) files of even size.
     *
-    * Sizing comes from the filesystem (one directory listing — no data
-    * read), summing DATA files only: _SUCCESS / .crc / checksum
-    * sidecars would inflate the byte total and over-split the output.
+    * Sizing comes from the filesystem (a listing — no data read),
+    * summing the data files the reader reads ([[ParquetStats
+    * .parquetFiles]], partition directories included): _SUCCESS / .crc
+    * sidecars and uncommitted debris would inflate the byte total and
+    * over-split the output.
     * The file count tracks the REAL byte volume, not a guessed row
     * count — though targetBytes is approximate under compression-ratio
     * shift: the round-robin shuffle destroys whatever value clustering
@@ -218,10 +213,7 @@ object Sources {
   def compactParquet(spark: SparkSession, srcPath: String, dstPath: String,
                      targetBytes: Long): DataFrame = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val src = new org.apache.hadoop.fs.Path(srcPath)
-    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = fs.listStatus(src).iterator
-      .filter(st => st.isFile && isDataFile(st.getPath.getName))
+    val bytes = ParquetStats.parquetFiles(spark.sessionState.newHadoopConf(), srcPath)
       .map(_.getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     readParquet(spark, srcPath).repartition(n)
@@ -305,16 +297,11 @@ object Sources {
     readParquet(df.sparkSession, path)
   }
 
-  private def isDataFile(name: String): Boolean =
-    name.endsWith(".parquet") || name.endsWith(".snappy.parquet")
-
-  /** Data files (not _SUCCESS/metadata) under a sink path — the
-    * compaction spec's file-count probe. */
-  def dataFiles(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).toSeq.map(_.getPath.getName).filter(isDataFile)
-  }
+  /** Names of the data files under a sink path, as the reader sees them
+    * ([[ParquetStats.parquetFiles]]) — the compaction spec's file-count
+    * probe. */
+  def dataFiles(spark: SparkSession, path: String): Seq[String] =
+    ParquetStats.parquetFiles(spark.sessionState.newHadoopConf(), path).map(_.getPath.getName)
 
   // ------------------------------------------------------------------
   // Versioned snapshot table (round 9) — manifest-gated, append-only.
@@ -345,22 +332,8 @@ object Sources {
     * (no full-table listing); history costs nothing until read.
     * Concurrent writers are out of scope here — serialize them with
     * [[LandingLease]] like the a8/f8 sinks. */
-  def appendVersion(df: DataFrame, spark: SparkSession, table: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val prev = currentVersion(spark, table)
-    val next = prev + 1
-    df.write.mode("overwrite").parquet(s"$table/data/v$next")
-    // the new manifest extends the PREVIOUS version's directory list
-    // (not a blind v1..vN enumeration): after an [[overwriteVersion]]
-    // the chain restarts from the rewrite, so retention can actually
-    // free the pre-rewrite directories. Pure-append tables still
-    // produce manifest_N = v1..vN, byte-identical to the round-9 form.
-    val dirs = (if (prev == 0) Seq.empty else manifestDirs(fs, root, prev, table)) :+
-      s"data/v$next"
-    publishManifest(fs, root, next, dirs, table)
-    next
-  }
+  def appendVersion(df: DataFrame, spark: SparkSession, table: String): Long =
+    publishVersion(df, spark, table, chain = true)
 
   /** Publish a full-snapshot REWRITE as the next version: the manifest
     * lists ONLY the new data directory, cutting the chain to every
@@ -371,12 +344,25 @@ object Sources {
     * [[retainVersions]] expires them — at which point the pre-rewrite
     * directories become unreferenced and reclaimable, which is what
     * gives retention GC real bytes to free. */
-  def overwriteVersion(df: DataFrame, spark: SparkSession, table: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val next = currentVersion(spark, table) + 1
+  def overwriteVersion(df: DataFrame, spark: SparkSession, table: String): Long =
+    publishVersion(df, spark, table, chain = false)
+
+  /** Land `df` as `data/v<N>`, N = newest published version + 1, then
+    * publish `manifest_<N>`: the body of [[appendVersion]] and
+    * [[overwriteVersion]], which differ only in the directory list.
+    * With `chain` the new manifest extends the PREVIOUS version's list
+    * (not a blind v1..vN enumeration): after an [[overwriteVersion]]
+    * the chain restarts from the rewrite, so retention can actually
+    * free the pre-rewrite directories. Pure-append tables still
+    * produce manifest_N = v1..vN, byte-identical to the round-9 form. */
+  private def publishVersion(df: DataFrame, spark: SparkSession, table: String,
+                             chain: Boolean): Long = {
+    val fs = fileSystem(spark, table)
+    val prev = versions(fs, table).lastOption.getOrElse(0L)
+    val next = prev + 1
     df.write.mode("overwrite").parquet(s"$table/data/v$next")
-    publishManifest(fs, root, next, Seq(s"data/v$next"), table)
+    val kept = if (chain && prev > 0) manifestDirs(fs, table, prev) else Seq.empty
+    publishManifest(fs, table, next, kept :+ s"data/v$next")
     next
   }
 
@@ -406,43 +392,33 @@ object Sources {
   def retainVersions(spark: SparkSession, table: String,
                      keepLast: Int): (Seq[Long], Seq[String]) = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return (Seq.empty, Seq.empty)
-    val token = LandingLease.acquire(fs, table, leaseMs = 10 * 60 * 1000L)
-    try {
-      val versions = listVersions(spark, table)
-      val live = versions.takeRight(keepLast)
-      val expired = versions.dropRight(keepLast)
-      expired.foreach(v =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"manifest_$v"), false))
-      val referenced = live.flatMap(v => manifestDirs(fs, root, v, table)).toSet
+    val fs = fileSystem(spark, table)
+    if (!fs.exists(new Path(table))) (Seq.empty, Seq.empty)
+    else LandingLease.held(fs, table) {
+      val all = versions(fs, table)
+      val live = all.takeRight(keepLast)
+      val expired = all.dropRight(keepLast)
+      expired.foreach(v => fs.delete(new Path(table, s"manifest_$v"), false))
+      val referenced = live.flatMap(v => manifestDirs(fs, table, v)).toSet
       val maxLive = live.lastOption.getOrElse(0L)
-      val dataRoot = new org.apache.hadoop.fs.Path(root, "data")
-      val removable =
-        if (!fs.exists(dataRoot)) Seq.empty
-        else fs.listStatus(dataRoot).toSeq.filter(_.isDirectory).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            !referenced.contains(s"data/$n") &&
-              n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-              n.drop(1).toLong <= maxLive
-          }
-      removable.foreach(p => fs.delete(p, true))
-      (expired, removable.map(p => s"data/${p.getName}"))
-    } finally LandingLease.release(fs, table, token)
+      val removable = dataDirs(fs, table).filter { n =>
+        !referenced.contains(s"data/$n") && n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
+          n.drop(1).toLong <= maxLive
+      }.map(n => s"data/$n")
+      removable.foreach(d => fs.delete(new Path(table, d), true))
+      (expired, removable)
+    }
   }
 
   /** All published (manifest-gated) versions, ascending. */
-  def listVersions(spark: SparkSession, table: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+  def listVersions(spark: SparkSession, table: String): Seq[Long] =
+    versions(fileSystem(spark, table), table)
+
+  private def versions(fs: FileSystem, table: String): Seq[Long] =
+    children(fs, new Path(table)).map(_.getPath.getName)
       .filter(_.startsWith("manifest_"))
       .map(_.stripPrefix("manifest_").toLong)
       .sorted
-  }
 
   /** Highest published (manifest-gated) version, 0 when none. */
   def currentVersion(spark: SparkSession, table: String): Long =
@@ -450,48 +426,65 @@ object Sources {
 
   /** Data directory names currently on disk under `table/data` —
     * retention-spec probe (referenced and orphaned alike). */
-  def versionDataDirs(spark: SparkSession, table: String): Seq[String] = {
-    val dataRoot = new org.apache.hadoop.fs.Path(table, "data")
-    val fs = dataRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dataRoot)) Seq.empty
-    else fs.listStatus(dataRoot).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).sorted
-  }
+  def versionDataDirs(spark: SparkSession, table: String): Seq[String] =
+    dataDirs(fileSystem(spark, table), table)
+
+  private def dataDirs(fs: FileSystem, table: String): Seq[String] =
+    children(fs, new Path(table, "data")).filter(_.isDirectory).map(_.getPath.getName).sorted
 
   /** Read a snapshot AS OF `version` — exactly the directories its
     * manifest lists, nothing else (orphan data from torn writes is
     * invisible; later versions do not leak in). */
-  def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dirs = manifestDirs(fs, root, version, table)
-    readParquet(spark, dirs.map(d => s"$table/$d"): _*)
-  }
+  def readVersion(spark: SparkSession, table: String, version: Long): DataFrame =
+    readParquet(spark, manifestDirs(fileSystem(spark, table), table, version)
+      .map(d => s"$table/$d"): _*)
 
   /** Atomic manifest publish: write to a dot-prefixed temp (invisible
     * to the `manifest_` prefix filter) and rename into place. */
-  private def publishManifest(fs: org.apache.hadoop.fs.FileSystem,
-                              root: org.apache.hadoop.fs.Path, version: Long,
-                              dirs: Seq[String], table: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(root, s".manifest_$version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(dirs.mkString("\n").getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(root, s"manifest_$version")))
+  private def publishManifest(fs: FileSystem, table: String, version: Long,
+                              dirs: Seq[String]): Unit = {
+    val tmp = new Path(table, s".manifest_$version.tmp")
+    writeUtf8(fs, tmp, dirs.mkString("\n"), overwrite = true)
+    if (!fs.rename(tmp, new Path(table, s"manifest_$version")))
       throw new java.io.IOException(s"failed to publish manifest_$version in $table")
   }
 
   /** The directory list a published manifest carries; throws on a
     * never-published version and rejects empty (torn) manifests. */
-  private def manifestDirs(fs: org.apache.hadoop.fs.FileSystem,
-                           root: org.apache.hadoop.fs.Path, version: Long,
-                           table: String): Seq[String] = {
-    val mf = new org.apache.hadoop.fs.Path(root, s"manifest_$version")
+  private def manifestDirs(fs: FileSystem, table: String, version: Long): Seq[String] = {
+    val mf = new Path(table, s"manifest_$version")
     require(fs.exists(mf), s"version $version was never published in $table")
-    val in = fs.open(mf)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val dirs = body.split("\n").toSeq.filter(_.nonEmpty)
+    val dirs = readUtf8(fs, mf).split("\n").toSeq.filter(_.nonEmpty)
     require(dirs.nonEmpty, s"manifest_$version in $table is empty (torn publish?)")
     dirs
+  }
+
+  // ------------------------------------------------------------------
+  // File-system rules shared by every sink, lease and version store.
+  // ------------------------------------------------------------------
+
+  /** The filesystem of `path`, resolved on the Hadoop conf Spark's own
+    * file reads use (`sessionState.newHadoopConf()`: the context's conf
+    * plus the session's SQL-level overrides), so every driver-side
+    * mutation reaches a path the way the session's reads do. */
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The entries directly under `dir`; none when `dir` does not exist. */
+  private[graft] def children(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+
+  /** The whole content of a small UTF-8 file (a manifest, a lease marker). */
+  private[sources] def readUtf8(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** Write a small UTF-8 file. With `overwrite = false` the create throws
+    * an IOException when `p` already exists. */
+  private[sources] def writeUtf8(fs: FileSystem, p: Path, text: String,
+                                 overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 }

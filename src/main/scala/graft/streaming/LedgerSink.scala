@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * mid-stream — the grouped totals equal one batch query over the
   * whole feed, which is exactly what the DuckDB oracle checks. The
   * ledger versions additionally give "what had been reported as of
-  * batch N" for free (readAsOf).
+  * batch N" for free ([[graft.sources.Sources.readVersion]]).
   *
   * Scale shape: each batch's report is hour-bucket-bounded (a
   * dimension, not the data); the corpus-sized work is one partial

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Checkpoint._
+import graft.sources.{LandingLease, Sources}
 
 /** Streaming keyed-table upsert — the `foreachBatch` CDC-sink pattern.
   *
@@ -52,31 +54,27 @@ object Upsert {
     * stops an operator error from starting a second query on the same
     * table — two interleaved dynamic overwrites would corrupt buckets.
     * A second writer fails fast with ConcurrentLandingException; a
-    * crashed writer's stale lease (past `leaseMs`) is taken over. */
+    * crashed writer's stale lease (15 min) is taken over. */
   def upsertIntoTable(spark: SparkSession, batch: DataFrame, tablePath: String,
                       keyCol: String, seqCol: String, tieCol: String,
-                      nBuckets: Int, leaseMs: Long = 15 * 60 * 1000L): Unit = {
-    val leaseFs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tablePath), spark.sparkContext.hadoopConfiguration)
-    leaseFs.mkdirs(new org.apache.hadoop.fs.Path(tablePath)) // lease marker needs the dir
-    val token = graft.sources.LandingLease.acquire(leaseFs, tablePath, leaseMs)
-    try upsertLocked(spark, batch, tablePath, keyCol, seqCol, tieCol, nBuckets)
-    finally graft.sources.LandingLease.release(leaseFs, tablePath, token)
+                      nBuckets: Int): Unit = {
+    val fs = Sources.fileSystem(spark, tablePath)
+    fs.mkdirs(new Path(tablePath)) // lease marker needs the dir
+    LandingLease.held(fs, tablePath)(
+      upsertLocked(spark, fs, batch, tablePath, keyCol, seqCol, tieCol, nBuckets))
   }
 
-  private def upsertLocked(spark: SparkSession, batch: DataFrame, tablePath: String,
-                           keyCol: String, seqCol: String, tieCol: String,
-                           nBuckets: Int): Unit = {
+  private def upsertLocked(spark: SparkSession, fs: FileSystem, batch: DataFrame,
+                           tablePath: String, keyCol: String, seqCol: String,
+                           tieCol: String, nBuckets: Int): Unit = {
     val bucketed = batch.withColumn("bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
     // batch-local keep-latest first: the merge input shrinks to one row
     // per key before any table bytes are read
     val batchLatest = graft.ingest.Ingest.dedupKeepLatest(
       bucketed, Seq(keyCol), seqCol, tieCol)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tablePath), spark.sparkContext.hadoopConfiguration)
     // "table exists" = has bucket partitions, not "directory exists" —
     // the lease marker (and its parent mkdirs) precede the first merge
-    val exists = fs.listStatus(new org.apache.hadoop.fs.Path(tablePath))
+    val exists = Sources.children(fs, new Path(tablePath))
       .exists(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
     val merged =
       if (!exists) batchLatest
@@ -84,7 +82,7 @@ object Upsert {
         // touched-bucket list is bounded by nBuckets — a driver-safe pull
         val touched = batchLatest.select(col("bucket")).distinct()
           .collect().map(_.getInt(0)).toSeq
-        val existing = graft.sources.Sources.readParquet(spark, tablePath)
+        val existing = Sources.readParquet(spark, tablePath)
           .filter(col("bucket").isin(touched: _*))
         graft.ingest.Ingest.dedupKeepLatest(
           existing.unionByName(batchLatest), Seq(keyCol), seqCol, tieCol)
@@ -92,7 +90,7 @@ object Upsert {
     // eager pin: the overwrite below deletes the very files `merged`'s
     // lineage would re-read (contract 3)
     val pinned = merged.checkpointAs("Upsert.upsertLocked.merged", eager = true)
-    graft.sources.Sources.relandPartitions(pinned, tablePath, Seq("bucket"))
+    Sources.relandPartitions(pinned, tablePath, Seq("bucket"))
   }
 
   /** The streaming sink: every micro-batch upserts into `tablePath`.
@@ -113,5 +111,5 @@ object Upsert {
   /** Read the maintained state table (bucket column dropped — layout is
     * an implementation detail of the sink, not part of the row). */
   def readTable(spark: SparkSession, tablePath: String): DataFrame =
-    graft.sources.Sources.readParquet(spark, tablePath).drop("bucket")
+    Sources.readParquet(spark, tablePath).drop("bucket")
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.sources.Sources
+import org.apache.hadoop.fs.Path
+import graft.sources.{LandingLease, PagedFeed, Sources}
+import graft.streaming.Upsert
 
 /** Local-disk FileSystem registered under the `graftfs://` scheme —
   * lets the suite prove the Sources writers resolve any configured
@@ -77,6 +79,30 @@ class SourcesSpec extends SparkSpec {
       s"graftfs://$base/pq", Seq("k"))
     val pqBack = Sources.readParquet(spark, s"graftfs://$base/pq")
     assert(pqBack.count() == 2)
+    // every directory mutator resolves its path through the same lookup:
+    // the paged lander and its lease, the version store and retention,
+    // the upsert sink and compaction
+    val fs = Sources.fileSystem(spark, s"graftfs://$base")
+    val feed = pagedFeedFixture(10)
+    val landing = s"graftfs://$base/landing"
+    assert(PagedFeed.land(spark, new PagedFeed.OrderedFramePages(feed, "id"), landing, 4) == 3)
+    assert(PagedFeed.load(spark, landing).select("id", "payload").collect().toSet ==
+      feed.collect().toSet)
+    assert(!fs.exists(new Path(landing, "_LOCK")))
+    val versions = s"graftfs://$base/versions"
+    assert(Sources.appendVersion(df, spark, versions) == 1L)
+    assert(Sources.overwriteVersion(df.filter(col("id") === 2L), spark, versions) == 2L)
+    assert(Sources.readVersion(spark, versions, 1L).collect().toSet == df.collect().toSet)
+    assert(Sources.retainVersions(spark, versions, 1) == ((Seq(1L), Seq("data/v1"))))
+    assert(Sources.readVersion(spark, versions, 2L).select("id").as[Long].collect().toSeq ==
+      Seq(2L))
+    val table = s"graftfs://$base/table"
+    Upsert.upsertIntoTable(spark, feed.withColumn("ts", col("id")), table, "id", "ts", "payload", 4)
+    assert(Upsert.readTable(spark, table).select("id", "payload").collect().toSet ==
+      feed.collect().toSet)
+    assert(!fs.exists(new Path(table, "_LOCK")))
+    val packed = Sources.compactParquet(spark, landing, s"graftfs://$base/packed", 1L << 20)
+    assert(packed.select("id", "payload").collect().toSet == feed.collect().toSet)
   }
 
   test("bucketed tables join with zero Exchange") {
@@ -90,8 +116,8 @@ class SourcesSpec extends SparkSpec {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Sources.readTable(spark, "spec_bkt_a")
-        .join(Sources.readTable(spark, "spec_bkt_b"), col("ka") === col("kb"))
+      val joined = spark.table("spec_bkt_a")
+        .join(spark.table("spec_bkt_b"), col("ka") === col("kb"))
       assert(joined.count() == 100L * 5) // 10 va x 5 vb per key
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan)
@@ -201,8 +227,6 @@ class SourcesSpec extends SparkSpec {
 
   // ---- a8: offset-paginated feed landing (PagedFeed) ----
 
-  import graft.sources.PagedFeed
-
   private def pagedFeedFixture(n: Int) =
     (1 to n).map(i => (i.toLong * 10, s"rec$i")).toDF("id", "payload")
 
@@ -271,7 +295,7 @@ class SourcesSpec extends SparkSpec {
     }
     // a LIVE lease (far-future expiry): the second lander must refuse
     plantLock(System.currentTimeMillis() + 3600000L)
-    intercept[PagedFeed.ConcurrentLandingException] {
+    intercept[LandingLease.ConcurrentLandingException] {
       PagedFeed.land(spark, src, dir, 4)
     }
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/page=0")),
@@ -304,6 +328,65 @@ class SourcesSpec extends SparkSpec {
       accumulated, PagedFeed.load(spark, dir).drop("page"), "id")
     assert(merged.count() == 15)
     assert(merged.select("id").as[Long].collect().toSet == all.select("id").as[Long].collect().toSet)
+  }
+
+  test("compaction sizes a partitioned input by its data files") {
+    // a paged landing is `page=N` directories: every data file sits one
+    // level down, and all of them count toward the output file count
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_pages").toString
+    val feed = (1 to 4000).map(i => (i.toLong, s"payload_$i")).toDF("id", "payload")
+    PagedFeed.land(spark, new PagedFeed.OrderedFramePages(feed, "id"), s"$dir/landing", 500)
+    val fs = Sources.fileSystem(spark, dir)
+    val files = fs.listFiles(new Path(dir, "landing"), true)
+    val bytes = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val target = 8L * 1024
+    val expected = math.ceil(bytes.toDouble / target).toInt
+    assert(expected > 1, s"fixture too small: $bytes bytes")
+    val back = Sources.compactParquet(spark, s"$dir/landing", s"$dir/packed", target)
+    assert(Sources.dataFiles(spark, s"$dir/packed").size == expected)
+    assert(back.orderBy("id").collect().toSeq ==
+      PagedFeed.load(spark, s"$dir/landing").orderBy("id").collect().toSeq)
+  }
+
+  test("a lease scope is released when its body throws, and a re-run completes") {
+    val feed = pagedFeedFixture(12) // pageSize 4 -> pages 0, 1, 2
+    val dir = java.nio.file.Files.createTempDirectory("graft_lease_throw").toString
+    val fs = Sources.fileSystem(spark, dir)
+    def causes(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+    // a feed that goes down on page 1: page 0 stays landed, nothing else
+    val good = new PagedFeed.OrderedFramePages(feed, "id")
+    val down = new PagedFeed.PageSource {
+      override def total: Long = good.total
+      override def fetch(offset: Long, length: Int): org.apache.spark.sql.DataFrame =
+        if (offset >= length) throw new IllegalStateException("feed down on page 1")
+        else good.fetch(offset, length)
+    }
+    val landing = s"$dir/landing"
+    intercept[IllegalStateException](PagedFeed.land(spark, down, landing, 4))
+    assert(!fs.exists(new Path(landing, "_LOCK")))
+    assert(PagedFeed.load(spark, landing).select("page").distinct().as[Int].collect().toSeq ==
+      Seq(0))
+    assert(PagedFeed.land(spark, good, landing, 4) == 2) // pages 1 and 2
+    assert(PagedFeed.load(spark, landing).select("id", "payload").collect().toSet ==
+      feed.collect().toSet)
+    // an upsert batch whose evaluation throws leaves the table as it was
+    val table = s"$dir/table"
+    val base = feed.withColumn("ts", col("id"))
+    Upsert.upsertIntoTable(spark, base, table, "id", "ts", "payload", 4)
+    val before = Upsert.readTable(spark, table).collect().toSet
+    val poisoned = base.withColumn("ts",
+      when(col("id") === 50L, raise_error(lit("poisoned batch"))).otherwise(col("ts") + 100))
+    val e = intercept[Exception](
+      Upsert.upsertIntoTable(spark, poisoned, table, "id", "ts", "payload", 4))
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("poisoned batch")), e)
+    assert(!fs.exists(new Path(table, "_LOCK")))
+    assert(Upsert.readTable(spark, table).collect().toSet == before)
+    val healthy = base.withColumn("ts", col("ts") + 100)
+      .withColumn("payload", concat(col("payload"), lit("+")))
+    Upsert.upsertIntoTable(spark, healthy, table, "id", "ts", "payload", 4)
+    assert(Upsert.readTable(spark, table).select("id", "payload", "ts").collect().toSet ==
+      healthy.collect().toSet)
   }
 
   test("compaction shrinks the file count, content layout-invariant") {
@@ -503,7 +586,7 @@ class SourcesSpec extends SparkSpec {
     assert(all.length == 3)
     assert(all.map(_.getAs[java.sql.Timestamp]("run_ts")).distinct.toSet == Set(t1, t2))
     // as-of run 1: only run 1's rows (what the pipeline knew then)
-    assert(RunLedger.readAsOf(spark, table, 1L).collect()
+    assert(Sources.readVersion(spark, table, 1L).collect()
       .map(r => (r.getAs[String]("operator"), r.getAs[String]("metric"))).toSeq ==
       Seq(("b9", "rows")))
     // torn run: a crashed writer landed data but never published —
@@ -587,11 +670,11 @@ class SourcesSpec extends SparkSpec {
     Sources.overwriteVersion(Seq((1L, "a")).toDF("id", "s"), spark, tD)
     val fsD = new org.apache.hadoop.fs.Path(tD).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val tok = graft.sources.LandingLease.acquire(fsD, tD, 60000L)
-    intercept[graft.sources.LandingLease.ConcurrentLandingException] {
-      Sources.retainVersions(spark, tD, 1)
+    LandingLease.held(fsD, tD) {
+      intercept[LandingLease.ConcurrentLandingException] {
+        Sources.retainVersions(spark, tD, 1)
+      }
     }
-    graft.sources.LandingLease.release(fsD, tD, tok)
     assert(Sources.retainVersions(spark, tD, 1) == (Seq.empty, Seq.empty))
     // crash mid-GC: manifests deleted but data dirs not yet — simulate
     // by hand-deleting the expired manifest, leaving v2's dir orphaned
