@@ -40,20 +40,21 @@ object VectorExpressions {
   private def elemCode(e: Expression): Int =
     elemCodes(e.dataType.asInstanceOf[ArrayType].elementType)
 
-  /** Analysis-time validation: every child must be array<numeric> with a
-    * supported element width — without this, bad inputs surface as raw
-    * ClassCastException from deep inside eval/codegen at runtime. */
-  private def checkNumericArrays(name: String, children: Seq[Expression]): TypeCheckResult = {
-    children.zipWithIndex.foreach { case (c, i) =>
-      c.dataType match {
-        case ArrayType(et, _) if elemCodes.contains(et) => ()
-        case other => return TypeCheckResult.TypeCheckFailure(
-          s"$name argument ${i + 1} must be array<double|float|bigint|int>, got " +
-            other.catalogString)
-      }
-    }
-    TypeCheckResult.TypeCheckSuccess
-  }
+  /** Analysis-time validation: every child must be an array whose
+    * element type `ok` accepts (`want` names them) — without this, bad
+    * inputs surface as raw ClassCastException from deep inside
+    * eval/codegen at runtime. The first failing argument is reported. */
+  private def checkArrays(name: String, children: Seq[Expression], want: String)(
+      ok: DataType => Boolean): TypeCheckResult =
+    children.zipWithIndex.collectFirst {
+      case (c, i) if !PartialFunction.cond(c.dataType) { case ArrayType(et, _) => ok(et) } =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$name argument ${i + 1} must be array<$want>, got " + c.dataType.catalogString)
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+  /** [[checkArrays]] over every supported numeric element width. */
+  private def checkNumericArrays(name: String, children: Seq[Expression]): TypeCheckResult =
+    checkArrays(name, children, "double|float|bigint|int")(elemCodes.contains)
 
   /** Dot product of two numeric array columns, as primitive codegen.
     * Mismatched lengths truncate to the shorter array (documented
@@ -210,17 +211,8 @@ object VectorExpressions {
   case class SortedIntersectCount(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult = {
-      Seq(left, right).zipWithIndex.foreach { case (c, i) =>
-        c.dataType match {
-          case ArrayType(LongType, _) => ()
-          case other => return TypeCheckResult.TypeCheckFailure(
-            s"sorted_intersect_count argument ${i + 1} must be array<bigint>, got " +
-              other.catalogString)
-        }
-      }
-      TypeCheckResult.TypeCheckSuccess
-    }
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkArrays("sorted_intersect_count", Seq(left, right), "bigint")(_ == LongType)
     override protected def nullSafeEval(a: Any, b: Any): Any =
       VectorKernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -7,6 +7,12 @@ import graft.vector.Similarity
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  /** The two symbols of a BPE merge, written "x y". */
+  private def mergePair(pair: String): (String, String) = pair.split(" ") match {
+    case Array(x, y) => (x, y)
+    case _ => fail(s"malformed merge pair '$pair'")
+  }
+
   lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river bank today", "en", "s1"),
     (2L, "The quick brown fox jumps over the lazy dog near the river bank today!", "en", "s1"), // near-dup of 1 (case/punct)
@@ -438,7 +444,7 @@ class DedupSimilaritySpec extends SparkSpec {
         else {
           val (pair, cnt) = cands.minBy { case (p, c) => (-c, p) }
           out += ((r.toLong, pair, cnt))
-          val Array(x, y) = pair.split(" ")
+          val (x, y) = mergePair(pair)
           vocab = vocab.map { case (syms, c) =>
             val b = Vector.newBuilder[String]
             var i = 0
@@ -489,7 +495,7 @@ class DedupSimilaritySpec extends SparkSpec {
         w -> (w.map(_.toString).toVector :+ "_") }.toMap
       val merges = refBpe(wordFreq, n, minCount)
       for ((_, pair, _) <- merges) {
-        val Array(x, y) = pair.split(" ")
+        val (x, y) = mergePair(pair)
         vocab = vocab.map { case (w, syms) =>
           val b = Vector.newBuilder[String]
           var i = 0
@@ -1049,7 +1055,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def encode(word: String): Long = {
       var syms = word.map(_.toString).toVector :+ "_"
       for (pair <- merges) {
-        val Array(x, y) = pair.split(" ")
+        val (x, y) = mergePair(pair)
         val b = Vector.newBuilder[String]
         var i = 0
         while (i < syms.length) {
@@ -1516,7 +1522,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out("raw") == ((5L, 0L)), s"got $out")
     // counts must be monotone non-increasing and drops must reconcile
     val order = Seq("raw", "lang_en", "quality", "length", "exact_dedup")
-    order.sliding(2).foreach { case Seq(a, b) =>
+    order.zip(order.tail).foreach { case (a, b) =>
       assert(out(b)._1 <= out(a)._1, s"$b grew vs $a: $out")
       assert(out(b)._2 == out(a)._1 - out(b)._1, s"$b drop mismatch: $out")
     }

@@ -13,6 +13,28 @@ class VectorExpressionsSpec extends SparkSpec {
   }
   lazy val df = vecs.toDF("id", "vec")
 
+  test("array type checks name the first bad argument and its type") {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
+    import VectorExpressions.{ArrayDot, SortedIntersectCount}
+    val doubles = Literal.create(Seq(1.0), ArrayType(DoubleType))
+    val longs = Literal.create(Seq(1L), ArrayType(LongType))
+    val strings = Literal.create(Seq("a"), ArrayType(StringType))
+    def failure(e: Expression): String = e.checkInputDataTypes() match {
+      case TypeCheckFailure(message) => message
+      case other => fail(s"expected a type-check failure, got $other")
+    }
+    assert(ArrayDot(doubles, longs).checkInputDataTypes().isSuccess)
+    assert(failure(ArrayDot(doubles, strings)) ==
+      "array_dot argument 2 must be array<double|float|bigint|int>, got array<string>")
+    assert(failure(ArrayDot(Literal(1.0), strings)) ==
+      "array_dot argument 1 must be array<double|float|bigint|int>, got double")
+    assert(SortedIntersectCount(longs, longs).checkInputDataTypes().isSuccess)
+    assert(failure(SortedIntersectCount(longs, doubles)) ==
+      "sorted_intersect_count argument 2 must be array<bigint>, got array<double>")
+  }
+
   /** Driver-side reference: identical float->double promotion and
     * left-to-right accumulation order as the native loops. */
   private def refDot(a: Array[Float], b: Array[Double]): Double = {
