@@ -182,32 +182,6 @@ object Ingest {
       .withColumn("is_current", col("valid_to").isNull)
   }
 
-  /** Snapshot reconciliation audit: compare an incrementally-maintained
-    * table ([[incrementalIngest]]/[[cdcMerge]] state) against a fresh
-    * full snapshot and report, per key, exactly how they disagree —
-    * the trust check the reference's scheduled full re-land
-    * (data_extraction.py:135-172 silently overwrites) never performs.
-    * Incremental pipelines drift in practice (missed pages, replayed
-    * batches, torn writes); this is the bounded-cost audit that
-    * catches it.
-    *
-    * Both sides collapse to per-key (row count, Σ row-digest) with
-    * ordinary partial-aggregated `groupBy` — order-independent sums,
-    * so the digest needs no sort — then a full-outer join of the two
-    * SMALL aggregate tables classifies each key:
-    * `missing_in_state`, `missing_in_snapshot`, `count_mismatch`,
-    * `digest_mismatch` (same cardinality, different content). Matching
-    * keys drop, so the output is the (tiny) diff, never the data.
-    *
-    * Scale shape: each 100 TB side is ONE narrow scan into a map-side-
-    * combined aggregate; only per-key digests shuffle. The digest sum
-    * accumulates in decimal(38,0) — exact, overflow-free for any corpus
-    * that fits in 10^19 rows per key. `digestCol` is a caller-supplied
-    * bigint row fingerprint (see SparkEntry's a10 entry for the
-    * engine-portable modular-arithmetic form; any engine-reproducible
-    * hash works). A null digest counts toward `*_rows` but adds nothing
-    * to the sum on either side — both engines' SUM skips nulls — so
-    * null-digest rows reconcile by count alone. */
   /** Backfill planner (round 8): which day-partitions of a time-keyed
     * feed need re-landing — the decision input [[graft.sources.Sources
     * .relandPartitions]] consumes and the reference's scheduler decides
@@ -283,6 +257,32 @@ object Ingest {
           .otherwise(col(s"__c_$a")).as(a)): _*)
   }
 
+  /** Snapshot reconciliation audit: compare an incrementally-maintained
+    * table ([[incrementalIngest]]/[[cdcMerge]] state) against a fresh
+    * full snapshot and report, per key, exactly how they disagree —
+    * the trust check the reference's scheduled full re-land
+    * (data_extraction.py:135-172 silently overwrites) never performs.
+    * Incremental pipelines drift in practice (missed pages, replayed
+    * batches, torn writes); this is the bounded-cost audit that
+    * catches it.
+    *
+    * Both sides collapse to per-key (row count, Σ row-digest) with
+    * ordinary partial-aggregated `groupBy` — order-independent sums,
+    * so the digest needs no sort — then a full-outer join of the two
+    * SMALL aggregate tables classifies each key:
+    * `missing_in_state`, `missing_in_snapshot`, `count_mismatch`,
+    * `digest_mismatch` (same cardinality, different content). Matching
+    * keys drop, so the output is the (tiny) diff, never the data.
+    *
+    * Scale shape: each 100 TB side is ONE narrow scan into a map-side-
+    * combined aggregate; only per-key digests shuffle. The digest sum
+    * accumulates in decimal(38,0) — exact, overflow-free for any corpus
+    * that fits in 10^19 rows per key. `digestCol` is a caller-supplied
+    * bigint row fingerprint (see SparkEntry's a10 entry for the
+    * engine-portable modular-arithmetic form; any engine-reproducible
+    * hash works). A null digest counts toward `*_rows` but adds nothing
+    * to the sum on either side — both engines' SUM skips nulls — so
+    * null-digest rows reconcile by count alone. */
   def snapshotReconcile(state: DataFrame, snapshot: DataFrame, keyCol: String,
                         digestCol: String): DataFrame = {
     def digests(df: DataFrame, n: String, s: String) =

@@ -46,29 +46,6 @@ object Sampling {
     df.filter(hashBucket(col(idCol)) < rate * buckets)
   }
 
-  /** Temperature-scaled mixture sampling (T = 2): derive each source's
-    * sampling rate from the corpus itself so the sampled mixture
-    * up-weights small sources relative to their raw share — the
-    * standard multilingual/multi-source training-data mixing move
-    * (weight ∝ n^(1/T); T = 2 is the sqrt form, hardwired because
-    * IEEE-754 requires sqrt correctly rounded, so every engine
-    * computes the identical weight — a general-T pow() carries no such
-    * guarantee). The overall take targets `budgetNum/budgetDen` of the
-    * corpus; a source's per-row rate is
-    *   rate_s = budget · N · w_s / (W · n_s),  w_s = ⌊√n_s·1000⌋,
-    * capped at 1, applied via the same deterministic id-hash bucket as
-    * [[stratifiedSample]]. Thresholds are computed entirely in integer
-    * arithmetic (decimal(38,0) here, HUGEINT in the SQL oracle) so the
-    * bucket comparison is bit-identical across engines — no float
-    * normalizer whose summation order could flip a boundary row.
-    *
-    * Scale shape: per-source counts are one partial-aggregated
-    * groupBy over a column that is typically low-cardinality (sources
-    * number thousands, not billions); the S-row rate table broadcasts
-    * back and selection is a narrow filter — the corpus itself never
-    * shuffles. Intermediate products stay under 10^4·num·N·w_s ≈
-    * 10^23·num at N = 10^11 docs — inside decimal(38,0)/HUGEINT range.
-    */
   /** Per-group top-quantile filter (round 8) — the quality-filtering
     * step every pretraining corpus build runs (CCNet/FineWeb shape):
     * within each group keep the rows whose `valueCol` lands in the top
@@ -134,11 +111,10 @@ object Sampling {
     require(cap > 0, "cap must be positive")
     require(nBuckets > 0, "bucket count must be positive")
     val p = graft.text.Dedup.AffineP
-    val (a, b) = (graft.text.Dedup.hashConst("e47-a", 0),
-      graft.text.Dedup.hashConst("e47-b", 0))
     val q = (p + nBuckets - 1) / nBuckets // bucket width: b = r div q
     val withR = df
-      .withColumn("__r", (lit(a) * pmod(col(idCol).cast("long"), lit(p)) + lit(b)) % p)
+      .withColumn("__r",
+        graft.text.Dedup.affineHash(pmod(col(idCol).cast("long"), lit(p)), "e47", 0))
       .filter(col("__r").isNotNull && col(groupCol).isNotNull)
       .withColumn("__bk", floor(col("__r") / q).cast("long"))
     val cum = withR.groupBy(col(groupCol), col("__bk"))
@@ -186,11 +162,10 @@ object Sampling {
     require(nShards > 0, "shard count must be positive")
     require(nBuckets > 0, "bucket count must be positive")
     val p = graft.text.Dedup.AffineP
-    val (a, b) = (graft.text.Dedup.hashConst("e48-a", 0),
-      graft.text.Dedup.hashConst("e48-b", 0))
     val q = (p + nBuckets - 1) / nBuckets
     val keyed = df
-      .withColumn("__r", (lit(a) * pmod(col(idCol).cast("long"), lit(p)) + lit(b)) % p)
+      .withColumn("__r",
+        graft.text.Dedup.affineHash(pmod(col(idCol).cast("long"), lit(p)), "e48", 0))
       .filter(col("__r").isNotNull)
       .withColumn("shard", pmod(col("__r"), lit(nShards.toLong)))
       .withColumn("__bk", floor(col("__r") / q).cast("long"))
@@ -207,6 +182,29 @@ object Sampling {
       .drop("__r", "__bk", "__off")
   }
 
+  /** Temperature-scaled mixture sampling (T = 2): derive each source's
+    * sampling rate from the corpus itself so the sampled mixture
+    * up-weights small sources relative to their raw share — the
+    * standard multilingual/multi-source training-data mixing move
+    * (weight ∝ n^(1/T); T = 2 is the sqrt form, hardwired because
+    * IEEE-754 requires sqrt correctly rounded, so every engine
+    * computes the identical weight — a general-T pow() carries no such
+    * guarantee). The overall take targets `budgetNum/budgetDen` of the
+    * corpus; a source's per-row rate is
+    *   rate_s = budget · N · w_s / (W · n_s),  w_s = ⌊√n_s·1000⌋,
+    * capped at 1, applied via the same deterministic id-hash bucket as
+    * [[stratifiedSample]]. Thresholds are computed entirely in integer
+    * arithmetic (decimal(38,0) here, HUGEINT in the SQL oracle) so the
+    * bucket comparison is bit-identical across engines — no float
+    * normalizer whose summation order could flip a boundary row.
+    *
+    * Scale shape: per-source counts are one partial-aggregated
+    * groupBy over a column that is typically low-cardinality (sources
+    * number thousands, not billions); the S-row rate table broadcasts
+    * back and selection is a narrow filter — the corpus itself never
+    * shuffles. Intermediate products stay under 10^4·num·N·w_s ≈
+    * 10^23·num at N = 10^11 docs — inside decimal(38,0)/HUGEINT range.
+    */
   def temperatureMixSample(df: DataFrame, idCol: String, srcCol: String,
                            budgetNum: Long, budgetDen: Long): DataFrame = {
     require(budgetNum > 0 && budgetDen > 0, "budget must be a positive fraction")

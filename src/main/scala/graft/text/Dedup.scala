@@ -191,9 +191,10 @@ object Dedup {
       (h, i) => XxHash64Function.hash(i, IntegerType, h))
   }
 
-  /** i-th minhash of a poly-fingerprint column: (a_i*h0 + b_i) mod P.
-    * h0 < 2^30 and a_i < 2^31 keep the product under 2^61. */
-  private def affineHash(h0: Column, salt: String, i: Int): Column =
+  /** i-th affine hash of a column below P: (a_i*h0 + b_i) mod P — the
+    * minhash of a poly fingerprint (h0 < 2^30) and the e47/e48 order key
+    * of an id (h0 = pmod(id, P)). h0, a_i < 2^31 keep the product under 2^62. */
+  private[graft] def affineHash(h0: Column, salt: String, i: Int): Column =
     (lit(hashConst(s"$salt-a", i)) * h0 + lit(hashConst(s"$salt-b", i))) % AffineP
 
   /** Order-sensitive fold of hash columns into one band signature —
