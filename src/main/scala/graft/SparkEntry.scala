@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.analytics.Analytics
 import graft.graph.Components
@@ -15,6 +16,7 @@ import graft.timeseries.{Decompose, Forecast, TimeSeries}
 import graft.validate.Quality
 import graft.vector.Similarity
 import graft.Checkpoint._
+import graft.functions.{cents, periodOf}
 
 /** Driver contract — see SURVEY.md §2 for the operator inventory.
   * Every query key has a library operator behind it; the oracleSql map
@@ -27,8 +29,12 @@ object SparkEntry {
   /** The event feed as every landing/source query reads it: the
     * second-truncated `ts` as `period`. */
   private def feedCols: Seq[Column] = Seq(col("event_id"),
-    date_trunc("second", col("ts")).as("period"),
-    col("user_id"), col("event_type"), col("value"))
+    periodOf("ts").as("period"), col("user_id"), col("event_type"), col("value"))
+
+  /** The schema of [[feedCols]], as the text and ORC sinks read the
+    * landed feed back. */
+  private def feedSchema: StructType = StructType.fromDDL(
+    "event_id BIGINT, period TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
 
   /** f12's funnel steps — shared by the query and the generated oracle. */
   private val f12Steps = Seq("signup", "view", "click", "purchase")
@@ -90,7 +96,7 @@ object SparkEntry {
     "a3_dedup_keep_latest" -> ((s, d) =>
       Ingest.dedupKeepLatest(
         Tables.events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
-          date_trunc("second", col("ts")).as("period"), col("value")),
+          periodOf("ts").as("period"), col("value")),
         Seq("user_id", "event_type"), "period", "event_id")),
     "a4_retention_keep_last_n" -> ((s, d) =>
       Ingest.retentionKeepLastN(
@@ -119,7 +125,7 @@ object SparkEntry {
       // snapshot, with page lineage restored by partition discovery
       val feed = Ingest.typedIngest(Tables.events(s, d),
         "event_id", "ts", "user_id", "event_type", "value")
-      val dir = s"/tmp/graft_sources/a8_${pathTag(d)}"
+      val dir = scratchDir("a8", d)
       val src = new graft.sources.PagedFeed.OrderedFramePages(feed, "record_id")
       val ps = graft.sources.PagedFeed.autoPageSize(src.total, 7)
       graft.sources.PagedFeed.reset(s, dir)
@@ -129,8 +135,7 @@ object SparkEntry {
     }),
     "a9_scd2_history" -> ((s, d) =>
       Ingest.scd2History(
-        Tables.events(s, d).select(col("user_id"),
-          date_trunc("second", col("ts")).as("period"),
+        Tables.events(s, d).select(col("user_id"), periodOf("ts").as("period"),
           col("event_type"), col("event_id")),
         "user_id", "period", Seq("event_type"), "event_id")),
     "a10_snapshot_reconcile" -> ((s, d) => {
@@ -139,7 +144,7 @@ object SparkEntry {
       // carries a corrupted value (a replayed batch applied twice) —
       // the audit must localize both, per key, without moving data
       val ev = Tables.events(s, d).select(col("user_id"), col("event_id"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("ep"), col("value"))
+        unix_timestamp(periodOf("ts")).as("ep"), col("value"))
       // engine-portable row digest: modular arithmetic only (every
       // intermediate < 2^62 — the Dedup.PolyP discipline), identical
       // literals in the DuckDB oracle; no engine-specific hash
@@ -255,7 +260,7 @@ object SparkEntry {
       // snapshot profile gate, footer-priced: two event snapshots
       // (even/odd ids) land as parquet, per-column stats compare with
       // integer-exact drift flags
-      val tmp = s"/tmp/graft_sources/b22_${pathTag(d)}"
+      val tmp = scratchDir("b22", d)
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("value"))
       ev.filter(col("event_id") % 2 === 0).write.mode("overwrite")
@@ -399,13 +404,13 @@ object SparkEntry {
     }),
     "c18_asof_join" -> ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        date_trunc("second", col("ts")).as("period"), col("value"))
+        periodOf("ts").as("period"), col("value"))
       val hourly = Tables.events(s, d)
         .filter(col("value").isNotNull)
         .select(col("user_id"), date_trunc("hour", col("ts")).as("bucket"), col("value"))
         .groupBy(col("user_id"), col("bucket"))
         .agg(graft.functions.roundMeanE4(
-          sum(round(col("value") * 100, 0).cast("long")), count(lit(1))).as("bucket_avg"))
+          sum(cents(col("value")).cast("long")), count(lit(1))).as("bucket_avg"))
       graft.timeseries.AsOf.asofJoin(ev, hourly, "user_id", "period", "bucket", Seq("bucket_avg"))
     }),
 
@@ -560,7 +565,7 @@ object SparkEntry {
         "vec_id", "embedding", "label", 16, 4, 5)
     }),
     "e42_source_token_lift" -> ((s, d) =>
-      TextOps.sourceTokenLift(Tables.documents(s, d), "doc_id", "text", "source", 5L, 10)),
+      TextOps.sourceTokenLift(Tables.documents(s, d), "text", "source", 5L, 10)),
     "e43_ngram_containment" -> ((s, d) =>
       Dedup.ngramContainmentPairs(Tables.documents(s, d), "doc_id", "text",
         Seq("lang", "source"), 3, 0.8)),
@@ -660,7 +665,7 @@ object SparkEntry {
       // corpus. Output equals e63's direct train+encode, so the
       // oracle is shared verbatim.
       val docs = Tables.documents(s, d)
-      val dir = s"/tmp/graft_sources/e65_${pathTag(d)}"
+      val dir = scratchDir("e65", d)
       graft.sources.PagedFeed.reset(s, dir)
       graft.sources.Sources.appendVersion(
         TextOps.bpeMergeLoop(docs, "doc_id", "text", 8, 2L), s, dir)
@@ -780,7 +785,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       Dedup.incrementalExactDedupFromTable(
         docs.filter(col("doc_id") < 250),
-        Dedup.seenHashTable(docs.filter(col("doc_id") >= 250), "doc_id", "text"),
+        Dedup.seenHashTable(docs.filter(col("doc_id") >= 250), "text"),
         "doc_id", "text", Seq("lang", "source"))
     }),
     "e45_bloom_dedup" -> ((s, d) => {
@@ -846,12 +851,9 @@ object SparkEntry {
     // another's read)
     "g1_csv_roundtrip" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/csv_${pathTag(d)}"
+      val tmp = scratchDir("csv", d)
       graft.sources.Sources.writeCsv(ev, tmp)
-      graft.sources.Sources.validRecords(
-        graft.sources.Sources.readCsv(s, tmp,
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, period TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")))
+      graft.sources.Sources.validRecords(graft.sources.Sources.readCsv(s, tmp, feedSchema))
     }),
     "g13_versioned_read" -> ((s, d) => {
       // manifest-gated snapshot versioning (poor-man's time travel):
@@ -859,7 +861,7 @@ object SparkEntry {
       // (data landed, manifest never published) — reading each
       // version must see exactly its snapshot, the orphan never
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
-      val dir = s"/tmp/graft_sources/g13_${pathTag(d)}"
+      val dir = scratchDir("g13", d)
       graft.sources.PagedFeed.reset(s, dir)
       graft.sources.Sources.appendVersion(ev.filter(col("event_id") % 3 === 0), s, dir)
       graft.sources.Sources.appendVersion(ev.filter(col("event_id") % 3 =!= 0), s, dir)
@@ -880,7 +882,7 @@ object SparkEntry {
       // emitted rows prove the live versions read identically post-GC
       // and pin the post-GC filesystem state as literal counts.
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
-      val dir = s"/tmp/graft_sources/g14_${pathTag(d)}"
+      val dir = scratchDir("g14", d)
       graft.sources.PagedFeed.reset(s, dir)
       graft.sources.Sources.appendVersion(ev.filter(col("event_id") % 3 === 0), s, dir)
       graft.sources.Sources.appendVersion(ev.filter(col("event_id") % 3 =!= 0), s, dir)
@@ -912,7 +914,7 @@ object SparkEntry {
       // sum of 4-decimal-rounded rmses in 1e-4 units), so the value
       // column is oracle-exact.
       val ev = Tables.events(s, d)
-      val dir = s"/tmp/graft_sources/g15_${pathTag(d)}"
+      val dir = scratchDir("g15", d)
       graft.sources.PagedFeed.reset(s, dir)
       val t1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
       val t2 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
@@ -947,13 +949,11 @@ object SparkEntry {
       // PERMISSIVE and report the valid count + each quarantined raw
       // line — the scan survives, nothing coerces silently
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/rescue_${pathTag(d)}"
+      val tmp = scratchDir("rescue", d)
       graft.sources.Sources.writeCsv(ev, tmp)
       graft.sources.Sources.appendRawCsvPart(s, tmp, "part-torn.csv",
         "event_id,period,user_id,event_type,value\n" + tornCsvLines.mkString("\n") + "\n")
-      val parsed = graft.sources.Sources.readCsv(s, tmp,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, period TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"))
+      val parsed = graft.sources.Sources.readCsv(s, tmp, feedSchema)
       val good = graft.sources.Sources.validRecords(parsed)
         .agg(count(lit(1)).as("n"))
         .select(lit("__valid__").as("record"), col("n"))
@@ -964,7 +964,7 @@ object SparkEntry {
     }),
     "g2_partitioned_sink_prune" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/pq_${pathTag(d)}"
+      val tmp = scratchDir("pq", d)
       graft.sources.Sources.writePartitionedParquet(ev, tmp, Seq("event_type"))
       // the filter prunes to one partition directory at planning time
       graft.sources.Sources.readParquet(s, tmp)
@@ -974,7 +974,7 @@ object SparkEntry {
     }),
     "g7_partition_overwrite" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/dpo_${pathTag(d)}"
+      val tmp = scratchDir("dpo", d)
       // initial full land (static), then the scheduled re-land
       // recomputes ONE partition under dynamic overwrite — siblings
       // must come back untouched, the re-landed one replaced
@@ -989,7 +989,7 @@ object SparkEntry {
     }),
     "g8_compaction" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/compact_${pathTag(d)}"
+      val tmp = scratchDir("compact", d)
       // a year of incremental lands: the feed fragmented into 64 small
       // files; compact to ~1 MiB targets and return the read-back —
       // content must be layout-invariant (the oracle is the plain feed)
@@ -998,7 +998,7 @@ object SparkEntry {
     }),
     "g9_sorted_layout" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/sorted_${pathTag(d)}"
+      val tmp = scratchDir("sorted", d)
       // range-partition + sort on the time key: every file owns a
       // disjoint period range (footer-stats proof in SourcesSpec), so
       // time predicates skip files/row groups at read time
@@ -1006,7 +1006,7 @@ object SparkEntry {
     }),
     "g10_zorder_layout" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/zorder_${pathTag(d)}"
+      val tmp = scratchDir("zorder", d)
       // Morton-interleave user_id × period: every file gets a tight
       // min/max box in BOTH dimensions, so user predicates AND time
       // predicates each skip ~√nFiles of the files (footer-stats proof
@@ -1021,12 +1021,9 @@ object SparkEntry {
         Seq("event_id", "user_id"))),
     "g4_jsonl_roundtrip" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/jsonl_${pathTag(d)}"
+      val tmp = scratchDir("jsonl", d)
       graft.sources.Sources.writeJsonl(ev, tmp)
-      graft.sources.Sources.validRecords(
-        graft.sources.Sources.readJsonl(s, tmp,
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, period TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")))
+      graft.sources.Sources.validRecords(graft.sources.Sources.readJsonl(s, tmp, feedSchema))
     }),
     "g3_bucketed_join" -> ((s, d) => {
       // both fact sides written bucketed on the join key -> the join
@@ -1044,7 +1041,7 @@ object SparkEntry {
         .groupBy(col("c_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           graft.functions.roundMeanE4(
-            sum(round(col("o_totalprice") * 100, 0).cast("long")), count(lit(1))).as("avg_price"))
+            sum(cents(col("o_totalprice")).cast("long")), count(lit(1))).as("avg_price"))
         .select(col("c_custkey"), col("n_orders"), col("avg_price"))
     }),
 
@@ -1058,7 +1055,7 @@ object SparkEntry {
     "f3_stream_dedup" -> ((s, d) =>
       Streams.streamDedup(
         Tables.events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
-          date_trunc("second", col("ts")).as("period"), col("value")),
+          periodOf("ts").as("period"), col("value")),
         Seq("user_id", "event_type", "period"), "event_id")),
     "f5_hopping_window" -> ((s, d) =>
       Streams.hoppingWindow(Tables.events(s, d), "ts", "value", "2 hours", "1 hour")),
@@ -1097,14 +1094,12 @@ object SparkEntry {
       // manifest-versioned ledger exactly once per batch (idempotent
       // by batch id), AvailableNow drains; the read-back aggregates
       // across batches so the result is batching-invariant
-      val tmp = s"/tmp/graft_sources/f13_${pathTag(d)}"
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"), col("value"))
+      val tmp = scratchDir("f13", d)
+      val ev = Tables.events(s, d).select(col("event_id"), periodOf("ts").as("period"), col("value"))
       ev.write.mode("overwrite").parquet(s"$tmp/src")
       val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/src")
-      val fs = graft.sources.Sources.fileSystem(s, tmp)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ledger"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ckpt"), true)
+      graft.sources.PagedFeed.reset(s, s"$tmp/ledger")
+      graft.sources.PagedFeed.reset(s, s"$tmp/ckpt")
       graft.streaming.LedgerSink.streamQualityLedger(stream,
         s"$tmp/ledger", s"$tmp/ckpt", "period", "value").awaitTermination()
       graft.streaming.LedgerSink.readQualityLedger(s, s"$tmp/ledger")
@@ -1114,16 +1109,14 @@ object SparkEntry {
       // events land as a file-source stream, foreachBatch upserts the
       // per-user latest state into a hash-bucketed parquet table,
       // AvailableNow drains, and the maintained table is the result
-      val tmp = s"/tmp/graft_sources/upsert_${pathTag(d)}"
-      val ev = Tables.events(s, d).select(col("event_id"),
-        date_trunc("second", col("ts")).as("period"),
+      val tmp = scratchDir("upsert", d)
+      val ev = Tables.events(s, d).select(col("event_id"), periodOf("ts").as("period"),
         col("user_id"), col("event_type").cast("string").as("event_type"),
         col("value"))
       ev.write.mode("overwrite").parquet(s"$tmp/src")
       val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/src")
-      val fs = graft.sources.Sources.fileSystem(s, tmp)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/table"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/ckpt"), true)
+      graft.sources.PagedFeed.reset(s, s"$tmp/table")
+      graft.sources.PagedFeed.reset(s, s"$tmp/ckpt")
       Upsert.streamUpsert(stream, s"$tmp/table", s"$tmp/ckpt",
         "user_id", "period", "event_id", nBuckets = 32)
         .awaitTermination()
@@ -1133,7 +1126,7 @@ object SparkEntry {
     }),
     "g6_schema_evolution" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/evo_${pathTag(d)}"
+      val tmp = scratchDir("evo", d)
       // batch 1 written before the `value` column existed; batch 2 after
       ev.filter(col("event_id") < 5000).drop("value")
         .write.mode("overwrite").parquet(s"$tmp/batch=1")
@@ -1145,11 +1138,9 @@ object SparkEntry {
     }),
     "g5_orc_roundtrip" -> ((s, d) => {
       val ev = Tables.events(s, d).select(feedCols: _*)
-      val tmp = s"/tmp/graft_sources/orc_${pathTag(d)}"
+      val tmp = scratchDir("orc", d)
       graft.sources.Sources.writeOrc(ev, tmp)
-      graft.sources.Sources.readOrc(s, tmp,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, period TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"))
+      graft.sources.Sources.readOrc(s, tmp, feedSchema)
     })
   )
 
@@ -1377,6 +1368,10 @@ object SparkEntry {
     * toHexString of the raw Int handles Int.MinValue (no abs). */
   private def pathTag(d: String): String =
     d.replaceAll("[^A-Za-z0-9]", "_") + "_" + d.hashCode.toHexString
+
+  /** The scratch directory of the sink query `name` on dataset `d`. */
+  private def scratchDir(name: String, d: String): String =
+    s"/tmp/graft_sources/${name}_${pathTag(d)}"
 
   /** The g12 fault-injection fixture: one malformed line per failure
     * class (unparseable long, unparseable double, short row, extra

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{centsSum, fracE4}
+import graft.functions.{cents, centsSum, fracE4, periodOf}
 import graft.Checkpoint._
 
 /** General relational analytics surface — the engine's query layer.
@@ -46,10 +46,10 @@ object Analytics {
     * the double is no longer exact. Means use the roundMeanE4 exact
     * half-up formula. */
   def pricingSummary(lineitem: DataFrame): DataFrame = {
-    val priceCents = round(col("l_extendedprice") * 100, 0).cast("long")
+    val priceCents = cents(col("l_extendedprice")).cast("long")
     val charge6 = round(col("l_extendedprice") * (lit(1) - col("l_discount")) *
       (lit(1) + col("l_tax")) * 1000000, 0).cast("decimal(38,0)")
-    val discCents = round(col("l_discount") * 100, 0).cast("long")
+    val discCents = cents(col("l_discount")).cast("long")
     lineitem
       .filter(col("l_shipdate") <= lit("1999-12-01").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -205,7 +205,7 @@ object Analytics {
     val c = Tables.customer(spark, dir)
     val agg = o.join(c, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey"), col("c_custkey"))
-      .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).as("__cents"))
+      .agg(sum(cents(col("o_totalprice")).cast("long")).as("__cents"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("c_nationkey"))
       .orderBy(col("__cents").desc, col("c_custkey"))
@@ -273,7 +273,7 @@ object Analytics {
                    windowSeconds: Long): DataFrame = {
     require(steps.size >= 2, "a funnel needs at least two steps")
     import org.apache.spark.sql.expressions.Window
-    val epoch = date_trunc("second", col(tsCol)).cast("long")
+    val epoch = periodOf(tsCol).cast("long")
     val prevW = Window.partitionBy(col(userCol))
       .orderBy(col("__t").asc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -676,7 +676,7 @@ object Analytics {
       .filter(col("l_partkey").isNotNull && col("l_quantity").isNotNull)
       .join(broadcast(keys), Seq("l_partkey"))
       .select(col("l_partkey"),
-        round(col("l_quantity") * 100, 0).cast("long").as("__qc"),
+        cents(col("l_quantity")).cast("long").as("__qc"),
         round(col("l_extendedprice") * 10000, 0).cast("long").as("__p4"))
       .checkpointAs("Analytics.smallQuantityRevenue.lineitems")
     val avgq = li.groupBy(col("l_partkey"))

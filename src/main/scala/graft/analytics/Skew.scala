@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.cents
 
 /** Skew-mitigation utilities (SURVEY §5).
   *
@@ -24,7 +25,7 @@ object Skew {
     df.withColumn("__salt", pmod(xxhash64(col(saltSrcCol)), lit(salts)))
       // exact integer cents: the two-phase re-ordering of the sum must
       // not perturb a float result, so partials are long sums
-      .withColumn("__cents", round(col(valueCol) * 100, 0).cast("long"))
+      .withColumn("__cents", cents(col(valueCol)).cast("long"))
       .groupBy(col(keyCol), col("__salt"))
       .agg(sum(col("__cents")).as("__s"), count(lit(1)).as("__n"))
       .groupBy(col(keyCol))

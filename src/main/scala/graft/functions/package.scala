@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -68,7 +69,27 @@ package object functions {
     * at any group size, where a double sum drifts in the 4th decimal
     * once a group grows with the corpus (the d1 sf30 lesson). */
   def centsSum(v: Column): Column =
-    sum(round(v * 100, 0).cast("long")) / 100.0
+    sum(cents(v).cast("long")) / 100.0
+
+  /** A 2-decimal value on the cents grid, `round(v * 100, 0)`, as a double:
+    * long sums add `.cast("long")`; squared-cents sums keep double range. */
+  def cents(v: Column): Column = round(v * 100, 0)
+
+  /** A value on the micro-unit grid: `floor(v * 1e6)` as a long. */
+  def micros(v: Column): Column = floor(v * 1e6).cast("long")
+
+  /** One PSI term `(pc - pr) * ln(pc / pr)` in micro-units, over the
+    * smoothed current and reference shares: b14's and f11's one term. */
+  def psiTermMicro(pc: Column, pr: Column): Column = micros((pc - pr) * log(pc / pr))
+
+  /** The series clock: `tsCol` truncated to the second, unaliased, so
+    * every gap, lag and epoch is integer-exact on both engines. */
+  def periodOf(tsCol: String): Column = date_trunc("second", col(tsCol))
+
+  /** The series order within each `keyCol`: by `period` ([[periodOf]]),
+    * `idCol` breaking ties. Callers add their own frame. */
+  def seriesOrder(keyCol: String, idCol: String): WindowSpec =
+    Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
 
   /** Lower-cased, punctuation-stripped, whitespace-normalized text —
     * the canonical form used by dedup and fingerprinting. One fused

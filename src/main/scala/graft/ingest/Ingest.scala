@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{cents, periodOf}
 
 /** Ingestion / ETL operators.
   *
@@ -25,7 +26,7 @@ object Ingest {
                   typeCol: String, valueCol: String): DataFrame =
     raw.select(
       col(idCol).cast("long").as("record_id"),
-      date_trunc("second", col(tsCol)).as("period"),
+      periodOf(tsCol).as("period"),
       col(keyCol).cast("string").as("respondent"),
       col(typeCol).cast("string").as("type"),
       col(valueCol).cast("double").as("value"))
@@ -82,7 +83,7 @@ object Ingest {
   def aggState(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
     df.groupBy(col(keyCol)).agg(
       count(col(valueCol)).as("n"),
-      sum(round(col(valueCol) * 100, 0).cast("long")).as("sum_cents"),
+      sum(cents(col(valueCol)).cast("long")).as("sum_cents"),
       min(col(valueCol)).as("min_value"),
       max(col(valueCol)).as("max_value"))
 

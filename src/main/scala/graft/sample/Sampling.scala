@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Checkpoint._
+import graft.functions.micros
 
 /** Deterministic corpus sampling for training-data curation.
   *
@@ -71,7 +72,7 @@ object Sampling {
     require(keepNum > 0 && keepDen >= keepNum,
       "keep fraction must be in (0, 1]")
     val withU = df
-      .withColumn("__vu", floor(col(valueCol) * 1e6).cast("long"))
+      .withColumn("__vu", micros(col(valueCol)))
       .filter(col("__vu").isNotNull)
     val hist = withU.groupBy(col(groupCol), col("__vu"))
       .agg(count(lit(1)).as("__c"))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 /** Single-writer lease for a landing/state directory — shared by every
   * directory mutator: the paginated-feed lander (a8), the streaming
@@ -44,7 +44,9 @@ object LandingLease {
   }
 
   /** Acquire the lease for `dir` or throw
-    * [[ConcurrentLandingException]]; returns the token to release with. */
+    * [[ConcurrentLandingException]]; returns the token to release with.
+    * Only an existing marker means another writer; any other I/O error
+    * of the create propagates as itself. */
   private def acquire(fs: FileSystem, dir: String): String = {
     val lp = lockFile(dir)
     val token = java.util.UUID.randomUUID().toString
@@ -53,7 +55,7 @@ object LandingLease {
         Sources.writeUtf8(fs, lp, s"$token\n${System.currentTimeMillis() + LeaseMs}",
           overwrite = false)
         true
-      } catch { case _: java.io.IOException => false }
+      } catch { case _: FileAlreadyExistsException => false }
     if (!tryCreate()) {
       val expiry: Long =
         try Sources.readUtf8(fs, lp).split("\n")(1).trim.toLong

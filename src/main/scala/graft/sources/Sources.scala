@@ -360,9 +360,10 @@ object Sources {
     val fs = fileSystem(spark, table)
     val prev = versions(fs, table).lastOption.getOrElse(0L)
     val next = prev + 1
-    df.write.mode("overwrite").parquet(s"$table/data/v$next")
+    val dir = s"data/${versionDir(next)}"
+    df.write.mode("overwrite").parquet(s"$table/$dir")
     val kept = if (chain && prev > 0) manifestDirs(fs, table, prev) else Seq.empty
-    publishManifest(fs, table, next, kept :+ s"data/v$next")
+    publishManifest(fs, table, next, kept :+ dir)
     next
   }
 
@@ -402,13 +403,19 @@ object Sources {
       val referenced = live.flatMap(v => manifestDirs(fs, table, v)).toSet
       val maxLive = live.lastOption.getOrElse(0L)
       val removable = dataDirs(fs, table).filter { n =>
-        !referenced.contains(s"data/$n") && n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong <= maxLive
+        !referenced.contains(s"data/$n") && dirVersion(n).exists(_ <= maxLive)
       }.map(n => s"data/$n")
       removable.foreach(d => fs.delete(new Path(table, d), true))
       (expired, removable)
     }
   }
+
+  /** Version `v`'s directory name under `data/`, and its parser: only
+    * `v` plus digits names a version; retention keeps any other name. */
+  private def versionDir(v: Long): String = s"v$v"
+  private val VersionDir = "v([0-9]+)".r
+  private def dirVersion(name: String): Option[Long] =
+    VersionDir.unapplySeq(name).flatMap(_.head.toLongOption)
 
   /** All published (manifest-gated) versions, ascending. */
   def listVersions(spark: SparkSession, table: String): Seq[Long] =
@@ -481,7 +488,7 @@ object Sources {
   }
 
   /** Write a small UTF-8 file. With `overwrite = false` the create throws
-    * an IOException when `p` already exists. */
+    * a `FileAlreadyExistsException` when `p` already exists. */
   private[sources] def writeUtf8(fs: FileSystem, p: Path, text: String,
                                  overwrite: Boolean): Unit = {
     val out = fs.create(p, overwrite)

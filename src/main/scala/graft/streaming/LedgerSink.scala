@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.functions.cents
 
 /** Streaming quality-report ledger (round 11, f13) — the streaming
   * form of the reference's per-run report persistence
@@ -35,7 +36,7 @@ object LedgerSink {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col(valueCol).isNull, 1L).otherwise(0L)).as("n_nulls"),
-        sum(coalesce(round(col(valueCol) * 100, 0).cast("long"), lit(0L)))
+        sum(coalesce(cents(col(valueCol)).cast("long"), lit(0L)))
           .as("sum_cents"))
 
   /** The sink: drain the stream, appending one ledger version per

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.centsSum
+import graft.functions.{cents, centsSum, periodOf, psiTermMicro, seriesOrder}
 
 /** Streaming-shaped operators.
   *
@@ -33,10 +33,9 @@ object Streams {
     * per the f5 discipline). */
   def sessionize(events: DataFrame, keyCol: String, tsCol: String, idCol: String,
                  valueCol: String, gapSeconds: Long): DataFrame = {
-    val ordered = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
+    val ordered = seriesOrder(keyCol, idCol)
     events
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol))
+      .select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol))
       .withColumn("prev", lag(col("period"), 1).over(ordered))
       .withColumn("new_session",
         when(col("prev").isNull ||
@@ -103,7 +102,7 @@ object Streams {
     require(gapSeconds > 0, "session gap must be positive")
     events
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol))
+      .select(col(keyCol), periodOf(tsCol).as("period"), col(valueCol))
   }
 
   /** The session aggregate of both session twins. */
@@ -214,10 +213,10 @@ object Streams {
   def intervalJoin(events: DataFrame, keyCol: String, tsCol: String, idCol: String,
                    typeCol: String, valueCol: String, matchType: String,
                    windowSeconds: Long): DataFrame = {
-    val e = events.select(col(idCol), date_trunc("second", col(tsCol)).as("period"),
+    val e = events.select(col(idCol), periodOf(tsCol).as("period"),
       col(keyCol), col(typeCol), col(valueCol))
     val p = events.filter(col(typeCol) === matchType)
-      .select(col(keyCol).as("__pk"), date_trunc("second", col(tsCol)).as("__pts"),
+      .select(col(keyCol).as("__pk"), periodOf(tsCol).as("__pts"),
         col(idCol).as("__pid"), col(valueCol).as("__pv"))
     e.join(p,
         col(keyCol) === col("__pk") &&
@@ -227,7 +226,7 @@ object Streams {
       .groupBy(col(idCol), col("period"), col(keyCol))
       .agg(
         count(col("__pid")).as("n_matched"),
-        (coalesce(sum(round(col("__pv") * 100, 0).cast("long")), lit(0L)) / 100.0)
+        (coalesce(sum(cents(col("__pv")).cast("long")), lit(0L)) / 100.0)
           .as("matched_value"))
   }
 
@@ -252,7 +251,7 @@ object Streams {
       .orderBy(col("period"), col(idCol))
     events.filter(col(tsCol).isNotNull)
       .select(col(keyCol), date_trunc(unit, col(tsCol)).as("window_start"),
-        date_trunc("second", col(tsCol)).as("period"), col(idCol))
+        periodOf(tsCol).as("period"), col(idCol))
       .withColumn("seq", row_number().over(w).cast("long"))
       .filter(col("seq") <= maxPerWindow)
   }
@@ -412,7 +411,7 @@ object Streams {
       val cnt = if (c == "__other__") col("__cO") else col(s"__c$i")
       val pr = lit(refMap(c) + 1).cast("double") / lit(nRef + k).cast("double")
       val pc = (cnt + 1).cast("double") / (col("n_cur") + k).cast("double")
-      floor((pc - pr) * log(pc / pr) * 1e6).cast("long")
+      psiTermMicro(pc, pr)
     }
     counted
       .withColumn("__psi_micro", terms.reduce(_ + _))

@@ -42,8 +42,7 @@ object Dedup {
     */
   def incrementalExactDedup(batch: DataFrame, seen: DataFrame, idCol: String,
                             textCol: String, keepCols: Seq[String]): DataFrame =
-    incrementalExactDedupFromTable(batch, seenHashTable(seen, idCol, textCol),
-      idCol, textCol, keepCols)
+    incrementalExactDedupFromTable(batch, seenHashTable(seen, textCol), idCol, textCol, keepCols)
 
   /** The distinct seen-hash table [[incrementalExactDedupFromTable]]
     * probes — and the maintenance API that builds its per-batch
@@ -52,7 +51,7 @@ object Dedup {
     * Appends preserve distinctness BY CONSTRUCTION: an admitted hash
     * survived the anti-join (so it is not in the table) and the
     * in-batch keep-min (so the batch contributes it once). */
-  def seenHashTable(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  def seenHashTable(docs: DataFrame, textCol: String): DataFrame =
     docs.select(md5(normalizeText(col(textCol))).as("text_hash")).distinct()
 
   /** The MAINTAINED-TABLE form of [[incrementalExactDedup]] — the

@@ -685,10 +685,9 @@ object TextOps {
     val lnTotal = col("__total").cast("double")
     val scored = tf.join(vocab, Seq("token"), "left")
       .crossJoin(broadcast(total))
-      .withColumn("__lpq", floor(
+      .withColumn("__lpq", micros(
         when(col("__vn").isNull, log(lit(0.5) / lnTotal))
-          .otherwise(log(col("__vn").cast("double") / lnTotal)) * 1e6)
-        .cast("long"))
+          .otherwise(log(col("__vn").cast("double") / lnTotal))))
     microLogScore(scored, "n_tokens", "oov_tokens", "__vn")
   }
 
@@ -805,9 +804,9 @@ object TextOps {
       .join(kept, Seq("pair"), "left")
       .join(ctx, Seq("__prev"), "left")
       .crossJoin(broadcast(vocabV))
-      .withColumn("__lpq", floor(log(
+      .withColumn("__lpq", micros(log(
         (coalesce(col("__c2"), lit(0L)) + 1L).cast("double") /
-          (col("__nctx") + col("__v")).cast("double")) * 1e6).cast("long"))
+          (col("__nctx") + col("__v")).cast("double"))))
     microLogScore(scored, "n_bigrams", "rare_bigrams", "__c2")
   }
 
@@ -947,8 +946,8 @@ object TextOps {
     * Lift doubles are ratios of exact integer counts evaluated with
     * one expression shape, so ordering and the floor-half-up 1e-4
     * rounding are engine-portable (§8 round-half-up finding). */
-  def sourceTokenLift(docs: DataFrame, idCol: String, textCol: String,
-                      sourceCol: String, minCount: Long, k: Int): DataFrame = {
+  def sourceTokenLift(docs: DataFrame, textCol: String, sourceCol: String,
+                      minCount: Long, k: Int): DataFrame = {
     require(k > 0 && minCount >= 1)
     val tok = wordRows(docs.filter(col(sourceCol).isNotNull), sourceCol, textCol, "token",
       keyAs = "source")

@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.halfUpDiv
+import graft.functions.{cents, halfUpDiv, periodOf, seriesOrder}
 
 /** Classical additive seasonal decomposition — value = trend + seasonal
   * + remainder — the time-series diagnostic the reference's forecasting
@@ -39,11 +39,9 @@ object Decompose {
     val windowSize = 2 * halfWindow + 1
     val base = df
       .filter(col(tsCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol),
-        round(col(valueCol) * 100, 0).cast("long").as("__cents"))
-    val trendW = Window.partitionBy(col(keyCol))
-      .orderBy(col("period"), col(idCol))
+      .select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol),
+        cents(col(valueCol)).cast("long").as("__cents"))
+    val trendW = seriesOrder(keyCol, idCol)
       .rowsBetween(-halfWindow, halfWindow)
     // a NULL value inside the window leaves count < windowSize -> trend
     // NULL there too (classical decomposition needs the complete window)

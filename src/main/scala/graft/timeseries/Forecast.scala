@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Checkpoint._
-import graft.functions.halfUpDiv
+import graft.functions.{cents, halfUpDiv, periodOf, seriesOrder}
 
 /** Distributed forecasting operators.
   *
@@ -21,9 +21,8 @@ object Forecast {
     * 1000-executor backtest runs per series. */
   def seasonalNaive(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                     valueCol: String, season: Int): DataFrame = {
-    df.select(col(idCol), col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol))
-      .withColumn("prediction", lag(col(valueCol), season).over(
-        Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))))
+    df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol))
+      .withColumn("prediction", lag(col(valueCol), season).over(seriesOrder(keyCol, idCol)))
       .filter(col("prediction").isNotNull)
   }
 
@@ -49,7 +48,7 @@ object Forecast {
   def linearTrend(df: DataFrame, keyCol: String, tsCol: String, valueCol: String,
                   horizonSeconds: Long): DataFrame = {
     df.select(col(keyCol),
-        date_trunc("second", col(tsCol)).cast("long").cast("double").as("x"),
+        periodOf(tsCol).cast("long").cast("double").as("x"),
         col(valueCol).cast("double").as("y"))
       .groupBy(col(keyCol))
       .agg(
@@ -68,11 +67,11 @@ object Forecast {
   def drift(df: DataFrame, keyCol: String, tsCol: String, valueCol: String,
             referenceDays: Int, currentDays: Int, threshold: Double): DataFrame = {
     driftWindows(df, tsCol, referenceDays, currentDays,
-        df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(valueCol)))
+        df.select(col(keyCol), periodOf(tsCol).as("period"), col(valueCol)))
       // means from exact integer cents: order-independent sums, so the
       // rounded output is reproducible across engines/partitionings; a
       // null reading enters neither sum nor count (pandas' mean skips it)
-      .withColumn("cents", round(col(valueCol) * 100, 0))
+      .withColumn("cents", cents(col(valueCol)))
       .groupBy(col(keyCol))
       .agg(
         sum(when(col("bucket") === "reference", col("cents"))).as("s_ref"),
@@ -102,7 +101,7 @@ object Forecast {
     * [max−(cur+ref) days, max−cur days); rows in neither window drop. */
   private[graft] def driftWindows(df: DataFrame, tsCol: String, referenceDays: Int,
                                   currentDays: Int, rows: DataFrame): DataFrame = {
-    val maxTs = df.agg(max(date_trunc("second", col(tsCol))).as("max_ts"))
+    val maxTs = df.agg(max(periodOf(tsCol)).as("max_ts"))
     val curStart = col("max_ts") - expr(s"INTERVAL $currentDays DAYS")
     val refStart = col("max_ts") - expr(s"INTERVAL ${currentDays + referenceDays} DAYS")
     rows.crossJoin(broadcast(maxTs))
@@ -122,9 +121,8 @@ object Forecast {
   def backtest(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                valueCol: String, season: Int, folds: Int): DataFrame = {
     val fc = seasonalNaive(df, keyCol, tsCol, idCol, valueCol, season)
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
     val cw = Window.partitionBy(col(keyCol))
-    val folded = fc.withColumn("__rn", row_number().over(ow))
+    val folded = fc.withColumn("__rn", row_number().over(seriesOrder(keyCol, idCol)))
       .withColumn("__n", count(lit(1)).over(cw))
       .withColumn("fold",
         least(floor((col("__rn") - 1) * folds / col("__n")), lit(folds - 1)).cast("int"))
@@ -151,9 +149,8 @@ object Forecast {
   def forecastIntervals(df: DataFrame, keyCol: String, tsCol: String,
                         idCol: String, valueCol: String, season: Int): DataFrame = {
     val fc = seasonalNaive(df, keyCol, tsCol, idCol, valueCol, season)
-      .withColumn("__pc", round(col("prediction") * 100, 0).cast("long"))
-      .withColumn("__rc",
-        round(col(valueCol) * 100, 0).cast("long") - col("__pc"))
+      .withColumn("__pc", cents(col("prediction")).cast("long"))
+      .withColumn("__rc", cents(col(valueCol)).cast("long") - col("__pc"))
     val q = fc.groupBy(col(keyCol)).agg(
       percentile(col("__rc"), lit(0.1)).as("__qlo"),
       percentile(col("__rc"), lit(0.9)).as("__qhi"))
@@ -240,16 +237,13 @@ object Forecast {
     require(trainNum > 0 && trainDen > 0 && trainNum < trainDen,
       s"train fraction $trainNum/$trainDen out of (0,1)")
     require(lambda >= 0, s"lambda $lambda must be >= 0")
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
     val kw = Window.partitionBy(col(keyCol))
     // null ts rows drop: they carry no calendar features, and the two
     // engines disagree on null ordering inside the rank window
     val ranked = df.filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol),
-        round(col(valueCol) * 100, 0).cast("long").as("__cents"),
-        date_trunc("second", col(tsCol)).cast("long").as("__x"))
-      .withColumn("__rn", row_number().over(ow))
+      .select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol),
+        cents(col(valueCol)).cast("long").as("__cents"), periodOf(tsCol).cast("long").as("__x"))
+      .withColumn("__rn", row_number().over(seriesOrder(keyCol, idCol)))
       .withColumn("__n", count(lit(1)).over(kw))
       .withColumn("__train", col("__rn") * trainDen <= col("__n") * trainNum)
       .withColumn("__xmin", min(when(col("__train"), col("__x"))).over(kw))
@@ -366,8 +360,8 @@ object Forecast {
     val i4 = round(col("intercept") * 10000, 0).cast("long")
     val c1i = round(col("coef_lag1") * 1000000, 0).cast("long")
     val c2i = round(col("coef_lag_season") * 1000000, 0).cast("long")
-    val x1i = round(col("x1") * 100, 0).cast("long")
-    val x2i = round(col("x2") * 100, 0).cast("long")
+    val x1i = cents(col("x1")).cast("long")
+    val x2i = cents(col("x2")).cast("long")
     val p8 = i4 * 10000L + c1i * x1i + c2i * x2i
     lagFeats(fresh, keyCol, tsCol, idCol, valueCol, season)
       .join(broadcast(coefs), Seq(keyCol))
@@ -380,9 +374,8 @@ object Forecast {
     * second-truncated series; rows with either lag missing drop. */
   private def lagFeats(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                        valueCol: String, season: Int): DataFrame = {
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
-    df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol))
+    val ow = seriesOrder(keyCol, idCol)
+    df.select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol))
       .withColumn("x1", lag(col(valueCol), 1).over(ow))
       .withColumn("x2", lag(col(valueCol), season).over(ow))
       .filter(col("x1").isNotNull && col("x2").isNotNull)
@@ -394,9 +387,9 @@ object Forecast {
     * double sums — and everything the Cramer solve computes from them —
     * are bit-identical across engines and partitionings. */
   private def gramSums(feats: DataFrame, keyCol: String, valueCol: String): DataFrame = {
-    val c1 = round(col("x1") * 100, 0).cast("long")
-    val c2 = round(col("x2") * 100, 0).cast("long")
-    val cy = round(col(valueCol) * 100, 0).cast("long")
+    val c1 = cents(col("x1")).cast("long")
+    val c2 = cents(col("x2")).cast("long")
+    val cy = cents(col(valueCol)).cast("long")
     feats.groupBy(col(keyCol)).agg(
       count(lit(1)).cast("double").as("s00"),
       (sum(c1).cast("double") / 100.0).as("s01"),
@@ -465,8 +458,7 @@ object Forecast {
     * back is AQE-broadcast at any realistic key count. */
   def multiHorizonForecast(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                            valueCol: String, season: Int, stepSeconds: Long): DataFrame = {
-    val base = df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-      col(idCol), col(valueCol))
+    val base = df.select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol))
     val wDesc = Window.partitionBy(col(keyCol)).orderBy(col("period").desc, col(idCol).desc)
     val snaive = base
       .withColumn("__rd", row_number().over(wDesc))
@@ -647,7 +639,7 @@ object Forecast {
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col("period").desc, col(idCol).desc)
     val arr = df.filter(col(valueCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
+      .select(col(keyCol), periodOf(tsCol).as("period"),
         col(idCol), col(valueCol).cast("double").as("__v"))
       .withColumn("__rd", row_number().over(w))
       .filter(col("__rd") <= window)

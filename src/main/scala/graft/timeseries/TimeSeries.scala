@@ -3,7 +3,8 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{halfUpDiv, roundMeanE4, VectorExpressions}
+import graft.functions.{cents, halfUpDiv, micros, periodOf, roundMeanE4, seriesOrder,
+  VectorExpressions}
 
 /** Time-series preparation operators.
   *
@@ -27,7 +28,7 @@ object TimeSeries {
     df.groupBy(col(keyCol), date_trunc(unit, col(tsCol)).as("bucket"))
       .agg(
         count(lit(1)).as("n"),
-        roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(lit(1))).as("avg_value"),
+        roundMeanE4(sum(cents(col(valueCol))), count(lit(1))).as("avg_value"),
         round(sum(col(valueCol)), 4).as("sum_value"))
 
   /** Per-key MinMax scaling (kubeflow_pipeline.py:108-109 MinMaxScaler),
@@ -37,8 +38,7 @@ object TimeSeries {
     val w = Window.partitionBy(col(keyCol))
     val mn = min(col(valueCol)).over(w)
     val mx = max(col(valueCol)).over(w)
-    df.select(col(idCol), col(keyCol),
-      date_trunc("second", col(tsCol)).as("period"), col(valueCol),
+    df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol),
       minMaxScaled(col(valueCol), mn, mx).as("value_scaled"))
   }
 
@@ -62,15 +62,14 @@ object TimeSeries {
     // last ulp and flips rounding. z-scores are scale-invariant, so
     // cents-space standardization equals value-space.
     val w = Window.partitionBy(col(keyCol))
-    val cents = round(col(valueCol) * 100, 0)
+    val c = cents(col(valueCol))
     val n = count(lit(1)).over(w).cast("double")
-    val s = sum(cents).over(w)
-    val ss = sum(cents * cents).over(w)
+    val s = sum(c).over(w)
+    val ss = sum(c * c).over(w)
     val mu = s / n
     val sd = sqrt(greatest((ss - s * s / n) / n, lit(0.0)))
-    df.select(col(idCol), col(keyCol),
-      date_trunc("second", col(tsCol)).as("period"), col(valueCol),
-      standardScaled(cents, mu, sd).as("value_scaled"))
+    df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol),
+      standardScaled(c, mu, sd).as("value_scaled"))
   }
 
   /** Per-key scaler parameters as a reusable table — the distributed
@@ -80,8 +79,7 @@ object TimeSeries {
     * identical transform. Mean uses exact-integer cents (roundMeanE4);
     * std is population (ddof=0) to match StandardScaler. */
   def scalerParams(df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100, 0)
-    df.select(col(keyCol), col(valueCol), cents.as("__c"))
+    df.select(col(keyCol), col(valueCol), cents(col(valueCol)).as("__c"))
       .groupBy(col(keyCol))
       .agg(
         count(lit(1)).as("n"),
@@ -112,8 +110,7 @@ object TimeSeries {
       case "standard" => standardScaled(col(valueCol), col("__mu"), col("__sd"))
       case other => throw new IllegalArgumentException(s"unknown scaler method $other")
     }
-    df.select(col(idCol), col(keyCol),
-        date_trunc("second", col(tsCol)).as("period"), col(valueCol))
+    df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol))
       .join(p, Seq(keyCol))
       .select(col(idCol), col(keyCol), col("period"), col(valueCol),
         scaled.as("value_scaled"))
@@ -165,8 +162,7 @@ object TimeSeries {
     * (kubeflow_pipeline.py:127-132: 0.7/0.15/0.15 by time order). */
   def trainValTestSplit(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                         trainFrac: Double, valFrac: Double): DataFrame =
-    splitLabels(
-      df.select(col(idCol), col(keyCol), date_trunc("second", col(tsCol)).as("period")),
+    splitLabels(df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period")),
       keyCol, idCol, trainFrac, valFrac)
       .drop("__rn", "__n")
 
@@ -183,8 +179,7 @@ object TimeSeries {
     // n * frac exact in Spark, matching SQL DECIMAL semantics.
     val trainBd = lit(java.math.BigDecimal.valueOf(trainFrac))
     val valBd = lit(java.math.BigDecimal.valueOf(valFrac))
-    df.withColumn("__rn", row_number().over(
-        Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))))
+    df.withColumn("__rn", row_number().over(seriesOrder(keyCol, idCol)))
       .withColumn("__n", count(lit(1)).over(Window.partitionBy(col(keyCol))))
       .withColumn("split",
         when(col("__rn") <= floor(col("__n") * trainBd), "train")
@@ -198,18 +193,16 @@ object TimeSeries {
     * actually consumes. */
   def lagFeatures(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                   valueCol: String, lags: Seq[Int], rollN: Int): DataFrame = {
-    val base = df.select(col(idCol), col(keyCol),
-      date_trunc("second", col(tsCol)).as("period"), col(valueCol))
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
+    val base = df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol))
+    val w = seriesOrder(keyCol, idCol)
     val withLags = lags.foldLeft(base) { (d, l) =>
       d.withColumn(s"lag_$l", lag(col(valueCol), l).over(w))
     }
     // rolling mean from exact integer cents: order-independent, so the
     // rounded result is reproducible across engines and partitionings
     val wr = w.rowsBetween(-(rollN - 1), 0)
-    val cents = round(col(valueCol) * 100, 0)
     withLags.withColumn(s"roll_mean_$rollN",
-      roundMeanE4(sum(cents).over(wr), count(lit(1)).over(wr)))
+      roundMeanE4(sum(cents(col(valueCol))).over(wr), count(lit(1)).over(wr)))
   }
 
   /** Contiguous (input, target) window samples — the hand-off format a
@@ -226,9 +219,8 @@ object TimeSeries {
     * cleaned series too). */
   def windowSamples(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                     valueCol: String, seqLen: Int, horizon: Int, stride: Int): DataFrame = {
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
-    df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol))
+    val ow = seriesOrder(keyCol, idCol)
+    df.select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol))
       .withColumn("__rn", row_number().over(ow))
       .withColumn("input_seq", collect_list(col(valueCol)).over(ow.rowsBetween(-(seqLen - 1), 0)))
       .withColumn("target_seq", collect_list(col(valueCol)).over(ow.rowsBetween(1, horizon)))
@@ -273,10 +265,9 @@ object TimeSeries {
     val weights = emaWeights(alpha, lookback)
     // den for an s-element window = sum of the first s weights
     val prefix = weights.scanLeft(0.0)(_ + _).tail
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
+    val ow = seriesOrder(keyCol, idCol)
     df.filter(col(valueCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol))
+      .select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol))
       .withColumn("__arr",
         reverse(collect_list(col(valueCol)).over(ow.rowsBetween(-(lookback - 1), 0))))
       // native codegen'd dot (the zip_with/aggregate HOF chain it
@@ -299,17 +290,16 @@ object TimeSeries {
   /** Rolling mean/std over the previous n rows per key. */
   def rollingStats(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                    valueCol: String, n: Int): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(date_trunc("second", col(tsCol)), col(idCol))
+    val w = Window.partitionBy(col(keyCol)).orderBy(periodOf(tsCol), col(idCol))
       .rowsBetween(-(n - 1), 0)
     // exact-integer-cents moments (see scaleStandard) for reproducible
     // rounding of mean/std across engines and aggregation orders
-    val cents = round(col(valueCol) * 100, 0)
+    val c = cents(col(valueCol))
     val cnt = count(lit(1)).over(w).cast("double")
-    val s = sum(cents).over(w)
-    val ss = sum(cents * cents).over(w)
+    val s = sum(c).over(w)
+    val ss = sum(c * c).over(w)
     val variance = greatest((ss - s * s / cnt) / (cnt - 1), lit(0.0))
-    df.select(col(idCol), col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-      col(valueCol),
+    df.select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol),
       roundMeanE4(s, cnt).as("roll_mean"),
       round(when(cnt === 1.0, lit(null).cast("double"))
         .otherwise(sqrt(variance) / 100.0), 4).as("roll_std"))
@@ -340,7 +330,7 @@ object TimeSeries {
                 hiNum: Long, hiDen: Long): DataFrame = {
     require(loNum >= 0 && loDen > 0 && hiNum > 0 && hiDen > 0 &&
       loNum * hiDen <= hiNum * loDen, "quantile bounds must be ordered fractions")
-    val vu = floor(col(valueCol) * 1e6).cast("long")
+    val vu = micros(col(valueCol))
     val hist = df.filter(col(valueCol).isNotNull)
       .groupBy(col(keyCol), vu.as("__vu"))
       .agg(count(lit(1)).as("__c"))
@@ -356,8 +346,7 @@ object TimeSeries {
         min(when(col("__cum") >= expr(s"(__n * $hiNum + $hiDen - 1) div $hiDen"),
           col("__vu"))).as("__hi"))
     df.join(broadcast(thr), Seq(keyCol), "left")
-      .select(col(idCol), col(keyCol),
-        date_trunc("second", col(tsCol)).as("period"), col(valueCol),
+      .select(col(idCol), col(keyCol), periodOf(tsCol).as("period"), col(valueCol),
         when(vu < col("__lo"), col("__lo") / 1e6)
           .when(vu > col("__hi"), col("__hi") / 1e6)
           .otherwise(col(valueCol)).as("value_winsorized"))
@@ -393,8 +382,8 @@ object TimeSeries {
     require(minSeg >= 1, "minSeg must be at least 1")
     val base = df
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("__ts"), col(idCol),
-        floor(col(valueCol) * 1e6).cast("long").cast("decimal(38,0)").as("__v"))
+      .select(col(keyCol), periodOf(tsCol).as("__ts"), col(idCol),
+        micros(col(valueCol)).cast("decimal(38,0)").as("__v"))
     val order = Window.partitionBy(col(keyCol)).orderBy(col("__ts"), col(idCol))
     val whole = Window.partitionBy(col(keyCol))
     val c = base
@@ -458,12 +447,11 @@ object TimeSeries {
                       valueCol: String, lagN: Int): DataFrame = {
     require(lagN >= 1, "lag must be at least 1")
     val order = Window.partitionBy(col(keyCol))
-      .orderBy(date_trunc("second", col(tsCol)), col(idCol))
+      .orderBy(periodOf(tsCol), col(idCol))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val base = df
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol), col(tsCol), col(idCol),
-        floor(col(valueCol) * 1e6).cast("long").as("__x"))
+      .select(col(keyCol), col(tsCol), col(idCol), micros(col(valueCol)).as("__x"))
       .withColumn("__y", lag(col("__x"), lagN).over(order))
       .filter(col("__y").isNotNull)
     val m = base.groupBy(col(keyCol)).agg(

@@ -3,7 +3,7 @@ package graft.validate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{fracE4, roundMeanE4}
+import graft.functions.{cents, fracE4, micros, periodOf, psiTermMicro, roundMeanE4, seriesOrder}
 import graft.Checkpoint._
 import graft.timeseries.Forecast.driftWindows
 
@@ -54,10 +54,8 @@ object Quality {
     * exact-integer on every engine. */
   def gapDetection(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                    expectedSeconds: Long, toleranceFactor: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"), col(idCol))
-      .withColumn("prev_period", lag(col("period"), 1).over(
-        Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))))
+    df.select(col(keyCol), periodOf(tsCol).as("period"), col(idCol))
+      .withColumn("prev_period", lag(col("period"), 1).over(seriesOrder(keyCol, idCol)))
       .withColumn("gap_seconds",
         col("period").cast("long") - col("prev_period").cast("long"))
       .filter(col("gap_seconds") > expectedSeconds * toleranceFactor)
@@ -78,7 +76,7 @@ object Quality {
   /** Duplicate (key, second-truncated ts) detection
     * (data_validation.py:149-154). */
   def duplicateTimestamps(df: DataFrame, keyCol: String, tsCol: String): DataFrame =
-    df.groupBy(col(keyCol), date_trunc("second", col(tsCol)).as("period"))
+    df.groupBy(col(keyCol), periodOf(tsCol).as("period"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
@@ -91,7 +89,7 @@ object Quality {
     * (n, mean, std, min, max), then `quantiles`, in one pass. */
   private def stats(df: DataFrame, valueCol: String, quantiles: Column*): DataFrame =
     df.agg(count(col(valueCol)).as("n"), Seq(
-      roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(col(valueCol))).as("mean"),
+      roundMeanE4(sum(cents(col(valueCol))), count(col(valueCol))).as("mean"),
       round(stddev_samp(col(valueCol)), 4).as("std"),
       round(min(col(valueCol)), 4).as("min"),
       round(max(col(valueCol)), 4).as("max")) ++ quantiles: _*)
@@ -135,7 +133,7 @@ object Quality {
     df.groupBy(col(keyCol))
       .agg(
         count(lit(1)).as("records"),
-        roundMeanE4(sum(round(col(valueCol) * 100, 0)), count(lit(1))).as("mean"),
+        roundMeanE4(sum(cents(col(valueCol))), count(lit(1))).as("mean"),
         round(min(col(valueCol)), 4).as("min"),
         round(max(col(valueCol)), 4).as("max"))
 
@@ -179,8 +177,7 @@ object Quality {
   def qualityReport(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
                     valueCol: String, expectedSeconds: Long,
                     toleranceFactor: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ow = Window.partitionBy(col(keyCol)).orderBy(col("period"), col(idCol))
+    val ow = seriesOrder(keyCol, idCol)
     // Null-safe group detection: a (key, NULL-period) group with >= 2
     // rows is a duplicate group too (duplicateTimestamps and the DuckDB
     // GROUP BY ... HAVING oracle both count it). Plain === skips it, and
@@ -190,8 +187,7 @@ object Quality {
     // null period is a non-null struct, and struct <=> compares the
     // inner period null-safely.
     val t = df
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-        col(idCol), col(valueCol))
+      .select(col(keyCol), periodOf(tsCol).as("period"), col(idCol), col(valueCol))
       .withColumn("__ps", struct(col("period")))
       .withColumn("__s1", lag(col("__ps"), 1).over(ow))
       .withColumn("__s2", lag(col("__ps"), 2).over(ow))
@@ -239,8 +235,8 @@ object Quality {
       // period range, distinct keys, and the sorted key list. The list
       // is bounded by the key cardinality (a dimension, not the data) —
       // same contract as the reference's `sorted(df.region.unique())`.
-      min(date_trunc("second", col(tsCol))).as("date_range_start"),
-      max(date_trunc("second", col(tsCol))).as("date_range_end"),
+      min(periodOf(tsCol)).as("date_range_start"),
+      max(periodOf(tsCol)).as("date_range_end"),
       count_distinct(col(keyCol)).as("unique_regions"),
       array_join(transform(array_sort(collect_set(col(keyCol))),
         _.cast("string")), ",").as("regions"))
@@ -317,7 +313,7 @@ object Quality {
     val cats = domain :+ "__other__"
     val k = cats.size
     val counts = driftWindows(df, tsCol, referenceDays, currentDays,
-        df.select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
+        df.select(col(keyCol), periodOf(tsCol).as("period"),
           when(col(catCol).isin(domain: _*), col(catCol))
             .otherwise("__other__").as("cat")))
       .groupBy(col(keyCol), col("cat"))
@@ -338,7 +334,7 @@ object Quality {
     val pc = (coalesce(col("c"), lit(0L)) + 1).cast("double") / (col("n_cur") + k)
     val thrMicro = math.floor(threshold * 1e6).toLong
     grid.join(counts, Seq(keyCol, "cat"), "left")
-      .withColumn("micro", floor((pc - pr) * log(pc / pr) * 1e6).cast("long"))
+      .withColumn("micro", psiTermMicro(pc, pr))
       .groupBy(col(keyCol), col("n_ref"), col("n_cur"))
       .agg(sum(col("micro")).as("psi_micro"))
       .select(col(keyCol), col("n_ref"), col("n_cur"),
@@ -375,8 +371,8 @@ object Quality {
     // the windows anchor on max_ts over ALL rows, null values included
     val counts = driftWindows(df, tsCol, referenceDays, currentDays,
         df.filter(col(valueCol).isNotNull)
-          .select(col(keyCol), date_trunc("second", col(tsCol)).as("period"),
-            round(col(valueCol) * 100, 0).cast("long").as("__v")))
+          .select(col(keyCol), periodOf(tsCol).as("period"),
+            cents(col(valueCol)).cast("long").as("__v")))
       .groupBy(col(keyCol), col("__v"))
       .agg(count(when(col("bucket") === "reference", lit(1))).as("__r"),
         count(when(col("bucket") === "current", lit(1))).as("__c"))
@@ -533,7 +529,7 @@ object Quality {
                      staleSeconds: Long): DataFrame = {
     require(staleSeconds > 0, "staleness threshold must be positive")
     val t = df.filter(col(tsCol).isNotNull)
-      .select(col(keyCol), date_trunc("second", col(tsCol)).as("__p"))
+      .select(col(keyCol), periodOf(tsCol).as("__p"))
     val gmax = t.agg(max(col("__p")).as("__gmax"))
     t.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"), max(col("__p")).as("last_ts"))
@@ -578,7 +574,6 @@ object Quality {
   def volumeAnomaly(df: DataFrame, keyCol: String, tsCol: String,
                     trailing: Int, zThreshold: Double): DataFrame = {
     require(trailing >= 2, "trailing baseline needs >= 2 days")
-    import org.apache.spark.sql.expressions.Window
     val daily = df.filter(col(tsCol).isNotNull && col(keyCol).isNotNull)
       .groupBy(col(keyCol), date_trunc("day", col(tsCol)).as("day"))
       .agg(count(lit(1)).as("n"))
@@ -639,7 +634,7 @@ object Quality {
     * most 9 rows per key cross the shuffle — then a per-key rollup of
     * the 9-row groups. No windows, no joins. */
   def leadingDigitProfile(df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
-    val micro = floor(abs(col(valueCol)) * 1e6).cast("long")
+    val micro = micros(abs(col(valueCol)))
     val g = df.filter(col(keyCol).isNotNull && col(valueCol).isNotNull &&
         micro > 0L)
       .groupBy(col(keyCol),

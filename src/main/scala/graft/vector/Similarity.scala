@@ -95,7 +95,7 @@ object Similarity {
     * directly (no dequantization pass); only magnitude-sensitive uses
     * (L2 distance) need the scale back. Null vectors are excluded (no
     * codes can exist for them). */
-  def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+  def quantizeInt8(emb: DataFrame, vecCol: String): DataFrame =
     emb.filter(col(vecCol).isNotNull)
       .withColumn("scale", VectorExpressions.arrayAbsMax(col(vecCol)))
       .withColumn("qvec", VectorExpressions.quantizeInt8(col(vecCol), col("scale")))
@@ -104,7 +104,7 @@ object Similarity {
   /** Exploded view of [[quantizeInt8]] for engine-parity checks:
     * (vec_id, pos, code, scale) — one row per vector component. */
   def quantizeInt8Flat(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    quantizeInt8(emb, idCol, vecCol)
+    quantizeInt8(emb, vecCol)
       .select(col(idCol), col("scale"), posexplode(col("qvec")).as(Seq("pos", "code")))
       .select(col(idCol), col("pos").cast("long").as("pos"),
         col("code"), col("scale"))
@@ -130,7 +130,7 @@ object Similarity {
     * projection instead. */
   private def quantizedSide(df: DataFrame, idCol: String, vecCol: String,
                             id: String, v: String, n2: String): DataFrame =
-    quantizeInt8(df, idCol, vecCol).select(col(idCol).as(id), col("qvec").as(v),
+    quantizeInt8(df, vecCol).select(col(idCol).as(id), col("qvec").as(v),
       VectorExpressions.arrayNorm2(col("qvec")).as(n2))
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):

@@ -491,7 +491,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def refTokenCounts(n: Int, minCount: Long): Map[Long, (Long, Long)] = {
       // replay refBpe's vocab evolution to get each word's final
       // symbol count (symbols include the '_' marker unless merged)
-      var vocab = wordFreq.map { case (w, c) =>
+      var vocab = wordFreq.map { case (w, _) =>
         w -> (w.map(_.toString).toVector :+ "_") }.toMap
       val merges = refBpe(wordFreq, n, minCount)
       for ((_, pair, _) <- merges) {
@@ -735,7 +735,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (3L, "beta beta beta beta beta common common common", "B"),
       (4L, "beta beta beta beta beta common common common", "B"))
       .toDF("doc_id", "text", "source")
-    val out = TextOps.sourceTokenLift(docs, "doc_id", "text", "source", 1L, 2)
+    val out = TextOps.sourceTokenLift(docs, "text", "source", 1L, 2)
       .collect().map(r => (r.getAs[String]("source"), r.getAs[Long]("rank")) ->
         ((r.getAs[String]("token"), r.getAs[Double]("lift")))).toMap
     assert(out(("A", 1L))._1 == "alpha" && out(("B", 1L))._1 == "beta")
@@ -750,7 +750,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val words = (1 to 30).map(_ => s"w${rnd.nextInt(40)}").mkString(" ")
       (i.toLong, words, src)
     }.toDF("doc_id", "text", "source")
-    val fast = TextOps.sourceTokenLift(big, "doc_id", "text", "source", 2L, 5)
+    val fast = TextOps.sourceTokenLift(big, "text", "source", 2L, 5)
       .select("source", "rank", "token").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
     // naive reference: same candidate set, single global window
@@ -1334,7 +1334,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").as[Long].collect().toSet
 
-    val table0 = Dedup.seenHashTable(seen0, "doc_id", "text")
+    val table0 = Dedup.seenHashTable(seen0, "text")
     val m1 = admit(batch1, table0)
     val r1 = Dedup.incrementalExactDedup(batch1, seen0, "doc_id", "text", Seq("lang", "source"))
     assert(ids(m1) == Set(11L) && ids(m1) == ids(r1))

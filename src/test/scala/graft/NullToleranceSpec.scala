@@ -161,7 +161,7 @@ class NullToleranceSpec extends SparkSpec {
     // row but an equality anti-join never matches null, so null-text
     // batch docs are always admitted (merged to one per batch by the
     // keep-min) — identical to e32's recompute semantics
-    val table = Dedup.seenHashTable(docs, "doc_id", "text")
+    val table = Dedup.seenHashTable(docs, "text")
     val out = Dedup.incrementalExactDedupFromTable(
       docs.withColumn("doc_id", $"doc_id" + 100L), table,
       "doc_id", "text", Seq("lang", "source"))

@@ -247,13 +247,13 @@ class PropertySpec extends SparkSpec {
       val rec = Dedup.incrementalExactDedup(batch, seen, "doc_id", "text", Seq("lang", "source"))
         .select("text_hash", "doc_id").as[(String, Long)].collect().toSet
       val mnt = Dedup.incrementalExactDedupFromTable(batch,
-        Dedup.seenHashTable(seen, "doc_id", "text"), "doc_id", "text", Seq("lang", "source"))
+        Dedup.seenHashTable(seen, "text"), "doc_id", "text", Seq("lang", "source"))
         .select("text_hash", "doc_id").as[(String, Long)].collect().toSet
       assert(rec == mnt)
       // hash-closure invariant (non-circular): every batch doc's hash is
       // either in the seen table or among the admitted hashes — nothing
       // is silently dropped; and no admitted hash was already seen
-      val seenH = Dedup.seenHashTable(seen, "doc_id", "text").as[String].collect().toSet
+      val seenH = Dedup.seenHashTable(seen, "text").as[String].collect().toSet
       val batchH = batch.select(md5(normalizeText($"text"))).as[String].collect().toSet
       val admittedH = rec.map(_._1)
       assert(batchH.subsetOf(seenH ++ admittedH), "a batch hash vanished")

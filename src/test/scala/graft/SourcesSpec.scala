@@ -315,6 +315,16 @@ class SourcesSpec extends SparkSpec {
     assert(PagedFeed.load(spark, dir).count() == 8)
   }
 
+  test("PagedFeed.land below a regular file throws the I/O error, not lease contention") {
+    // only an existing marker means another writer holds the lease; a
+    // create that fails for any other reason surfaces as itself
+    val file = java.nio.file.Paths.get(tmpDir("graft_lease_io"), "plain-file")
+    java.nio.file.Files.writeString(file, "not a directory")
+    val src = new PagedFeed.OrderedFramePages(pagedFeedFixture(4), "id")
+    val e = intercept[java.io.IOException](PagedFeed.land(spark, src, s"$file/feed", 2))
+    assert(!e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException], e.toString)
+  }
+
   test("PagedFeed landed window merges into an accumulated feed via a5 without dups") {
     // the accumulated table already holds ids <= 100; the landed window
     // refetched an overlapping range — the a5 high-water-mark merge
@@ -693,6 +703,16 @@ class SourcesSpec extends SparkSpec {
     assert(expC.isEmpty && remC.sorted == Seq("data/v1", "data/v2"), s"$expC / $remC")
     assert(Sources.readVersion(spark, tC, 3L).select("id").as[Long]
       .collect().toSeq == Seq(3L))
+  }
+
+  test("version retention keeps data dirs whose names carry no version number") {
+    val table = tmpDir("graft_gc_names") + "/t"
+    Sources.appendVersion(Seq((1L, "a")).toDF("id", "s"), spark, table)
+    Sources.appendVersion(Seq((2L, "b")).toDF("id", "s"), spark, table)
+    Seq("v", "vx").foreach(n => java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(table, "data", n)))
+    assert(Sources.retainVersions(spark, table, 1) == ((Seq(1L), Seq.empty)))
+    assert(Sources.versionDataDirs(spark, table) == Seq("v", "v1", "v2", "vx"))
   }
 
   // ---- reading without a job, touching files without a process ----

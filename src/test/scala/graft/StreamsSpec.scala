@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.Streams
+import graft.validate.Quality
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -695,5 +696,29 @@ class StreamsSpec extends SparkSpec {
         .collect().map(r => r.getAs[Timestamp]("window_start") -> r.getAs[Long]("n_cur")).toMap
       assert(batch(ts("10:00")) == 3L)
     } finally q.stop()
+  }
+
+  test("b14 psiDrift and f11 windowedDrift score one PSI for the same counts") {
+    // one key: reference rows 8-13 days before the newest row, current
+    // rows all inside the newest row's hour, out-of-domain on both sides
+    val domain = Seq("a", "b", "c")
+    val day = 24L * 3600 * 1000
+    val newest = Timestamp.valueOf("2024-03-01 10:45:00").getTime
+    def rows(counts: Seq[(String, Int)], at: Int => Long) = counts.flatMap { case (c, n) =>
+      (0 until n).map(i => (7L, new Timestamp(at(i)), c)) }
+    val reference = rows(Seq("a" -> 6, "b" -> 2, "c" -> 1, "zz" -> 3), i => newest - (8 + i) * day)
+    val current = rows(Seq("a" -> 1, "b" -> 4, "c" -> 2, "yy" -> 1), i => newest - i * 60000L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_psi_pair").toString + "/ev"
+    (reference ++ current).toDF("key", "ts", "cat").write.parquet(dir)
+    val ev = spark.read.parquet(dir)
+    val b14 = Quality.psiDrift(ev, "key", "ts", "cat", domain, 30, 7, 0.1).collect()
+    val f11 = Streams.windowedDrift(ev.filter(col("ts") > new Timestamp(newest - day)),
+      "ts", "cat", domain, Seq("a" -> 6L, "b" -> 2L, "c" -> 1L, "__other__" -> 3L)).collect()
+    assert(b14.length == 1 && f11.length == 1, s"${b14.toSeq} / ${f11.toSeq}")
+    assert(b14(0).getAs[Long]("n_cur") == 8L && f11(0).getAs[Long]("n_cur") == 8L)
+    assert(b14(0).getAs[Double]("psi") > 0.0)
+    assert(b14(0).getAs[Double]("psi") == f11(0).getAs[Double]("psi"),
+      s"b14 ${b14(0)} vs f11 ${f11(0)}")
+    assert(b14(0).getAs[Boolean]("drifted") == f11(0).getAs[Boolean]("drifted"))
   }
 }
