@@ -340,7 +340,7 @@ object SparkEntry {
     "c21_seasonal_decompose" -> ((s, d) =>
       Decompose.seasonalDecompose(Tables.events(s, d), "user_id", "ts", "event_id", "value", 12)),
     "c23_residual_anomalies" -> ((s, d) =>
-      Decompose.residualAnomalies(Tables.events(s, d), "user_id", "ts", "event_id", "value", 12, 3)),
+      Decompose.residualAnomalies(Tables.events(s, d), "user_id", "ts", "event_id", "value", 12)),
     "c24_forecast_intervals" -> ((s, d) =>
       Forecast.forecastIntervals(Tables.events(s, d), "user_id", "ts", "event_id", "value", 24)),
     "c25_winsorize" -> ((s, d) =>
@@ -588,7 +588,7 @@ object SparkEntry {
       // FOOTER total (§5) — never a count() job.
       val emb = Tables.embeddings(s, d)
       graft.vector.Cluster.pqAnnTopK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 16, 16, 2, 5, 50, 100000L,
+        "vec_id", "embedding", 16, 16, 2, 5, 50,
         Some(ParquetStats.rowCount(s, s"$d/embeddings.parquet")))
     }),
     "e62_ann_ivfpq" -> ((s, d) => {
@@ -602,7 +602,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, d)
       val n = ParquetStats.rowCount(s, s"$d/embeddings.parquet")
       graft.vector.Cluster.ivfPqAnnTopK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 8, 2, 5, 16, 16, 2, 5, 50, 100000L,
+        "vec_id", "embedding", 8, 2, 5, 16, 16, 2, 5, 50,
         Some(n), Some(n))
     }),
     "e8_lang_id" -> ((s, d) => TextOps.langId(Tables.documents(s, d), "doc_id", "text")),
@@ -1226,9 +1226,16 @@ object SparkEntry {
     cols.foldLeft("CAST(0 AS BIGINT)")((acc, c) =>
       s"(($acc * 31 + $c) % ${graft.text.Dedup.PolyP})")
 
-  /** Incremental-exact-dedup oracle, shared verbatim by e32 (recompute)
-    * and e40 (maintained hash table) — the same one-oracle-two-paths
-    * rule as e35/e39 below. */
+  /** The `mh` aggregates (16 minhashes of `h0`) and the `bnd` rows (4
+    * bands of 4) of the e2 MinHash oracle, which every oracle over e2's
+    * candidates (e35/e36/e39/e51/e52/e55) embeds verbatim. */
+  private lazy val minhashAggsSql: String = (0 until 16).map(i =>
+    s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
+  private lazy val minhashBandsSql: String = (0 until 4).map { b =>
+    val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
+    s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
+  }.mkString(" UNION ALL ")
+
   /** The e63 word-carrying BPE encode chain (tok/ft/wf/v0..v8),
     * factored so e64's pack oracle embeds the byte-identical trained
     * segmentation (the c30EvalCtes pattern). */
@@ -1322,6 +1329,9 @@ object SparkEntry {
          CAST(epoch(max(date_trunc('second', ts))) AS DOUBLE) FROM events
        UNION ALL SELECT 'unique_regions', CAST(count(DISTINCT user_id) AS DOUBLE) FROM events"""
 
+  /** Incremental-exact-dedup oracle, shared verbatim by e32 (recompute)
+    * and e40 (maintained hash table) — the same one-oracle-two-paths
+    * rule as e35/e39 below. */
   private lazy val incrementalExactDedupOracle: String =
     s"""WITH seen AS (SELECT DISTINCT md5($normSql) AS text_hash
            FROM documents WHERE doc_id >= 250),
@@ -1339,20 +1349,14 @@ object SparkEntry {
     * seen side's band table came from, and identical parameters make
     * the two engine paths signature-identical by construction. */
   private lazy val incrementalMinhashOracle: String = {
-    val mhAggs = (0 until 16).map(i =>
-      s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
-    val bandSelects = (0 until 4).map { b =>
-      val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
-      s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-    }.mkString(" UNION ALL ")
     s"""WITH w AS (SELECT doc_id, string_split($normSql, ' ') AS words FROM documents),
         sh AS (SELECT doc_id,
             array_to_string(words[CAST(i AS INT):CAST(i AS INT) + 2], ' ') AS shingle
           FROM (SELECT doc_id, words, unnest(range(1, len(words) - 1)) AS i
                 FROM w WHERE len(words) >= 3)),
         h AS (SELECT doc_id, ${polyHashSql("shingle")} AS h0 FROM sh),
-        mh AS (SELECT doc_id, $mhAggs FROM h GROUP BY 1),
-        bnd AS ($bandSelects),
+        mh AS (SELECT doc_id, $minhashAggsSql FROM h GROUP BY 1),
+        bnd AS ($minhashBandsSql),
         seenb AS (SELECT * FROM bnd WHERE doc_id >= 250
           QUALIFY count(*) OVER (PARTITION BY band, sig) <= 1000),
         batchb AS (SELECT * FROM bnd WHERE doc_id < 250)
@@ -2717,20 +2721,14 @@ object SparkEntry {
       s"""SELECT md5($normSql) AS text_hash, min(doc_id) AS keep_doc_id,
           count(*) AS dup_count FROM documents GROUP BY 1""",
     "e2_minhash_lsh_pairs" -> {
-      val mhAggs = (0 until 16).map(i =>
-        s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
-        s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-      }.mkString(" UNION ALL ")
       s"""WITH w AS (SELECT doc_id, string_split($normSql, ' ') AS words FROM documents),
           sh AS (SELECT doc_id,
               array_to_string(words[CAST(i AS INT):CAST(i AS INT) + 2], ' ') AS shingle
             FROM (SELECT doc_id, words, unnest(range(1, len(words) - 1)) AS i
                   FROM w WHERE len(words) >= 3)),
           h AS (SELECT doc_id, ${polyHashSql("shingle")} AS h0 FROM sh),
-          mh AS (SELECT doc_id, $mhAggs FROM h GROUP BY 1),
-          bnd AS ($bandSelects),
+          mh AS (SELECT doc_id, $minhashAggsSql FROM h GROUP BY 1),
+          bnd AS ($minhashBandsSql),
           pruned AS (SELECT * FROM bnd
             QUALIFY count(*) OVER (PARTITION BY band, sig) <= 1000)
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2740,12 +2738,6 @@ object SparkEntry {
     // e51: the e2 candidate CTE verbatim, then signature agreement
     // counted against the same mh table the bands folded from
     "e51_minhash_estimate" -> {
-      val mhAggs = (0 until 16).map(i =>
-        s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
-        s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-      }.mkString(" UNION ALL ")
       val agree = (0 until 16)
         .map(i => s"CASE WHEN a.mh_$i = b.mh_$i THEN 1 ELSE 0 END")
         .mkString(" + ")
@@ -2755,8 +2747,8 @@ object SparkEntry {
             FROM (SELECT doc_id, words, unnest(range(1, len(words) - 1)) AS i
                   FROM w WHERE len(words) >= 3)),
           h AS (SELECT doc_id, ${polyHashSql("shingle")} AS h0 FROM sh),
-          mh AS (SELECT doc_id, $mhAggs FROM h GROUP BY 1),
-          bnd AS ($bandSelects),
+          mh AS (SELECT doc_id, $minhashAggsSql FROM h GROUP BY 1),
+          bnd AS ($minhashBandsSql),
           pruned AS (SELECT * FROM bnd
             QUALIFY count(*) OVER (PARTITION BY band, sig) <= 1000),
           pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2771,20 +2763,14 @@ object SparkEntry {
     // set), ground truth by exact Jaccard over the SAME shingle poly
     // hashes (mirrored-hash contract, like e30/e44)
     "e52_lsh_recall" -> {
-      val mhAggs = (0 until 16).map(i =>
-        s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
-        s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-      }.mkString(" UNION ALL ")
       s"""WITH w AS (SELECT doc_id, string_split($normSql, ' ') AS words FROM documents),
           sh AS (SELECT doc_id,
               array_to_string(words[CAST(i AS INT):CAST(i AS INT) + 2], ' ') AS shingle
             FROM (SELECT doc_id, words, unnest(range(1, len(words) - 1)) AS i
                   FROM w WHERE len(words) >= 3)),
           h AS (SELECT doc_id, ${polyHashSql("shingle")} AS h0 FROM sh),
-          mh AS (SELECT doc_id, $mhAggs FROM h GROUP BY 1),
-          bnd AS ($bandSelects),
+          mh AS (SELECT doc_id, $minhashAggsSql FROM h GROUP BY 1),
+          bnd AS ($minhashBandsSql),
           pruned AS (SELECT * FROM bnd
             QUALIFY count(*) OVER (PARTITION BY band, sig) <= 1000),
           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2873,20 +2859,14 @@ object SparkEntry {
     // e35's candidate construction + the e4 char-3-gram Jaccard verify;
     // a batch doc is admitted iff no candidate scores >= 0.6
     "e36_neardup_admit" -> {
-      val mhAggs = (0 until 16).map(i =>
-        s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
-        s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-      }.mkString(" UNION ALL ")
       s"""WITH w AS (SELECT doc_id, string_split($normSql, ' ') AS words FROM documents),
           sh AS (SELECT doc_id,
               array_to_string(words[CAST(i AS INT):CAST(i AS INT) + 2], ' ') AS shingle
             FROM (SELECT doc_id, words, unnest(range(1, len(words) - 1)) AS i
                   FROM w WHERE len(words) >= 3)),
           h AS (SELECT doc_id, ${polyHashSql("shingle")} AS h0 FROM sh),
-          mh AS (SELECT doc_id, $mhAggs FROM h GROUP BY 1),
-          bnd AS ($bandSelects),
+          mh AS (SELECT doc_id, $minhashAggsSql FROM h GROUP BY 1),
+          bnd AS ($minhashBandsSql),
           seenb AS (SELECT * FROM bnd WHERE doc_id >= 250
             QUALIFY count(*) OVER (PARTITION BY band, sig) <= 1000),
           batchb AS (SELECT * FROM bnd WHERE doc_id < 250),
@@ -3878,12 +3858,6 @@ object SparkEntry {
     // (mirrored poly hashes, the e52 contract) + (least, greatest)
     // source attribution
     "e55_cross_source_neardup" -> {
-      val mhAggs = (0 until 16).map(i =>
-        s"min(${affineHashSql("h0", "mh", i)}) AS mh_$i").mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val sig = foldSigSql((b * 4 until (b + 1) * 4).map(i => s"mh_$i"))
-        s"SELECT doc_id, $b AS band, $sig AS sig FROM mh"
-      }.mkString(" UNION ALL ")
       s"""WITH w AS (SELECT doc_id, source, string_split($normSql, ' ') AS words
             FROM documents
             WHERE doc_id IS NOT NULL AND text IS NOT NULL AND source IS NOT NULL),
@@ -3892,8 +3866,8 @@ object SparkEntry {
             FROM (SELECT doc_id, words, unnest(range(1, len(words) - 1)) AS i
                   FROM w WHERE len(words) >= 3)),
           h AS (SELECT doc_id, ${polyHashSql("shingle")} AS h0 FROM sh),
-          mh AS (SELECT doc_id, $mhAggs FROM h GROUP BY 1),
-          bnd AS ($bandSelects),
+          mh AS (SELECT doc_id, $minhashAggsSql FROM h GROUP BY 1),
+          bnd AS ($minhashBandsSql),
           pruned AS (SELECT * FROM bnd
             QUALIFY count(*) OVER (PARTITION BY band, sig) <= 1000),
           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

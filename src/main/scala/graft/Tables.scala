@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Canonical table loader for the test corpus (TESTDATA.md).
   *
   * At 100 TB these would be partitioned/bucketed external tables; the
-  * loader is the single place a deployment re-points. All operators take
-  * DataFrames, never paths, so the engine is storage-agnostic.
+  * loader is the single place a deployment re-points. Operators take
+  * DataFrames (storage-agnostic), except the ten `Analytics` ones that
+  * take `(spark, dir)` and read through this loader.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

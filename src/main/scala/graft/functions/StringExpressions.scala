@@ -44,9 +44,6 @@ object StringExpressions {
     override protected def withNewChildInternal(c: Expression): PolyHash = copy(child = c)
   }
 
-  def polyHash(text: Column): Column =
-    ColumnBridge.column(PolyHash(ColumnBridge.expression(text)))
-
   /** SORTED DISTINCT byte-packed character n-grams of a string — the
     * PPJoin gram builder as ONE primitive pass per document. The HOF
     * chain it replaces (split per char → transform(ascii) → transform
@@ -154,9 +151,6 @@ object StringExpressions {
     override protected def withNewChildInternal(c: Expression): NormalizeText =
       copy(child = c)
   }
-
-  def normalizeTextNative(text: Column): Column =
-    ColumnBridge.column(NormalizeText(ColumnBridge.expression(text)))
 }
 
 /** Shared kernel for [[StringExpressions.NormalizeText]] — top-level so

@@ -31,7 +31,7 @@ package object functions {
     * codegen'd byte loop ([[StringExpressions.PolyHash]]) — the HOF
     * char fold was interpreted and dominated hash-per-shingle paths. */
   def polyFingerprint(text: Column): Column =
-    StringExpressions.polyHash(text)
+    ColumnBridge.column(StringExpressions.PolyHash(ColumnBridge.expression(text)))
 
   /** Half-up 4-decimal rounding of the mean `sumCents / (100 * n)`,
     * computed in exact integer arithmetic: floor((200*s + n) / (2n)) / 1e4.
@@ -98,5 +98,5 @@ package object functions {
     * trim(regexp_replace(regexp_replace(lower(t), "[^a-z0-9\\s]", " "),
     * "\\s+", " ")) that every DuckDB oracle replicates. */
   def normalizeText(text: Column): Column =
-    StringExpressions.normalizeTextNative(text)
+    ColumnBridge.column(StringExpressions.NormalizeText(ColumnBridge.expression(text)))
 }

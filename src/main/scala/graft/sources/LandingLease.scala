@@ -63,7 +63,7 @@ object LandingLease {
       if (System.currentTimeMillis() <= expiry)
         throw new ConcurrentLandingException(
           s"another writer holds $lp until epoch-ms $expiry; refusing to interleave")
-      fs.delete(lp, false)
+      Sources.deletePath(fs, lp, recursive = false)
       if (!tryCreate())
         throw new ConcurrentLandingException(
           s"lost the stale-lease takeover race on $lp to another writer")
@@ -80,6 +80,6 @@ object LandingLease {
     val ours =
       try Sources.readUtf8(fs, lp).startsWith(token)
       catch { case _: Exception => false }
-    if (ours) fs.delete(lp, false)
+    if (ours) Sources.deletePath(fs, lp, recursive = false)
   }
 }

@@ -43,7 +43,7 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     if (permission.getStickyBit) super.setPermission(p, permission)
     else {
       val file = pathToFile(p).toPath
-      try Files.setPosixFilePermissions(file, posixBits(permission.toShort))
+      try { Files.setPosixFilePermissions(file, posixBits(permission.toShort)); () }
       catch {
         case _: UnsupportedOperationException => super.setPermission(p, permission)
         case e: NoSuchFileException => throw notFound(p, e)

@@ -80,11 +80,8 @@ object PagedFeed {
       .maxOption.getOrElse(0)
 
   /** Remove a landing directory (fresh-window reset). */
-  def reset(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = Sources.fileSystem(spark, dir)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  def reset(spark: SparkSession, dir: String): Unit =
+    Sources.deletePath(Sources.fileSystem(spark, dir), new Path(dir), recursive = true)
 
   /** Land the feed as `dir/page=N` parquet pages, resuming from
     * whatever is already on disk. `maxPages` bounds the pages landed

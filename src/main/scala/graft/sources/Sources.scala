@@ -173,8 +173,7 @@ object Sources {
     // a location left behind by a previous session (not in THIS catalog)
     // still blocks CTAS with LOCATION_ALREADY_EXISTS — clear it
     val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = fileSystem(spark, loc.toString)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    deletePath(fileSystem(spark, loc.toString), loc, recursive = true)
     df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, bucketCol).sortBy(bucketCol).saveAsTable(table)
   }
@@ -250,6 +249,9 @@ object Sources {
     readParquet(df.sparkSession, path)
   }
 
+  /** Grid bits per column of [[writeZorderLayout]]; the z-value interleaves both. */
+  private val ZorderBits = 16
+
   /** Z-order (Morton-interleaved) TWO-column layout (round 8) — the
     * multi-dimensional pruning lever [[writeSortedLayout]] cannot give:
     * a single-key range sort makes predicates on THAT key skip files,
@@ -261,7 +263,7 @@ object Sources {
     * files via footer stats alone — the Delta/Iceberg OPTIMIZE ZORDER
     * move, done with one range exchange at write time.
     *
-    * Both columns quantize to `bits`-bit grid cells by min/max affine
+    * Both columns quantize to [[ZorderBits]]-bit grid cells by min/max affine
     * scaling (decimal intermediates, no overflow at any span); the
     * z-value is a codegen'd fold of shift/mask terms — no UDF. The
     * domain [min, max] pair comes from one metadata-cheap aggregate;
@@ -271,21 +273,20 @@ object Sources {
     * pruning property is asserted from footer stats in SourcesSpec,
     * z-ordered vs single-key-sorted control. */
   def writeZorderLayout(df: DataFrame, path: String, colA: String,
-                        colB: String, nFiles: Int, bits: Int = 16): DataFrame = {
+                        colB: String, nFiles: Int): DataFrame = {
     require(nFiles > 0, "nFiles must be positive")
-    require(bits >= 1 && bits <= 31, "bits must be in [1, 31]")
     val stats = df.agg(
       min(col(colA).cast("long")), max(col(colA).cast("long")),
       min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
     require(!stats.anyNull, s"z-order columns $colA/$colB are all-null")
-    val m = (1L << bits) - 1
+    val m = (1L << ZorderBits) - 1
     def quant(c: Column, mn: Long, mx: Long): Column = {
       val span = math.max(mx - mn, 1L)
       floor(((c.cast("long") - mn).cast("decimal(38,0)") * m) / span).cast("long")
     }
     val qa = quant(col(colA), stats.getLong(0), stats.getLong(1))
     val qb = quant(col(colB), stats.getLong(2), stats.getLong(3))
-    val z = (0 until bits).foldLeft(lit(0L): Column) { (acc, i) =>
+    val z = (0 until ZorderBits).foldLeft(lit(0L): Column) { (acc, i) =>
       acc.bitwiseOR(shiftleft(shiftright(qa, i).bitwiseAND(lit(1L)), 2 * i))
         .bitwiseOR(shiftleft(shiftright(qb, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }
@@ -399,13 +400,13 @@ object Sources {
       val all = versions(fs, table)
       val live = all.takeRight(keepLast)
       val expired = all.dropRight(keepLast)
-      expired.foreach(v => fs.delete(new Path(table, s"manifest_$v"), false))
+      expired.foreach(v => deletePath(fs, new Path(table, s"manifest_$v"), recursive = false))
       val referenced = live.flatMap(v => manifestDirs(fs, table, v)).toSet
       val maxLive = live.lastOption.getOrElse(0L)
       val removable = dataDirs(fs, table).filter { n =>
         !referenced.contains(s"data/$n") && dirVersion(n).exists(_ <= maxLive)
       }.map(n => s"data/$n")
-      removable.foreach(d => fs.delete(new Path(table, d), true))
+      removable.foreach(d => deletePath(fs, new Path(table, d), recursive = true))
       (expired, removable)
     }
   }
@@ -480,6 +481,12 @@ object Sources {
   /** The entries directly under `dir`; none when `dir` does not exist. */
   private[graft] def children(fs: FileSystem, dir: Path): Seq[FileStatus] =
     if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+
+  /** Delete `p`; throw naming it when the delete fails and `p` is still
+    * there (a bare `fs.delete` leaves it silently). Absent `p`: no-op. */
+  private[graft] def deletePath(fs: FileSystem, p: Path, recursive: Boolean): Unit =
+    if (!fs.delete(p, recursive) && fs.exists(p))
+      throw new java.io.IOException(s"could not delete $p")
 
   /** The whole content of a small UTF-8 file (a manifest, a lease marker). */
   private[sources] def readUtf8(fs: FileSystem, p: Path): String = {

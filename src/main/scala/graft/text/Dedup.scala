@@ -216,11 +216,10 @@ object Dedup {
     * any band signature become a candidate pair. Pair generation is a
     * self-join on (band, signature) — linear in bucket sizes. Bucket
     * skew at 100 TB is handled by dropping degenerate buckets (all-equal
-    * boilerplate) above `maxBucket`.
+    * boilerplate) above [[MinhashMaxBucket]].
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-                      shingleSize: Int, numHashes: Int, bands: Int,
-                      maxBucket: Int = 1000): DataFrame =
+                      shingleSize: Int, numHashes: Int, bands: Int): DataFrame =
     // The banded table (two consumers: hot-list agg + self-join) is a
     // lazy localCheckpoint, NOT a persist (SURVEY §8 rule 3): measured
     // at sf0.1 interleaved, persist's columnar encode + cache-scan
@@ -228,7 +227,7 @@ object Dedup {
     // to recompute, which ReuseExchange dedupes; the checkpoint makes
     // the sharing explicit rather than canonicalization-dependent).
     bucketPairs(bandSignatures(docs, idCol, textCol, shingleSize, numHashes, bands)
-      .checkpointAs("Dedup.minhashLshPairs.banded"), maxBucket)
+      .checkpointAs("Dedup.minhashLshPairs.banded"))
 
   /** (doc_id, h) rows, one per word shingle of the normalized text.
     * Shingle hashes come from ONE native pass per doc
@@ -257,6 +256,10 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** Docs past which a MinHash (band, sig) bucket is degenerate
+    * all-equal boilerplate, dropped before its quadratic self-join. */
+  private val MinhashMaxBucket = 1000
+
   /** (doc_a < doc_b) pairs sharing a (band, sig) bucket after the
     * hot-bucket prune — the bucket self-join of every banded operator.
     *
@@ -270,8 +273,8 @@ object Dedup {
     * corpus scale — a per-run decision), and spreads the quadratic
     * within-bucket pair generation across the cluster instead of the
     * checkpoint's scan-split parallelism. */
-  private def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
-    val pruned = pruneHotBuckets(banded, Seq("band", "sig"), maxBucket)
+  private def bucketPairs(banded: DataFrame): DataFrame = {
+    val pruned = pruneHotBuckets(banded, Seq("band", "sig"), MinhashMaxBucket)
       .repartition(col("band"), col("sig"))
     val a = pruned.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
     val b = pruned.select(col("band"), col("sig"), col("doc_id").as("doc_b"))
@@ -312,8 +315,7 @@ object Dedup {
     * the exact verify; it is NOT the final dedup decision (that is
     * e36's exact pass). */
   def minhashEstimatePairs(docs: DataFrame, idCol: String, textCol: String,
-                           shingleSize: Int, numHashes: Int, bands: Int,
-                           maxBucket: Int = 1000): DataFrame = {
+                           shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
     val vecs = minhashVectors(docs, idCol, textCol, shingleSize, numHashes)
       .checkpointAs("Dedup.minhashEstimatePairs.vectors") // banding + two score joins
     val aSide = vecs.select(col("doc_id").as("doc_a") +:
@@ -325,7 +327,7 @@ object Dedup {
       .reduce(_ + _)
     val banded = bandRows(vecs, numHashes, bands)
       .checkpointAs("Dedup.minhashEstimatePairs.banded") // agg + self-join
-    bucketPairs(banded, maxBucket).join(aSide, Seq("doc_a")).join(bSide, Seq("doc_b"))
+    bucketPairs(banded).join(aSide, Seq("doc_a")).join(bSide, Seq("doc_b"))
       .withColumn("n_agree", agree)
       .select(col("doc_a"), col("doc_b"), col("n_agree"),
         fracE4(col("n_agree"), lit(numHashes)).as("est_jaccard"))
@@ -342,11 +344,25 @@ object Dedup {
     * by the anti-join — the bucketed table never shuffles for the
     * prune. */
   private[graft] def pruneHotBuckets(rows: DataFrame, keys: Seq[String],
-                              maxBucket: Int): DataFrame = {
-    val hot = rows.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select(keys.map(col): _*)
-    rows.join(broadcast(hot), keys, "left_anti")
+                              maxBucket: Int): DataFrame =
+    rows.join(broadcast(hotGroups(rows, keys, maxBucket).select(keys.map(col): _*)),
+      keys, "left_anti")
+
+  /** The `keys` groups of `rows` holding more than `cap` rows, sized as
+    * `__n`: the size pass of the bucket prune and the size guards. */
+  private def hotGroups(rows: DataFrame, keys: Seq[String], cap: Long): DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > cap)
+
+  /** Fail fast when a `key` group of `rows` holds more than `cap` rows,
+    * naming the five largest as `<itemPrefix><key>=<size>` between
+    * `head` and `tail`. */
+  private[graft] def requireGroupsAtMost(rows: DataFrame, key: String, cap: Long,
+                                         itemPrefix: String, head: String,
+                                         tail: String): Unit = {
+    val over = hotGroups(rows, Seq(key), cap).orderBy(col("__n").desc).limit(5)
+      .collect().map(r => s"$itemPrefix${r.get(0)}=${r.getLong(1)}")
+    require(over.isEmpty, head + over.mkString(", ") + tail)
   }
 
   /** The (doc_a, doc_b) pairs of `inter` (shared-shingle count in
@@ -511,11 +527,11 @@ object Dedup {
     * candidate rows). */
   def incrementalMinhashPairs(batch: DataFrame, seen: DataFrame, idCol: String,
                               textCol: String, shingleSize: Int, numHashes: Int,
-                              bands: Int, maxBucket: Int = 1000): DataFrame =
+                              bands: Int): DataFrame =
     incrementalMinhashPairsFromTable(batch,
       bandSignatures(seen, idCol, textCol, shingleSize, numHashes, bands)
         .checkpointAs("Dedup.incrementalMinhashPairs.seenBands"), // hot-list agg + candidate join
-      idCol, textCol, shingleSize, numHashes, bands, maxBucket)
+      idCol, textCol, shingleSize, numHashes, bands)
 
   /** The MAINTAINED-TABLE form of [[incrementalMinhashPairs]] — the
     * production shape its scaladoc promises: the accumulated corpus's
@@ -543,12 +559,12 @@ object Dedup {
   def incrementalMinhashPairsFromTable(batch: DataFrame, seenBands: DataFrame,
                                        idCol: String, textCol: String,
                                        shingleSize: Int, numHashes: Int,
-                                       bands: Int, maxBucket: Int = 1000): DataFrame = {
+                                       bands: Int): DataFrame = {
     // hot buckets prune on the SEEN side only: boilerplate lives in the
     // accumulated corpus, and a batch doc in a hot bucket would fan out
     // to millions of candidate rows
     val pruned = pruneHotBuckets(seenBands.select(col("doc_id"), col("band"),
-      col("sig")), Seq("band", "sig"), maxBucket)
+      col("sig")), Seq("band", "sig"), MinhashMaxBucket)
     val batchBands = bandSignatures(batch, idCol, textCol, shingleSize, numHashes, bands)
     pruned.select(col("band"), col("sig"), col("doc_id").as("seen_doc"))
       .join(broadcast(batchBands.select(col("band"), col("sig"),
@@ -582,10 +598,9 @@ object Dedup {
   def incrementalNeardupFilter(batch: DataFrame, seen: DataFrame, idCol: String,
                                textCol: String, keepCols: Seq[String],
                                shingleSize: Int, numHashes: Int, bands: Int,
-                               gramSize: Int, minJaccard: Double,
-                               maxBucket: Int = 1000): DataFrame = {
+                               gramSize: Int, minJaccard: Double): DataFrame = {
     val cands = incrementalMinhashPairs(batch, seen, idCol, textCol,
-      shingleSize, numHashes, bands, maxBucket)
+      shingleSize, numHashes, bands)
       .checkpointAs("Dedup.incrementalNeardupFilter.candidates")
     def grams(df: DataFrame, outId: String) = df
       .select(col(idCol).as(outId), normalizeText(col(textCol)).as("norm"))
@@ -644,12 +659,16 @@ object Dedup {
       .filter(col("shared_ngrams") >= minShared)
   }
 
+  /** Distinct docs a window must appear in to count as duplicated:
+    * within-doc repetition alone never marks one. */
+  private val MinDupDocs = 2
+
   /** Corpus-internal repeated-window statistics — the span-level dedup
     * signal of the ExactSubstr method (Lee et al. 2021, "Deduplicating
     * Training Data Makes Language Models Better"): for each document,
     * the fraction of its rolling `windowTokens`-token windows whose
     * content (by rolling poly-hash) also appears in at least
-    * `minDocs`-1 OTHER documents. High-fraction docs are boilerplate /
+    * [[MinDupDocs]]-1 OTHER documents. High-fraction docs are boilerplate /
     * template mass a span-dedup pass should cut; within-doc repetition
     * is deliberately excluded (that is e25's repetition-stats signal).
     * Docs shorter than the window produce no windows and drop.
@@ -665,7 +684,7 @@ object Dedup {
     * millions of docs is exactly the AQE skew-split case, and its
     * join output stays bounded by the (doc, hash) table itself. */
   def dupSpanStats(docs: DataFrame, idCol: String, textCol: String,
-                   windowTokens: Int, minDocs: Int = 2): DataFrame = {
+                   windowTokens: Int): DataFrame = {
     val perDoc = shingleRows(docs, idCol, textCol, windowTokens, "h")
       .groupBy(col("doc_id"), col("h"))
       .agg(count(lit(1)).as("__k"))
@@ -673,7 +692,7 @@ object Dedup {
     // rows are one-per-(doc, hash), so a plain count IS distinct docs
     val dupHashes = perDoc.groupBy(col("h"))
       .agg(count(lit(1)).as("__docs"))
-      .filter(col("__docs") >= minDocs)
+      .filter(col("__docs") >= MinDupDocs)
       .select(col("h"), lit(1L).as("__dup"))
     perDoc.join(dupHashes, Seq("h"), "left")
       .groupBy(col("doc_id"))
@@ -691,7 +710,7 @@ object Dedup {
     * docs): rewrite each document's normalized token stream with every
     * token covered by a cross-doc duplicated `windowTokens`-token
     * window dropped, preserving the order of the survivors. A window
-    * is duplicated when its content appears in ≥ `minDocs` distinct
+    * is duplicated when its content appears in ≥ [[MinDupDocs]] distinct
     * documents (within-doc repetition alone never triggers removal —
     * same contract as e30; that signal is e25's). Docs shorter than
     * the window scrub nothing; null/empty text yields an empty clean
@@ -716,7 +735,7 @@ object Dedup {
     * group case — sorted and rejoined. The windows table materializes
     * once (lazy localCheckpoint, rule 3) for its two consumers. */
   def dupSpanScrub(docs: DataFrame, idCol: String, textCol: String,
-                   windowTokens: Int, minDocs: Int = 2): DataFrame = {
+                   windowTokens: Int): DataFrame = {
     val w = windowTokens
     val base = docs.select(col(idCol).as("doc_id"),
         coalesce(normalizeText(col(textCol)), lit("")).as("norm"))
@@ -732,7 +751,7 @@ object Dedup {
       .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("__k"))
     val dupHashes = perDocHash.groupBy(col("h"))
       .agg(count(lit(1)).as("__docs"))
-      .filter(col("__docs") >= minDocs)
+      .filter(col("__docs") >= MinDupDocs)
       .select(col("h"))
     val covered = starts.join(dupHashes, Seq("h"), "left_semi")
       .select(col("doc_id"),

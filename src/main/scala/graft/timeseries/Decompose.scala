@@ -34,7 +34,7 @@ object Decompose {
 
   def seasonalDecompose(df: DataFrame, keyCol: String, tsCol: String,
                         idCol: String, valueCol: String,
-                        halfWindow: Int = 12): DataFrame = {
+                        halfWindow: Int): DataFrame = {
     require(halfWindow > 0, s"halfWindow must be positive, got $halfWindow")
     val windowSize = 2 * halfWindow + 1
     val base = df
@@ -65,6 +65,9 @@ object Decompose {
       ((col("__det_e4") - col("__season_e4")) / 10000.0).as("remainder"))
   }
 
+  /** The k of [[residualAnomalies]]' k·MAD flag. */
+  private val MadMultiplier = 3
+
   /** Robust residual anomaly detection (round 8) — the alerting layer
     * on top of [[seasonalDecompose]]: a reading is anomalous when its
     * decomposition remainder deviates from the key's median remainder
@@ -88,8 +91,7 @@ object Decompose {
     * ONLY, so downstream moves alerts, not the corpus. */
   def residualAnomalies(df: DataFrame, keyCol: String, tsCol: String,
                         idCol: String, valueCol: String,
-                        halfWindow: Int = 12, k: Int = 3): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
+                        halfWindow: Int): DataFrame = {
     val dec = seasonalDecompose(df, keyCol, tsCol, idCol, valueCol, halfWindow)
       .filter(col("remainder").isNotNull)
       .withColumn("__r", round(col("remainder") * 10000, 0).cast("long"))
@@ -100,7 +102,7 @@ object Decompose {
     val mad = withMed.groupBy(col(keyCol))
       .agg(percentile(col("__ad"), lit(0.5)).as("__mad"))
     withMed.join(mad, Seq(keyCol))
-      .filter(col("__ad") > lit(k) * col("__mad"))
+      .filter(col("__ad") > lit(MadMultiplier) * col("__mad"))
       .select(col(keyCol), col("period"), col(idCol), col(valueCol),
         col("remainder"),
         col("__ad").as("deviation_e4"),

@@ -165,12 +165,12 @@ object Cluster {
     * and the output EQUALS brute force. */
   def pqAnnTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, m: Int, ksub: Int, iters: Int,
-                topK: Int, rerank: Int, fitSample: Long = 100000L,
+                topK: Int, rerank: Int,
                 corpusRows: Option[Long] = None): DataFrame = {
     require(rerank >= topK, s"rerank depth $rerank must be >= topK $topK")
     val allRows = corpus.select(col(idCol).as("__id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
-    val fitRows = sampleForFit(allRows, fitSample, ksub, corpusRows)
+    val fitRows = sampleForFit(allRows, ksub, corpusRows)
     val (codebooks, dsub) = fitPqCodebooks(fitRows, m, ksub, iters)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .filter(col("cv").isNotNull)
@@ -190,19 +190,22 @@ object Cluster {
     exactRerank(corpus, idCol, vecCol, shortlist, topK)
   }
 
-  /** Deterministic hash-mod fit sample of ~fitSample rows. The sizing
+  /** Rows the PQ and IVF fits sample ([[fitPqCodebooks]] says why). */
+  private val FitSample = 100000L
+
+  /** Deterministic hash-mod fit sample of ~[[FitSample]] rows. The sizing
     * row count comes from `corpusRows` when the caller has one — a
     * parquet FOOTER total (ParquetStats) or catalog stat, per SURVEY
     * §5's "row counts come from footers, never a count() job"; only a
     * caller with no metadata source at all pays the fallback count().
     * The count only prices the sampling RATE, so a footer total that
     * includes null-vector rows is fine (keepEvery reads slightly
-    * large, the sample slightly small — still ~fitSample). */
-  private def sampleForFit(allRows: DataFrame, fitSample: Long, ksub: Int,
+    * large, the sample slightly small — still ~FitSample). */
+  private def sampleForFit(allRows: DataFrame, ksub: Int,
                            corpusRows: Option[Long]): DataFrame = {
-    require(fitSample >= ksub, s"fitSample $fitSample must cover ksub $ksub")
+    require(FitSample >= ksub, s"the fit sample of $FitSample rows must cover ksub $ksub")
     val nRows = corpusRows.getOrElse(allRows.count())
-    val keepEvery = math.max(1L, nRows / fitSample)
+    val keepEvery = math.max(1L, nRows / FitSample)
     if (keepEvery == 1L) allRows
     else allRows.filter(seedHash(col("__id")) % keepEvery === 0)
   }
@@ -221,7 +224,7 @@ object Cluster {
     * scheduling overhead — measured 12.3 s at sf0.1 where this fused
     * form pays 1 seed job + `iters` aggregate jobs total.
     * Codebooks fit on the caller's deterministic hash-mod SAMPLE
-    * (~fitSample rows): a 16×16 codebook estimates m·ksub·dsub means,
+    * (~[[FitSample]] rows): a 16×16 codebook estimates m·ksub·dsub means,
     * for which 1e5 vectors saturate — running Lloyd's over all N is
     * pure waste at scale (the per-iteration update explodes every fit
     * row into dim cells: sf10 measured 384M exploded rows per
@@ -361,13 +364,13 @@ object Cluster {
   def ivfPqAnnTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, kCells: Int, ivfIters: Int, nprobe: Int,
                    m: Int, ksub: Int, pqIters: Int, topK: Int, rerank: Int,
-                   fitSample: Long = 100000L, corpusRows: Option[Long] = None,
+                   corpusRows: Option[Long] = None,
                    maxCellSize: Option[Long] = None): DataFrame = {
     require(rerank >= topK, s"rerank depth $rerank must be >= topK $topK")
     require(nprobe >= 1 && nprobe <= kCells, s"nprobe $nprobe out of [1, $kCells]")
     val allRows = corpus.select(col(idCol).as("__id"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
-    val fitRows = sampleForFit(allRows, fitSample, ksub, corpusRows)
+    val fitRows = sampleForFit(allRows, ksub, corpusRows)
     // ONE seed collect serves both fits (round 13): the coarse
     // quantizer's kCells seeds and the codebooks' ksub seeds are both
     // "the smallest id-hash rows of fitRows" — the old chain paid two
@@ -465,14 +468,10 @@ object Cluster {
     * on the cell key fails fast naming the oversized cells BEFORE a
     * degenerate clustering (all vectors in one cell) silently turns
     * cell probing into a brute-force scan. */
-  private def guardCellSizes(assigned: DataFrame, cap: Long, op: String): Unit = {
-    val over = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > cap).orderBy(col("__n").desc).limit(5)
-      .collect().map(r => s"cell ${r.get(0)}=${r.getLong(1)}")
-    require(over.isEmpty,
-      s"$op cells exceed maxCellSize=$cap (a probed hot cell scans like brute force): " +
-        over.mkString(", ") + " -- refit with larger kCells or rebalance the corpus")
-  }
+  private def guardCellSizes(assigned: DataFrame, cap: Long, op: String): Unit =
+    graft.text.Dedup.requireGroupsAtMost(assigned, "cluster", cap, "cell ",
+      s"$op cells exceed maxCellSize=$cap (a probed hot cell scans like brute force): ",
+      " -- refit with larger kCells or rebalance the corpus")
 
   /** Probe list: nprobe nearest centroids per query, computed NARROWLY —
     * sort the (distance, cluster) pairs per row, slice nprobe, explode. */

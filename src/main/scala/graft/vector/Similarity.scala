@@ -51,12 +51,9 @@ object Similarity {
     // with the fix spelled out. Default None = exact-baseline
     // semantics unchanged.
     maxBlockSize.foreach { cap =>
-      val over = emb.groupBy(col(blockCol)).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > cap).orderBy(col("__n").desc).limit(5)
-        .collect().map(r => s"${r.get(0)}=${r.getLong(1)}")
-      require(over.isEmpty,
-        s"cosineDupPairs blocks exceed maxBlockSize=$cap (quadratic pair space): " +
-          over.mkString(", ") + " -- use cosineDupPairsLsh (e22) or a finer block column")
+      Dedup.requireGroupsAtMost(emb, blockCol, cap, "",
+        s"cosineDupPairs blocks exceed maxBlockSize=$cap (quadratic pair space): ",
+        " -- use cosineDupPairsLsh (e22) or a finer block column")
     }
     val pre = TopK.normed(emb, Seq(col(blockCol).as("block"), col(idCol).as("id")),
       col(vecCol), "v", "n2")
@@ -205,11 +202,15 @@ object Similarity {
     bands * math.min(bits, maxBits)
   }
 
+  /** Vectors past which an embedding-LSH (band, key) bucket is
+    * degenerate, dropped before its quadratic self-join. */
+  private val LshMaxBucket = 10000
+
   /** Embedding near-duplicate pairs with LSH-bucket blocking — the
     * 100 TB form of [[cosineDupPairs]]: instead of a caller-supplied
     * block column (O(block²) when blocks grow), candidates come only
     * from shared (band, signature-chunk) buckets of the hyperplane LSH.
-    * Degenerate buckets above `maxBucket` (all-near-zero or
+    * Degenerate buckets above [[LshMaxBucket]] (all-near-zero or
     * boilerplate embeddings) are dropped, mirroring the MinHash path.
     * Exact cosine (native codegen'd dot) is computed only on
     * candidates, so every emitted pair truly clears the threshold —
@@ -227,8 +228,7 @@ object Similarity {
     * inherently near-quadratic and no blocking scheme is sub-quadratic
     * in the output. */
   def cosineDupPairsLsh(emb: DataFrame, idCol: String, vecCol: String,
-                        numPlanes: Int, bands: Int, threshold: Double,
-                        maxBucket: Int = 10000): DataFrame = {
+                        numPlanes: Int, bands: Int, threshold: Double): DataFrame = {
     val lsh = banding(emb, vecCol, numPlanes, bands)
     // Band keys outgrow one 64-bit signature when autoPlanes asks for
     // more than 64/bands bits: the old always-folded form capped
@@ -293,7 +293,7 @@ object Similarity {
     // parallelism (measured 2.2× the whole query on one core; the old
     // count window inserted this exchange as a side effect). The
     // barrier also hands AQE a materialized stage with real sizes.
-    val pruned = Dedup.pruneHotBuckets(pre, Seq("band", "key"), maxBucket)
+    val pruned = Dedup.pruneHotBuckets(pre, Seq("band", "key"), LshMaxBucket)
       .repartition(col("band"), col("key"))
     val a = pruned.select(col("band"), col("key"),
       col("id").as("id_a"), col("v").as("va"), col("n2").as("na2"))

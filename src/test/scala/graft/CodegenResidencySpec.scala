@@ -31,7 +31,7 @@ class CodegenResidencySpec extends SparkSpec {
     Tables.events(spark, sf).write.parquet(stream)
     val schema = spark.read.parquet(stream).schema
 
-    def run(out: String): Unit = {
+    def run(out: String): org.scalatest.Assertion = {
       def publish(name: String, df: org.apache.spark.sql.DataFrame) =
         df.write.parquet(s"$out/$name")
       def read(name: String) = spark.read.parquet(s"$out/$name")

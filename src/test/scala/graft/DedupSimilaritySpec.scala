@@ -908,7 +908,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val q = degenerate.filter(col("vec_id") < 2)
     val err = intercept[IllegalArgumentException] {
       graft.vector.Cluster.ivfPqAnnTopK(degenerate, q, "vec_id", "embedding",
-        4, 1, 2, 2, 4, 1, 3, 5, 100000L, None, maxCellSize = Some(10L))
+        4, 1, 2, 2, 4, 1, 3, 5, None, maxCellSize = Some(10L))
     }
     assert(err.getMessage.contains("maxCellSize"), err.getMessage)
     assert(err.getMessage.contains("ivfPqAnnTopK"), err.getMessage)

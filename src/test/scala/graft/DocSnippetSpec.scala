@@ -48,7 +48,7 @@ class DocSnippetSpec extends SparkSpec {
     ls.slice(s + 1, e).map(_.trim).filter(_.nonEmpty)
   }
 
-  private def assertInSync(tag: String): Unit =
+  private def assertInSync(tag: String): org.scalatest.Assertion =
     assert(readmeBlock(tag) == specRegion(tag),
       s"README doc-snippet:$tag drifted from the compiled spec region")
 

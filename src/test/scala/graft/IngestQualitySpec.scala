@@ -178,7 +178,7 @@ class IngestQualitySpec extends SparkSpec {
       count_distinct(col("ts")).as("tss"),
       count_distinct(struct(col("user_id"), col("ts"))).as("keyts")).head()
     assert(approx.getAs[Long]("total_records") == exact.getAs[Long]("total"))
-    def within(got: Long, want: Long): Unit =
+    def within(got: Long, want: Long): org.scalatest.Assertion =
       assert(math.abs(got - want).toDouble / want <= 3 * rsd,
         s"approx $got vs exact $want exceeds 3*rsd")
     within(approx.getAs[Long]("unique_keys_approx"), exact.getAs[Long]("keys"))

@@ -97,6 +97,6 @@ class PipelineSpec extends SparkSpec {
       val again = SparkEntry.queries("e56_corpus_build")(spark, sf)
       assert(out.exceptAll(again).isEmpty && again.exceptAll(out).isEmpty,
         "corpus build must be deterministic")
-    } finally out.unpersist()
+    } finally { out.unpersist(); () }
   }
 }

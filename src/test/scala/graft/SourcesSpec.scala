@@ -13,6 +13,24 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
 }
 
+/** Local-disk FileSystem under the `nodelfs://` scheme whose `delete`
+  * removes nothing and returns false for the paths in
+  * [[UndeletableTestFs.marked]] — what `RawLocalFileSystem.delete`
+  * answers when it cannot remove a file (one under a read-only
+  * directory, for a non-root user). */
+class UndeletableTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("nodelfs:///")
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (UndeletableTestFs.marked.contains(Path.getPathWithoutSchemeAndAuthority(p).toString))
+      false
+    else super.delete(p, recursive)
+}
+
+object UndeletableTestFs {
+  /** Scheme-less paths whose delete fails. */
+  val marked: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+}
+
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -244,7 +262,7 @@ class SourcesSpec extends SparkSpec {
         if (qe.analyzed.output.exists(_.name == "paged_feed_sentinel")) sentinel.countDown()
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = failed.incrementAndGet()
+                             exception: Exception): Unit = { failed.incrementAndGet(); () }
     }
     spark.listenerManager.register(listener)
     try {
@@ -715,6 +733,37 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.versionDataDirs(spark, table) == Seq("v", "v1", "v2", "vx"))
   }
 
+  test("PagedFeed.reset throws naming a landing directory it could not delete") {
+    val landing = undeletable("graft_nodel_reset", "landing")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(landing, "page=1"))
+    val e = intercept[java.io.IOException](PagedFeed.reset(spark, s"nodelfs://$landing"))
+    assert(e.getMessage.contains(landing), e.getMessage)
+    // the stale page is still there, so a silent reset would have let
+    // the next land resume from it
+    assert(PagedFeed.resumePage(spark, s"nodelfs://$landing") == 1)
+  }
+
+  test("version retention throws on a data directory it could not delete, lease released") {
+    val table = undeletable("graft_nodel_gc", "t/data/v1").stripSuffix("/data/v1")
+    val t = s"nodelfs://$table"
+    Sources.appendVersion(Seq((1L, "a")).toDF("id", "s"), spark, t)
+    Sources.overwriteVersion(Seq((2L, "b")).toDF("id", "s"), spark, t)
+    val e = intercept[java.io.IOException](Sources.retainVersions(spark, t, 1))
+    assert(e.getMessage.contains(s"$table/data/v1"), e.getMessage)
+    assert(Sources.versionDataDirs(spark, t) == Seq("v1", "v2"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table, "_LOCK")))
+  }
+
+  /** `<fresh temp dir>/<rel>`, marked undeletable on the `nodelfs://`
+    * scheme ([[UndeletableTestFs]]), which this registers. */
+  private def undeletable(prefix: String, rel: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.nodelfs.impl", classOf[UndeletableTestFs].getName)
+    val p = s"${tmpDir(prefix)}/$rel"
+    UndeletableTestFs.marked.add(p)
+    p
+  }
+
   // ---- reading without a job, touching files without a process ----
 
   private def tmpDir(prefix: String): String =
@@ -778,7 +827,7 @@ class SourcesSpec extends SparkSpec {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
         if (desc == "read_frames_sentinel") sentinel.countDown()
-        else jobs.add(s"job ${e.jobId}: ${e.stageInfos.map(_.name).mkString(", ")}")
+        else { jobs.add(s"job ${e.jobId}: ${e.stageInfos.map(_.name).mkString(", ")}"); () }
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -847,7 +896,7 @@ class SourcesSpec extends SparkSpec {
         s"$root/latest", s"$root/checkpoint", "user_id", "ts", "event_id", 4)
         .awaitTermination()
       assert(graft.streaming.Upsert.readTable(spark, s"$root/latest").count() > 0)
-    } finally recording.stop()
+    } finally { recording.stop(); () }
     val dump = java.nio.file.Files.createTempFile("graft_nofork", ".jfr")
     try {
       recording.dump(dump)

@@ -401,7 +401,7 @@ class TimeSeriesSpec extends SparkSpec {
       (i.toLong, Timestamp.valueOf(f"2024-01-${1 + i / 24}%02d ${i % 24}%02d:00:00"), "A", v)
     }.toDF("event_id", "ts", "key", "value")
     val flagged = Decompose.residualAnomalies(series(spike = true),
-      "key", "ts", "event_id", "value", 12, 3).collect()
+      "key", "ts", "event_id", "value", 12).collect()
     assert(flagged.nonEmpty, "the spike must be flagged")
     val top = flagged.maxBy(_.getAs[Double]("deviation_e4"))
     assert(top.getAs[Long]("event_id") == 36L,
@@ -413,7 +413,7 @@ class TimeSeriesSpec extends SparkSpec {
     // except degenerate exact-zero MAD, so assert the spike-free run
     // flags strictly fewer, and never the spike row's magnitude
     val clean = Decompose.residualAnomalies(series(spike = false),
-      "key", "ts", "event_id", "value", 12, 3).collect()
+      "key", "ts", "event_id", "value", 12).collect()
     assert(clean.length < flagged.length ||
       clean.forall(_.getAs[Double]("deviation_e4") <
         top.getAs[Double]("deviation_e4")))
